@@ -16,6 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .functions.cells import cached_column
 from .functions.images import encode_images_batch, gen_pixels_batch
 from .util import geotag_from_phash, hash2, splitmix64
 
@@ -85,7 +86,13 @@ def images_table(spark: SparkSession, n: int, num_partitions: int = 32) -> DataF
 
 
 def with_geotag(images: DataFrame) -> DataFrame:
-    """Attach the derived (x, y) — built-in column ops, JVM-side."""
+    """Attach the derived (x, y) — built-in column ops, JVM-side (the Column
+    trees are cached per SparkContext)."""
+    x, y = cached_column(("geotag",), _geotag_cols)
+    return images.withColumns({"x": x, "y": y})
+
+
+def _geotag_cols():
     u20 = F.shiftrightunsigned(F.col("phash"), 20)
     # phash is uniform in [0, 2^64); unsigned mod 1e6 in two steps to stay in
     # signed-long arithmetic: ((hi%m)*(2^32%m) + lo%m) % m with hi/lo 32-bit halves.
@@ -96,7 +103,7 @@ def with_geotag(images: DataFrame) -> DataFrame:
     hi2 = F.shiftrightunsigned(F.col("phash"), 52)
     lo2 = u20.bitwiseAND(F.lit(0xFFFFFFFF))
     x = F.pmod(F.pmod(hi2, m) * F.lit((1 << 32) % 1_000_000) + F.pmod(lo2, m), m)
-    return images.withColumn("x", x.cast("float")).withColumn("y", y.cast("float"))
+    return x.cast("float"), y.cast("float")
 
 
 def points_table(spark: SparkSession, n: int, num_partitions: int = 32, seed: int = 42) -> DataFrame:

@@ -78,7 +78,7 @@ _CELLS_CACHE_MAX = 6  # index relations per app; LRU-evicted (ADVICE r2:
 
 def release_index(df: DataFrame) -> None:
     """Unpersist an index relation AND the internal persists its build
-    grafted onto it (``_graft_persists`` — e.g. build_cells' per-level
+    grafted onto it (``_graft_persists`` — e.g. refresh_cells' merged
     counts). The single release point for every cache-eviction site; a
     site that only called ``df.unpersist()`` would leak the dependents."""
     df.unpersist()
@@ -779,7 +779,7 @@ def q_cell_cardinality_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate also pins the estimator's ~1/√k accuracy on the fixture)."""
     pts = _points(spark, sf_dir)
     hs = pts.select(
-        F.md5(C.cell_id_col(F.col("x"), F.col("y"), KMV_DEPTH).cast("string")).alias("h")
+        F.md5(C.cell_id_col("x", "y", KMV_DEPTH).cast("string")).alias("h")
     ).distinct()
     top = hs.orderBy("h").limit(KMV_K)
     frac = F.conv(F.substring(F.col("h"), 1, 15), 16, 10).cast("long") / F.lit(

@@ -25,12 +25,38 @@ tests/test_properties.py), so ``cell_id`` alone keys a node;
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
+from pyspark import SparkContext
+from pyspark.sql import Column, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from .. import DOMAIN, MAX_DEPTH
+
+_T = TypeVar("_T")
+
+
+def cached_column(key: tuple, build: Callable[[], _T]) -> _T:
+    """``build()`` — a Column tree, or a container of them — rendered once
+    per SparkContext and ``key``, then shared by every later caller.
+
+    Each Column operator is one py4j round trip, so the deep trees of the
+    quadtree build (the depth-12 encode, ancestor chains, the bbox stages,
+    the geotag) cost thousands of them — seconds of driver time per plan
+    before any job starts. A cached tree must be alias-free and hold no
+    Python UDF: an Alias or a PythonUDF carries one fixed exprId into every
+    plan that reuses it, so callers alias at the use site. ``key`` names
+    everything that shapes the tree: column names, depth, domain,
+    thresholds."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return build()
+    cache = sc.__dict__.setdefault("_graft_column_cache", {})
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]
 
 # ---------------------------------------------------------------------------
 # numpy kernels (float32, reference-exact)
@@ -331,25 +357,31 @@ def cell_id_col_jvm_deep(xcol, ycol, depth: int, domain=DOMAIN):
     return cid
 
 
-def cell_id_col(xcol, ycol, depth: int, domain=DOMAIN):
-    """Column: reference cell id at ``depth`` (float32-faithful).
+def cell_id_col(x: str | Column, y: str | Column, depth: int, domain=DOMAIN) -> Column:
+    """Column: reference cell id at ``depth`` (float32-faithful) of the
+    point columns ``x``/``y`` — names, or Columns.
 
     Dispatch: depth ≤ 10 → exact integer arithmetic in the JVM (codegen'd,
     proven equal to the float32 kernel — see test_cells parity tests);
     depth ≤ 13 → integer bins to depth 10 + JVM float32 descent for the rest;
     deeper → Arrow-vectorized numpy replay of the float32 midpoint descent
-    (the only faithful route once the expression tree would outgrow codegen)."""
-    if tuple(domain) == tuple(DOMAIN):
-        if depth <= _EXACT_JVM_DEPTH:
-            return cell_id_col_jvm(xcol, ycol, depth, domain)
-        if depth <= _HYBRID_JVM_MAX_DEPTH:
-            return cell_id_col_jvm_deep(xcol, ycol, depth, domain)
+    (the only faithful route once the expression tree would outgrow codegen).
+    The JVM trees of named columns are cached (``cached_column``)."""
+    if tuple(domain) == tuple(DOMAIN) and depth <= _HYBRID_JVM_MAX_DEPTH:
+        enc = cell_id_col_jvm if depth <= _EXACT_JVM_DEPTH else cell_id_col_jvm_deep
+
+        def build() -> Column:
+            return enc(*(F.col(c) if isinstance(c, str) else c for c in (x, y)), depth, domain)
+
+        if isinstance(x, str) and isinstance(y, str):
+            return cached_column(("cell_id", x, y, depth, tuple(domain)), build)
+        return build()
 
     @F.pandas_udf(LongType())
     def _enc(xs: pd.Series, ys: pd.Series) -> pd.Series:
         return pd.Series(encode_cell_ids(xs.to_numpy(), ys.to_numpy(), depth, domain))
 
-    return _enc(xcol, ycol)
+    return _enc(x, y)
 
 
 def neighbor_ring_col(idcol, depth: int, radius: int = 1):
@@ -423,7 +455,29 @@ def with_cell_bbox_jvm(df, max_depth: int, domain=DOMAIN, min_distance: float = 
     locals and the stage stays a single WholeStageCodegen span. Parity with
     the numpy kernel is pytest-pinned (tests/test_cells.py::test_bbox_jvm_*).
     Staged column names are dropped before returning; ``out`` is the only
-    added column."""
+    added column, and an input column named like a staged one raises
+    ``ValueError`` rather than being overwritten and dropped. The stage
+    Columns are cached per SparkContext (``cached_column``)."""
+    stages, bbox = cached_column(
+        ("cell_bbox", id_col, depth_col, max_depth, tuple(domain), float(min_distance)),
+        lambda: _cell_bbox_stages(id_col, depth_col, max_depth, domain, min_distance),
+    )
+    staged = list(dict.fromkeys(name for stage in stages for name in stage))
+    clash = [name for name in staged if name in df.columns]
+    if clash:
+        raise ValueError(
+            f"input columns {clash!r} collide with with_cell_bbox_jvm's staged "
+            "columns; rename them"
+        )
+    for stage in stages:
+        df = df.withColumns(stage)
+    return df.withColumn(out, bbox).drop(*staged)
+
+
+def _cell_bbox_stages(id_col: str, depth_col: str, max_depth: int, domain,
+                      min_distance: float) -> tuple[list[dict[str, Column]], Column]:
+    """with_cell_bbox_jvm's staged projections, in order, and the final
+    bbox struct over them (alias-free, so cacheable)."""
     lo_x, lo_y, hi_x, hi_y = (float(domain[i]) for i in range(4))
     d = F.col(depth_col).cast("int")
     base = (F.pow(F.lit(4.0), d.cast("double")) - F.lit(1.0)) / F.lit(3.0)
@@ -433,9 +487,8 @@ def with_cell_bbox_jvm(df, max_depth: int, domain=DOMAIN, min_distance: float = 
     for i in range(max_depth):
         col = col + F.shiftright(v, 2 * i).bitwiseAND(F.lit(1)) * F.lit(1 << i)
         row = row + F.shiftright(v, 2 * i + 1).bitwiseAND(F.lit(1)) * F.lit(1 << i)
-    df = df.withColumns({"_bb_col": col, "_bb_row": row})
+    stages = [{"_bb_col": col, "_bb_row": row}]
     col, row = F.col("_bb_col"), F.col("_bb_row")
-    staged = ["_bb_col", "_bb_row"]
 
     # shallow (depth ≤ 10): exact edges straight from the bins
     inv = F.pow(F.lit(2.0), -d.cast("double"))  # exact 2^-d
@@ -455,15 +508,13 @@ def with_cell_bbox_jvm(df, max_depth: int, domain=DOMAIN, min_distance: float = 
         col10 = F.floor(col.cast("double") / pshift).cast("long")
         row10 = F.floor(row.cast("double") / pshift).cast("long")
         s10x, s10y = (hi_x - lo_x) / (1 << b), (hi_y - lo_y) / (1 << b)
-        df = df.withColumns({
+        stages.append({
             **shallow,
             "_bb_x1": (col10.cast("double") * F.lit(s10x) + F.lit(lo_x)).cast("float"),
             "_bb_x2": ((col10 + 1).cast("double") * F.lit(s10x) + F.lit(lo_x)).cast("float"),
             "_bb_y1": (row10.cast("double") * F.lit(s10y) + F.lit(lo_y)).cast("float"),
             "_bb_y2": ((row10 + 1).cast("double") * F.lit(s10y) + F.lit(lo_y)).cast("float"),
         })
-        staged += ["_bb_sx1", "_bb_sx2", "_bb_sy1", "_bb_sy2",
-                   "_bb_x1", "_bb_x2", "_bb_y1", "_bb_y2"]
         half = _f32(0.5)
         for j in range(1, max_depth - b + 1):
             active = d >= F.lit(b + j)
@@ -474,7 +525,7 @@ def with_cell_bbox_jvm(df, max_depth: int, domain=DOMAIN, min_distance: float = 
             y1, y2 = F.col("_bb_y1"), F.col("_bb_y2")
             mx = (x1 + x2) * half
             my = (y1 + y2) * half
-            df = df.withColumns({
+            stages.append({
                 "_bb_x1": F.when(active & right, mx).otherwise(x1),
                 "_bb_x2": F.when(active & ~right, mx).otherwise(x2),
                 "_bb_y1": F.when(active & top, my).otherwise(y1),
@@ -486,30 +537,25 @@ def with_cell_bbox_jvm(df, max_depth: int, domain=DOMAIN, min_distance: float = 
         y1 = F.when(deep, F.col("_bb_y1")).otherwise(F.col("_bb_sy1"))
         y2 = F.when(deep, F.col("_bb_y2")).otherwise(F.col("_bb_sy2"))
     else:
-        df = df.withColumns(shallow)
-        staged += ["_bb_sx1", "_bb_sx2", "_bb_sy1", "_bb_sy2"]
+        stages.append(shallow)
         x1, x2 = F.col("_bb_sx1"), F.col("_bb_sx2")
         y1, y2 = F.col("_bb_sy1"), F.col("_bb_sy2")
 
     # final coordinates staged once more so the six struct-field consumers
     # (4 floats + extent_ok + is_leaf downstream) share them as attributes
-    df = df.withColumns({"_bb_fx1": x1, "_bb_fy1": y1, "_bb_fx2": x2, "_bb_fy2": y2})
-    staged += ["_bb_fx1", "_bb_fy1", "_bb_fx2", "_bb_fy2"]
+    stages.append({"_bb_fx1": x1, "_bb_fy1": y1, "_bb_fx2": x2, "_bb_fy2": y2})
     fx1, fy1 = F.col("_bb_fx1"), F.col("_bb_fy1")
     fx2, fy2 = F.col("_bb_fx2"), F.col("_bb_fy2")
     mdf = _f32(min_distance)
     extent_ok = (F.abs(fx1 - fx2) >= mdf) | (F.abs(fy1 - fy2) >= mdf)
-    df = df.withColumn(
-        out,
-        F.struct(
-            fx1.alias("min_x"),
-            fy1.alias("min_y"),
-            fx2.alias("max_x"),
-            fy2.alias("max_y"),
-            extent_ok.alias("extent_ok"),
-        ),
+    bbox = F.named_struct(
+        F.lit("min_x"), fx1,
+        F.lit("min_y"), fy1,
+        F.lit("max_x"), fx2,
+        F.lit("max_y"), fy2,
+        F.lit("extent_ok"), extent_ok,
     )
-    return df.drop(*staged)
+    return stages, bbox
 
 
 def candidate_cells_col_jvm(xcol, ycol, max_depth: int, domain=DOMAIN):

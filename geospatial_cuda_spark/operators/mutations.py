@@ -10,7 +10,7 @@ inference.cu:138-164). In a dataflow engine a mutation is a new snapshot:
    documented deviation we do not replicate);
  - the cells relation refreshes INCREMENTALLY: the count delta of touched
    finest cells rolls up the prefix chain and merges into the old counts,
-   then the cheap cells-from-counts stage re-derives reality/leaf flags —
+   then the cheap cells-from-counts aggregation re-derives the tree —
    cells-only work, no points rescan.
 """
 
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import DOMAIN, MAX_DEPTH, MIN_DISTANCE, MIN_POINTS
-from .quadtree import ancestor_col, cells_from_counts, with_cell_id
+from .quadtree import ancestor_chain_col, cells_from_counts, with_cell_id
 
 
 def insert_points(points: DataFrame, new_rows: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
@@ -55,9 +55,11 @@ def counts_delta(
         .groupBy("cell_id")
         .agg((F.count(F.lit(1)) * sign).alias("count"))
     )
-    ancestors = F.array(*[ancestor_col(F.col("cell_id"), k) for k in range(max_depth + 1)])
     return (
-        finest.select(F.posexplode(ancestors).alias("k", "cell_id"), "count")
+        finest.select(
+            F.posexplode(ancestor_chain_col("cell_id", max_depth + 1)).alias("k", "cell_id"),
+            "count",
+        )
         .select("cell_id", (F.lit(max_depth) - F.col("k")).cast("int").alias("depth"), "count")
         .groupBy("cell_id", "depth")
         .agg(F.sum("count").alias("count"))
@@ -91,7 +93,7 @@ def refresh_cells(
     domain=DOMAIN,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (new_counts, new_cells). Splitting cells that crossed MIN_POINTS and
-    collapsing underfull parents both fall out of re-deriving reality from the
+    collapsing underfull parents both fall out of re-deriving the tree from the
     merged counts."""
     new_counts = merge_counts(old_counts, delta).persist()
     cells = cells_from_counts(

@@ -1,4 +1,4 @@
-"""Adaptive quadtree build as a level-synchronous DataFrame program.
+"""Adaptive quadtree build as one grouped aggregation.
 
 The reference builds the tree by per-node recursion with a GPU kernel pair
 per node (quadtree_grid, cuda/create_grid.cu:25-159) or a BFS wave loop
@@ -7,22 +7,26 @@ The engine exploits two structural facts instead:
 
 1. The bbox subdivision is data-independent — only the STOP rule
    (count < MIN_POINTS or extent floor, create_grid.cu:31-35) is data-driven.
-   So each point's full-depth quadkey is a pure function of (x, y): ONE
-   Arrow kernel pass (float32-faithful descent + per-partition numpy count
-   rollup over all levels) + ONE skinny shuffle of pre-reduced
-   (cell_id, depth, count) partials replaces the entire recursion over
-   points.
+   So each point's full-depth quadkey is a pure function of (x, y), and one
+   grouped count over those keys (the finest-cell histogram) holds every
+   count the recursion would compute.
 
-2. Subtree counts are monotone up the tree (parent = Σ children), and the
-   extent rule is monotone in depth — so ``interior(parent)`` implies every
-   ancestor is interior, and a cell exists in the tree iff its PARENT is
-   interior. The tree-reality test is a single parent join on the cell-count
-   relation: no iteration, no driver round-trips over data.
+2. A cell exists in the tree iff its PARENT is interior, and a parent's
+   interior test needs only its own count and extent. So every cell is
+   decided by one group: each finest cell emits one edge row per level —
+   (parent, parent depth, child index 1-4, count) — and one aggregation
+   grouped by parent yields the parent's count and its four child counts.
+   Interior parents explode to their four children (empties become
+   zero-count leaves, exactly like the reference's unconditional 4-way
+   recursion); the depth-0 group also emits the root row.
 
-Result: the quadtree at any scale costs one kernel pass over the points plus
-one cells-sized shuffle (≤ Σ_d occupied(d) pre-reduced rows per partition,
-never points). Empty children of interior nodes are materialized as
-zero-count leaves exactly like the reference's unconditional 4-way recursion.
+Result: for depth ≤ 13 on the reference domain the build is two exchanges —
+the finest-cell histogram and the parent aggregation — with no join, no
+persisted intermediate and no Python stage (JVM encode, JVM bbox). Deeper
+trees count through the Arrow rollup kernel (``counts_from_points``) and
+derive the same edges from its (cell_id, depth, count) relation
+(``cells_from_counts``). The heavy Column trees (encode, ancestor chains,
+bbox stages) are rendered once per SparkContext (``C.cached_column``).
 """
 
 from __future__ import annotations
@@ -62,6 +66,15 @@ def ancestor_col(cell_id: Column, levels_up: int) -> Column:
         return cell_id
     c = (4 ** levels_up - 1) // 3
     return F.floor((cell_id - F.lit(c)) / F.lit(4 ** levels_up)).cast("long")
+
+
+def ancestor_chain_col(cell_id: str, levels: int) -> Column:
+    """array<long> of the column ``cell_id``'s ancestors 0..``levels``-1
+    levels up (element k = k levels up), cached per SparkContext."""
+    return C.cached_column(
+        ("ancestors", cell_id, levels),
+        lambda: F.array(*[ancestor_col(F.col(cell_id), k) for k in range(levels)]),
+    )
 
 
 def ancestor_dyn_col(cell_id: Column, levels_up: Column, max_levels: int = MAX_DEPTH) -> Column:
@@ -125,7 +138,30 @@ def with_cell_id(
     domain=DOMAIN,
 ) -> DataFrame:
     """Attach the reference cell id at ``depth`` (float32-faithful kernel)."""
-    return df.withColumn(out, C.cell_id_col(F.col(x), F.col(y), depth, domain))
+    return df.withColumn(out, C.cell_id_col(x, y, depth, domain))
+
+
+def _jvm_encodable(max_depth: int, domain) -> bool:
+    """The cell_id_col exact/hybrid codegen ceiling: such trees encode, count
+    and bbox without a Python stage."""
+    return tuple(domain) == tuple(DOMAIN) and max_depth <= C._HYBRID_JVM_MAX_DEPTH
+
+
+def _finest_counts(points: DataFrame, x: str, y: str, max_depth: int, domain) -> DataFrame:
+    """(_fid, count): the finest-cell histogram, JVM-encoded."""
+    return (
+        points.select(C.cell_id_col(x, y, max_depth, domain).alias("_fid"))
+        .groupBy("_fid")
+        .agg(F.count(F.lit(1)).alias("count"))
+    )
+
+
+def _prefix_rows(finest: DataFrame, max_depth: int, levels: int) -> DataFrame:
+    """(cell_id, depth, count) of each finest cell's ancestors 0..``levels``-1
+    levels up — one row per (finest cell, level), not yet summed."""
+    return finest.select(
+        F.posexplode(ancestor_chain_col("_fid", levels)).alias("k", "cell_id"), "count"
+    ).select("cell_id", (F.lit(max_depth) - F.col("k")).cast("int").alias("depth"), "count")
 
 
 def counts_from_points(
@@ -135,55 +171,33 @@ def counts_from_points(
     domain=DOMAIN,
     max_depth: int = MAX_DEPTH,
 ) -> DataFrame:
-    """(cell_id, depth, count) for every OCCUPIED prefix cell at every depth.
+    """(cell_id, depth, count) for every OCCUPIED prefix cell at every depth —
+    the counts relation the incremental paths keep (``mutations``,
+    ``jobs/run_inference.py``) and the input of ``cells_from_counts``.
 
-    ONE exchange, independent of depth, carrying PRE-REDUCED rows: each input
+    Trees the JVM can encode (max_depth <= 13 on the reference domain) take
+    an all-JVM route: the codegen encode + one grouped count to finest
+    cells, then the ancestor explode over the min(N, 4^max_depth)
+    FINEST-CELL rows and a grouped sum. This skips the JVM<->Python Arrow
+    boundary entirely, whose round trip alone measured ~1.9 s on a 6M-point
+    scan against ~0.3 s of kernel compute; the explode is over pre-reduced
+    finest cells, never points, and partial aggregation bounds the shuffle
+    (measured at parity with the kernel at 5M points / depth 12).
+
+    Deeper trees keep ONE exchange of PRE-REDUCED rows: each input
     partition runs an Arrow kernel that encodes its points to finest cells
     (the float32-faithful reference descent) and rolls the counts up all
-    ``max_depth + 1`` levels with numpy unique/bincount, yielding one partial
-    (cell_id, depth, count) frame per partition. A single groupBy then merges
-    the partials. The shuffle carries Σ_d min(partition_rows, occupied(d))
-    rows per partition — the rollup collapses shallow depths at memory speed
-    inside the kernel, where the equivalent relational shape (explode every
-    finest cell into its ancestors, hash-aggregate (depth+1)·cells rows)
-    pushes the whole expansion through the JVM hash tables: measured 3-4×
-    slower at 5M points and the dominant term in the N→4N scaling bench.
-    The per-level-groupBy CHAIN alternative is worse still — max_depth
-    sequential exchanges of fixed stage latency no executor count removes.
-
-    Trees the JVM can encode (max_depth <= 13 on the reference domain — the
-    cell_id_col exact/hybrid codegen ceiling) take an all-JVM route
-    instead: the codegen encode + one grouped count to finest cells, then
-    the ancestor explode over the min(N, 4^max_depth) FINEST-CELL rows.
-    This skips the JVM<->Python Arrow boundary entirely, whose round trip
-    alone measured ~1.9 s on a 6M-point scan (guide §4.1) against ~0.3 s of
-    kernel compute: the depth-8 contract build's counts pass dropped
-    2.7 -> ~1 s and the depth-12 pass over 6M points 5.2 -> 2.2 s at 32
-    cores. The 3-4x relational caveat above does not bite even in the
-    worst case (occupied-finest ~ N): at 5M points / depth 12 / 4.3M
-    occupied cells the explode+agg measured at PARITY with the kernel at 1
-    and 4 pinned cores (23.2 vs 26.5 s, 6.3 vs 6.6 s) — the explode is
-    over pre-reduced finest cells, never points, and partial aggregation
-    bounds the shuffle. Deeper trees (no JVM encode) keep the kernel."""
+    ``max_depth + 1`` levels with numpy unique/bincount, yielding one
+    partial (cell_id, depth, count) frame per partition; a single groupBy
+    merges the partials. There the occupied-finest count approaches N, and
+    the relational explode of every finest cell into its ancestors measured
+    3-4× slower than the in-kernel rollup at 5M points."""
 
     out_schema = "cell_id long, depth int, count long"
 
-    if tuple(domain) == tuple(DOMAIN) and max_depth <= C._HYBRID_JVM_MAX_DEPTH:
-        fin = (
-            points.select(
-                C.cell_id_col(F.col(x), F.col(y), max_depth, domain).alias("_fid")
-            )
-            .groupBy("_fid")
-            .agg(F.count(F.lit(1)).alias("count"))
-        )
-        chain = F.array(*[ancestor_col(F.col("_fid"), k) for k in range(max_depth + 1)])
+    if _jvm_encodable(max_depth, domain):
         return (
-            fin.select(F.posexplode(chain).alias("k", "cell_id"), "count")
-            .select(
-                "cell_id",
-                (F.lit(max_depth) - F.col("k")).cast("int").alias("depth"),
-                "count",
-            )
+            _prefix_rows(_finest_counts(points, x, y, max_depth, domain), max_depth, max_depth + 1)
             .groupBy("cell_id", "depth")
             .agg(F.sum("count").alias("count"))
         )
@@ -225,89 +239,135 @@ def cells_from_counts(
     max_depth: int = MAX_DEPTH,
     domain=DOMAIN,
 ) -> DataFrame:
-    """Derive the tree relation from prefix counts (cells-only work)."""
-    # The count/depth predicates are cheap JVM filters and eliminate ~99% of
-    # rows (only dense cells can be interior), so they run BEFORE the bbox
-    # pandas UDF — the Arrow kernel then sees candidate-interior cells only,
-    # not every occupied prefix cell.
-    candidates = counts_all.where(
-        (F.col("count") >= min_points) & (F.col("depth") < max_depth)
+    """Derive the tree relation from a (cell_id, depth, count) prefix-counts
+    relation (``counts_from_points``, or counts merged with mutation
+    deltas): every row at depth 1..max_depth is one edge to its parent, and
+    the parent aggregation of ``build_cells`` decides the tree — cells-only
+    work, one exchange."""
+    return _cells_from_prefix_rows(
+        counts_all.where(F.col("depth").between(1, max_depth)),
+        min_points, min_distance, max_depth, domain,
     )
+
+
+def _cells_from_prefix_rows(
+    rows: DataFrame,
+    min_points: int,
+    min_distance: float,
+    max_depth: int,
+    domain,
+) -> DataFrame:
+    """The tree from (cell_id, depth, count) rows at depths 1..max_depth —
+    several rows per cell allowed, their counts add up.
+
+    Each row is an edge (parent, parent depth, child index 1-4, count); one
+    aggregation grouped by parent gives the parent's count ``n`` and child
+    counts ``c1..c4``. A parent is interior iff n >= min_points and its
+    extent passes (every parent here is shallower than max_depth), so every
+    tree cell below the root is emitted exactly once, by its interior
+    parent's group, with its count (0 for an empty child). One zero-count
+    edge of the root is unioned into the aggregation input, so the depth-0
+    group — which emits the root row — exists even for an empty input."""
+    if max_depth < 1:
+        raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     # The extent stop (|x1-x2| >= min_distance OR |y1-y2| >= min_distance,
     # float32) cannot bite while the widest axis of a depth-(max_depth-1)
     # cell is still ≥ 2·min_distance: the float32 descent halves each axis
-    # within 1 ulp per level, so every candidate's extent test is TRUE and
-    # the Arrow bbox stage here is a constant-true filter — skip it and
-    # save one Python stage on the build's critical path. (The reference
-    # defaults — 1e6 domain, min_distance 5 — keep the test provably
-    # constant through depth 16; deeper trees evaluate it as before.)
+    # within 1 ulp per level, so every parent's extent test is TRUE and the
+    # Arrow bbox stage is skipped. (The reference defaults — 1e6 domain,
+    # min_distance 5 — keep the test provably constant through depth 16;
+    # deeper trees evaluate it on the candidate parents.)
     max_axis = max(abs(domain[2] - domain[0]), abs(domain[3] - domain[1]))
-    if max_axis / (1 << max(max_depth - 1, 0)) >= 2.0 * min_distance:
-        interior = candidates.select("cell_id", "depth", "count")
-    else:
-        interior = candidates.withColumn(
-            "g", bbox_struct_col(F.col("cell_id"), F.col("depth"), domain, min_distance)
-        ).where(F.col("g.extent_ok")).select("cell_id", "depth", "count")
-
-    # Every interior cell spawns exactly 4 children (reference recursion is
-    # unconditional: create_grid.cu:147-155) — empties become 0-count leaves.
-    children = interior.select(
-        F.explode(F.array(*[F.lit(k) for k in (1, 2, 3, 4)])).alias("k"),
-        (F.col("cell_id") * 4 + F.col("k")).alias("child_id"),
-        (F.col("depth") + 1).alias("depth"),
-    ).select(F.col("child_id").alias("cell_id"), "depth")
-
-    # Reality join: a non-root cell exists iff its parent is interior. Ids are
-    # globally unique across depths, so cell_id alone is the key. Outer join
-    # preserving the children side: the preserved side of an outer join can't
-    # be the broadcast build side, and at full scale BOTH sides are O(cells)
-    # anyway — the shuffled join (keys + one long each) is the scale shape;
-    # AQE coalesces the tiny post-shuffle partitions at test scale.
-    real = children.join(
-        counts_all.select("cell_id", "count"), on="cell_id", how="left"
-    ).select("cell_id", "depth", F.coalesce(F.col("count"), F.lit(0)).alias("count"))
-
-    # The root row always exists; its count is the depth-0 rollup (0 if the
-    # input is empty — the aggregate below is over ≤1 row, not the points).
-    root = (
-        counts_all.where(F.col("depth") == 0)
-        .groupBy()
-        .agg(F.coalesce(F.sum("count"), F.lit(0)).alias("count"))
-        .select(
-            F.lit(0).cast("long").alias("cell_id"),
-            F.lit(0).cast("int").alias("depth"),
-            "count",
-        )
+    test_extent = max_axis / (1 << (max_depth - 1)) < 2.0 * min_distance
+    e = C.cached_column(
+        ("quadtree", min_points, float(min_distance), max_depth, tuple(domain)),
+        lambda: _tree_cols(min_points, max_depth, test_extent),
     )
-
-    cells = root.unionByName(real)
+    root_edge = rows.sparkSession.sql("SELECT 0L AS parent, 0 AS pdepth, 0 AS k, 0L AS count")
+    # Only the root group and candidate-interior groups emit rows, so the
+    # count predicate runs before any extent test.
+    groups = (
+        rows.select(*_aliased(e["edges"]))
+        .unionByName(root_edge)
+        .groupBy("parent", "pdepth")
+        .agg(*_aliased(e["sums"]))
+        .where(e["candidate"])
+    )
+    if test_extent:
+        groups = groups.withColumn(
+            "_pg", bbox_struct_col(F.col("parent"), F.col("pdepth"), domain, min_distance)
+        )
+    cells = groups.select(e["emit"]).where(e["emitted"]).drop("_emit")
     # Output bboxes: pure-JVM twin whenever the depth/domain admits it (the
-    # same gate as the all-JVM count rollup) — this removes the LAST Python
-    # stage from the build; bit-identity with the numpy kernel is argued and
-    # pytest-pinned at with_cell_bbox_jvm. Deeper trees keep the Arrow kernel.
-    if tuple(domain) == tuple(DOMAIN) and max_depth <= C._HYBRID_JVM_MAX_DEPTH:
+    # same gate as the all-JVM count) — no Python stage in the build;
+    # bit-identity with the numpy kernel is pytest-pinned at
+    # with_cell_bbox_jvm. Deeper trees keep the Arrow kernel.
+    if _jvm_encodable(max_depth, domain):
         cells = C.with_cell_bbox_jvm(cells, max_depth, domain, min_distance)
     else:
         cells = cells.withColumn(
             "g", bbox_struct_col(F.col("cell_id"), F.col("depth"), domain, min_distance)
         )
-    cells = cells.select(
-        "cell_id",
-        "depth",
-        F.col("g.min_x").alias("min_x"),
-        F.col("g.min_y").alias("min_y"),
-        F.col("g.max_x").alias("max_x"),
-        F.col("g.max_y").alias("max_y"),
-        "count",
-        (
-            ~(
-                (F.col("count") >= min_points)
-                & F.col("g.extent_ok")
-                & (F.col("depth") < max_depth)
-            )
-        ).alias("is_leaf"),
-    )
-    return cells
+    return cells.select(*_aliased(e["out"]))
+
+
+def _aliased(cols: dict[str, Column]) -> list[Column]:
+    return [c.alias(name) for name, c in cols.items()]
+
+
+def _tree_cols(min_points: int, max_depth: int, test_extent: bool) -> dict:
+    """The alias-free Column trees of ``_cells_from_prefix_rows`` (cached)."""
+    cid = F.col("cell_id")
+    parent = parent_col(cid)
+    count = F.col("count")
+    n, pdepth, p = F.col("n"), F.col("pdepth"), F.col("parent")
+    interior = n >= min_points
+    if test_extent:
+        interior = interior & F.col("_pg.extent_ok")
+
+    def cell(cell_id: Column, depth: Column, count: Column, emit: Column) -> Column:
+        return F.named_struct(
+            F.lit("cell_id"), cell_id, F.lit("depth"), depth,
+            F.lit("count"), count, F.lit("_emit"), emit,
+        )
+
+    return {
+        "edges": {
+            "parent": parent,
+            "pdepth": (F.col("depth") - 1).cast("int"),
+            "k": (cid - parent * 4).cast("int"),
+            "count": count.cast("long"),
+        },
+        "sums": {
+            "n": F.sum(count),
+            **{
+                f"c{i}": F.sum(F.when(F.col("k") == i, count).otherwise(F.lit(0)))
+                for i in (1, 2, 3, 4)
+            },
+        },
+        "candidate": (n >= min_points) | (pdepth == 0),
+        # Every interior cell spawns exactly 4 children (reference recursion
+        # is unconditional: create_grid.cu:147-155) — empties become
+        # 0-count leaves.
+        "emit": F.inline(F.array(
+            cell(p, pdepth, n, pdepth == 0),
+            *[cell(p * 4 + F.lit(i), pdepth + 1, F.col(f"c{i}"), interior) for i in (1, 2, 3, 4)],
+        )),
+        "emitted": F.col("_emit"),
+        "out": {
+            "cell_id": cid,
+            "depth": F.col("depth"),
+            "min_x": F.col("g.min_x"),
+            "min_y": F.col("g.min_y"),
+            "max_x": F.col("g.max_x"),
+            "max_y": F.col("g.max_y"),
+            "count": count,
+            "is_leaf": ~(
+                (count >= min_points) & F.col("g.extent_ok") & (F.col("depth") < max_depth)
+            ),
+        },
+    }
+
 
 def build_cells(
     points: DataFrame,
@@ -323,15 +383,18 @@ def build_cells(
     Returns ``(cell_id long, depth int, min_x/min_y/max_x/max_y float,
     count long, is_leaf boolean)`` — semantically identical to the relation
     prepare_boundaries emits (cuda/kernels.cu:517-537), including zero-count
-    leaf children of interior nodes.
+    leaf children of interior nodes. Lazy, and persists nothing of its own:
+    for JVM-encodable trees the finest-cell histogram feeds the parent
+    aggregation directly (two exchanges); deeper trees go through
+    ``counts_from_points`` → ``cells_from_counts``.
     """
-    counts_all = counts_from_points(points, x, y, domain, max_depth).persist()
-    cells = cells_from_counts(counts_all, min_points, min_distance, max_depth, domain)
-    # the internal counts persist rides along so long-lived callers (the
-    # entrypoints index cache) can release it with the cells relation —
-    # otherwise every build leaks one persisted counts DataFrame
-    cells._graft_persists = [counts_all]
-    return cells
+    if _jvm_encodable(max_depth, domain):
+        rows = _prefix_rows(_finest_counts(points, x, y, max_depth, domain), max_depth, max_depth)
+        return _cells_from_prefix_rows(rows, min_points, min_distance, max_depth, domain)
+    return cells_from_counts(
+        counts_from_points(points, x, y, domain, max_depth),
+        min_points, min_distance, max_depth, domain,
+    )
 
 
 def validate_cells(
@@ -366,9 +429,10 @@ def validate_cells(
         .groupBy("_fid")
         .agg(F.count(F.lit(1)).alias("_npts"))
     )
-    chain = F.array(*[ancestor_col(F.col("_fid"), k) for k in range(max_depth + 1)])
     claims = (
-        finest.select("_fid", "_npts", F.explode(chain).alias("cell_id"))
+        finest.select(
+            "_fid", "_npts", F.explode(ancestor_chain_col("_fid", max_depth + 1)).alias("cell_id")
+        )
         .join(F.broadcast(leaves.select("cell_id")), on="cell_id", how="inner")
         .groupBy("_fid", "_npts")
         .agg(F.count(F.lit(1)).alias("_n_leaves"))

@@ -13,17 +13,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def scan_metrics(df: DataFrame) -> list[dict[str, int]]:
-    """Metrics of every file-scan node in the EXECUTED plan of ``df`` (call
-    after an action, e.g. ``df.collect()``): one dict per scan with keys like
-    numFiles, numPartitions, numOutputRows, filesSize."""
-    out: list[dict[str, int]] = []
+def plan_nodes(df: DataFrame) -> list:
+    """Every node of the EXECUTED physical plan of ``df`` (call after an
+    action), as JVM objects: adaptive plans are replaced by their final
+    plan and each query stage is followed by the exchange or cache scan it
+    wraps (a stage is a leaf in the plan tree)."""
+    out: list = []
 
     def walk(node) -> None:
         name = node.nodeName()
         if name.startswith("AdaptiveSparkPlan"):
             walk(node.executedPlan())
             return
+        out.append(node)
+        if name.endswith("QueryStage"):
+            walk(node.plan())
+            return
+        ch = node.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def scan_metrics(df: DataFrame) -> list[dict[str, int]]:
+    """Metrics of every file-scan node in the EXECUTED plan of ``df`` (call
+    after an action, e.g. ``df.collect()``): one dict per scan with keys like
+    numFiles, numPartitions, numOutputRows, filesSize."""
+    out: list[dict[str, int]] = []
+    for node in plan_nodes(df):
+        name = node.nodeName()
         if "Scan" in name and "parquet" in name.lower():
             m: dict[str, int] = {}
             it = node.metrics().iterator()
@@ -31,9 +51,4 @@ def scan_metrics(df: DataFrame) -> list[dict[str, int]]:
                 kv = it.next()
                 m[kv._1()] = int(kv._2().value())
             out.append(m)
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
     return out

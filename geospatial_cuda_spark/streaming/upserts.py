@@ -65,7 +65,7 @@ class PointTableStream:
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
-            BUCKET_COL, cell_id_col(F.col("x"), F.col("y"), self.bucket_depth)
+            BUCKET_COL, cell_id_col("x", "y", self.bucket_depth)
         )
 
     def read_points(self) -> DataFrame:
@@ -111,13 +111,6 @@ class PointTableStream:
         return writer.start()
 
     def cells(self) -> DataFrame:
-        """Fresh cells relation over the committed points. Each build pins an
-        internal counts persist; the previous call's is released here so a
-        long-lived stream polling cells() does not accumulate executor
-        storage (review finding — the leak the index-cache LRU fixed for the
-        batch entrypoints)."""
-        cells = QT.build_cells(self.read_points(), max_depth=self.max_depth)
-        for dep in getattr(self, "_prev_cells_persists", []):
-            dep.unpersist()
-        self._prev_cells_persists = getattr(cells, "_graft_persists", [])
-        return cells
+        """Fresh cells relation over the committed points (lazy; the build
+        persists nothing, so a stream polling cells() holds no storage)."""
+        return QT.build_cells(self.read_points(), max_depth=self.max_depth)

@@ -61,10 +61,16 @@ def main() -> int:
     else:
         images = images_table(spark, args.synth)
     images = with_geotag(images)
-    n_images = images.count()
 
     cells = QT.build_cells(images, max_depth=args.depth).persist()
-    cells.count()
+    # the root row's count is the image count: one job that also fills the
+    # persisted cells, instead of a separate scan of the images
+    n_images = int(
+        cells.agg(
+            F.sum(F.when(F.col("depth") == 0, F.col("count")).otherwise(F.lit(0)))
+        ).first()[0]
+        or 0
+    )
 
     queries = images.where(F.col("phash") % args.query_mod == 0).select(
         F.col("phash").alias("qid"), "x", "y"

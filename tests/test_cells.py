@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from geospatial_cuda_spark import DOMAIN
 from geospatial_cuda_spark import oracle
@@ -295,3 +296,11 @@ def test_bbox_jvm_matches_float32_kernel(spark):
         assert np.array_equal(got["max_x"].to_numpy(np.float32), exp["x2"][sel][order])
         assert np.array_equal(got["max_y"].to_numpy(np.float32), exp["y2"][sel][order])
         assert np.array_equal(got["extent_ok"].to_numpy(bool), exp_ok[sel][order])
+
+
+def test_bbox_jvm_rejects_staged_name_collision(spark):
+    """A caller column named like one of with_cell_bbox_jvm's staged _bb_*
+    columns raises instead of being silently overwritten and dropped."""
+    df = spark.createDataFrame([(5, 1, 2.5)], "cell_id long, depth int, _bb_row double")
+    with pytest.raises(ValueError, match="_bb_row"):
+        C.with_cell_bbox_jvm(df, 8)

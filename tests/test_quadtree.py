@@ -10,18 +10,50 @@ from geospatial_cuda_spark import oracle
 from geospatial_cuda_spark.operators import quadtree as QT
 
 
-@pytest.fixture(scope="module")
-def built(spark, small_points, small_points_df):
-    x, y = small_points
-    root = oracle.build_quadtree(x, y)
+def _dense_cell_points():
+    """64 points (with duplicates) inside ONE depth-14 cell — cell edges lie
+    at multiples of 1e6/2^14 ≈ 61.04, and these span 611..618 x 611..614 —
+    so a single chain splits to max_depth beside zero-count siblings."""
+    i = np.arange(64)
+    return (611 + i % 8).astype(np.float32), (611 + (i // 8) % 4).astype(np.float32)
+
+
+def _domain_max_points():
+    """Points on the closed domain's max edges and corner, where the JVM
+    encode clamps to the last bin and the kernel takes every right/top
+    branch; the (5e5, 1e6) group also sits on the root's vertical midline."""
+    x = [1e6] * 8 + [1e6] * 6 + [0.0] * 6 + [999999.0] * 6 + [5e5] * 6
+    y = [1e6] * 8 + [0.0] * 6 + [1e6] * 6 + [1e6] * 6 + [1e6] * 6
+    return np.float32(x), np.float32(y)
+
+
+ORACLE_INPUTS = {
+    "small": None,  # the session fixture's points
+    "empty": (np.zeros(0, np.float32), np.zeros(0, np.float32)),
+    "dense": _dense_cell_points(),
+    "domain_max": _domain_max_points(),
+}
+
+
+@pytest.mark.parametrize("max_depth", [8, 12, 13, 14, 18])
+@pytest.mark.parametrize("case", list(ORACLE_INPUTS))
+def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
+    """build_cells equals the recursive oracle row for row on every input,
+    through the JVM route (depth ≤ 13) and the Arrow-kernel counts route
+    (14, and 18 where the extent stop is evaluated). The JVM route's
+    executed plan is the one-aggregation shape: two shuffle exchanges (the
+    finest-cell histogram and the parent aggregation), no join and no
+    cached-relation scan; the empty input also gets its root row."""
+    import pandas as pd
+
+    from geospatial_cuda_spark.planaudit import plan_nodes
+
+    x, y = ORACLE_INPUTS[case] or small_points
+    root = oracle.build_quadtree(x, y, max_depth=max_depth)
     want = {r["cell_id"]: r for r in oracle.cells_relation(root)}
-    got_rows = QT.build_cells(small_points_df).collect()
-    return want, got_rows
-
-
-def test_cells_relation_equals_oracle(built):
-    want, got_rows = built
-    got = {r.cell_id: r for r in got_rows}
+    pts = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}), "x float, y float")
+    cells = QT.build_cells(pts, max_depth=max_depth)
+    got = {r.cell_id: r for r in cells.collect()}
     assert set(got) == set(want)
     for cid, w in want.items():
         g = got[cid]
@@ -34,9 +66,47 @@ def test_cells_relation_equals_oracle(built):
             np.float32(w["max_x"]),
             np.float32(w["max_y"]),
         ), cid
+    if max_depth <= 13:
+        names = [node.nodeName() for node in plan_nodes(cells)]
+        # AQE drops the histogram's exchange once it sees an empty input
+        assert names.count("Exchange") == (2 if x.size else 1), names
+        assert not any("Join" in name for name in names), names
+        assert "InMemoryTableScan" not in names, names
 
 
-def test_no_point_outside_leaf(spark, small_points_df, built):
+def test_cells_from_deeper_counts_equals_build(spark, small_points_df):
+    """cells_from_counts reads only the prefix counts down to its max_depth:
+    a depth-14 counts relation yields the depth-12 tree build_cells gives."""
+    counts = QT.counts_from_points(small_points_df, max_depth=14)
+    got = QT.cells_from_counts(counts, max_depth=12).collect()
+    want = QT.build_cells(small_points_df, max_depth=12).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_warm_build_reuses_cached_column_trees(spark, small_points_df, monkeypatch):
+    """The build's heavy Column trees are rendered once per SparkContext:
+    constructing a second build_cells plan makes at most 1,000 py4j round
+    trips (about 8,000 when every call rebuilt them), and a repeated
+    cell_id_col key returns the cached JVM object."""
+    from geospatial_cuda_spark.functions import cells as C
+
+    QT.build_cells(small_points_df, max_depth=12)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        QT.build_cells(small_points_df, max_depth=12)
+    assert 0 < len(sent) <= 1000, len(sent)
+    assert C.cell_id_col("x", "y", 12)._jc is C.cell_id_col("x", "y", 12)._jc
+
+
+def test_no_point_outside_leaf(spark, small_points_df):
     """validate_grid (cuda/kernels.cu:422-492) as an anti-join: zero points
     violate their assigned leaf bbox."""
     from pyspark.sql import functions as F
