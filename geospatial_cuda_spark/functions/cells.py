@@ -12,9 +12,13 @@ data-driven. This module provides:
 
 - numpy kernels (float32-faithful) used by Arrow-vectorized pandas UDFs:
   ``encode_cell_ids``, ``cell_bbox``, ``candidate_cell_ids``;
-- pure-Column / SQL expression generators (exact integer arithmetic, valid
-  for depth ≤ 10 where the float32 midpoints are exactly representable) that
-  run identically on Spark and DuckDB for the oracle cross-checks.
+- pure-Column twins of the encode and bbox kernels (``cell_id_col_jvm*``,
+  ``with_cell_bbox_jvm``), chosen by depth — whole-stage codegen through
+  depth 13, the Arrow kernel deeper — and bit-identical to the kernels;
+  search candidates (``candidate_cells_col``) have the kernel form only;
+- SQL expression generators (exact integer arithmetic, valid for depth ≤ 10
+  where the float32 midpoints are exactly representable) that run
+  identically on Spark and DuckDB for the oracle cross-checks.
 
 Ids are unique ACROSS depths: depth-d ids live in
 ``[(4^d-1)/3, (4^(d+1)-4)/3]`` (all-1s digits .. all-4s digits — disjoint
@@ -296,16 +300,7 @@ def cell_id_col_jvm(xcol, ycol, depth: int, domain=DOMAIN):
         return F.lit(0).cast("long")
     col = _axis_bin_col(xcol, depth, domain[0], domain[2])
     row = _axis_bin_col(ycol, depth, domain[1], domain[3])
-    cid = F.lit(0).cast("long")
-    for level in range(1, depth + 1):
-        shift = depth - level
-        digit = (
-            F.shiftright(row, shift).bitwiseAND(F.lit(1)) * 2
-            + F.shiftright(col, shift).bitwiseAND(F.lit(1))
-            + F.lit(1)
-        )
-        cid = cid + digit.cast("long") * F.lit(4**shift)
-    return cid
+    return _interleave_colrow(col, row, depth)
 
 
 # Hybrid ceiling: each float32 descent level past depth 10 roughly triples
@@ -394,16 +389,6 @@ def neighbor_ring_col(idcol, depth: int, radius: int = 1):
         return pd.Series(list(arr))
 
     return _ring(idcol)
-
-
-def _axis_bin_right_col(c, depth: int, lo: float, hi: float):
-    """Bin under the ``<`` rule (on-boundary goes RIGHT): floor instead of
-    ceil-minus-one — the second containment chain per axis (closed bboxes
-    overlap on shared edges). Float32-quantized first, as _axis_bin_col."""
-    n = 1 << depth
-    cq = c.cast("float").cast("double")
-    scaled = (cq - F.lit(float(lo))) * F.lit(float(n)) / F.lit(float(hi - lo))
-    return F.least(F.greatest(F.floor(scaled), F.lit(0)), F.lit(n - 1))
 
 
 def _interleave_colrow(col, row, depth: int):
@@ -558,79 +543,12 @@ def _cell_bbox_stages(id_col: str, depth_col: str, max_depth: int, domain,
     return stages, bbox
 
 
-def candidate_cells_col_jvm(xcol, ycol, max_depth: int, domain=DOMAIN):
-    """Pure-Column candidate array: per depth, the containment set is the
-    cross product of the ≤2 per-axis bins ({``<=``-rule, ``<``-rule} chains),
-    valid while boundaries are float32-exact (depth ≤ 10). -1 outside the
-    closed domain; duplicates retained (callers dedup relationally) — the
-    exact contract of the Arrow kernel (incl. its float32 input quantization:
-    the comparisons run on the float32-cast coordinates)."""
-    xq = xcol.cast("float")
-    yq = ycol.cast("float")
-    in_domain = (
-        (xq >= F.lit(float(domain[0])).cast("float"))
-        & (xq <= F.lit(float(domain[2])).cast("float"))
-        & (yq >= F.lit(float(domain[1])).cast("float"))
-        & (yq <= F.lit(float(domain[3])).cast("float"))
-    )
-    ids = [F.when(in_domain, F.lit(0).cast("long")).otherwise(F.lit(-1).cast("long"))]
-    for d in range(1, max_depth + 1):
-        cols = [_axis_bin_col(xcol, d, domain[0], domain[2]),
-                _axis_bin_right_col(xcol, d, domain[0], domain[2])]
-        rows = [_axis_bin_col(ycol, d, domain[1], domain[3]),
-                _axis_bin_right_col(ycol, d, domain[1], domain[3])]
-        for c in cols:
-            for r in rows:
-                ids.append(
-                    F.when(in_domain, _interleave_colrow(c, r, d)).otherwise(
-                        F.lit(-1).cast("long")
-                    )
-                )
-    return F.array(*ids)
-
-
-def candidate_chain_cols(xcol, ycol, max_depth: int, domain=DOMAIN):
-    """The SPLIT form of the JVM candidate set: 4 FULL-depth chain ids (one
-    per {``<=``, ``<``} rule pair across the two axes) plus the closed-domain
-    flag, for callers that can stage them as real columns. Per-depth
-    candidates are then ancestors of these chains (bins nest: the depth-d bin
-    is the depth-D bin >> (D-d), see cell_id_col_jvm) — tiny parent-chain
-    arithmetic over attribute references. Rendering all depths×chains inline
-    in one Generate (candidate_cells_col_jvm's shape) exceeds the JVM's
-    64 KB method limit and silently de-optimizes to interpreted expression
-    evaluation (~10× slower, plus a multi-second failed-compile attempt);
-    the two-projection split compiles. Valid for max_depth ≤ _EXACT_JVM_DEPTH
-    on the default domain."""
-    xq = xcol.cast("float")
-    yq = ycol.cast("float")
-    in_domain = (
-        (xq >= F.lit(float(domain[0])).cast("float"))
-        & (xq <= F.lit(float(domain[2])).cast("float"))
-        & (yq >= F.lit(float(domain[1])).cast("float"))
-        & (yq <= F.lit(float(domain[3])).cast("float"))
-    )
-    cols = [_axis_bin_col(xcol, max_depth, domain[0], domain[2]),
-            _axis_bin_right_col(xcol, max_depth, domain[0], domain[2])]
-    rows = [_axis_bin_col(ycol, max_depth, domain[1], domain[3]),
-            _axis_bin_right_col(ycol, max_depth, domain[1], domain[3])]
-    chains = [_interleave_colrow(c, r, max_depth) for c in cols for r in rows]
-    return chains, in_domain
-
-
-def candidate_cells_col(xcol, ycol, max_depth: int = MAX_DEPTH, domain=DOMAIN,
-                        impl: str = "auto"):
-    """Column: array<long> of closed-containment candidate ids (with dups).
-
-    ``impl='auto'``: same JVM/Arrow dispatch rule as cell_id_col — depth ≤ 10
-    on the default domain runs whole-stage-codegen; deeper replays the
-    float32 descent in the Arrow kernel. ``impl='arrow'`` forces the kernel
-    at any depth: the JVM form's large expression tree costs ~2 s of Janino
-    compile on every FRESH plan (measured; its execution is ~10× the kernel's
-    throughput once compiled and ships zero Arrow bytes), so one-shot or
-    small-Q plans come out ahead on the kernel while long-lived sessions and
-    huge query sides favor the compiled JVM form."""
-    if impl != "arrow" and max_depth <= _EXACT_JVM_DEPTH and tuple(domain) == tuple(DOMAIN):
-        return candidate_cells_col_jvm(xcol, ycol, max_depth, domain)
+def candidate_cells_col(xcol, ycol, max_depth: int = MAX_DEPTH, domain=DOMAIN):
+    """Column: array<long> of closed-containment candidate ids (with dups),
+    from the float32 double-descent kernel ``candidate_cell_ids`` at any
+    depth. Per query it ships ~300 B across the Arrow boundary and the plan
+    compiles in ms; a pure-Column rendering of the same set costs ~2 s of
+    Janino compile on every fresh plan (r6: 0.88 s vs 0.21 s per search)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def _cand(xs: pd.Series, ys: pd.Series) -> pd.Series:

@@ -1,6 +1,6 @@
-"""Vector math over array<float> columns — JVM-side (zip_with/aggregate
-inside whole-stage codegen), plus the one shared Arrow pair-scoring kernel
-used wherever a rounded cosine crosses the oracle hash gate."""
+"""Vector scoring over array<float> columns: the one shared Arrow
+pair-scoring kernel used wherever a rounded cosine crosses the oracle hash
+gate."""
 
 from __future__ import annotations
 
@@ -8,51 +8,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import DoubleType
-
-
-def dot_col(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_col(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
-def dot_col_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product UNROLLED to ``dim`` element_at terms. Semantically equal to
-    ``dot_col`` (same left-to-right double summation order), but the unrolled
-    form is plain arithmetic inside whole-stage codegen, where the
-    higher-order aggregate/zip_with form is interpreted per element (a
-    closure eval per array slot — measured ~10× slower on a 64-dim
-    candidate-pair scoring join). Use when the embedding dim is statically
-    known; fall back to ``dot_col`` otherwise."""
-    out = None
-    for i in range(1, dim + 1):
-        term = F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-        out = term if out is None else out + term
-    return out
-
-
-def norm_col_fixed(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_col_fixed(a, a, dim))
-
-
-def cosine_col_fixed(a: Column, b: Column, dim: int) -> Column:
-    return dot_col_fixed(a, b, dim) / (norm_col_fixed(a, dim) * norm_col_fixed(b, dim))
 
 
 @F.pandas_udf(DoubleType())
@@ -79,31 +34,9 @@ def pair_cosine_rounded(a: Column, b: Column) -> Column:
     and norms per element index left-to-right, the identical summation order
     as DuckDB's ``list_dot_product`` fold (BLAS blocked accumulation can
     differ in final ulps, which after rounding could flip a comparison).
-    ``F.round(cosine_col(...))`` is close but NOT identical: Spark F.round
+    ``F.round`` over a Column cosine is close but NOT identical: it
     applies HALF_UP to the shortest-decimal repr via BigDecimal, which can
     diverge from binary-value rounding — a latent hash-gate flake on future
     fixtures (ADVICE r3). Arrow cost: 2·dim floats per pair, plan compiles in
     ms (vs ~1.5 s Janino for the unrolled Column tree at dim=64)."""
     return _pair_cosine_rounded_udf(a, b)
-
-
-def pair_cosine_rounded_jvm(a: Column, b: Column, dim: int) -> Column:
-    """JVM twin of ``pair_cosine_rounded`` for a statically-known ``dim``:
-    the identical left-to-right double accumulation (``cosine_col_fixed``
-    unrolls elements 1..dim in the same order the Arrow kernel's ``for d``
-    loop adds them) and the identical binary half-away rounding
-    (``signum(c)·floor(|c|·1e6 + 0.5)/1e6`` — the same IEEE op sequence as
-    ``util.round_half_away``, including ``-1·0 = -0.0`` matching copysign),
-    so the two scorers are BIT-identical (pytest-pinned). Trade: one ~1.5 s
-    Janino compile of the ~3·dim-term tree per fresh plan, but ZERO
-    JVM↔Python transfer — the right side of the trade for a large standing
-    corpus×query product, where the Arrow kernel ships 2·dim float64 per
-    product row (ADVICE r4)."""
-    c = cosine_col_fixed(a, b, dim)
-    s = F.lit(10.0**6)
-    return F.signum(c) * F.floor(F.abs(c) * s + F.lit(0.5)) / s
-
-
-DOT_SQL = (
-    "list_dot_product({a}, {b})"  # DuckDB spelling, kept here for reference
-)

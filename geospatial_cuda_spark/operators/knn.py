@@ -13,8 +13,8 @@ Spatial kNN
 
 Embedding ANN
 -------------
-- ``ann_bruteforce``: exact top-k cosine, JVM-side dot products
-  (zip_with + aggregate — no Python in the scoring loop).
+- ``ann_bruteforce``: exact top-k cosine, broadcast queries scored by the
+  shared Arrow pair kernel (``vectors.pair_cosine_rounded``).
 - ``ann_ivf``: IVF-style two-stage search: deterministic centroids
   (first n_centroids vectors), vectorized Arrow assignment, probe the
   ``n_probe`` nearest centroid buckets only.
@@ -29,7 +29,7 @@ from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from .. import MAX_DEPTH
 from ..functions import cells as C
-from ..functions.vectors import pair_cosine_rounded, pair_cosine_rounded_jvm
+from ..functions.vectors import pair_cosine_rounded
 from .quadtree import ancestor_col
 
 
@@ -282,8 +282,6 @@ def ann_bruteforce(
     vec_id: str = "vec_id",
     emb: str = "embedding",
     qid: str = "q_vec_id",
-    scorer: str = "arrow",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine: broadcast queries, Arrow pair-scoring kernel,
     window top-k. Output sim is rounded to 6 dp through the shared
@@ -293,26 +291,13 @@ def ann_bruteforce(
     reproducible across engines.
 
     Scaling trade-off (ADVICE r4): the Arrow kernel ships 2·dim float64 per
-    (corpus × query) product row across the JVM↔Python boundary — a per-row
-    transfer cost the JVM ``zip_with``/``aggregate`` form avoids, at the
-    price of a ~1.5 s Janino compile of its ~3·dim-term tree on every fresh
-    plan. The kernel wins for one-shot queries and bounded Q (the bench
-    case); for a large standing corpus×query product where the one-time
-    compile amortizes, pass ``scorer="jvm"`` with the embedding ``dim``:
-    scoring stays inside whole-stage codegen via ``pair_cosine_rounded_jvm``,
-    which is BIT-identical to the Arrow kernel (same accumulation order,
-    same binary half-away rounding — pytest-pinned), so the choice moves
-    cost only, never results."""
-    if scorer not in ("arrow", "jvm"):
-        raise ValueError(f"scorer={scorer!r} not in ('arrow', 'jvm')")
+    (corpus × query) product row across the JVM↔Python boundary. An unrolled
+    Column rendering of the same score avoids that transfer but pays a
+    ~1.5 s Janino compile of its ~3·dim-term tree on every fresh plan, which
+    loses for one-shot queries and bounded Q (the serving case)."""
     q = F.broadcast(query_vecs.select(F.col(vec_id).alias(qid), F.col(emb).alias("_qv")))
     joined = embeddings.crossJoin(q).where(F.col(vec_id) != F.col(qid))
-    if scorer == "jvm":
-        if dim is None:
-            raise ValueError("scorer='jvm' needs the static embedding dim")
-        sim = pair_cosine_rounded_jvm(F.col(emb), F.col("_qv"), dim)
-    else:
-        sim = pair_cosine_rounded(F.col(emb), F.col("_qv"))
+    sim = pair_cosine_rounded(F.col(emb), F.col("_qv"))
     w = Window.partitionBy(qid).orderBy(F.col("sim").desc(), F.col(vec_id).asc())
     return (
         joined.withColumn("sim", sim)
@@ -592,10 +577,10 @@ def ann_ivf(
     joined = tagged.join(probes, on="_bucket").where(F.col(vec_id) != F.col(qid))
     # final scoring through the SAME rounding regime as bucket assignment
     # (round_half_away) — mixing F.round here was a latent hash-gate flake.
-    # Deliberately the Arrow kernel, not the unrolled JVM scorer: the
-    # candidate set is tiny (n_probe·√N rows), and the unrolled ~3·dim-term
-    # tree pays a fresh ~1 s Janino compile on every new plan (one per
-    # query invocation) — measured 2.9 s vs 1.8 s per run, interleaved A/B.
+    # The Arrow kernel, not an unrolled Column scorer: the candidate set is
+    # tiny (n_probe·√N rows), and an unrolled ~3·dim-term tree pays a fresh
+    # ~1 s Janino compile on every new plan (one per query invocation) —
+    # measured 2.9 s vs 1.8 s per run, interleaved A/B.
     sim = pair_cosine_rounded(F.col(emb), F.col("_qv"))
     w = Window.partitionBy(qid).orderBy(F.col("sim").desc(), F.col(vec_id).asc())
     return (

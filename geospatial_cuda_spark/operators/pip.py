@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions.geo import pip_mask, pip_mask_rings
 
@@ -70,12 +70,11 @@ def point_in_polygons(
     x: str = "x",
     y: str = "y",
     out: str = "poly_id",
-    prefilter: bool = True,
     scorer: str = "arrow",
 ) -> DataFrame:
     """Rows of ``points`` × ids of containing polygons (inner semantics: rows
-    hitting no polygon are dropped; use ``containing_polys_col`` for the
-    array-valued projection instead). The polygon list rides every task
+    hitting no polygon are dropped; a point inside several polygons yields
+    one row per polygon). The polygon list rides every task
     closure and is scanned per Arrow batch — right for O(10²-10³) modest
     polygons; for large or heavy polygon sets use ``point_in_polygons_join``
     (polygons as a DataFrame, blocking join, nothing in the closure).
@@ -85,10 +84,9 @@ def point_in_polygons(
     masks, pytest-pinned), eliminating the JVM↔Python boundary entirely:
     on a 6M-point scan the Arrow round trip alone costs ~1.9 s (measured,
     identity mapInPandas) against ~0.25 s of actual mask compute, so for
-    small fixed polygon sets the JVM path is the right default at scale —
-    the same cost trade ``ann_bruteforce(scorer=)`` documents. The Arrow
-    kernel stays the path for big batches of heavy polygons, where one
-    numpy pass per edge amortizes and the expression tree would bloat.
+    small fixed polygon sets the JVM path is the right default at scale.
+    The Arrow kernel stays the path for big batches of heavy polygons, where
+    one numpy pass per edge amortizes and the expression tree would bloat.
 
     The Arrow kernel emits the hit rows DIRECTLY (mapInPandas row
     multiplication: per polygon, one vectorized bbox+ray-cast mask then a
@@ -129,11 +127,8 @@ def point_in_polygons(
             py = b[y].to_numpy(np.float64)
             frames = []
             for (pid, verts), bb in zip(polys, bboxes):
-                cand = (
-                    (px >= bb[0]) & (px <= bb[2]) & (py >= bb[1]) & (py <= bb[3])
-                    if prefilter
-                    else np.ones(px.shape[0], dtype=bool)
-                )
+                # bbox prefilter: skips only points pip_mask would reject
+                cand = (px >= bb[0]) & (px <= bb[2]) & (py >= bb[1]) & (py <= bb[3])
                 if not cand.any():
                     continue
                 m = pip_mask(px[cand], py[cand], verts)
@@ -317,30 +312,3 @@ def point_in_polygons_join(
         .cogroup(verts_side.groupBy(poly_id, "_salt"))
         .applyInPandas(_score, out_schema)
     )
-
-
-def containing_polys_col(polygons: list[tuple[int, np.ndarray]], x, y, prefilter: bool = True):
-    polys = [(int(pid), np.asarray(v, dtype=np.float64)) for pid, v in polygons]
-    bboxes = np.array(
-        [[v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max()] for _, v in polys]
-    )
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _pip(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        px = xs.to_numpy(np.float64)
-        py = ys.to_numpy(np.float64)
-        hit_lists: list[list[int]] = [[] for _ in range(px.shape[0])]
-        for (pid, verts), bb in zip(polys, bboxes):
-            cand = (
-                (px >= bb[0]) & (px <= bb[2]) & (py >= bb[1]) & (py <= bb[3])
-                if prefilter
-                else np.ones(px.shape[0], dtype=bool)
-            )
-            if not cand.any():
-                continue
-            m = pip_mask(px[cand], py[cand], verts)
-            for j in np.flatnonzero(cand)[m]:
-                hit_lists[j].append(pid)
-        return pd.Series(hit_lists)
-
-    return _pip(x, y)

@@ -10,11 +10,13 @@ resolve by max id), -1 when no boundary contains the point.
   every query × every boundary — then argmax. Right for small/medium cell
   relations (the boundary table is tiny relative to points).
 - ``prefix`` path: work-efficient equi-join — each query generates its ≤4
-  closed-containment candidate id chains (Arrow kernel), exploded and
-  equi-joined against the cells relation. O(depth) candidates per query
-  instead of O(#cells); the join shuffles on cell_id and survives cell
-  relations far beyond broadcast size. This inverts the reference's
-  brute-force-for-parallelism trade (SURVEY §4) without changing results.
+  closed-containment candidate id chains (the float32 Arrow kernel, the
+  only rendering of candidate generation), exploded and equi-joined against
+  the cells relation. O(depth) candidates per query instead of O(#cells);
+  AQE picks the join (a broadcast of the cells side at small scale, a
+  shuffle on cell_id far beyond broadcast size). This inverts the
+  reference's brute-force-for-parallelism trade (SURVEY §4) without
+  changing results. ``point_lookup`` locates through this path.
 """
 
 from __future__ import annotations
@@ -44,13 +46,16 @@ def quadrant_search_broadcast(
     x: str = "x",
     y: str = "y",
 ) -> DataFrame:
-    """Reference-shaped plan: broadcast boundaries, nested-loop containment."""
+    """Reference-shaped plan: broadcast boundaries, nested-loop containment.
+    Coordinates are quantized to float32 first, as the reference's points
+    and the prefix path's candidate kernel are (a no-op on float columns)."""
     b = F.broadcast(cells.select("cell_id", "min_x", "min_y", "max_x", "max_y"))
+    px, py = F.col(x).cast("float"), F.col(y).cast("float")
     cond = (
-        (F.col(x) >= F.col("min_x"))
-        & (F.col(x) <= F.col("max_x"))
-        & (F.col(y) >= F.col("min_y"))
-        & (F.col(y) <= F.col("max_y"))
+        (px >= F.col("min_x"))
+        & (px <= F.col("max_x"))
+        & (py >= F.col("min_y"))
+        & (py <= F.col("max_y"))
     )
     hits = queries.select(qid, x, y).join(b, on=cond, how="inner")
     return _argmax_fill(queries, hits, qid)
@@ -64,69 +69,24 @@ def quadrant_search_prefix(
     y: str = "y",
     max_depth: int = MAX_DEPTH,
     domain=DOMAIN,
-    broadcast_cells: bool = False,
-    candidate_impl: str = "arrow",
 ) -> DataFrame:
     """Scale path: candidate-chain equi-join instead of nested-loop scan.
 
-    ``candidate_impl``: 'arrow' (default) generates candidates in the
-    float32-faithful kernel — per query it ships ~300 B of Arrow, so the
-    boundary cost is negligible at ANY query count, and the plan compiles
-    in ms. 'jvm' renders the ≤4 chain projections in whole-stage codegen —
-    zero Python, but the chain expression tree pays its Janino compile on
-    EVERY FRESH PLAN (the codegen cache does not carry it across plans):
-    interleaved A/B at sf1.0 measured 0.88 s vs 0.21 s per invocation in
-    'jvm' vs 'arrow' — so 'jvm' is only the right call when the SAME
-    DataFrame object is re-executed many times (a standing serving plan),
-    not for plan-per-query serving."""
-    if (
-        candidate_impl != "arrow"
-        and max_depth <= C._EXACT_JVM_DEPTH
-        and tuple(domain) == tuple(C.DOMAIN)
-    ):
-        # Two-projection JVM form: the 4 full-depth chain ids are staged as
-        # real columns (multi-use, so Catalyst keeps the projection), and
-        # the exploded per-depth candidates are just ancestor arithmetic on
-        # those attributes — this compiles where the single fused Generate
-        # exceeds the 64 KB codegen limit (see candidate_chain_cols).
-        from .quadtree import ancestor_col
-
-        chains, in_domain = C.candidate_chain_cols(F.col(x), F.col(y), max_depth, domain)
-        staged = queries.select(
+    Candidates come from the float32-faithful Arrow kernel
+    (``cells.candidate_cells_col``): ~300 B per query across the boundary,
+    so its cost is negligible at any query count, and the plan compiles in
+    ms — the right trade for plan-per-query serving."""
+    cand = (
+        queries.select(
             qid,
-            F.col(x),
-            F.col(y),
-            in_domain.alias("_ok"),
-            *[ch.alias(f"_chain{i}") for i, ch in enumerate(chains)],
+            F.explode(C.candidate_cells_col(F.col(x), F.col(y), max_depth, domain)).alias(
+                "cell_id"
+            ),
         )
-        arr = F.array(*[
-            F.when(F.col("_ok"), ancestor_col(F.col(f"_chain{i}"), k))
-            .otherwise(F.lit(-1).cast("long"))
-            for i in range(len(chains))
-            for k in range(max_depth + 1)
-        ])
-        cand = (
-            staged.select(qid, F.explode(arr).alias("cell_id"))
-            .where(F.col("cell_id") >= 0)
-            .dropDuplicates([qid, "cell_id"])
-        )
-    else:
-        cand = (
-            queries.select(
-                qid,
-                F.explode(
-                    C.candidate_cells_col(
-                        F.col(x), F.col(y), max_depth, domain, impl=candidate_impl
-                    )
-                ).alias("cell_id"),
-            )
-            .where(F.col("cell_id") >= 0)
-            .dropDuplicates([qid, "cell_id"])
-        )
-    cells_ids = cells.select("cell_id")
-    if broadcast_cells:
-        cells_ids = F.broadcast(cells_ids)
-    hits = cand.join(cells_ids, on="cell_id", how="inner")
+        .where(F.col("cell_id") >= 0)
+        .dropDuplicates([qid, "cell_id"])
+    )
+    hits = cand.join(cells.select("cell_id"), on="cell_id", how="inner")
     return _argmax_fill(queries, hits, qid)
 
 
@@ -252,7 +212,6 @@ def point_lookup(
     y: str = "y",
     max_depth: int = MAX_DEPTH,
     domain=DOMAIN,
-    strategy: str = "prefix",
 ) -> DataFrame:
     """J1 + J2: locate the containing quadrant, then verify the exact point
     exists in THAT node's subtree (inference.cu:126-137). A point on a shared
@@ -262,11 +221,9 @@ def point_lookup(
     ``points`` must carry a ``cell_id`` column at ``max_depth`` (see
     quadtree.with_cell_id). Returns (qid, found_cell_id, found boolean).
     """
-    search = quadrant_search_prefix if strategy == "prefix" else quadrant_search_broadcast
-    kwargs = dict(qid=qid, x=x, y=y)
-    if strategy == "prefix":
-        kwargs.update(max_depth=max_depth, domain=domain)
-    found = search(queries, cells, **kwargs)
+    found = quadrant_search_prefix(
+        queries, cells, qid=qid, x=x, y=y, max_depth=max_depth, domain=domain
+    )
 
     found = found.join(
         cells.select("cell_id", F.col("depth").alias("_found_depth")).withColumnRenamed(

@@ -192,43 +192,6 @@ def test_jvm_parity_on_raw_double_boundary_neighborhood(spark, small_points):
         )
         want = C.encode_cell_ids(xs, ys, depth)
         assert np.array_equal(got, want), f"hybrid depth={depth}"
-    got = df.select(
-        C.candidate_cells_col_jvm(F.col("x"), F.col("y"), 8).alias("c")
-    ).toPandas()["c"]
-    want = C.candidate_cell_ids(xs, ys, 8)
-    for i in range(len(xs)):
-        gs = {v for v in got[i] if v >= 0}
-        ws = {v for v in want[i] if v >= 0}
-        assert gs == ws, f"point {i} ({xs[i]!r},{ys[i]!r}): {gs} != {ws}"
-
-
-def test_jvm_candidates_match_float32_kernel(spark, small_points):
-    """JVM candidate generation (quadrant-search hot path) yields the same
-    candidate SET per point as the float32 double-descent kernel — boundary
-    points included (the set has >1 cell per depth exactly there)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(11)
-    vals = []
-    for d in range(1, 9):
-        b = (rng.integers(0, 1 << d, size=12) * (1e6 / (1 << d))).astype(np.float32)
-        vals += [b, np.nextafter(b, np.float32(np.inf))]
-    vals.append(rng.integers(0, 1_000_000, size=300).astype(np.float32))
-    x0, y0 = small_points
-    xs = np.concatenate(vals + [x0, np.float32([-5.0, 1e6, 2e6])])
-    ys = np.concatenate([v[::-1] for v in vals] + [y0, np.float32([3.0, 1e6, -1.0])])
-    df = spark.createDataFrame(pd.DataFrame({"x": xs, "y": ys}))
-    for depth in (3, 8):
-        got = (
-            df.select(C.candidate_cells_col_jvm(F.col("x"), F.col("y"), depth).alias("c"))
-            .toPandas()["c"]
-        )
-        want = C.candidate_cell_ids(xs, ys, depth)
-        for i in range(len(xs)):
-            gs = {v for v in got[i] if v >= 0}
-            ws = {v for v in want[i] if v >= 0}
-            assert gs == ws, f"point {i} ({xs[i]},{ys[i]}) depth {depth}: {gs} != {ws}"
 
 
 def test_oracle_tree_invariants(small_points):

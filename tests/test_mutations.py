@@ -90,28 +90,29 @@ def test_mutation_query_releases_caches(spark):
 
     sc = spark.sparkContext
 
-    def settled_count() -> int:
+    def settled_count(bound: int | None = None) -> int:
         # ContextCleaner reclamation is async (py4j ref release + JVM weak
-        # refs); poll to a fixpoint rather than asserting an instantaneous
-        # snapshot (a strict equals-baseline assert was flaky under a full
-        # concurrent test session)
+        # refs): poll until the count is <= ``bound`` (the baseline, with no
+        # bound, until it stops decreasing) or a 10 s deadline passes. A
+        # sample taken before the cleaner starts must not end the poll.
+        deadline = time.monotonic() + 10.0
         last = sc._jsc.getPersistentRDDs().size()
-        for _ in range(40):
+        while True:
             gc.collect()
-            spark.sparkContext._jvm.System.gc()
+            sc._jvm.System.gc()
             time.sleep(0.25)
             cur = sc._jsc.getPersistentRDDs().size()
-            if cur >= last:
+            done = cur >= last if bound is None else cur <= bound
+            if done or time.monotonic() > deadline:
                 return cur
             last = cur
-        return last
 
     counts = []
     for _ in range(3):
         out = QUERIES["mutation_cells"](spark, "/root/testdata/sf0.001")
         out.count()
         del out
-        counts.append(settled_count())
+        counts.append(settled_count(counts[0] + 1 if counts else None))
     # the r5 leak grew by exactly one persisted relation PER RUN; steady
     # state must not accumulate (one in-flight checkpoint's worth of slack)
     assert counts[-1] <= counts[0] + 1, counts

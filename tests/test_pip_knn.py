@@ -502,35 +502,6 @@ def test_cluster_assign_matches_numpy_and_kmeans_refines(spark):
     emb.unpersist()
 
 
-def test_ann_bruteforce_jvm_scorer_bit_identical(spark):
-    """scorer='jvm' (whole-stage-codegen unrolled cosine + signum/floor
-    half-away rounding) must be BIT-identical to the Arrow kernel — same
-    accumulation order, same IEEE rounding ops — so the scorer choice moves
-    cost only, never results (ADVICE r4)."""
-    import pytest
-
-    rng = np.random.default_rng(11)
-    vecs = rng.normal(size=(150, 16)).astype(np.float32)
-    rows = [(i, [float(v) for v in vecs[i]]) for i in range(len(vecs))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = emb.where(F.col("vec_id") < 8)
-
-    arrow = K.ann_bruteforce(emb, queries, k=7).toPandas()
-    jvm = K.ann_bruteforce(emb, queries, k=7, scorer="jvm", dim=16).toPandas()
-    key = ["q_vec_id", "rank"]
-    a = arrow.sort_values(key, ignore_index=True)
-    j = jvm.sort_values(key, ignore_index=True)
-    assert (a["vec_id"] == j["vec_id"]).all()
-    # bit-identical similarities, not approximately-equal
-    assert (
-        a["sim"].to_numpy().tobytes() == j["sim"].to_numpy().tobytes()
-    )
-    with pytest.raises(ValueError, match="dim"):
-        K.ann_bruteforce(emb, queries, k=7, scorer="jvm")
-    with pytest.raises(ValueError, match="scorer"):
-        K.ann_bruteforce(emb, queries, k=7, scorer="gpu")
-
-
 def test_pip_jvm_scorer_bit_identical(spark):
     """point_in_polygons(scorer='jvm') — the whole-stage-codegen ray cast —
     must produce EXACTLY the Arrow kernel's hit set (same float64 edge

@@ -77,22 +77,43 @@ def test_point_lookup_inference_scenario(spark, world, small_points, small_point
     assert row3[S.RESULT_COL] >= 0 and not row3["found"]
 
 
+def _edge_pack_queries() -> tuple[np.ndarray, np.ndarray]:
+    """Adversarial query coordinates, as float64: the midline/corner pack,
+    float32 level boundaries at depths 1-8 with their float32 neighbors on
+    both sides, raw doubles within ±half a float32 ULP of a boundary at
+    depths 1-13 (they must quantize ONTO it), and out-of-domain points."""
+    rng = np.random.default_rng(11)
+    xs = [np.float64([500000, 500000, 250000, 0, 999999, 1000000])]
+    ys = [np.float64([500000, 123456, 750000, 0, 999999, 1000000])]
+    for d in range(1, 9):
+        b = (rng.integers(0, 1 << d, size=12) * (1e6 / (1 << d))).astype(np.float32)
+        for v in (b, np.nextafter(b, np.float32(np.inf)), np.nextafter(b, np.float32(-np.inf))):
+            xs.append(v.astype(np.float64))
+            ys.append(v[::-1].astype(np.float64))
+    for d in range(1, 14):
+        step = 1e6 / (1 << d)  # exact in float64 for d <= 13
+        b = rng.integers(1, 1 << d, size=6).astype(np.float64) * step
+        ulp = np.spacing(b.astype(np.float32)).astype(np.float64)
+        for f in (-0.5, -0.49, -0.25, 0.0, 0.25, 0.49, 0.5):
+            xs.append(b + f * ulp)
+            ys.append((b + f * ulp)[::-1])
+    xs.append(np.float64([-5.0, 2e6]))
+    ys.append(np.float64([3.0, -1.0]))
+    return np.concatenate(xs), np.concatenate(ys)
+
+
 def test_strategies_agree_on_edge_pack(spark, world):
-    """Midline/corner queries (shared-edge containment) must resolve
-    identically under both physical paths."""
+    """Shared-edge containment (midlines, corners, level boundaries and
+    their float32 and sub-ULP raw-double neighbors) and out-of-domain
+    queries must resolve identically under both physical paths."""
     _, _, cells, _, _, _ = world
-    edge = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "qid": range(6),
-                "x": np.float32([500000, 500000, 250000, 0, 999999, 1000000]),
-                "y": np.float32([500000, 123456, 750000, 0, 999999, 1000000]),
-            }
-        )
-    )
+    xs, ys = _edge_pack_queries()
+    edge = spark.createDataFrame(pd.DataFrame({"qid": np.arange(xs.size), "x": xs, "y": ys}))
     a = S.quadrant_search_broadcast(edge, cells).orderBy("qid").toPandas()
     b = S.quadrant_search_prefix(edge, cells).orderBy("qid").toPandas()
+    assert len(a) == xs.size
     assert a[S.RESULT_COL].tolist() == b[S.RESULT_COL].tolist()
+    assert a[S.RESULT_COL].iloc[-2:].tolist() == [-1, -1]
 
 
 def test_cells_cache_lru_evicts_and_unpersists(spark, monkeypatch):
@@ -118,19 +139,6 @@ def test_cells_cache_lru_evicts_and_unpersists(spark, monkeypatch):
     assert df1b.storageLevel.useMemory and len(E._CELLS_CACHE) == 1
     E._CELLS_CACHE.clear()
     df1b.unpersist()
-
-
-def test_candidate_impls_agree(spark, world):
-    """The Arrow-kernel candidate path (one-shot-plan fast: no Janino
-    compile) must return exactly the JVM codegen path's results."""
-    _root, _bnds, cells, queries, _qpdf, _want = world
-    a = S.quadrant_search_prefix(queries, cells, max_depth=8).orderBy("qid")
-    b = S.quadrant_search_prefix(
-        queries, cells, max_depth=8, candidate_impl="arrow"
-    ).orderBy("qid")
-    assert [tuple(r) for r in a.select("qid", S.RESULT_COL).collect()] == [
-        tuple(r) for r in b.select("qid", S.RESULT_COL).collect()
-    ]
 
 
 # ---------------------------------------------------------------------------

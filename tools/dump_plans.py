@@ -31,8 +31,8 @@ AUDIT = [
     (
         "quadrant_search",
         "Candidate generation is the float32-faithful Arrow kernel over the "
-        "tiny query side (~300 B per query across the boundary; the codegen "
-        "chain rendering pays a Janino compile per fresh plan — r6 A/B "
+        "tiny query side (~300 B per query across the boundary; the deleted "
+        "codegen chain rendering paid a Janino compile per fresh plan — r6 A/B "
         "0.88 s vs 0.21 s per invocation); the candidate↔cells equi-join is "
         "chosen by AQE (broadcast at this scale); final argmax is a "
         "two-phase HashAggregate on qid.",
