@@ -9,11 +9,19 @@ set per bucket (file-level manifests — the Iceberg read model), pending
 merge-on-read delta batches per bucket, and wall-clock/row throughput
 metrics.
 
+Every write — ``commit``, ``overwrite_buckets``, ``append_deltas`` (with
+its compaction) and ``rollback`` — is one edit of a copy of the parent
+manifest, published by the one commit core ``SnapshotTable._publish``; the
+data-writing ones share one write step (``SnapshotTable._write``: staged
+append, NULL-bucket check, footer rows and stats). Every manifest carries
+``files`` and ``schema``; one without them is ``SnapshotCorruptError``.
+
 Guarantees:
 - ``commit`` writes ONLY buckets not yet committed (idempotent resume: a
-  re-run after a crash appends the bucket's rows as fresh files and the new
-  manifest references only those — readers never see uncommitted files
-  because ``read`` loads exactly the manifest's file set);
+  re-run with the full input after a crash appends the missing buckets'
+  rows as fresh files and the new manifest references only those — readers
+  never see uncommitted files because ``read`` loads exactly the manifest's
+  file set);
 - writes are append-only: no overwrite mode, no driver-side staging-rename
   loop; upserts either repoint the touched buckets' file lists
   (``overwrite_buckets``, copy-on-write) or append per-bucket delta batches
@@ -41,8 +49,10 @@ Guarantees:
 
 from __future__ import annotations
 
+import copy
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -51,6 +61,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# a complete CasFileManifestStore payload name, as try_publish writes it
+_PAYLOAD_NAME = re.compile(r"payload-[0-9a-f]{32}\.json")
 
 
 class SnapshotIncrementalError(RuntimeError):
@@ -84,6 +96,13 @@ class SnapshotConflictError(RuntimeError):
     files this writer appended are unreferenced by any manifest (invisible
     to readers; ``vacuum`` collects them) — recompute against the new
     current snapshot and retry."""
+
+
+class SnapshotCorruptError(RuntimeError):
+    """The commit log is damaged: a published manifest lacks the ``files``
+    or ``schema`` every write records, or a CAS token names a complete
+    payload that does not exist. Neither arises from a crash at any commit
+    phase, so the table refuses to guess and an operator must repair it."""
 
 
 class ManifestStore:
@@ -201,7 +220,9 @@ class CasFileManifestStore(ManifestStore):
     created but name not yet durable): a real conditional PUT commits body
     and name atomically and has NO such window. ``read_version`` therefore
     poll-tolerates an empty token briefly (a concurrent winner mid-step-3)
-    and then treats the version as absent; a writer that crashed exactly
+    and then treats the version as absent (a token holding a COMPLETE
+    payload name whose file is missing is corruption, not this window, and
+    raises ``SnapshotCorruptError`` at once); a writer that crashed exactly
     there burns the version number — the next committer's CAS on it fails
     and surfaces ``SnapshotConflictError`` for manual repair, which is the
     honest rendering of this emulation's gap, never a partial manifest.
@@ -239,8 +260,6 @@ class CasFileManifestStore(ManifestStore):
         return True
 
     def read_version(self, version: int) -> dict | None:
-        import time as _time
-
         tpath = self._token_path(version)
         deadline = None
         while True:
@@ -254,23 +273,25 @@ class CasFileManifestStore(ManifestStore):
                     with open(os.path.join(self.manifest_dir, name)) as f:
                         return json.load(f)
                 except FileNotFoundError:
-                    # token visible but its payload name is partial/garbled:
-                    # the winner is mid-write (or died there) — the SAME
-                    # commit window as the empty token, so poll then treat
-                    # as absent instead of letting the payload open raise
-                    # out of read_version (ADVICE r5). A fully-written
-                    # token always names an fsync'd payload, so this path
-                    # only fires inside the window (or on tampering).
-                    pass
+                    # a COMPLETE name always points at a payload fsync'd
+                    # before the token existed: its absence is corruption
+                    # (deleted payload, tampering), not the commit window
+                    if _PAYLOAD_NAME.fullmatch(name):
+                        raise SnapshotCorruptError(
+                            f"v{version}.token names payload {name}, which "
+                            "does not exist"
+                        ) from None
+                    # a partial name is the same commit window as the
+                    # empty token below
             # token created, name not yet (fully) visible: a winner is
             # inside the µs commit window (or died there). Brief poll,
             # then absent.
-            now = _time.monotonic()
+            now = time.monotonic()
             if deadline is None:
                 deadline = now + self.torn_token_wait_sec
             elif now >= deadline:
                 return None
-            _time.sleep(0.01)
+            time.sleep(0.01)
 
     def latest_hint(self) -> int:
         try:
@@ -361,6 +382,9 @@ class SnapshotTable:
 
     # -- manifest -----------------------------------------------------------
 
+    # manifest keys a commit attempt sets itself; everything else is content
+    _LINEAGE = ("version", "snapshot_id", "parent_id", "metrics")
+
     def current(self) -> dict | None:
         """Newest published snapshot. Roll-forward: a manifest is fully
         published before the hint repoint (see ``ManifestStore``), so if a
@@ -374,19 +398,30 @@ class SnapshotTable:
                 return m
             k, m = k + 1, nxt
 
-    def committed_buckets(self) -> dict[str, int]:
-        m = self.current()
-        return dict(m["buckets"]) if m else {}
+    @staticmethod
+    def _checked(m: dict | None) -> dict | None:
+        """``m`` if it has the format every write publishes (``files`` and
+        ``schema``), else SnapshotCorruptError: without the file lists the
+        reference set is unknowable, without the schema the read is."""
+        if m is not None:
+            missing = [k for k in ("files", "schema") if k not in m]
+            if missing:
+                raise SnapshotCorruptError(
+                    f"snapshot v{m.get('version')} manifest has no "
+                    f"{' or '.join(missing)}"
+                )
+        return m
 
-    def _publish(self, manifest: dict) -> None:
-        """CAS publish through the store: the versioned create-if-absent is
-        the compare-and-swap token; only the winner repoints the hint."""
-        if not self.store.try_publish(manifest["version"], manifest):
-            raise SnapshotConflictError(
-                f"snapshot v{manifest['version']} was published by a "
-                "concurrent committer"
+    def _manifest(self, version: int | None = None) -> dict:
+        """The checked manifest of ``version`` (default: CURRENT)."""
+        m = self.current() if version is None else self.store.read_version(version)
+        if m is None:
+            raise FileNotFoundError(
+                f"no committed snapshot at {self.path}"
+                if version is None
+                else f"no snapshot v{version} at {self.path}"
             )
-        self.store.set_latest_hint(manifest["version"])
+        return self._checked(m)
 
     @staticmethod
     def _bucket_entries(m: dict | None, buckets) -> dict:
@@ -394,95 +429,97 @@ class SnapshotTable:
         writer's computation depends on, compared across parents to decide
         merge vs conflict."""
         bk = m["buckets"] if m else {}
-        fl = (m.get("files") or {}) if m else {}
+        fl = m["files"] if m else {}
         dl = (m.get("deltas") or {}) if m else {}
         return {b: (bk.get(b), fl.get(b), dl.get(b)) for b in buckets}
+
+    def _publish(
+        self, parent: dict | None, edit, metrics: dict, touched=(), max_retries: int = 5
+    ) -> dict:
+        """The one commit core. Each attempt derives the child from a deep
+        copy of its parent with a new version, snapshot id and parent id;
+        ``edit(child)`` applies the operation's change in place (or raises
+        SnapshotConflictError); the child is CAS-published through the store
+        and only the winner repoints the hint. On a lost race the attempt
+        re-runs against the winner's snapshot — a concurrent snapshot is
+        merged or this writer aborts; it is never silently replaced. The
+        ``touched`` buckets' (count, files, deltas) must still be what this
+        writer read, since it computed their new state from that read."""
+        seen = self._bucket_entries(parent, touched)
+        p = parent
+        for _ in range(max_retries):
+            self._checked(p)
+            if self._bucket_entries(p, touched) != seen:
+                raise SnapshotConflictError(
+                    "touched buckets changed under a concurrent snapshot; "
+                    "recompute from the new current state"
+                )
+            child = copy.deepcopy(p) if p else {"buckets": {}, "files": {}, "schema": []}
+            child.update(
+                version=(p["version"] + 1) if p else 1,
+                snapshot_id=uuid.uuid4().hex,
+                parent_id=p["snapshot_id"] if p else None,
+                metrics=dict(metrics),
+            )
+            edit(child)
+            if not child.get("stats"):
+                child.pop("stats", None)
+            if self.store.try_publish(child["version"], child):
+                self.store.set_latest_hint(child["version"])
+                return child
+            p = self.current()
+        raise SnapshotConflictError(f"gave up after {max_retries} CAS retries")
+
+    @staticmethod
+    def _write_metrics(t0: float, rows: dict[str, int]) -> dict:
+        wall = time.time() - t0
+        n = int(sum(rows.values()))
+        return {
+            "wall_sec": round(wall, 3),
+            "rows_written": n,
+            "rows_per_sec": round(n / max(wall, 1e-9), 1),
+            "buckets_written": len(rows),
+        }
 
     # -- schema evolution -----------------------------------------------------
 
     @staticmethod
-    def _nullable_fields(schema: StructType) -> list[dict]:
-        """Manifest form of a write's schema: StructType field dicts with
-        nullability forced TRUE — parquet reality, since a file written
-        before a column existed reads back null for it regardless of what
-        the writer's DataFrame declared."""
-        out = []
-        for f in schema.jsonValue()["fields"]:
-            out.append({"name": f["name"], "type": f["type"], "nullable": True,
-                        "metadata": {}})
-        return out
-
-    @staticmethod
-    def _evolved_fields(
-        parent: dict | None, fields: list[dict], context: str
-    ) -> list[dict] | None:
-        """Union-by-name schema evolution (the Iceberg add-column model):
-        committed columns keep their position and type; a write may ADD new
-        columns (appended, old files read back null) or OMIT committed ones
-        (its files read back null for them); a same-named column with a
-        different type raises SnapshotSchemaError. Returns None — "stay
-        schema-less" — for legacy tables whose manifests predate schema
-        tracking: their existing files' columns are unknown, so pinning a
-        read schema from one write could silently hide legacy columns."""
-        if parent is None:
-            return fields
-        pf = parent.get("schema")
-        if pf is None:
-            return None
-        have = {f["name"]: f["type"] for f in pf}
-        for f in fields:
+    def _evolve_schema(
+        child: dict, df: DataFrame, bucket_col: str, context: str, drop: str | None = None
+    ) -> None:
+        """Union-by-name schema evolution of ``child`` by a write of ``df``
+        (the Iceberg add-column model): committed columns keep their position
+        and type; a write may ADD new columns (appended, old files read back
+        null) or OMIT committed ones (its files read back null for them); a
+        same-named column with a different type raises SnapshotSchemaError.
+        Fields are recorded nullable — parquet reality, since a file written
+        before a column existed reads back null for it. ``drop`` names a
+        batch-transport column that is not table state."""
+        have = {f["name"]: f["type"] for f in child["schema"]}
+        for f in df.schema.jsonValue()["fields"]:
+            if f["name"] == drop:
+                continue
             t = have.get(f["name"])
-            if t is not None and t != f["type"]:
+            if t is None:
+                child["schema"].append(
+                    {"name": f["name"], "type": f["type"], "nullable": True, "metadata": {}}
+                )
+                have[f["name"]] = f["type"]
+            elif t != f["type"]:
                 raise SnapshotSchemaError(
                     f"{context}: column {f['name']!r} has type {f['type']!r} "
                     f"but the table committed it as {t!r} — type changes are "
                     "not supported; add a new column instead"
                 )
-        merged = [dict(x) for x in pf]
-        merged += [f for f in fields if f["name"] not in have]
-        return merged
+        child["bucket_col"] = bucket_col
 
     @staticmethod
-    def _manifest_schema(m: dict) -> StructType | None:
-        """The snapshot's table schema as a StructType (None for legacy
-        manifests). Passed as the EXPLICIT read schema so files written
-        before a column evolution read back null for the later columns —
-        without it Spark samples one file's footer and the result depends
-        on which file it picks."""
-        f = m.get("schema")
-        if not f:
-            return None
-        return StructType.fromJson({"type": "struct", "fields": f})
-
-    def _publish_retry(self, parent: dict | None, build, max_retries: int = 5) -> dict:
-        """Optimistic-concurrency publish: ``build(parent)`` merges this
-        writer's bucket updates into ``parent``'s maps, raising
-        SnapshotConflictError if ``parent`` conflicts with what this writer
-        computed. On a lost CAS race the build re-runs against the winner's
-        snapshot — a concurrent snapshot is merged or this writer aborts; it
-        is never silently replaced (the round-2 last-writer-wins hole)."""
-        p = parent
-        for _ in range(max_retries):
-            manifest = build(p)
-            try:
-                self._publish(manifest)
-                return manifest
-            except SnapshotConflictError:
-                p = self.current()
-        raise SnapshotConflictError(f"gave up after {max_retries} CAS retries")
-
-    def _parent_files(self, parent: dict | None, disk: dict[str, set[str]]) -> dict:
-        """Parent's per-bucket base-file lists. A LEGACY manifest (predating
-        file-level manifests) lacks the 'files' key; publishing a child whose
-        'files' covered only newly written buckets would make ``read`` (which
-        prefers the file-list path) silently hide every legacy bucket — and
-        ``vacuum`` delete their data. Backfill from the on-disk listing,
-        restricted to the manifest's committed buckets."""
-        if parent is None:
-            return {}
-        if "files" in parent:
-            return dict(parent["files"])
-        return {b: sorted(disk.get(b, set())) for b in parent["buckets"]}
+    def _manifest_schema(m: dict) -> StructType:
+        """The snapshot's table schema as a StructType. Passed as the
+        EXPLICIT read schema so files written before a column evolution read
+        back null for the later columns — without it Spark samples one
+        file's footer and the result depends on which file it picks."""
+        return StructType.fromJson({"type": "struct", "fields": m["schema"]})
 
     # -- write path ----------------------------------------------------------
 
@@ -570,176 +607,83 @@ class SnapshotTable:
         stats = {f: s for f, n, s in infos if s}
         return rows, stats
 
-    @classmethod
-    def _footer_rows(cls, bdir: str, files: set[str]) -> int:
-        """Row count only (see ``_footer_rows_stats``)."""
-        return cls._footer_rows_stats(bdir, files, [])[0]
+    def _write(
+        self, batch: DataFrame, bucket_col: str, deltas: bool = False
+    ) -> tuple[dict[str, list[str]], dict[str, int], dict]:
+        """The one write step: staged tracked append of ``batch`` (to the
+        delta dir for ``deltas``), then (files, rows, stats) per bucket
+        written — rows and ``stat_cols`` statistics from the fresh parquet
+        footers (metadata-only; delta batches get row counts only).
 
-    @staticmethod
-    def _check_no_null_buckets(new_files: dict) -> None:
-        """Fail fast on NULL bucket values: the write keeps them (null-safe
-        filters), so they land in the Hive default partition — detected here
-        BEFORE publish, they abort the commit and stay unreferenced (invisible
-        to readers, collected by vacuum)."""
-        if NULL_PARTITION in new_files and new_files[NULL_PARTITION]:
+        Rows with a NULL bucket value fail the write: the callers' filters
+        are null-SAFE, so such rows land in the Hive default partition and
+        are detected here BEFORE publish — the commit aborts and the files
+        stay unreferenced (invisible to readers, collected by vacuum)."""
+        root = self.delta_dir if deltas else self.data_dir
+        files = self._write_append_tracked(batch, bucket_col, root)
+        if files.get(NULL_PARTITION):
             raise ValueError(
                 "rows with a NULL bucket value cannot be committed (they "
                 "would be invisible to manifest readers); filter or impute "
                 "the bucket column first"
             )
+        rows, stats = {}, {}
+        for b, fs in files.items():
+            rows[b], st = self._footer_rows_stats(
+                os.path.join(root, f"{bucket_col}={b}"),
+                set(fs),
+                [] if deltas else self.stat_cols,
+            )
+            if st:
+                stats[b] = st
+        return files, rows, stats
 
-    def commit(
-        self,
-        df: DataFrame,
-        bucket_col: str,
-        max_buckets_per_commit: int | None = None,
-    ) -> dict:
+    def commit(self, df: DataFrame, bucket_col: str) -> dict:
         """Write all not-yet-committed buckets of ``df`` and publish one new
-        snapshot. ``max_buckets_per_commit`` bounds the work per call (used by
-        tests to simulate a kill between commits; a driver loop calling commit
-        until it returns done=True gets checkpointed incremental progress).
+        snapshot. Resume after a crash means re-running with the FULL input:
+        buckets the table already has are filtered out, so only the missing
+        ones are written; a re-run with nothing missing publishes nothing.
 
-        The unbounded path is SINGLE-PASS over the input: the committed-bucket
-        filter comes from the manifest (no scan), the staged partitioned
-        APPEND is the only job that computes the upstream plan, and the
-        per-bucket lineage row counts come from the freshly written parquet
-        footers (metadata-only). Writes never overwrite or move committed
-        data: new files are staged then moved into place (same-filesystem
-        renames — metadata-only, O(this job's files), measured negligible
-        against the footer reads in the same commit), the manifest records
-        each bucket's exact file set, and readers see only manifest files.
+        SINGLE-PASS over the input: the committed-bucket filter comes from
+        the manifest (no scan), the staged partitioned APPEND is the only
+        job that computes the upstream plan, and the per-bucket lineage row
+        counts come from the freshly written parquet footers
+        (metadata-only). Writes never overwrite or move committed data: new
+        files are staged then moved into place (same-filesystem renames —
+        metadata-only, O(this job's files)), the manifest records each
+        bucket's exact file set, and readers see only manifest files.
 
         Concurrency: publish is CAS'd. A concurrent snapshot over DISJOINT
         buckets is merged transparently; one that committed any bucket this
         call wrote raises SnapshotConflictError (nothing is dropped either
-        way). The write goes through the staged-move path, so the manifest
-        references EXACTLY this job's files — a concurrent writer's
-        not-yet-published files can never be claimed (the round-3 ADVICE
-        hole: the old after-minus-before listing diff attributed files by
-        bucket, not by job, so same-bucket racers could resurrect each
-        other's aborted rows). The move cost is O(this job's files) driver
-        renames, bounded by buckets × reducers per write."""
-        spark = df.sparkSession
+        way). The staged move tracks EXACTLY this job's files, so a
+        concurrent writer's not-yet-published files can never be claimed."""
         t0 = time.time()
-        parent = self.current()
-        done_buckets = dict(parent["buckets"]) if parent else {}
-        bstr = F.col(bucket_col).cast("string")
+        parent = self._checked(self.current())
+        batch = df
+        if parent and parent["buckets"]:
+            # null-SAFE filter: null-bucket rows fail the isin test with
+            # NULL, which `where` drops — keep them so the write rejects them
+            bstr = F.col(bucket_col).cast("string")
+            batch = df.where(bstr.isNull() | ~bstr.isin(sorted(parent["buckets"])))
+        files, rows, stats = self._write(batch, bucket_col)
+        if not rows:
+            return {"written_buckets": 0, "snapshot": self.current()}
 
-        if max_buckets_per_commit is None:
-            batch = df
-            if done_buckets:
-                # null-SAFE filter: null-bucket rows are kept (they fail the
-                # isin test with NULL, which `where` drops — silently losing
-                # data), written to the Hive default partition, and rejected
-                # before publish.
-                batch = df.where(bstr.isNull() | ~bstr.isin(sorted(done_buckets)))
-            moved = self._write_append_tracked(batch, bucket_col)
-            self._check_no_null_buckets(moved)
-            new_files = {b: fs for b, fs in moved.items() if fs}
-            rows, new_stats = {}, {}
-            for b, fs in new_files.items():
-                bdir = os.path.join(self.data_dir, f"{bucket_col}={b}")
-                rows[b], st = self._footer_rows_stats(bdir, set(fs), self.stat_cols)
-                if st:
-                    new_stats[b] = st
-            if not rows:
-                return {"done": True, "written_buckets": 0, "snapshot": self.current()}
-            all_pending = pending = sorted(rows)
-        else:
-            # Bounded (checkpointed) commits need the pending-bucket list up
-            # front — one aggregation pass; persist only if the caller hasn't
-            # already (and release only what we acquired).
-            we_persisted = df.storageLevel.useMemory is False and df.storageLevel.useDisk is False
-            if we_persisted:
-                df = df.persist()
-            try:
-                bucket_counts = {
-                    r["_b"]: r["n"]
-                    for r in df.groupBy(bstr.alias("_b"))
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                if None in bucket_counts:
-                    raise ValueError(
-                        "rows with a NULL bucket value cannot be committed "
-                        "(they would be invisible to manifest readers)"
-                    )
-                all_pending = sorted(b for b in bucket_counts if b not in done_buckets)
-                pending = all_pending[:max_buckets_per_commit]
-                if not pending:
-                    return {"done": True, "written_buckets": 0, "snapshot": self.current()}
-                moved = self._write_append_tracked(
-                    df.where(bstr.isin(pending)), bucket_col
-                )
-                new_files = {b: moved.get(b, []) for b in pending}
-                rows = {b: bucket_counts[b] for b in pending}
-                new_stats = {}
-                if self.stat_cols:  # rows came from the pre-pass, stats from footers
-                    for b, fs in new_files.items():
-                        if not fs:
-                            continue
-                        _, st = self._footer_rows_stats(
-                            os.path.join(self.data_dir, f"{bucket_col}={b}"),
-                            set(fs),
-                            self.stat_cols,
-                        )
-                        if st:
-                            new_stats[b] = st
-            finally:
-                if we_persisted:
-                    df.unpersist()
-        wall = time.time() - t0
-        bucket_type = df.schema[bucket_col].dataType.simpleString()
-        in_fields = self._nullable_fields(df.schema)
-        state: dict = {}
+        def edit(child: dict) -> None:
+            self._evolve_schema(child, df, bucket_col, "commit")
+            # this job's files are exactly its own, so any of its buckets
+            # already in the (possibly concurrent) parent is a genuine
+            # double write — conflict, nothing may be dropped or mixed
+            for b in rows:
+                if b in child["buckets"]:
+                    raise SnapshotConflictError(f"bucket {b} was committed concurrently")
+            child["buckets"].update(rows)
+            child["files"].update(files)
+            child.setdefault("stats", {}).update(stats)
 
-        def build(p: dict | None) -> dict:
-            schema = self._evolved_fields(p, in_fields, "commit")
-            done_b = dict(p["buckets"]) if p else {}
-            # lazy legacy backfill: the O(#buckets) directory listing is
-            # only needed when the parent manifest predates file lists
-            disk = {} if (p is None or "files" in p) else self._bucket_files(bucket_col)
-            done_f = self._parent_files(p, disk)
-            my_files = dict(new_files)
-            my_rows = dict(rows)
-            # The staged move tracked EXACTLY this job's files, so any of our
-            # buckets already present in the (possibly concurrent) parent is
-            # a genuine double write of the bucket — conflict, nothing may
-            # be dropped or mixed.
-            for b in my_files:
-                if b in done_b:
-                    raise SnapshotConflictError(
-                        f"bucket {b} was committed concurrently"
-                    )
-            state["rows"] = my_rows
-            all_stats = {**(dict(p.get("stats", {})) if p else {}), **new_stats}
-            return {
-                "version": (p["version"] + 1) if p else 1,
-                "snapshot_id": uuid.uuid4().hex,
-                "parent_id": p["snapshot_id"] if p else None,
-                "bucket_col": bucket_col,
-                "bucket_type": bucket_type,
-                "buckets": {**done_b, **my_rows},
-                "files": {**done_f, **my_files},
-                **({"schema": schema} if schema else {}),
-                **({"stats": all_stats} if all_stats else {}),
-                **({"deltas": p["deltas"]} if p and p.get("deltas") else {}),
-                **({"delta_key": p["delta_key"]} if p and "delta_key" in p else {}),
-                **({"delta_op": p["delta_op"]} if p and "delta_op" in p else {}),
-                "metrics": {
-                    "wall_sec": round(wall, 3),
-                    "rows_written": int(sum(my_rows.values())),
-                    "rows_per_sec": round(sum(my_rows.values()) / max(wall, 1e-9), 1),
-                    "buckets_written": len(my_rows),
-                },
-            }
-
-        manifest = self._publish_retry(parent, build)
-        return {
-            "done": len(pending) == len(all_pending),
-            "written_buckets": len(state["rows"]),
-            "snapshot": manifest,
-        }
+        m = self._publish(parent, edit, self._write_metrics(t0, rows))
+        return {"written_buckets": len(rows), "snapshot": m}
 
     def overwrite_buckets(
         self, df: DataFrame, bucket_col: str, buckets: list[str]
@@ -760,76 +704,24 @@ class SnapshotTable:
         hot bucket still rewrites that whole bucket; for per-batch bytes
         ∝ batch size use ``append_deltas`` (merge-on-read)."""
         t0 = time.time()
-        parent = self.current()
+        parent = self._checked(self.current())
         bset = sorted({str(b) for b in buckets})
         bstr = F.col(bucket_col).cast("string")
-        # null-SAFE filter + fail-fast, as commit/append_deltas: NULL-bucket
-        # survivors would otherwise be silently dropped by isin's 3VL
-        moved = self._write_append_tracked(
+        files, rows, stats = self._write(
             df.where(bstr.isin(bset) | bstr.isNull()), bucket_col
         )
-        self._check_no_null_buckets(moved)
-        new_files = {b: moved.get(b, []) for b in bset}
-        rows, new_stats = {}, {}
-        for b, fs in new_files.items():
-            if not fs:
-                continue
-            bdir = os.path.join(self.data_dir, f"{bucket_col}={b}")
-            rows[b], st = self._footer_rows_stats(bdir, set(fs), self.stat_cols)
-            if st:
-                new_stats[b] = st
-        wall = time.time() - t0
-        bucket_type = df.schema[bucket_col].dataType.simpleString()
-        in_fields = self._nullable_fields(df.schema)
-        orig_entries = self._bucket_entries(parent, bset)
 
-        def build(p: dict | None) -> dict:
-            if self._bucket_entries(p, bset) != orig_entries:
-                raise SnapshotConflictError(
-                    "touched buckets changed under a concurrent snapshot; "
-                    "recompute the survivors from the new current state"
-                )
-            schema = self._evolved_fields(p, in_fields, "overwrite_buckets")
-            done_b = dict(p["buckets"]) if p else {}
-            # lazy legacy backfill: the O(#buckets) directory listing is
-            # only needed when the parent manifest predates file lists
-            disk = {} if (p is None or "files" in p) else self._bucket_files(bucket_col)
-            done_f = self._parent_files(p, disk)
-            done_d = dict(p.get("deltas", {})) if p else {}
-            new_buckets = {b: n for b, n in done_b.items() if b not in bset}
-            new_buckets.update(rows)
-            kept_files = {b: fs for b, fs in done_f.items() if b not in bset}
-            kept_files.update({b: fs for b, fs in new_files.items() if fs})
-            kept_deltas = {b: d for b, d in done_d.items() if b not in bset}
-            kept_stats = {
-                b: s
-                for b, s in (dict(p.get("stats", {})) if p else {}).items()
-                if b not in bset
-            }
-            kept_stats.update(new_stats)
-            return {
-                "version": (p["version"] + 1) if p else 1,
-                "snapshot_id": uuid.uuid4().hex,
-                "parent_id": p["snapshot_id"] if p else None,
-                "bucket_col": bucket_col,
-                "bucket_type": bucket_type,
-                "buckets": new_buckets,
-                "files": kept_files,
-                **({"schema": schema} if schema else {}),
-                **({"stats": kept_stats} if kept_stats else {}),
-                **({"deltas": kept_deltas} if kept_deltas else {}),
-                **({"delta_key": p["delta_key"]} if p and "delta_key" in p else {}),
-                **({"delta_op": p["delta_op"]} if p and "delta_op" in p else {}),
-                "metrics": {
-                    "wall_sec": round(wall, 3),
-                    "rows_written": int(sum(rows.values())),
-                    "rows_per_sec": round(sum(rows.values()) / max(wall, 1e-9), 1),
-                    "buckets_written": len(rows),
-                },
-            }
+        def edit(child: dict) -> None:
+            self._evolve_schema(child, df, bucket_col, "overwrite_buckets")
+            for key in ("buckets", "files", "stats", "deltas"):
+                for b in bset:
+                    child.get(key, {}).pop(b, None)
+            child["buckets"].update(rows)
+            child["files"].update(files)
+            child.setdefault("stats", {}).update(stats)
 
-        manifest = self._publish_retry(parent, build)
-        return {"done": True, "written_buckets": len(rows), "snapshot": manifest}
+        m = self._publish(parent, edit, self._write_metrics(t0, rows), touched=bset)
+        return {"written_buckets": len(rows), "snapshot": m}
 
     # -- merge-on-read deltas -------------------------------------------------
 
@@ -847,7 +739,7 @@ class SnapshotTable:
         buckets and publish. ``buckets=None`` derives the touched set from
         the staged write's own output (the per-bucket files the tasks
         produced) — no driver-side ``distinct().collect()`` pre-pass over
-        the batch, and an EMPTY batch publishes nothing (VERDICT r3 item 7).
+        the batch, and an EMPTY batch publishes nothing.
         Per-batch I/O is ∝ BATCH size — the touched
         buckets' base files are neither read nor rewritten; ``read`` applies
         pending delta batches in sequence order (insert-if-missing on
@@ -861,96 +753,42 @@ class SnapshotTable:
         because insert-if-missing and equality-delete both are."""
         spark = df.sparkSession
         t0 = time.time()
-        parent = self.current()
-        bstr = F.col(bucket_col).cast("string")
-        if buckets is None:
-            moved = self._write_append_tracked(df, bucket_col, self.delta_dir)
-            self._check_no_null_buckets(moved)
-            bset = sorted(moved)
-            if not bset:  # empty batch: nothing written, nothing published
-                return {
-                    "done": True,
-                    "written_buckets": 0,
-                    "compacted_buckets": [],
-                    "snapshot": self.current(),
-                }
-        else:
+        parent = self._checked(self.current())
+        batch, bset = df, None
+        if buckets is not None:
             bset = sorted({str(b) for b in buckets})
             # null-SAFE filter: a NULL bucket fails isin with NULL and
-            # `where` would silently drop the mutation — keep such rows so
-            # they land in the Hive default partition and fail the
-            # pre-publish check instead.
-            moved = self._write_append_tracked(
-                df.where(bstr.isin(bset) | bstr.isNull()), bucket_col, self.delta_dir
-            )
-            self._check_no_null_buckets(moved)
-        new_files = {b: moved.get(b, []) for b in bset}
-        wall = time.time() - t0
-        bucket_type = df.schema[bucket_col].dataType.simpleString()
-        # the op column is batch transport, not table state — evolve without it
-        in_fields = [
-            f for f in self._nullable_fields(df.schema) if f["name"] != op_col
-        ]
-        compacted: dict[str, list[str]] = {}
-        compact_rows: dict[str, int] = {}
-        orig_entries = self._bucket_entries(parent, bset)
+            # `where` would silently drop the mutation
+            bstr = F.col(bucket_col).cast("string")
+            batch = df.where(bstr.isin(bset) | bstr.isNull())
+        files, rows, _ = self._write(batch, bucket_col, deltas=True)
+        if bset is None:
+            bset = sorted(files)
+            if not bset:  # empty batch: nothing written, nothing published
+                return {"written_buckets": 0, "compacted_buckets": [], "snapshot": self.current()}
+        # bucket -> (files, rows, stats) of its compaction; written once,
+        # reused by every CAS retry
+        compacted: dict[str, tuple] = {}
 
-        def build(p: dict | None) -> dict:
-            if self._bucket_entries(p, bset) != orig_entries:
-                raise SnapshotConflictError(
-                    "touched buckets changed under a concurrent snapshot"
-                )
-            schema = self._evolved_fields(p, in_fields, "append_deltas")
-            done_b = dict(p["buckets"]) if p else {}
-            # lazy legacy backfill: the O(#buckets) directory listing is
-            # only needed when the parent manifest predates file lists
-            disk = {} if (p is None or "files" in p) else self._bucket_files(bucket_col)
-            done_f = self._parent_files(p, disk)
-            done_d = {b: [list(e) for e in v] for b, v in (dict(p.get("deltas", {})) if p else {}).items()}
-            seq = (p["version"] + 1) if p else 1
+        def edit(child: dict) -> None:
+            # the op column is batch transport, not table state
+            self._evolve_schema(child, df, bucket_col, "append_deltas", drop=op_col)
+            deltas = child.setdefault("deltas", {})
             for b in bset:
-                if new_files[b]:
-                    done_d.setdefault(b, []).append([seq, new_files[b]])
-            done_s = dict(p.get("stats", {})) if p else {}
-            manifest = {
-                "version": seq,
-                "snapshot_id": uuid.uuid4().hex,
-                "parent_id": p["snapshot_id"] if p else None,
-                "bucket_col": bucket_col,
-                "bucket_type": bucket_type,
-                "buckets": done_b,
-                "files": done_f,
-                **({"schema": schema} if schema else {}),
-                **({"stats": done_s} if done_s else {}),
-                "deltas": done_d,
-                "delta_key": list(key_cols),
-                "delta_op": op_col,
-                "metrics": {
-                    "wall_sec": round(wall, 3),
-                    "rows_written": int(
-                        sum(
-                            self._footer_rows(
-                                os.path.join(self.delta_dir, f"{bucket_col}={b}"), set(fs)
-                            )
-                            for b, fs in new_files.items()
-                            if fs
-                        )
-                    ),
-                    "buckets_written": len([b for b in bset if new_files[b]]),
-                    "delta_batches": {b: len(v) for b, v in done_d.items()},
-                },
-            }
-            to_compact = [b for b in bset if len(done_d.get(b, [])) >= compact_threshold]
-            if to_compact:
-                self._compact_into(spark, manifest, to_compact, compacted, compact_rows)
-            return manifest
+                if b in files:
+                    deltas.setdefault(b, []).append([child["version"], files[b]])
+            child["delta_key"] = list(key_cols)
+            child["delta_op"] = op_col
+            child["metrics"]["delta_batches"] = {b: len(v) for b, v in deltas.items()}
+            due = [b for b in bset if len(deltas.get(b, [])) >= compact_threshold]
+            if due:
+                self._compact_into(spark, child, due, compacted)
 
-        manifest = self._publish_retry(parent, build)
+        m = self._publish(parent, edit, self._write_metrics(t0, rows), touched=bset)
         return {
-            "done": True,
-            "written_buckets": len([b for b in bset if new_files[b]]),
-            "compacted_buckets": sorted(compact_rows) if compact_rows else [],
-            "snapshot": manifest,
+            "written_buckets": len(rows),
+            "compacted_buckets": sorted(b for b, c in compacted.items() if c[0]),
+            "snapshot": m,
         }
 
     def rollback(self, to_version: int) -> dict:
@@ -961,48 +799,33 @@ class SnapshotTable:
         target's file/delta sets; cost is two manifest reads + one CAS
         publish. Refuses if any of the target's files has been vacuumed
         (CURRENT no longer referenced them, so ``vacuum`` may have removed
-        them — a rollback must restore exactly, never approximately) and on
-        legacy manifests without file lists. Concurrency: CAS-retried like
-        every publish; a concurrent commit simply becomes the parent (its
-        content is superseded by the rollback, which is the caller's stated
-        intent, but never silently dropped from history). Incremental
-        readers (``read_changes``, the ``snapshot_changes`` stream) see a
-        non-append step and refuse the range, as they must."""
-        m_t = self.store.read_version(to_version)
-        if m_t is None:
-            raise FileNotFoundError(
-                f"no snapshot v{to_version} at {self.path} to roll back to"
-            )
-        if "files" not in m_t:
-            raise RuntimeError(
-                f"rollback refused: v{to_version} is a legacy manifest "
-                "without file-level lists — its exact content is unknowable"
-            )
-        bucket_col = m_t["bucket_col"]
+        them — a rollback must restore exactly, never approximately).
+        Concurrency: CAS-retried like every publish; a concurrent commit
+        simply becomes the parent (its content is superseded by the
+        rollback, which is the caller's stated intent, but never silently
+        dropped from history). Incremental readers (``read_changes``, the
+        ``snapshot_changes`` stream) see a non-append step and refuse the
+        range, as they must."""
+        target = self._manifest(to_version)
+        bucket_col = target["bucket_col"]
 
-        def check_vacuumed() -> None:
-            """Target files (base AND merge-on-read delta) must all still
-            exist — vacuum removes whatever CURRENT no longer references.
-            Re-run inside every build() attempt so a vacuum racing a CAS
-            retry cannot slip a dead manifest through; the residual window
-            between the last check and the publish is the same one Iceberg
-            accepts (concurrent expire_snapshots + rollback is operator
-            error either way)."""
+        def edit(child: dict) -> None:
+            # re-checked on every attempt so a vacuum racing a CAS retry
+            # cannot slip a dead manifest through; the residual window
+            # between the last check and the publish is the same one Iceberg
+            # accepts (concurrent expire_snapshots + rollback is operator
+            # error either way)
             missing = [
                 os.path.join(f"{bucket_col}={b}", f)
-                for b, fs in m_t["files"].items()
+                for b, fs in target["files"].items()
                 for f in fs
-                if not os.path.exists(
-                    os.path.join(self.data_dir, f"{bucket_col}={b}", f)
-                )
+                if not os.path.exists(os.path.join(self.data_dir, f"{bucket_col}={b}", f))
             ] + [
                 os.path.join("deltas", f"{bucket_col}={b}", f)
-                for b, batches in (m_t.get("deltas") or {}).items()
+                for b, batches in (target.get("deltas") or {}).items()
                 for _, fs in batches
                 for f in fs
-                if not os.path.exists(
-                    os.path.join(self.delta_dir, f"{bucket_col}={b}", f)
-                )
+                if not os.path.exists(os.path.join(self.delta_dir, f"{bucket_col}={b}", f))
             ]
             if missing:
                 raise SnapshotVacuumedError(
@@ -1010,71 +833,43 @@ class SnapshotTable:
                     f"of its data/delta files were vacuumed "
                     f"(first: {missing[0]})"
                 )
+            for k in [k for k in child if k not in self._LINEAGE]:
+                del child[k]
+            child.update(
+                copy.deepcopy({k: v for k, v in target.items() if k not in self._LINEAGE})
+            )
 
-        check_vacuumed()
-
-        def build(p: dict | None) -> dict:
-            if p is None:  # pragma: no cover — a readable target implies one
-                raise SnapshotConflictError("table vanished during rollback")
-            check_vacuumed()
-            return {
-                "version": p["version"] + 1,
-                "snapshot_id": uuid.uuid4().hex,
-                "parent_id": p["snapshot_id"],
-                "bucket_col": bucket_col,
-                **({"bucket_type": m_t["bucket_type"]} if "bucket_type" in m_t else {}),
-                "buckets": dict(m_t["buckets"]),
-                "files": {b: list(fs) for b, fs in m_t["files"].items()},
-                **({"schema": m_t["schema"]} if m_t.get("schema") else {}),
-                **({"stats": m_t["stats"]} if m_t.get("stats") else {}),
-                **({"deltas": m_t["deltas"]} if m_t.get("deltas") else {}),
-                **({"delta_key": m_t["delta_key"]} if "delta_key" in m_t else {}),
-                **({"delta_op": m_t["delta_op"]} if "delta_op" in m_t else {}),
-                "metrics": {"op": "rollback", "rolled_back_to": to_version},
-            }
-
-        return self._publish_retry(self.current(), build)
+        return self._publish(
+            self.current(), edit, {"op": "rollback", "rolled_back_to": to_version}
+        )
 
     def _compact_into(
         self,
         spark: SparkSession,
-        manifest: dict,
+        child: dict,
         buckets: list[str],
-        compacted: dict[str, tuple[list[str], dict]],
-        compact_rows: dict[str, int],
+        compacted: dict[str, tuple],
     ) -> None:
         """Rewrite the merged (base ⊕ deltas) state of ``buckets`` as fresh
-        base files and clear their deltas — mutates ``manifest`` in place
-        before publish. The physical write runs once; a CAS retry reuses the
-        already-written files (``compacted`` caches per bucket a
-        ``(file_list, stats)`` pair so the retry re-applies them without
-        re-reading footers)."""
-        bucket_col = manifest["bucket_col"]
+        base files and clear their deltas in ``child``. The physical write
+        runs once; a CAS retry reuses the files and footer facts cached in
+        ``compacted``."""
         if not compacted:
-            merged = self._merged_state(spark, manifest, restrict=buckets)
-            moved = self._write_append_tracked(merged, bucket_col)
+            files, rows, stats = self._write(
+                self._merged_state(spark, child, restrict=buckets), child["bucket_col"]
+            )
             for b in buckets:
-                files_b, st = moved.get(b, []), {}
-                if files_b:
-                    compact_rows[b], st = self._footer_rows_stats(
-                        os.path.join(self.data_dir, f"{bucket_col}={b}"),
-                        set(files_b),
-                        self.stat_cols,
-                    )
-                compacted[b] = (files_b, st)
+                compacted[b] = (files.get(b), rows.get(b), stats.get(b))
         for b in buckets:
-            manifest["deltas"].pop(b, None)
             # the parent's stats describe the REPLACED files — always drop
-            manifest.get("stats", {}).pop(b, None)
-            files_b, st = compacted.get(b, ((), {}))
-            if files_b:
-                manifest["files"][b] = files_b
-                manifest["buckets"][b] = compact_rows[b]
+            for key in ("buckets", "files", "stats", "deltas"):
+                child.get(key, {}).pop(b, None)
+            files_b, rows_b, st = compacted[b]
+            if files_b:  # else every row was deleted
+                child["files"][b] = files_b
+                child["buckets"][b] = rows_b
                 if st:
-                    manifest.setdefault("stats", {})[b] = st
-            else:  # all rows deleted
-                manifest["files"].pop(b, None)
-                manifest["buckets"].pop(b, None)
+                    child.setdefault("stats", {})[b] = st
 
     def _merged_state(
         self, spark: SparkSession, m: dict, restrict: list[str] | None = None
@@ -1099,7 +894,7 @@ class SnapshotTable:
 
         bucket_col = m["bucket_col"]
         keys = m["delta_key"]
-        op = m.get("delta_op", "_op")
+        op = m["delta_op"]
         deltas = {
             b: v for b, v in (m.get("deltas") or {}).items()
             if v and (restrict is None or b in restrict)
@@ -1107,7 +902,7 @@ class SnapshotTable:
         base_paths = [
             os.path.join(self.data_dir, f"{bucket_col}={b}", f)
             for b in deltas
-            for f in (m.get("files") or {}).get(b, [])
+            for f in m["files"].get(b, [])
         ]
         # group same-seq files across buckets into one read
         by_seq: dict[int, list[str]] = {}
@@ -1116,31 +911,11 @@ class SnapshotTable:
                 by_seq.setdefault(seq, []).extend(
                     os.path.join(self.delta_dir, f"{bucket_col}={b}", f) for f in files
                 )
-
-        st = self._manifest_schema(m)
-
-        def _read(root: str, paths: list[str], with_op: bool = False) -> DataFrame:
-            rd = spark.read.option("basePath", root)
-            if st is not None:
-                # table schema (+ the op transport column for delta batches,
-                # always a string 'i'/'d'): delta batches written before a
-                # column evolution read back null for it
-                s2 = st
-                if with_op:
-                    s2 = StructType(list(st.fields) + [StructField(op, StringType(), True)])
-                rd = rd.schema(s2)
-            df = rd.parquet(*paths)
-            if st is None:
-                df = df.withColumn(bucket_col, F.col(bucket_col).cast(m["bucket_type"]))
-            return df
-
-        if st is not None:
-            state_cols = [f.name for f in st.fields]
-        else:
-            first_delta = _read(self.delta_dir, by_seq[min(by_seq)], with_op=True)
-            state_cols = [c for c in first_delta.columns if c != op]
+        state_cols = [f["name"] for f in m["schema"]]
+        # delta batches read under the table schema plus the op transport
+        # column: batches written before a column evolution null-fill it
         parts = [
-            _read(self.delta_dir, by_seq[seq], with_op=True).select(
+            self._scan(spark, m, self.delta_dir, by_seq[seq], op=op).select(
                 *state_cols, F.col(op).alias("_ev"), F.lit(seq).alias("_seq")
             )
             for seq in sorted(by_seq)
@@ -1148,7 +923,7 @@ class SnapshotTable:
         if base_paths:
             parts.insert(
                 0,
-                _read(self.data_dir, base_paths).select(
+                self._scan(spark, m, self.data_dir, base_paths).select(
                     *state_cols, F.lit("b").alias("_ev"), F.lit(0).alias("_seq")
                 ),
             )
@@ -1175,23 +950,15 @@ class SnapshotTable:
         """Delete data/delta files not referenced by the CURRENT manifest
         (expired snapshots' files and crash residue). Returns #files removed.
         The Iceberg analogue is expire_snapshots + remove_orphan_files.
-        REFUSES to run on a legacy manifest without file-level lists — there
-        the reference set is unknowable and everything would look orphaned.
         Staging directories are removed only when older than
         ``stage_grace_sec`` (mtime-based, like Iceberg orphan-file cleanup's
         ``older_than``): a LIVE concurrent writer's stage dir is younger than
         the grace window, so vacuum no longer silently drops an in-flight
         write's files mid-move (ADVICE r3) — pass 0 only when no writer can
         be active."""
-        m = self.current()
+        m = self._checked(self.current())
         if m is None:
             return 0
-        if "files" not in m:
-            raise RuntimeError(
-                "vacuum refused: current manifest has no file-level lists "
-                "(legacy format) — publish one commit/overwrite first (it "
-                "backfills the file lists), then vacuum"
-            )
         bucket_col = m["bucket_col"]
         live = {(b, f) for b, fs in m["files"].items() for f in fs}
         live_delta = {
@@ -1359,57 +1126,38 @@ class SnapshotTable:
         never touch prior versions' files — until ``vacuum`` expires the
         files CURRENT no longer references (Iceberg's expire_snapshots
         contract: vacuumed history is gone by design)."""
-        if _manifest is not None:
-            m = _manifest
-        elif version is None:
-            m = self.current()
-            if m is None:
-                raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        else:
-            m = self.store.read_version(version)
-            if m is None:
-                raise FileNotFoundError(f"no snapshot v{version} at {self.path}")
+        m = _manifest if _manifest is not None else self._manifest(version)
         bucket_col = m["bucket_col"]
         deltas = {b for b, v in (m.get("deltas") or {}).items() if v}
-        all_paths = [
-            (b, f, os.path.join(self.data_dir, f"{bucket_col}={b}", f))
-            for b, fs in m.get("files", {}).items()
+        paths = [
+            os.path.join(self.data_dir, f"{bucket_col}={b}", f)
+            for b, fs in m["files"].items()
             for f in fs
-            if b not in deltas
+            if b not in deltas and (_keep_file is None or _keep_file(b, f))
         ]
-        paths = [p for b, f, p in all_paths if _keep_file is None or _keep_file(b, f)]
-        if all_paths and not paths:
-            # every base file was stats-pruned: keep one so the scan retains
-            # the committed schema; the caller's row filter drops its rows
-            paths = [all_paths[0][2]]
+        if not deltas:
+            return self._scan(spark, m, self.data_dir, paths)
+        merged = self._merged_state(spark, m)
+        if not paths:
+            return merged
+        return self._scan(spark, m, self.data_dir, paths).unionByName(merged)
+
+    def _scan(
+        self, spark: SparkSession, m: dict, root: str, paths: list[str], op: str | None = None
+    ) -> DataFrame:
+        """Parquet read of ``paths`` under ``m``'s EXPLICIT table schema
+        (plus the ``op`` transport column of delta batches): files written
+        before a column was added read back null for it, and the partition
+        column gets its committed type from the schema. Spark surfaces the
+        partition column LAST, so the result is re-projected to the
+        manifest's column order. No paths → an empty frame of that schema."""
         st = self._manifest_schema(m)
-        if paths:
-            rd = spark.read.option("basePath", self.data_dir)
-            if st is not None:
-                # explicit table schema (schema evolution): files written
-                # before a column was added read back null for it, and the
-                # partition column gets its committed type directly. Spark
-                # still surfaces the partition column LAST, so re-project to
-                # the manifest's column order.
-                rd = rd.schema(st)
-            df = rd.parquet(*paths)
-            if st is not None:
-                df = df.select(*[f.name for f in st.fields])
-        elif not deltas:
-            # legacy manifest without file lists: bucket-level pruning
-            df = spark.read.parquet(self.data_dir).where(
-                F.col(bucket_col).cast("string").isin(sorted(m["buckets"]))
-            )
-        else:
-            df = None
-        if df is not None and st is None and "bucket_type" in m:
-            # partition-dir values read back as inferred types; restore the
-            # committed column type so read schema == written schema
-            df = df.withColumn(bucket_col, F.col(bucket_col).cast(m["bucket_type"]))
-        if deltas:
-            merged = self._merged_state(spark, m)
-            df = merged if df is None else df.select(merged.columns).unionByName(merged)
-        return df
+        if op is not None:
+            st = StructType(list(st.fields) + [StructField(op, StringType(), True)])
+        if not paths:  # zero partitions: no task, no Python worker
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), st)
+        df = spark.read.option("basePath", root).schema(st).parquet(*paths)
+        return df.select(*st.fieldNames())
 
     def read_where(
         self,
@@ -1431,17 +1179,7 @@ class SnapshotTable:
         buckets with pending merge-on-read deltas load through the merged
         path and are filtered row-wise. A bound of ``None`` leaves that side
         open (``(lo, None)`` = ``col >= lo``)."""
-        m = (
-            self.current()
-            if version is None
-            else self.store.read_version(version)
-        )
-        if m is None:
-            raise FileNotFoundError(
-                f"no committed snapshot at {self.path}"
-                if version is None
-                else f"no snapshot v{version} at {self.path}"
-            )
+        m = self._manifest(version)
         stats = m.get("stats", {})
 
         def keep(b: str, f: str) -> bool:
@@ -1496,27 +1234,11 @@ class SnapshotTable:
             raise ValueError(f"from_version={from_version} outside [1, ...]")
         m_to, added = self.added_files(from_version, to_version)
         bucket_col = m_to["bucket_col"]
-        paths = [
+        # the increment reads under the TO-version's table schema: files
+        # appended before a later column evolution null-fill it
+        return self._scan(spark, m_to, self.data_dir, [
             os.path.join(self.data_dir, f"{bucket_col}={b}", f) for b, f in added
-        ]
-        if not paths:
-            return self.read(spark, _manifest=m_to).limit(0)
-        st = self._manifest_schema(m_to)
-        rd = spark.read.option("basePath", self.data_dir)
-        if st is not None:
-            # the increment reads under the TO-version's table schema: files
-            # appended before a later column evolution null-fill it (the
-            # re-project pins column order — Spark surfaces the partition
-            # column last regardless of its schema position)
-            rd = rd.schema(st)
-        df = rd.parquet(*paths)
-        if st is not None:
-            df = df.select(*[f.name for f in st.fields])
-        if st is None and "bucket_type" in m_to:
-            df = df.withColumn(
-                bucket_col, F.col(bucket_col).cast(m_to["bucket_type"])
-            )
-        return df
+        ])
 
     def added_files(
         self, from_version: int, to_version: int | None = None
@@ -1529,17 +1251,7 @@ class SnapshotTable:
         pending merge-on-read deltas (their fold is a join, not a file list;
         compact first). Every walked step must be a pure base-file append,
         else SnapshotIncrementalError (see ``read_changes``)."""
-        m_to = (
-            self.current()
-            if to_version is None
-            else self.store.read_version(to_version)
-        )
-        if m_to is None:
-            raise FileNotFoundError(
-                f"no committed snapshot at {self.path}"
-                if to_version is None
-                else f"no snapshot v{to_version} at {self.path}"
-            )
+        m_to = self._manifest(to_version)
         to_version = m_to["version"]
         if not 0 <= from_version <= to_version:
             raise ValueError(
@@ -1552,10 +1264,6 @@ class SnapshotTable:
                     "initial load cannot be expressed as a file list; "
                     "compact the table first"
                 )
-            if "files" not in m_to:
-                raise SnapshotIncrementalError(
-                    f"v{to_version}: legacy manifest without file lists"
-                )
             return m_to, sorted(
                 (b, f) for b, fs in m_to["files"].items() for f in fs
             )
@@ -1563,7 +1271,7 @@ class SnapshotTable:
         child = m_to
         while child["version"] > from_version:
             v = child["version"] - 1
-            parent = self.store.read_version(v)
+            parent = self._checked(self.store.read_version(v))
             if parent is None:
                 raise FileNotFoundError(
                     f"no snapshot v{v} at {self.path} (vacuumed history?)"
@@ -1572,11 +1280,7 @@ class SnapshotTable:
                 raise SnapshotIncrementalError(
                     f"v{child['version']} does not descend from v{v}"
                 )
-            if "files" not in parent or "files" not in child:
-                raise SnapshotIncrementalError(
-                    f"v{v}→v{v + 1}: legacy manifest without file lists"
-                )
-            if parent.get("deltas") != child.get("deltas"):
+            if (parent.get("deltas") or {}) != (child.get("deltas") or {}):
                 raise SnapshotIncrementalError(
                     f"v{v}→v{v + 1} changed merge-on-read delta state "
                     "(append_deltas/compaction): not an append-only step"
@@ -1591,15 +1295,10 @@ class SnapshotTable:
         m_from = child
         if m_from["version"] != from_version:  # pragma: no cover
             raise SnapshotIncrementalError("version chain did not close")
-        # .get: a from==to call never enters the chain walk (which is what
-        # rejects legacy manifests without file lists), and its increment is
-        # empty either way
-        old = {
-            (b, f) for b, fs in m_from.get("files", {}).items() for f in fs
-        }
+        old = {(b, f) for b, fs in m_from["files"].items() for f in fs}
         return m_to, sorted(
             (b, f)
-            for b, fs in m_to.get("files", {}).items()
+            for b, fs in m_to["files"].items()
             for f in fs
             if (b, f) not in old
         )

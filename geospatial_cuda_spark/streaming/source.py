@@ -81,7 +81,7 @@ def _reconcile_batch(batch, fields: list, bucket_col: str, bucket_value):
             # bucket_value is always a STRING (manifest JSON key / directory
             # name); for a non-string bucket column build the scalar by
             # casting through Arrow — the streaming twin of the batch
-            # reader's `.cast(bucket_type)` — instead of pa.scalar(str,
+            # reader's typed partition column — instead of pa.scalar(str,
             # type=int64), which raises ArrowInvalid (ADVICE r5)
             sc = pa.array([bucket_value], type=pa.string()).cast(at)[0]
             cols.append(pa.repeat(sc, n))
@@ -171,16 +171,7 @@ class SnapshotChangesDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("snapshot_changes requires .option('path', <table root>)")
-        m = SnapshotTable(path).current()
-        if m is None:
-            raise FileNotFoundError(f"no committed snapshot at {path}")
-        st = SnapshotTable._manifest_schema(m)
-        if st is None:
-            raise ValueError(
-                f"{path}: legacy manifest without a schema — streaming reads "
-                "need the manifest-pinned schema (recommit with this version)"
-            )
-        return st
+        return SnapshotTable._manifest_schema(SnapshotTable(path)._manifest())
 
     def streamReader(self, schema: StructType):
         return _SnapshotChangesStreamReader(schema, dict(self.options))

@@ -33,7 +33,6 @@ def bucketed_df(spark):
 def test_snapshot_commit_read_roundtrip(spark, bucketed_df, tmp_path):
     snap = SnapshotTable(str(tmp_path / "t"))
     res = snap.commit(bucketed_df, "bucket")
-    assert res["done"] is True
     assert res["snapshot"]["metrics"]["rows_written"] == 400
     got = snap.read(spark).select("pid", "bucket", "val")
     assert _rows(got) == _rows(bucketed_df)
@@ -44,28 +43,28 @@ def test_snapshot_commit_read_roundtrip(spark, bucketed_df, tmp_path):
 
 
 def test_snapshot_incremental_resume_and_noop(spark, bucketed_df, tmp_path):
+    """A run killed after committing some buckets resumes by re-running with
+    the full input: only the missing buckets are written."""
     snap = SnapshotTable(str(tmp_path / "t"))
-    commits = 0
-    while True:
-        res = snap.commit(bucketed_df, "bucket", max_buckets_per_commit=2)
-        commits += 1
-        if res["done"]:
-            break
-    assert commits == 4  # ceil(7 buckets / 2)
+    res = snap.commit(bucketed_df.where(F.col("bucket") < "2"), "bucket")
+    assert res["written_buckets"] == 2
+    res = snap.commit(bucketed_df, "bucket")  # resume with the full input
+    assert res["written_buckets"] == 5
     assert _rows(snap.read(spark).select("pid", "bucket", "val")) == _rows(bucketed_df)
     # snapshot chain: each commit's parent is the previous snapshot
     m = snap.current()
-    assert m["version"] == 4
-    assert m["parent_id"] is not None
+    assert m["version"] == 2
+    assert m["parent_id"] == snap.store.read_version(1)["snapshot_id"]
     # re-run is a pure no-op: nothing written, same snapshot
     res = snap.commit(bucketed_df, "bucket")
-    assert res["done"] is True and res["written_buckets"] == 0
-    assert snap.current()["version"] == 4
+    assert res["written_buckets"] == 0
+    assert snap.current()["version"] == 2
 
 
 def test_snapshot_partial_commit_reads_only_committed(spark, bucketed_df, tmp_path):
     snap = SnapshotTable(str(tmp_path / "t"))
-    snap.commit(bucketed_df, "bucket", max_buckets_per_commit=3)
+    res = snap.commit(bucketed_df.where(F.col("bucket") < "3"), "bucket")
+    assert res["written_buckets"] == 3
     visible = snap.read(spark)
     buckets = {r["bucket"] for r in visible.select("bucket").distinct().collect()}
     assert len(buckets) == 3
@@ -92,7 +91,7 @@ def test_snapshot_crash_residue_invisible_then_healed(spark, bucketed_df, tmp_pa
 
     # resume: commit the full df — bucket 5 must be rewritten completely
     res = snap.commit(bucketed_df, "bucket")
-    assert res["done"] is True
+    assert res["written_buckets"] == 3
     assert snap.current()["version"] == committed_version + 1
     got = snap.read(spark).select("pid", "bucket", "val")
     assert _rows(got) == _rows(bucketed_df)  # the half-written row is back
@@ -117,14 +116,14 @@ def test_snapshot_upsert_isolation_and_vacuum(spark, bucketed_df, tmp_path):
 
 def test_snapshot_manifest_files_are_json_and_atomic(spark, bucketed_df, tmp_path):
     snap = SnapshotTable(str(tmp_path / "t"))
-    snap.commit(bucketed_df, "bucket", max_buckets_per_commit=4)
-    snap.commit(bucketed_df, "bucket")
+    assert snap.commit(bucketed_df.where(F.col("bucket") < "4"), "bucket")["written_buckets"] == 4
+    assert snap.commit(bucketed_df, "bucket")["written_buckets"] == 3
     names = sorted(os.path.basename(p) for p in glob.glob(f"{snap.manifest_dir}/v*.json"))
     assert names == ["v1.json", "v2.json"]
     for p in glob.glob(f"{snap.manifest_dir}/v*.json"):
         with open(p) as f:
             m = json.load(f)
-        assert {"version", "snapshot_id", "parent_id", "buckets", "metrics"} <= set(m)
+        assert {"version", "snapshot_id", "parent_id", "buckets", "files", "schema", "metrics"} <= set(m)
     assert not glob.glob(f"{snap.manifest_dir}/.tmp-*")  # temp files all renamed
 
 
@@ -219,34 +218,32 @@ def test_snapshot_concurrent_upsert_same_bucket_conflicts(spark, bucketed_df, tm
     assert _rows(got) == _rows(other)  # winner's upsert intact
 
 
-def test_snapshot_legacy_manifest_backfilled_not_hidden(spark, bucketed_df, tmp_path):
-    """ADVICE r2 (medium): committing on top of a LEGACY manifest (no 'files'
-    key) must backfill the old buckets' file lists from disk — otherwise
-    read() takes the file-list path and silently hides every previously
-    committed bucket, and vacuum would delete their data. vacuum refuses to
-    run while the current manifest is still legacy."""
-    import json as _json
-
-    from geospatial_cuda_spark.sources.snapshots import SnapshotTable
+def test_snapshot_manifest_without_files_or_schema_is_corrupt(spark, bucketed_df, tmp_path):
+    """Every manifest the table writes carries ``files`` and ``schema``. One
+    without either is corrupt: without the file lists the reference set is
+    unknowable (vacuum would delete live data, a commit would hide it),
+    without the schema the read is. Every entry point refuses it."""
+    from geospatial_cuda_spark.sources.snapshots import SnapshotCorruptError
+    from geospatial_cuda_spark.streaming.source import SnapshotChangesDataSource
 
     snap = SnapshotTable(str(tmp_path / "t"))
-    low = bucketed_df.where(F.col("bucket") < "4")
-    snap.commit(low, "bucket")
-    # rewrite the manifest as the legacy format (pre file-level manifests)
-    m = snap.current()
-    for k in ("files", "deltas", "delta_key", "delta_op"):
-        m.pop(k, None)
-    with open(os.path.join(snap.manifest_dir, f"v{m['version']}.json"), "w") as f:
-        _json.dump(m, f)
-    assert "files" not in snap.current()
-    with pytest.raises(RuntimeError, match="vacuum refused"):
-        snap.vacuum()
-    # commit the remaining buckets on top of the legacy manifest
-    snap.commit(bucketed_df, "bucket")
-    m2 = snap.current()
-    assert set(m2["files"]) == {str(i) for i in range(7)}  # backfilled
-    assert _rows(snap.read(spark).select("pid", "bucket", "val")) == _rows(bucketed_df)
-    assert snap.vacuum() == 0  # every on-disk file is referenced again
+    snap.commit(bucketed_df.where(F.col("bucket") < "4"), "bucket")
+    good = snap.current()
+    path = os.path.join(snap.manifest_dir, "v1.json")
+    for key in ("files", "schema"):
+        with open(path, "w") as f:
+            json.dump({k: v for k, v in good.items() if k != key}, f)
+        with pytest.raises(SnapshotCorruptError, match=key):
+            snap.read(spark)
+        with pytest.raises(SnapshotCorruptError, match=key):
+            snap.commit(bucketed_df, "bucket")
+        with pytest.raises(SnapshotCorruptError, match=key):
+            snap.rollback(1)
+        with pytest.raises(SnapshotCorruptError, match=key):
+            snap.vacuum()
+        with pytest.raises(SnapshotCorruptError, match=key):
+            SnapshotChangesDataSource({"path": snap.path}).schema()
+        assert snap.current()["version"] == 1  # nothing published
 
 
 def test_snapshot_null_bucket_fails_fast(spark, tmp_path):
@@ -264,9 +261,6 @@ def test_snapshot_null_bucket_fails_fast(spark, tmp_path):
     with pytest.raises(ValueError, match="NULL bucket"):
         snap.commit(df, "bucket")
     assert snap.current() is None  # nothing published
-    with pytest.raises(ValueError, match="NULL bucket"):
-        snap.commit(df, "bucket", max_buckets_per_commit=2)
-    assert snap.current() is None
     # clean input commits fine afterwards (residue invisible, then vacuumable)
     clean = df.where(F.col("bucket").isNotNull())
     snap.commit(clean, "bucket")
@@ -643,6 +637,75 @@ def test_manifest_store_rollforward_after_hint_crash(spark, bucketed_df, tmp_pat
     assert _rows(reader.read(spark).select("pid", "bucket", "val")) == _rows(bucketed_df)
 
 
+def _crash_case(spark, bucketed_df, snap, op):
+    """Set up ``snap`` for ``op`` and return (run the op, rows before it,
+    rows after it)."""
+    cols = ("pid", "bucket", "val")
+    low = bucketed_df.where(F.col("bucket") < "4")
+    snap.commit(low, "bucket")  # v1
+    if op == "commit":
+        return (lambda: snap.commit(bucketed_df, "bucket"),
+                _rows(low.select(*cols)), _rows(bucketed_df.select(*cols)))
+    if op == "overwrite_buckets":
+        keep = ~((F.col("bucket") == "3") & (F.col("pid") % 2 == 1))
+        return (lambda: snap.overwrite_buckets(
+                    low.where(keep & (F.col("bucket") == "3")), "bucket", ["3"]),
+                _rows(low.select(*cols)), _rows(low.where(keep).select(*cols)))
+    if op == "append_deltas":
+        gone = (F.col("bucket") == "1") & (F.col("pid") % 5 == 0)
+        batch = low.where(gone).withColumn("_op", F.lit("d"))
+        return (lambda: snap.append_deltas(
+                    batch, "bucket", ["1"], key_cols=["pid"], compact_threshold=1),
+                _rows(low.select(*cols)), _rows(low.where(~gone).select(*cols)))
+    snap.commit(bucketed_df, "bucket")  # v2
+    return (lambda: snap.rollback(1),
+            _rows(bucketed_df.select(*cols)), _rows(low.select(*cols)))
+
+
+@pytest.mark.parametrize("point", ["after_move", "after_publish"])
+@pytest.mark.parametrize(
+    "op", ["commit", "overwrite_buckets", "append_deltas", "rollback"]
+)
+def test_crash_point_matrix(spark, bucketed_df, tmp_path, op, point):
+    """Every write operation survives a crash at each commit phase. After
+    the staged files are moved but before publish, a fresh table still reads
+    the old version and ``vacuum`` collects the moved files. After publish
+    but before the hint repoint, a fresh table rolls forward to the child."""
+    from geospatial_cuda_spark.sources.snapshots import InMemoryManifestStore
+
+    if op == "rollback" and point == "after_move":
+        pytest.skip("rollback writes no data files")
+    store = InMemoryManifestStore()
+    path = str(tmp_path / "t")
+    snap = SnapshotTable(path, store=store)
+    run, before, after = _crash_case(spark, bucketed_df, snap, op)
+    old = snap.current()["version"]
+    if point == "after_move":
+        orig = snap._write_append_tracked
+
+        def crash(*a, **k):
+            orig(*a, **k)
+            raise RuntimeError("simulated crash after the staged move")
+
+        snap._write_append_tracked = crash
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run()
+        fresh = SnapshotTable(path, store=store)
+        assert fresh.current()["version"] == old
+        assert _rows(fresh.read(spark).select("pid", "bucket", "val")) == before
+        assert fresh.vacuum() >= 1
+        assert fresh.vacuum() == 0
+    else:
+        store.fail_hint_after_publish = True
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run()
+        store.fail_hint_after_publish = False
+        fresh = SnapshotTable(path, store=store)
+        assert store.latest_hint() == old
+        assert fresh.current()["version"] == old + 1
+        assert _rows(fresh.read(spark).select("pid", "bucket", "val")) == after
+
+
 def test_commit_same_bucket_racer_files_never_claimed(spark, bucketed_df, tmp_path):
     """ADVICE r3: unpublished files another writer drops into a bucket
     directory during this writer's commit window must NOT be referenced by
@@ -696,8 +759,9 @@ def test_casfile_store_cas_rollforward_and_torn_token(spark, bucketed_df, tmp_pa
     generation-token CAS admits exactly one writer per version; a crash
     between publish and hint repoint heals by roll-forward; a TORN token
     (created, name never written — the emulation's documented µs window)
-    reads as absent, never as a partial manifest; a garbled CURRENT hint
-    costs probes, not failures."""
+    reads as absent, never as a partial manifest, while a token naming a
+    complete but missing payload is corruption and raises at once; a
+    garbled CURRENT hint costs probes, not failures."""
     from geospatial_cuda_spark.sources.snapshots import (
         CasFileManifestStore,
         SnapshotTable,
@@ -737,6 +801,21 @@ def test_casfile_store_cas_rollforward_and_torn_token(spark, bucketed_df, tmp_pa
         f.write("payload-deadbeef")  # plausible but nonexistent payload name
     assert store.read_version(3) is None
     assert snap.current()["version"] == 2
+
+    # COMPLETE payload name whose file is missing: payloads are fsync'd
+    # before their token exists, so this is corruption — raise at once
+    import time
+
+    from geospatial_cuda_spark.sources.snapshots import SnapshotCorruptError
+
+    with open(os.path.join(sdir, "v3.token"), "w") as f:
+        f.write(f"payload-{'0' * 32}.json")
+    t0 = time.monotonic()
+    with pytest.raises(SnapshotCorruptError, match="payload"):
+        store.read_version(3)
+    assert time.monotonic() - t0 < store.torn_token_wait_sec
+    with pytest.raises(SnapshotCorruptError):
+        snap.current()
     os.remove(os.path.join(sdir, "v3.token"))
 
     # garbled hint tolerated (advisory contract)
@@ -819,6 +898,26 @@ def test_read_changes_append_only_chain(spark, tmp_path):
         .select(*cols)
         .unionByName(snap.read_changes(spark, 1, 3).select(*cols))
     ) == _rows(snap.read(spark, version=3).select(*cols))
+
+
+def test_read_changes_append_after_compaction_emptied_deltas(spark, tmp_path):
+    """A compaction that clears every pending delta leaves an empty delta
+    map; a plain commit on top of it is still a pure append, so the
+    incremental read across that step must return exactly its rows."""
+    snap = SnapshotTable(str(tmp_path / "t"))
+    base = spark.range(0, 40).select(
+        F.col("id").alias("pid"), F.lit("a").alias("bucket"), F.col("id").alias("val")
+    )
+    snap.commit(base, "bucket")  # v1
+    gone = base.where(F.col("pid") < 5).withColumn("_op", F.lit("d"))
+    res = snap.append_deltas(gone, "bucket", ["a"], key_cols=["pid"], compact_threshold=1)
+    assert res["compacted_buckets"] == ["a"]  # v2: deltas emptied
+    new = spark.range(100, 110).select(
+        F.col("id").alias("pid"), F.lit("b").alias("bucket"), F.col("id").alias("val")
+    )
+    snap.commit(new, "bucket")  # v3
+    cols = ("pid", "bucket", "val")
+    assert _rows(snap.read_changes(spark, 2, 3).select(*cols)) == _rows(new.select(*cols))
 
 
 def test_read_changes_refuses_non_append_steps(spark, tmp_path):

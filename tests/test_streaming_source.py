@@ -370,7 +370,7 @@ def test_int_bucket_column_streams(spark, tmp_path):
     partition value arrives as a directory-name STRING and must be cast
     into the schema's type when injected — pa.scalar('5', type=int64)
     raised ArrowInvalid and crashed every microbatch. The batch reader
-    already cast back via the manifest's bucket_type; this pins the
+    types the partition column from the manifest schema; this pins the
     streaming twin, including values and type through a tailed commit."""
     root = str(tmp_path / "tint")
     snap = SnapshotTable(root)
