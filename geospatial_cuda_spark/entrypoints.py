@@ -387,17 +387,17 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 scale path: cell-pruned kNN with ring escalation — EXACT, so it
-    shares the brute-force SQL oracle (hash-gated). Coords cast to double for
+    """J4 scale path: grid-blocked two-pass kNN — EXACT, so it shares the
+    brute-force SQL oracle (hash-gated). Coords cast to double for
     integer-exact squared distances, as q_knn."""
     as_double = lambda df: df.withColumn("x", F.col("x").cast("double")).withColumn(
         "y", F.col("y").cast("double")
     )
     pts = _indexed_points(spark, sf_dir)
     # depth DERIVED from density (choose_knn_depth): target ~30·k points per
-    # cell, so the radius-1 ring (9 cells) carries >> k candidates and round
-    # 1 is exact for nearly every query while the candidate join touches
-    # ~0.2% of the table per query. Reproduces the hand-tuned depth 6 at
+    # cell, so the radius-1 ring (9 cells) carries >> k candidates and bounds
+    # the k-th distance tightly while the ring join touches ~0.2% of the
+    # table per query. Reproduces the hand-tuned depth 6 at
     # sf0.1 (150 pts/cell) and self-tunes at other scales — the count is
     # one aggregate over the cached index relation.
     depth = K.choose_knn_depth(pts.count(), k=5)
@@ -1652,8 +1652,8 @@ scored AS (SELECT q.qid, p.pid,
 SELECT qid, pid, CAST(dist2 AS BIGINT) AS dist2, CAST(rnk AS INT) AS rank
 FROM scored WHERE rnk <= 5
 """
-    # the cell-pruned path escalates its ring until exact, so the brute-force
-    # top-k SQL is its oracle too (identical distance + pid tie-break)
+    # the grid-blocked path is exact, so the brute-force top-k SQL is its
+    # oracle too (identical distance + pid tie-break)
     sqls["knn_cells"] = sqls["knn"]
 
     # brute-force re-derivation: the blocking grid is an engine choice, the

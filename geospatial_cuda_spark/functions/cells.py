@@ -588,6 +588,3 @@ def cell_id_sql(xcol: str, ycol: str, depth: int, extent: int = 1_000_000) -> st
         expr = f"(({expr}) * 4 + (({cy}) % 2) * 2 + (({cx}) % 2) + 1)"
     return expr
 
-
-def cell_parent_sql(idcol: str) -> str:
-    return f"CAST(FLOOR(({idcol} - 1) / 4.0) AS BIGINT)"

@@ -2,9 +2,9 @@
 expressions (JVM-side, codegen), designed so the same logic is expressible in
 ANSI SQL for the DuckDB oracle.
 
-Ops: token counting (whitespace + BPE-ish word/punct regex), language-ID
-(marker-token heuristic), quality scoring (length/punct/stopword ratios),
-document fingerprinting (normalized-text digest), character shingles.
+Ops: token counting (whitespace), language-ID (marker-token heuristic),
+quality scoring (length, alpha ratio, mean word length), document
+fingerprinting (normalized-text digest), character shingles.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 EN_MARKERS = ("the", "and", "of")
-STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
 
 
 def token_count_col(text: Column) -> Column:
@@ -20,25 +19,6 @@ def token_count_col(text: Column) -> Column:
     t = F.trim(text)
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
-    )
-
-
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """Sub-word-ish count: word chunks + digit runs + punctuation singles —
-    the cheap proxy for a BPE tokenizer's length."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda s: (F.length(F.trim(s)) > 0),
-        )
-    )
-
-
-def stopword_ratio_col(text: Column) -> Column:
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    stops = F.filter(toks, lambda t: t.isin(*STOPWORDS))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        F.size(stops).cast("double") / F.size(toks).cast("double")
     )
 
 

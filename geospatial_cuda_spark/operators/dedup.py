@@ -603,8 +603,8 @@ def connected_components(
     edge-join + groupBy), then (2) labels chase their own label's label
     (one self-join) — the pointer-jumping step halves label-chain depth, so
     convergence is O(log n) rounds even on path graphs, not O(diameter).
-    Per round the driver sees ONE boolean (``changed.isEmpty()`` — the knn-
-    escalation discipline: no collected label maps, no O(N) driver state);
+    Per round the driver sees ONE boolean (``changed.isEmpty()``: no
+    collected label maps, no O(N) driver state);
     each round's frame is eagerly localCheckpoint'ed so plan lineage stays
     O(1) across iterations instead of doubling per round. All joins are
     equi-joins on node/label ids; nothing is broadcast that grows with the

@@ -4,12 +4,12 @@ Spatial kNN
 -----------
 - ``knn_bruteforce``: broadcast queries × all points + window top-k — the
   exact baseline, O(Q·N) but embarrassingly parallel (never collect).
-- ``knn_cells``: the scale path — candidates from the query's quadkey cell at
-  a chosen depth plus an expanding neighbor ring, equi-joined against the
-  cell-clustered points, then exact distance top-k. Exact whenever the kth
-  neighbor lies within the ring guarantee radius (ring r at depth d covers
-  distance ≥ r·extent/2^d from the query's cell); the result flags rows where
-  that bound is not met so callers can escalate the ring.
+- ``knn_cells_exact``: the scale path, exact for every query, as one lazy
+  plan over a grid blocking key shared with ``search.distance_join``. A
+  bound pass joins each query's neighbor ring of grid bins to the points
+  and takes the k-th ring distance, an upper bound on the true k-th
+  neighbour distance. An exact pass joins the bins of the box within that
+  bound and takes the window top-k. No loop, no persist, no Python UDF.
 
 Embedding ANN
 -------------
@@ -24,13 +24,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, IntegerType, LongType
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, IntegerType
 
-from .. import MAX_DEPTH
+from .. import DOMAIN, MAX_DEPTH
 from ..functions import cells as C
 from ..functions.vectors import pair_cosine_rounded
-from .quadtree import ancestor_col
+from . import search as S
 
 
 def knn_bruteforce(
@@ -54,12 +54,12 @@ def knn_bruteforce(
 
     The collect caps at ``max_collected_queries`` (the query set rides into
     every task closure, so Q is bounded by driver AND executor memory) —
-    above the cap, fail fast and point at knn_cells, the scale path."""
+    above the cap, fail fast and point at knn_cells_exact, the scale path."""
     qrows = queries.select(qid, "x", "y").limit(max_collected_queries + 1).collect()
     if len(qrows) > max_collected_queries:
         raise ValueError(
             f"knn_bruteforce collected > {max_collected_queries} queries; "
-            "use knn_cells (cell-pruned scale path) or raise max_collected_queries"
+            "use knn_cells_exact (grid-blocked scale path) or raise max_collected_queries"
         )
     out_schema = f"{qid} long, {pid} long, x double, y double, dist2 double"
     if not qrows:
@@ -118,14 +118,15 @@ def choose_knn_depth(
     """Candidate depth derived from corpus DENSITY rather than hand-tuned
     (VERDICT r3 item 5): pick d with expected cell occupancy N/4^d ≈
     k·points_per_cell_per_k, so the radius-1 ring (9 cells) carries
-    ~9·30·k candidates — comfortably ≥ k, making round 1 exact for nearly
-    every query while the candidate join touches only ~9·occupancy rows per
-    query. The choice TRACKS density: 100× the rows moves d up ~3.3 levels
-    (same per-query cost) instead of inflating the ring join; at sf0.1
-    (6·10⁵ points, k=5) this reproduces the previously hand-tuned depth 6.
+    ~9·30·k candidates — comfortably ≥ k, so the ring's k-th distance is a
+    tight bound for nearly every query while the ring join touches only
+    ~9·occupancy rows per query. The choice TRACKS density: 100× the rows
+    moves d up ~3.3 levels (same per-query cost) instead of inflating the
+    ring join; at sf0.1 (6·10⁵ points, k=5) this reproduces the previously
+    hand-tuned depth 6.
     Occupancy here is the UNIFORM estimate — for pathologically skewed
-    clouds the ring escalation in ``knn_cells_exact`` still guarantees
-    exactness; depth only sets the starting cost."""
+    clouds ``knn_cells_exact`` is still exact (a sparse ring only widens
+    its exact pass); depth only sets the cost."""
     import math
 
     target = max(1, k * points_per_cell_per_k)
@@ -133,64 +134,6 @@ def choose_knn_depth(
         return 1
     d = int(round(math.log(n_points / target, 4)))
     return max(1, min(d, max_depth))
-
-
-def knn_cells(
-    queries: DataFrame,
-    points_with_cell: DataFrame,
-    k: int,
-    depth: int,
-    radius: int = 1,
-    qid: str = "qid",
-    pid: str = "pid",
-    max_depth: int = MAX_DEPTH,
-) -> DataFrame:
-    """Cell-pruned kNN: equi-join on depth-``depth`` cells from the query's
-    (2·radius+1)² neighbor ring. Adds ``exact`` = kth distance is guaranteed
-    exact (fits within the ring's covered radius)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _ring(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        ids = C.encode_cell_ids(xs.to_numpy(), ys.to_numpy(), depth)
-        ring = C.neighbor_ring(ids, depth, radius)
-        return pd.Series([r[r >= 0] for r in ring])
-
-    cand_cells = queries.select(
-        qid,
-        F.col("x").alias("_qx"),
-        F.col("y").alias("_qy"),
-        F.explode(_ring(F.col("x"), F.col("y"))).alias("_cell"),
-    )
-    pts = points_with_cell.withColumn(
-        "_cell", ancestor_col(F.col("cell_id"), max_depth - depth)
-    )
-    joined = cand_cells.join(pts, on="_cell", how="inner")
-    d2 = (F.col("x") - F.col("_qx")) * (F.col("x") - F.col("_qx")) + (
-        F.col("y") - F.col("_qy")
-    ) * (F.col("y") - F.col("_qy"))
-    # ring guarantee: every point within `guarantee` of the query is in some
-    # candidate cell (the query sits inside its own cell; the ring extends
-    # `radius` full cells beyond it on every side).
-    cell_extent = 1_000_000.0 / (1 << depth)
-    guarantee = (radius * cell_extent) ** 2
-    # candidate count and top-k in ONE pass over the join output: both
-    # windows share Window.partitionBy(qid), so they ride the same qid
-    # exchange and the candidate equi-join — the operator's dominant cost —
-    # executes exactly once (a separate groupBy+join-back re-ran it; Spark
-    # does not guarantee exchange reuse across the two branches).
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(), F.col(pid).asc())
-    wc = Window.partitionBy(qid)
-    return (
-        joined.withColumn("dist2", d2)
-        .withColumn("_ncand", F.count(F.lit(1)).over(wc))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .withColumn(
-            "exact",
-            (F.col("_ncand") >= k) & (F.col("dist2") <= F.lit(guarantee)),
-        )
-        .select(qid, pid, "x", "y", F.col("dist2").cast("double"), "rank", "exact")
-    )
 
 
 def knn_cells_exact(
@@ -201,73 +144,61 @@ def knn_cells_exact(
     radius: int = 1,
     qid: str = "qid",
     pid: str = "pid",
-    max_depth: int = MAX_DEPTH,
 ) -> DataFrame:
-    """EXACT kNN via the cell-pruned scale path: run ``knn_cells`` and, for
-    queries whose kth neighbor is not ring-guaranteed (``exact`` false or
-    fewer than k candidates), re-run ONLY those queries with a doubled ring
-    radius, until guaranteed. At radius ≥ 2^depth the ring covers the whole
-    grid, so termination (and unconditional exactness) is structural.
+    """EXACT kNN through a grid blocking key, in two bounded passes of one
+    lazy plan: equal to ``knn_bruteforce`` row for row (same float64
+    distance, same pid tie-break) without scoring the N×Q product.
 
-    Equal to ``knn_bruteforce`` row-for-row (same distance, same pid
-    tie-break) — the escalation is how the reference's nearest-structure
-    search (cuda/kernels.cu:142-162) generalizes to guaranteed top-k without
-    ever scoring the full N×Q product: each round is a candidate equi-join
-    driven by the still-inexact queries only.
+    Both passes are ``distance_join``'s grid blocking join
+    (``search._box_join``) at ``d = min(depth, _EXACT_JVM_DEPTH)``.
 
-    The driver holds NO per-query state: the settled set lives as a
-    DataFrame and rounds advance by semi/anti-join against it — never by
-    collected qid sets or ``isin`` literal lists, whose plan size is O(Q)
-    (and a 64 KB-codegen hazard) and whose driver set is O(Q) memory. The
-    only per-round driver value is one boolean (``remaining.isEmpty()``),
-    so the loop works unchanged at Q = 10⁶. The final union is materialized
-    via an eager localCheckpoint so every round's cache is unpersisted
-    before returning (no session-lifetime cache leak)."""
-    grid = 1 << depth
-    remaining = queries
-    done: list[DataFrame] = []
-    cached: list[DataFrame] = []
-    r = radius
-    while True:
-        # persist: each round's top-k is Q·k rows; without it the settled
-        # classification AND the final union would recompute the candidate
-        # join. Unpersisted after the final checkpoint below.
-        res = knn_cells(remaining, points_with_cell, k, depth, r, qid, pid, max_depth).persist()
-        cached.append(res)
-        if r >= grid:
-            done.append(res.drop("exact"))
-            break
-        # settled = queries with >= k results, all ring-guaranteed. Queries
-        # with ZERO candidates produce no rows at all, are absent from the
-        # aggregate, and therefore survive the anti-join into the next round
-        # automatically — no extra bookkeeping.
-        settled = (
-            res.groupBy(qid)
-            .agg(
-                F.min(F.col("exact").cast("int")).alias("_all_exact"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .where((F.col("_all_exact") == 1) & (F.col("_n") >= k))
-            .select(qid)
-        )
-        done.append(
-            res.join(F.broadcast(settled), on=qid, how="left_semi")
-            .select(qid, pid, "x", "y", "dist2", "rank")
-        )
-        remaining = remaining.join(F.broadcast(settled), on=qid, how="left_anti")
-        if remaining.isEmpty():
-            break
-        r = min(r * 2, grid)
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    # eager localCheckpoint materializes the union (Q·k rows) and cuts its
-    # lineage so the per-round caches can be dropped NOW instead of leaking
-    # for the session lifetime.
-    out = out.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    return out
+    1. Bound pass: each query's radius-``radius`` ring of bins, clamped to
+       the grid, is broadcast-joined to the points. The k-th smallest
+       ``dist2`` among the ring's points bounds the query's true k-th
+       neighbour distance from above, because any k real points do. With
+       fewer than k ring points the bound is +∞.
+    2. Exact pass: each query's box q ± (√bound + pad) is broadcast-joined
+       to the points (an unbounded box is the whole grid). The rows with
+       ``dist2 ≤ bound`` hold the true top-k and every point tied with the
+       k-th distance, so the window top-k by (dist2, pid) is exact.
+
+    This is the reference's nearest-structure search
+    (cuda/kernels.cu:142-162) generalized to a guaranteed top-k. The plan
+    holds no per-query driver state, no persist and no Python UDF, and
+    building it runs no Spark job. ``depth`` only sets the cost: a sparse
+    ring widens the exact pass's boxes."""
+    d = min(depth, C._EXACT_JVM_DEPTH)
+    ring_half = radius * min(DOMAIN[2] - DOMAIN[0], DOMAIN[3] - DOMAIN[1]) / (1 << d)
+
+    def build() -> tuple[Column, ...]:
+        d2 = S._dist2("x", "y")
+        ring = F.array_sort(F.collect_list("_d2"))
+        bound = F.coalesce(F.try_element_at(ring, F.lit(k)), F.lit(float("inf")))
+        w = Window.partitionBy(qid).orderBy(d2.asc(), F.col(pid).asc())
+        return d2, bound, F.sqrt(bound) + F.lit(S._PAD), F.row_number().over(w)
+
+    d2, bound, half, rank = C.cached_column(("knn_cells_exact", k, qid, pid), build)
+    q = queries.select(
+        F.col(qid),
+        F.col("x").cast("double").alias("_qx"),
+        F.col("y").cast("double").alias("_qy"),
+        F.lit(float(ring_half)).alias("_half"),
+    )
+    # one null-distance row per query keeps a query whose ring holds no
+    # point in the aggregate (an outer join could not broadcast the ring)
+    bounds = (
+        S._box_join(points_with_cell, q, [qid, "_qx", "_qy"], d, DOMAIN)
+        .select(qid, "_qx", "_qy", d2.alias("_d2"))
+        .unionByName(q.select(qid, "_qx", "_qy", F.lit(None).cast("double").alias("_d2")))
+        .groupBy(qid, "_qx", "_qy")
+        .agg(bound.alias("_bound"), half.alias("_half"))
+    )
+    return (
+        S._box_join(points_with_cell, bounds, [qid, "_qx", "_qy", "_bound"], d, DOMAIN)
+        .where(d2 <= F.col("_bound"))
+        .select(qid, pid, "x", "y", d2.alias("dist2"), rank.alias("rank"))
+        .where(F.col("rank") <= k)
+    )
 
 
 # ---------------------------------------------------------------------------

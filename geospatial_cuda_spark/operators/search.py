@@ -13,17 +13,22 @@ resolve by max id), -1 when no boundary contains the point.
   closed-containment candidate id chains (the float32 Arrow kernel, the
   only rendering of candidate generation), exploded and equi-joined against
   the cells relation. O(depth) candidates per query instead of O(#cells);
-  AQE picks the join (a broadcast of the cells side at small scale, a
-  shuffle on cell_id far beyond broadcast size). This inverts the
+  the planner picks the join (a broadcast of the cells side at small scale,
+  a shuffle on cell_id far beyond broadcast size). This inverts the
   reference's brute-force-for-parallelism trade (SURVEY §4) without
   changing results. ``point_lookup`` locates through this path.
+
+Both paths left-join (a query without a hit survives) and end in one
+``groupBy(qid)`` that takes the max and carries each query row through: no
+dedup shuffle and no join back. The result keeps the queries' columns and
+row multiplicity; rows sharing a qid share its max.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import DOMAIN, MAX_DEPTH
 from ..functions import cells as C
@@ -32,10 +37,37 @@ from .quadtree import ancestor_dyn_col
 RESULT_COL = "found_cell_id"
 
 
-def _argmax_fill(queries: DataFrame, hits: DataFrame, qid: str) -> DataFrame:
-    best = hits.groupBy(qid).agg(F.max("cell_id").alias(RESULT_COL))
-    return queries.join(best, on=qid, how="left").withColumn(
-        RESULT_COL, F.coalesce(F.col(RESULT_COL), F.lit(-1)).cast("long")
+def _tagged(queries: DataFrame, qid: str, x: str, y: str) -> DataFrame:
+    """``queries.select(qid, x, y)`` beside each whole row, packed as
+    ``_row`` = (row id, the row's columns, qid first). The row id keeps
+    identical rows apart through ``_best_per_qid``. Explode in a later
+    select: in the same one, the id would be drawn per exploded row."""
+    names = tuple([qid] + [c for c in queries.columns if c != qid])
+    row = C.cached_column(
+        ("search_row", names),
+        lambda: F.named_struct(
+            F.lit("id"), F.monotonically_increasing_id(), F.lit("q"), F.struct(*names)
+        ),
+    )
+    return queries.select(row.alias("_row"), qid, x, y)
+
+
+def _best_per_qid(hits: DataFrame, qid: str) -> DataFrame:
+    """Every query row with the max ``_hit`` over all rows of its qid (-1
+    when none hit), from one grouped aggregation that carries the rows
+    through. A null qid finds nothing, as an equi-join on it would."""
+
+    def build():
+        best = F.max(F.when(F.col(qid).isNotNull(), F.col("_hit")))
+        found = F.coalesce(F.col(RESULT_COL), F.lit(-1)).cast("long")
+        return best, F.collect_set("_row"), F.explode("_rows"), found
+
+    best, rows, row, found = C.cached_column(("search_best", qid), build)
+    return (
+        hits.groupBy(qid)
+        .agg(best.alias(RESULT_COL), rows.alias("_rows"))
+        .select(row.alias("_row"), RESULT_COL)
+        .select("_row.q.*", found.alias(RESULT_COL))
     )
 
 
@@ -49,7 +81,9 @@ def quadrant_search_broadcast(
     """Reference-shaped plan: broadcast boundaries, nested-loop containment.
     Coordinates are quantized to float32 first, as the reference's points
     and the prefix path's candidate kernel are (a no-op on float columns)."""
-    b = F.broadcast(cells.select("cell_id", "min_x", "min_y", "max_x", "max_y"))
+    b = F.broadcast(
+        cells.select(F.col("cell_id").alias("_hit"), "min_x", "min_y", "max_x", "max_y")
+    )
     px, py = F.col(x).cast("float"), F.col(y).cast("float")
     cond = (
         (px >= F.col("min_x"))
@@ -57,8 +91,7 @@ def quadrant_search_broadcast(
         & (py >= F.col("min_y"))
         & (py <= F.col("max_y"))
     )
-    hits = queries.select(qid, x, y).join(b, on=cond, how="inner")
-    return _argmax_fill(queries, hits, qid)
+    return _best_per_qid(_tagged(queries, qid, x, y).join(b, on=cond, how="left"), qid)
 
 
 def quadrant_search_prefix(
@@ -75,19 +108,17 @@ def quadrant_search_prefix(
     Candidates come from the float32-faithful Arrow kernel
     (``cells.candidate_cells_col``): ~300 B per query across the boundary,
     so its cost is negligible at any query count, and the plan compiles in
-    ms — the right trade for plan-per-query serving."""
-    cand = (
-        queries.select(
-            qid,
-            F.explode(C.candidate_cells_col(F.col(x), F.col(y), max_depth, domain)).alias(
-                "cell_id"
-            ),
+    ms — the right trade for plan-per-query serving. Duplicate candidates
+    are harmless under ``max``."""
+    cand = C.candidate_cells_col(F.col(x), F.col(y), max_depth, domain)
+    hits = (
+        _tagged(queries, qid, x, y)
+        .select("_row", qid, F.explode_outer(cand).alias("_cand"))
+        .join(
+            cells.select(F.col("cell_id").alias("_hit")), F.col("_cand") == F.col("_hit"), "left"
         )
-        .where(F.col("cell_id") >= 0)
-        .dropDuplicates([qid, "cell_id"])
     )
-    hits = cand.join(cells.select("cell_id"), on="cell_id", how="inner")
-    return _argmax_fill(queries, hits, qid)
+    return _best_per_qid(hits, qid)
 
 
 def choose_distance_depth(radius: float, domain=DOMAIN) -> int:
@@ -100,6 +131,70 @@ def choose_distance_depth(radius: float, domain=DOMAIN) -> int:
     if radius >= ext:
         return 0
     return max(0, min(C._EXACT_JVM_DEPTH, int(math.floor(math.log2(ext / radius)))))
+
+
+_PAD = 1e-6
+
+
+def _box_join(
+    points: DataFrame,
+    boxes: DataFrame,
+    keep: list[str],
+    depth: int,
+    domain,
+    x: str = "x",
+    y: str = "y",
+    broadcast: bool = True,
+) -> DataFrame:
+    """The grid blocking join of ``distance_join`` and ``knn_cells_exact``:
+    every point beside the ``keep`` columns of each box
+    [_qx ± _half] × [_qy ± _half] (double columns of ``boxes``) that
+    overlaps its grid bin at ``depth``.
+
+    A point's key is its (col, row) bin packed into a long, col·2^depth +
+    row. Not a quadkey: blocking keys never leave the operator, so a 2-ceil
+    pack replaces the per-level interleave (pure codegen either way). Each
+    box explodes to the keys of the bin rectangle its edges fall in,
+    through the same binning function. Binning is monotone (float32
+    rounding and ceil both are), so every point inside a box meets it, once.
+    Each edge is clamped into the domain before it is binned, which changes
+    no bin and keeps an unbounded ``_half`` away from the float and long
+    casts. With ``broadcast`` the exploded boxes are the broadcast side and
+    the points never shuffle."""
+
+    def build() -> tuple[Column, Column]:
+        def bins(v: Column, lo: float, hi: float) -> Column:
+            return C._axis_bin_col(v, depth, lo, hi)
+
+        def edge(v: Column, lo: float, hi: float) -> Column:
+            return bins(F.least(F.greatest(v, F.lit(lo)), F.lit(hi)), lo, hi)
+
+        xlo, ylo, xhi, yhi = (float(v) for v in domain)
+        qx, qy, h = F.col("_qx"), F.col("_qy"), F.col("_half")
+        n = 1 << depth
+        pkey = bins(F.col(x), xlo, xhi) * n + bins(F.col(y), ylo, yhi)
+        rlo, rhi = edge(qy - h, ylo, yhi), edge(qy + h, ylo, yhi)
+        cols = F.sequence(edge(qx - h, xlo, xhi), edge(qx + h, xlo, xhi))
+        keys = F.transform(cols, lambda c: F.sequence(c * n + rlo, c * n + rhi))
+        return pkey, F.explode(F.flatten(keys))
+
+    pkey, qkeys = C.cached_column(("box_join", x, y, depth, tuple(domain)), build)
+    cand = boxes.select(*keep, qkeys.alias("_qkey"))
+    if broadcast:
+        cand = F.broadcast(cand)
+    return points.join(cand, pkey == F.col("_qkey"))
+
+
+def _dist2(x: str, y: str) -> Column:
+    """Squared distance in double from the point (``x``, ``y``) to the
+    query (``_qx``, ``_qy``)."""
+
+    def build() -> Column:
+        dx = F.col(x).cast("double") - F.col("_qx")
+        dy = F.col(y).cast("double") - F.col("_qy")
+        return dx * dx + dy * dy
+
+    return C.cached_column(("dist2", x, y), build)
 
 
 def distance_join(
@@ -123,24 +218,16 @@ def distance_join(
 
     Physical plan, chosen for the 100-TB shape (huge points, bounded queries):
 
-    1. every POINT gets ONE blocking key — its (col, row) grid bin at
-       ``depth`` packed into a long. NOT a quadkey: blocking keys never
-       leave the operator, so a 2-ceil pack replaces the per-level
-       interleave (pure whole-stage codegen either way).
-    2. every QUERY explodes to the grid rectangle its radius-r bbox
-       overlaps: per-axis bins of qx±r through the SAME binning function.
-       Binning is monotone (float32 rounding and ceil both are), so any
-       point within r bins inside the rectangle — conservative, never
-       misses. A pad of 1e-6 on each endpoint absorbs the one residual
-       double-rounding of (qx ± r) for non-lattice coordinates; on the
-       integer-lattice data model the endpoints are exact and the pad is
-       inert (bins are ≥ ext/2^10 ≈ 976 wide).
-    3. hash equi-join on the key. With a bounded query side (the default)
-       the rectangle relation broadcasts, so the points table NEVER
-       shuffles — one map-side join stage at any scale. For huge query
-       sides pass ``broadcast_queries=False`` and both sides shuffle on
-       the key.
-    4. exact distance filter in codegen: dist2 ≤ r² on double arithmetic —
+    1. the grid blocking join (``_box_join``): one key per point, and each
+       query's radius-r bbox, padded by 1e-6 per side, exploded to the bins
+       it overlaps. The pad absorbs the one residual double rounding of
+       (qx ± r) for non-lattice coordinates; on the integer-lattice data
+       model the endpoints are exact and the pad is inert (bins are ≥
+       ext/2^10 ≈ 976 wide). With a bounded query side (the default) the
+       rectangle relation broadcasts, so the points table NEVER shuffles —
+       one map-side join stage at any scale. For huge query sides pass
+       ``broadcast_queries=False`` and both sides shuffle on the key.
+    2. exact distance filter in codegen: dist2 ≤ r² on double arithmetic —
        integer-exact for lattice coords (|coord| < 2^26).
 
     Each matching pair appears EXACTLY once: a point has one key and the
@@ -148,7 +235,6 @@ def distance_join(
     """
     if depth is None:
         depth = choose_distance_depth(radius, domain)
-    n = 1 << depth
     reserved = {qid, "_qx", "_qy", "_qkey", "dist2"}
     clash = sorted(reserved & set(points.columns))
     if clash:
@@ -156,48 +242,15 @@ def distance_join(
             f"points relation carries reserved column name(s) {clash} "
             "(the operator's output/internal working set); rename them first"
         )
-    xlo, ylo, xhi, yhi = domain[0], domain[1], domain[2], domain[3]
-    pkey = (
-        C._axis_bin_col(F.col(x), depth, xlo, xhi) * n
-        + C._axis_bin_col(F.col(y), depth, ylo, yhi)
-    ).alias("_qkey")
-    pts = points.select(F.col("*"), pkey)
-
-    pad = 1e-6
-    qx = F.col(x).cast("double")
-    qy = F.col(y).cast("double")
-    clo = C._axis_bin_col(qx - F.lit(radius + pad), depth, xlo, xhi)
-    chi = C._axis_bin_col(qx + F.lit(radius + pad), depth, xlo, xhi)
-    rlo = C._axis_bin_col(qy - F.lit(radius + pad), depth, ylo, yhi)
-    rhi = C._axis_bin_col(qy + F.lit(radius + pad), depth, ylo, yhi)
-    cand = (
-        queries.select(
-            F.col(qid),
-            qx.alias("_qx"),
-            qy.alias("_qy"),
-            F.explode(F.sequence(clo, chi)).alias("_qc"),
-            rlo.alias("_rlo"),
-            rhi.alias("_rhi"),
-        )
-        .select(
-            qid,
-            "_qx",
-            "_qy",
-            "_qc",
-            F.explode(F.sequence(F.col("_rlo"), F.col("_rhi"))).alias("_qr"),
-        )
-        .select(
-            qid, "_qx", "_qy", (F.col("_qc") * n + F.col("_qr")).alias("_qkey")
-        )
+    boxes = queries.select(
+        F.col(qid),
+        F.col(x).cast("double").alias("_qx"),
+        F.col(y).cast("double").alias("_qy"),
+        F.lit(float(radius) + _PAD).alias("_half"),
     )
-    if broadcast_queries:
-        cand = F.broadcast(cand)
-    dist2 = (F.col(x).cast("double") - F.col("_qx")) * (
-        F.col(x).cast("double") - F.col("_qx")
-    ) + (F.col(y).cast("double") - F.col("_qy")) * (F.col(y).cast("double") - F.col("_qy"))
     return (
-        pts.join(cand, on="_qkey", how="inner")
-        .withColumn("dist2", dist2)
+        _box_join(points, boxes, [qid, "_qx", "_qy"], depth, domain, x, y, broadcast_queries)
+        .withColumn("dist2", _dist2(x, y))
         .where(F.col("dist2") <= F.lit(float(radius) * float(radius)))
         .drop("_qkey", "_qx", "_qy")
     )

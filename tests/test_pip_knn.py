@@ -135,30 +135,56 @@ def test_knn_brute_vs_numpy(spark, small_points, knn_world):
         assert mine == list(order), f"qid {q.qid}"
 
 
-def test_knn_cells_matches_brute_when_exact(knn_world):
-    queries, pts = knn_world
-    k = 5
-    brute = K.knn_bruteforce(queries, pts.drop("cell_id"), k).toPandas()
-    pruned = K.knn_cells(queries, pts, k, depth=3, radius=2).toPandas()
-    exact_q = set(pruned.groupby("qid")["exact"].all().pipe(lambda s: s[s].index))
-    assert len(exact_q) > 0  # the ring must certify a decent share at this density
-    for qid in exact_q:
-        a = brute[brute.qid == qid].sort_values("rank")["pid"].tolist()
-        b = pruned[pruned.qid == qid].sort_values("rank")["pid"].tolist()
-        assert a == b, f"qid {qid}"
+def _ring_kinds(qx, qy, px, py, k, depth=6, radius=1):
+    """Numpy view of ``knn_cells_exact``'s bound pass at ``depth``: the
+    number of queries whose radius-``radius`` ring of grid bins holds fewer
+    than k points (bound +∞), and the number whose ring k-th distance lies
+    beyond the ring's guaranteed radius (the exact pass must look outside
+    the ring)."""
+    n, ext = 1 << depth, 1_000_000.0 / (1 << depth)
+
+    def bins(v):
+        return np.clip(np.ceil(np.float32(v).astype(np.float64) / ext) - 1, 0, n - 1)
+
+    pc, pr = bins(px), bins(py)
+    qc, qr = bins(qx), bins(qy)
+    sparse = beyond = 0
+    for i in range(len(qx)):
+        ring = (np.abs(pc - qc[i]) <= radius) & (np.abs(pr - qr[i]) <= radius)
+        d2 = np.sort((px[ring] - qx[i]) ** 2 + (py[ring] - qy[i]) ** 2)
+        if len(d2) < k:
+            sparse += 1
+        elif d2[k - 1] > (radius * ext) ** 2:
+            beyond += 1
+    return sparse, beyond
 
 
-def test_knn_cells_exact_equals_brute_everywhere(spark, knn_world):
-    """Ring escalation makes the cell path exact for EVERY query — including
-    ones whose initial radius-1 ring is too tight (sparse neighborhoods), the
-    case the non-escalating path flags exact=false."""
+def _brute_rows(qid, qx, qy, pid, px, py, k):
+    """(qid, rank, pid, dist2) rows of the exact top-k, ties broken by pid."""
+    rows = []
+    for q, x, y in zip(qid, qx, qy):
+        d2 = (px - x) ** 2 + (py - y) ** 2
+        for r, j in enumerate(np.lexsort((pid, d2))[:k]):
+            rows.append((int(q), r + 1, int(pid[j]), float(d2[j])))
+    return rows
+
+
+def _rows(pdf):
+    pdf = pdf.sort_values(["qid", "rank"])
+    return list(zip(pdf["qid"].astype(int), pdf["rank"].astype(int),
+                    pdf["pid"].astype(int), pdf["dist2"].astype(float)))
+
+
+def test_knn_cells_exact_equals_brute_everywhere(spark, small_points, knn_world):
+    """The two-pass kNN is exact for EVERY query — including ones whose
+    depth-6 ring holds fewer than k points (the bound is +∞ and the box is
+    the whole grid) and ones whose ring k-th distance lies beyond the ring."""
     queries, pts = knn_world
     k = 5
-    # depth 6 cells are sparse at this fixture density, so radius=1 leaves
-    # queries inexact in round 1 and the escalation loop genuinely runs
-    first = K.knn_cells(queries, pts, k, depth=6, radius=1).toPandas()
-    per_q = first.groupby("qid").apply(lambda g: bool(g["exact"].all()) and len(g) == k)
-    assert not per_q.all()
+    x, y = (v.astype(np.float64) for v in small_points)
+    qpdf = queries.toPandas()
+    sparse, beyond = _ring_kinds(qpdf.x.to_numpy(np.float64), qpdf.y.to_numpy(np.float64), x, y, k)
+    assert sparse > 0 and beyond > 0
     brute = K.knn_bruteforce(queries, pts.drop("cell_id"), k).toPandas()
     exact = K.knn_cells_exact(queries, pts, k, depth=6, radius=1).toPandas()
     for qid in brute.qid.unique():
@@ -169,35 +195,32 @@ def test_knn_cells_exact_equals_brute_everywhere(spark, knn_world):
 
 
 def test_knn_cells_exact_10k_queries_no_driver_state(spark, small_points, small_points_df, monkeypatch):
-    """VERDICT r2: the escalation loop must hold NO per-query driver state.
-    10k queries through ≥2 genuine escalation rounds with DataFrame.collect
-    FORBIDDEN for the duration (the round-2 implementation collected every
-    qid and built O(Q) ``isin`` literal plans — at this Q that is a 10k-element
-    IN-list per round and a 64 KB-codegen hazard). Result must equal brute
-    force row-for-row, and the returned plan is a checkpoint scan with no
-    O(Q) literals."""
+    """VERDICT r2: the kNN must hold NO per-query driver state. 10k queries,
+    both kinds of bound-pass query present, with DataFrame.collect
+    FORBIDDEN while the plan is built (the round-2 implementation collected
+    every qid and built O(Q) ``isin`` literal plans — at this Q a 10k-element
+    IN-list and a 64 KB-codegen hazard). The plan's explain string for 10k
+    queries is within 1% of the one for 10 queries (no O(Q) literals), and
+    the result equals brute force row for row."""
     import pandas as pd
     from pyspark.sql import DataFrame as SparkDF
 
     from geospatial_cuda_spark.util import hash2
 
-    n_q = 10_000
-    ids = np.arange(n_q, dtype=np.uint64)
-    qx = (hash2(ids, np.full_like(ids, 301)) % np.uint64(1_000_000)).astype(np.float64)
-    qy = (hash2(ids, np.full_like(ids, 302)) % np.uint64(1_000_000)).astype(np.float64)
-    queries = spark.createDataFrame(
-        pd.DataFrame({"qid": ids.astype(np.int64), "x": qx, "y": qy})
-    ).persist()
+    def make_queries(n_q):
+        ids = np.arange(n_q, dtype=np.uint64)
+        qx = (hash2(ids, np.full_like(ids, 301)) % np.uint64(1_000_000)).astype(np.float64)
+        qy = (hash2(ids, np.full_like(ids, 302)) % np.uint64(1_000_000)).astype(np.float64)
+        pdf = pd.DataFrame({"qid": ids.astype(np.int64), "x": qx, "y": qy})
+        return spark.createDataFrame(pdf).persist(), pdf
+
+    n_q, k = 10_000, 3
+    queries, qpdf = make_queries(n_q)
+    few, _ = make_queries(10)
     pts = QT.with_cell_id(small_points_df, 18).persist()
-    k = 3
-    # at depth 6 / radius 1 the fixture density leaves many queries inexact,
-    # so the loop genuinely escalates (≥2 rounds)
-    first = K.knn_cells(queries, pts, k, depth=6, radius=1)
-    per_q = first.groupBy("qid").agg(
-        F.min(F.col("exact").cast("int")).alias("ok"), F.count(F.lit(1)).alias("n")
-    )
-    n_settled_r1 = per_q.where((F.col("ok") == 1) & (F.col("n") >= k)).count()
-    assert 0 < n_settled_r1 < n_q
+    x, y = (v.astype(np.float64) for v in small_points)
+    sparse, beyond = _ring_kinds(qpdf.x.to_numpy(), qpdf.y.to_numpy(), x, y, k)
+    assert sparse > 0 and beyond > 0
 
     def no_collect(self):
         raise AssertionError("driver-side DataFrame.collect during knn_cells_exact")
@@ -205,13 +228,15 @@ def test_knn_cells_exact_10k_queries_no_driver_state(spark, small_points, small_
     monkeypatch.setattr(SparkDF, "collect", no_collect)
     try:
         out = K.knn_cells_exact(queries, pts, k, depth=6, radius=1)
+        out_few = K.knn_cells_exact(few, pts, k, depth=6, radius=1)
     finally:
         monkeypatch.undo()
-    # checkpointed result: plan has no O(Q) IN-lists (it is a scan)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "extended"
-    )
-    assert len(plan) < 20_000, f"plan unexpectedly large ({len(plan)} chars)"
+
+    def explain(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "extended")
+
+    big, small = len(explain(out)), len(explain(out_few))
+    assert abs(big - small) <= 0.01 * small, f"plan grows with Q: {small} → {big} chars"
     got = out.toPandas()
     brute = K.knn_bruteforce(
         queries, pts.drop("cell_id"), k, max_collected_queries=20_000
@@ -222,7 +247,60 @@ def test_knn_cells_exact_10k_queries_no_driver_state(spark, small_points, small_
     assert g["pid"].tolist() == b["pid"].tolist()
     assert g["qid"].tolist() == b["qid"].tolist()
     queries.unpersist()
+    few.unpersist()
     pts.unpersist()
+
+
+def _adversarial_knn(spark, pts_rows, q_rows, k, depth):
+    pts = spark.createDataFrame(pts_rows, "pid long, x double, y double")
+    queries = spark.createDataFrame(q_rows, "qid long, x double, y double")
+    pid, px, py = (np.array(c, dtype=t) for c, t in zip(zip(*pts_rows), (np.int64, float, float)))
+    qid, qx, qy = (np.array(c, dtype=t) for c, t in zip(zip(*q_rows), (np.int64, float, float)))
+    want = _brute_rows(qid, qx, qy, pid, px, py, k)
+    got = _rows(K.knn_cells_exact(queries, pts, k, depth=depth).toPandas())
+    brute = _rows(K.knn_bruteforce(queries, pts, k).toPandas())
+    assert got == want
+    assert brute == want
+
+
+def test_knn_cells_exact_k_above_n_and_empty_ring(spark):
+    """k > N returns every point per query; a query whose ring holds no
+    point at all (it lies in an empty corner of a sparse cloud) still gets
+    its exact top-k from the whole-grid box."""
+    pts = [(i, 900_000.0 + 1_000 * i, 900_000.0 - 700 * i) for i in range(7)]
+    queries = [(0, 10.0, 10.0), (1, 905_000.0, 896_000.0), (2, 500_000.0, 1_000.0)]
+    _adversarial_knn(spark, pts, queries, k=10, depth=8)
+    _adversarial_knn(spark, pts, queries, k=3, depth=8)
+
+
+def test_knn_cells_exact_domain_edges_and_out_of_domain(spark):
+    """Queries on the domain max and outside the domain, at (−5, 3) and
+    (2e6, −1): their bins clamp into the grid, and the box still covers
+    every point within the bound."""
+    rng = np.random.default_rng(17)
+    xy = rng.integers(0, 1_000_001, size=(400, 2)).astype(float)
+    xy[:4] = [(1e6, 1e6), (0.0, 0.0), (1e6, 0.0), (0.0, 1e6)]
+    pts = [(i, float(a), float(b)) for i, (a, b) in enumerate(xy)]
+    queries = [(0, 1e6, 1e6), (1, -5.0, 3.0), (2, 2e6, -1.0), (3, 1e6, 500_000.0),
+               (4, 0.0, 0.0)]
+    for depth in (3, 6, 8):
+        _adversarial_knn(spark, pts, queries, k=5, depth=depth)
+
+
+def test_knn_cells_exact_breaks_distance_ties_by_pid(spark):
+    """Exact distance ties at and across the k-th distance: points on a
+    circle of radius 5 around the query (the 3-4-5 lattice) and duplicate
+    coordinates under several pids. The kept set holds every tied point, so
+    the pid tie-break is exact."""
+    cx, cy = 500_000.0, 500_000.0
+    ring = [(3, 4), (4, 3), (-3, 4), (-4, 3), (3, -4), (4, -3), (-3, -4), (-4, -3),
+            (5, 0), (0, 5), (-5, 0), (0, -5)]
+    pts = [(100 - i, cx + dx, cy + dy) for i, (dx, dy) in enumerate(ring)]
+    pts += [(200 + i, cx + 2.0, cy) for i in range(3)]  # three pids, one spot
+    pts += [(300 + i, cx + 10_000.0 * i, cy - 7_000.0) for i in range(20)]
+    queries = [(0, cx, cy), (1, cx + 2.0, cy), (2, cx - 1_000.0, cy + 1_000.0)]
+    for k in (2, 9):  # cuts inside the duplicate triple, then inside the circle
+        _adversarial_knn(spark, pts, queries, k=k, depth=10)
 
 
 def test_choose_knn_depth_tracks_density():

@@ -6,8 +6,8 @@ sf0.001 on each pytest run, so a regression that sneaks a row-at-a-time
 Python UDF, an accidental cartesian product, or an unintended
 BroadcastNestedLoopJoin into a plan fails CI — not just the next manual
 audit. Queries that execute driver-side work at construction time
-(escalating kNN, IVF centroid sampling, brute-force query collect) are
-exercised by the oracle gate instead and skipped here.
+(IVF centroid sampling, brute-force query collect) are exercised by the
+oracle gate instead and skipped here.
 """
 
 from __future__ import annotations
@@ -22,7 +22,6 @@ SF = "/root/testdata/sf0.001"
 # construction already runs jobs (collect/checkpoint/commit) — not explain-only
 EAGER = {
     "knn",
-    "knn_cells",
     "ann_ivf",
     "ann_topk",
     "doc_clusters",
@@ -98,3 +97,70 @@ def test_scan_pruning_reaches_parquet(spark):
     plan = _plan(qs["token_counts"](spark, SF))
     line = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "doc_id" in line and "text" in line and "lang" not in line
+
+
+def _operators(plan) -> set:
+    """Operator names of a physical plan, without descending into cached
+    relations (the persisted inputs' own lineage is not the request's)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _operators(plan.executedPlan())
+    kids = plan.children()
+    return {plan.nodeName()}.union(*(_operators(kids.apply(i)) for i in range(kids.size())))
+
+
+def test_serve_requests_run_few_jobs(spark):
+    """Serve-shaped requests (64 queries against a persisted depth-12
+    build), jobs counted by job group: building the kNN plan runs no job,
+    its action runs at most 5 with no Python evaluation node, and the
+    search action runs at most 3."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from geospatial_cuda_spark import datagen as D
+    from geospatial_cuda_spark.operators import knn as K, quadtree as QT, search as S
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    points = D.points_table(spark, 5_000, 4, seed=3).persist()
+    cells = QT.build_cells(points, max_depth=12).persist()
+    cells.count()
+    pts = QT.with_cell_id(
+        points.select("pid", F.col("x").cast("double"), F.col("y").cast("double")), 18
+    ).persist()
+    pts.count()
+    rng = np.random.default_rng(5)
+    queries = spark.createDataFrame(pd.DataFrame({
+        "qid": np.arange(64, dtype=np.int64),
+        "x": rng.integers(0, 1_000_000, 64).astype(np.float64),
+        "y": rng.integers(0, 1_000_000, 64).astype(np.float64),
+    }))
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    try:
+        for i in range(2):  # the second request runs on a warm session
+            knn, built = jobs(f"knn-build-{i}", lambda: K.knn_cells_exact(
+                queries, pts, k=5, depth=K.choose_knn_depth(5_000, 5)))
+            assert built == 0
+            nodes = _operators(knn._jdf.queryExecution().executedPlan())
+            assert {"BroadcastHashJoin", "Window"} <= nodes, nodes
+            assert not {"ArrowEvalPython", "BatchEvalPython"} & nodes, nodes
+            _, ran = jobs(f"knn-run-{i}", lambda: noop(knn))
+            assert ran <= 5, ran
+            search = S.quadrant_search_prefix(queries, cells, max_depth=12)
+            _, ran = jobs(f"search-run-{i}", lambda: noop(search))
+            assert ran <= 3, ran
+    finally:
+        for df in (pts, cells, points):
+            df.unpersist()

@@ -55,6 +55,39 @@ def test_out_of_domain_returns_minus_one(spark, world):
         assert (res == -1).all()
 
 
+def test_search_keeps_rows_columns_and_qid_rule(spark, world):
+    """Differential against the numpy oracle, both strategies: extra query
+    columns are kept, identical duplicate rows keep their multiplicity,
+    rows that share a qid at different coordinates all get the max over
+    that qid's rows, and out-of-domain queries return -1."""
+    from collections import Counter
+
+    _, bnds, cells, _, _, _ = world
+    rows = [
+        (0, "a", 1.5, 100.0, 100.0),
+        (0, "a", 1.5, 100.0, 100.0),  # identical duplicate row
+        (1, "b", None, 500000.0, 500000.0),
+        (1, "c", 2.0, 999999.0, 3.0),  # same qid, other coordinates
+        (2, "d", 3.0, -5.0, 3.0),  # out of domain
+        (3, "e", 4.0, 2e6, -1.0),  # out of domain
+        (4, None, 5.0, 777777.0, 333333.0),
+        (5, "f", 6.0, 1e6, 1e6),  # the domain max
+    ]
+    df = spark.createDataFrame(rows, "qid long, tag string, w double, x float, y float")
+    qx = np.array([r[3] for r in rows], dtype=np.float64)
+    qy = np.array([r[4] for r in rows], dtype=np.float64)
+    per_row = oracle.quadrant_search(qx, qy, bnds)
+    best = {}
+    for r, f in zip(rows, per_row):
+        best[r[0]] = max(best.get(r[0], -1), int(f))
+    assert best[2] == best[3] == -1 and best[1] >= 0
+    want = Counter(r + (best[r[0]],) for r in rows)
+    for fn in (S.quadrant_search_broadcast, S.quadrant_search_prefix):
+        out = fn(df, cells)
+        assert out.columns == ["qid", "tag", "w", "x", "y", S.RESULT_COL]
+        assert Counter(tuple(r) for r in out.collect()) == want, fn.__name__
+
+
 def test_point_lookup_inference_scenario(spark, world, small_points, small_points_df):
     """The reference driver's membership check on the six hard-coded queries:
     found ⇔ the exact point exists in the located quadrant's subtree."""

@@ -403,3 +403,31 @@ def test_int_bucket_column_streams(spark, tmp_path):
         )
     finally:
         q.stop()
+    # bool and decimal buckets (ADVICE #1): the committed bucket strings
+    # ('True', '2.50') parse through the same Arrow cast, and the stream
+    # agrees with the batch reader on values and type; the tailed commit
+    # adds the last bucket
+    for kind, bucket, last in (
+        ("bool", F.col("id") % 2 == 0, F.lit(True)),
+        ("decimal", (F.col("id") % 3 + F.lit(0.5)).cast("decimal(10,2)"),
+         F.lit("2.50").cast("decimal(10,2)")),
+    ):
+        root = str(tmp_path / f"t{kind}")
+        snap = SnapshotTable(root)
+        rows = spark.range(0, 90).select(
+            F.col("id").alias("pid"), bucket.alias("bucket"), (F.col("id") * 3).alias("val")
+        )
+        snap.commit(rows.where(F.col("bucket") != last), "bucket")
+        name = _fresh(kind)
+        q = _start(spark, root, name)
+        try:
+            q.processAllAvailable()
+            snap.commit(rows.where(F.col("bucket") == last), "bucket")
+            q.processAllAvailable()
+            got = spark.table(name).select("pid", "bucket", "val")
+            batch = snap.read(spark).select("pid", "bucket", "val")
+            assert got.dtypes == batch.dtypes == rows.dtypes, kind
+            assert sorted(got.collect()) == sorted(batch.collect()), kind
+            assert sorted(got.collect()) == sorted(rows.collect()), kind
+        finally:
+            q.stop()

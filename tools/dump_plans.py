@@ -33,9 +33,10 @@ AUDIT = [
         "Candidate generation is the float32-faithful Arrow kernel over the "
         "tiny query side (~300 B per query across the boundary; the deleted "
         "codegen chain rendering paid a Janino compile per fresh plan — r6 A/B "
-        "0.88 s vs 0.21 s per invocation); the candidate↔cells equi-join is "
-        "chosen by AQE (broadcast at this scale); final argmax is a "
-        "two-phase HashAggregate on qid.",
+        "0.88 s vs 0.21 s per invocation); the exploded candidates are "
+        "left-joined to the cells (the planner broadcasts them at this "
+        "scale); one two-phase aggregate on qid takes the max and carries "
+        "each query row through — no dedup exchange and no join back.",
         ["HashAggregate", "AdaptiveSparkPlan", "ArrowEvalPython"],
     ),
     (
@@ -64,17 +65,14 @@ AUDIT = [
     ),
     (
         "knn_cells",
-        "Cell-pruned exact kNN (first escalation round — audited via the "
-        "per-round building block, because the contract query eagerly "
-        "localCheckpoints its result to unpersist the round caches, leaving "
-        "only a checkpoint scan in its own plan): ring candidates explode "
-        "from the tiny query side; candidate↔points join is an EQUI-join on "
-        "the ring cell (broadcast: queries side is small); distance top-k "
-        "AND the exactness candidate count are TWO Window ops over the same "
-        "qid exchange (r5: the count was a separate groupBy joined back, "
-        "which re-executed the candidate join — the plan must show exactly "
-        "ONE join), never an N·Q cross product.",
-        ["Window"],
+        "Exact kNN in two bounded passes of one lazy plan (no persist, no "
+        "checkpoint; the only Python eval is inside the cached depth-18 "
+        "index): every point gets one grid key in codegen; the bound pass broadcast-joins the queries' ring bins to "
+        "the points and takes the k-th ring distance per query in one "
+        "HashAggregate; the exact pass broadcast-joins the bins of each "
+        "query's bound box to the points, keeps dist2 <= bound and ranks "
+        "with ONE Window over the qid exchange — never an N·Q cross product.",
+        ["BroadcastHashJoin", "HashAggregate", "Window"],
     ),
     (
         "cell_rollup",
@@ -404,23 +402,11 @@ def main() -> None:
 def _custom_plan_sources(spark) -> dict:
     """Queries whose contract entry hides the interesting plan (eager
     checkpoint), re-expressed via their building blocks for the audit."""
-    from pyspark.sql import functions as F
-
-    from geospatial_cuda_spark.entrypoints import _points, _queries
-    from geospatial_cuda_spark.operators import knn as K, quadtree as QT
-
-    as_double = lambda df: df.withColumn("x", F.col("x").cast("double")).withColumn(
-        "y", F.col("y").cast("double")
-    )
-    pts = as_double(QT.with_cell_id(_points(spark, SF_DIR), 18))
-    round1 = K.knn_cells(
-        as_double(_queries(spark, SF_DIR, limit=10)), pts, k=5, depth=6, radius=1
-    )
     from geospatial_cuda_spark.entrypoints import _mutation_cells_lazy
 
     # the contract entry materializes through an eager localCheckpoint (to
     # release its internal persist); audit the pre-checkpoint composition
-    return {"knn_cells": round1, "mutation_cells": _mutation_cells_lazy(spark, SF_DIR)}
+    return {"mutation_cells": _mutation_cells_lazy(spark, SF_DIR)}
 
 
 def _x7_pruning_section(spark) -> str:
