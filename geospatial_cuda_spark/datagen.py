@@ -168,7 +168,8 @@ def queries_table(spark: SparkSession, n_random: int = 1000, seed: int = 7) -> D
 def polygons() -> list[tuple[int, np.ndarray]]:
     """F5: 32 seeded polygons over the domain — axis-aligned rects (must agree
     with bbox containment), convex 5-12-gons, one concave star, one crossing
-    the domain edge. Driver-side (broadcast into the PIP kernel)."""
+    the domain edge. Driver-side numpy vertex arrays (tests turn them into
+    the polygon relation of ``point_in_polygons_join``)."""
     polys: list[tuple[int, np.ndarray]] = []
     pid = 0
     rng_vals = splitmix64(np.arange(4096, dtype=np.uint64))

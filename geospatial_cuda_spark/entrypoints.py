@@ -492,27 +492,33 @@ PIP_RECTS = [
 ]
 
 
+def _pip_polys(spark: SparkSession, polys) -> DataFrame:
+    """A fixed polygon list ``[(poly_id, (k, 2) vertices)]`` as the polygon
+    relation ``point_in_polygons_join`` takes."""
+    return spark.createDataFrame(
+        [(pid, [float(v) for v in vs[:, 0]], [float(v) for v in vs[:, 1]])
+         for pid, vs in polys],
+        "poly_id int, xs array<double>, ys array<double>",
+    )
+
+
 def q_pip_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 (rect subset): the real PIP kernel — already single-scan (one Arrow
-    pass tests every polygon); rects ≡ inclusive bbox in SQL."""
+    """J3 (rect subset): the PIP join over four rects; rects ≡ inclusive
+    bbox in SQL."""
     import numpy as np
 
     polys = [
         (i, np.array([[x1, y1], [x2, y1], [x2, y2], [x1, y2]], dtype=np.float64))
         for i, x1, y1, x2, y2 in PIP_RECTS
     ]
-    # scorer="jvm": same ray cast as codegen Column arithmetic (bit-identical
-    # masks, pytest-pinned) — at 6M points the Arrow boundary round trip
-    # alone cost ~1.9 s against ~0.25 s of mask compute (guide §4.1: prefer
-    # built-in expressions when they express the same computation)
-    hit = P.point_in_polygons(_points(spark, sf_dir), polys, scorer="jvm")
+    hit = P.point_in_polygons_join(_points(spark, sf_dir), _pip_polys(spark, polys))
     return hit.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"), F.min("pid").alias("min_pid")
     )
 
 
 def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 (convex polygon): ray-cast kernel vs half-plane SQL oracle."""
+    """J3 (convex polygon): the ray cast vs a half-plane SQL oracle."""
     import numpy as np
 
     hexagon = np.array(
@@ -525,8 +531,9 @@ def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
             [200_000.0, 350_000.0],
         ]
     )
-    # scorer="jvm": see q_pip_rects — boundary-tax removal, identical masks
-    hit = P.point_in_polygons(_points(spark, sf_dir), [(0, hexagon)], scorer="jvm")
+    hit = P.point_in_polygons_join(
+        _points(spark, sf_dir), _pip_polys(spark, [(0, hexagon)])
+    )
     return hit.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"), F.min("pid").alias("min_pid")
     )
@@ -539,10 +546,8 @@ PIP_JOIN_POLYS = 120
 
 def q_pip_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 at relation scale (VERDICT r3 item 3): polygons as a DATAFRAME —
-    grid-blocking equi-join + cogrouped Arrow ray-cast, no polygon data in
-    any task closure. 120 rects (SQL-expressible as inclusive bboxes);
-    salt=4 exercises the hot-polygon split (results provably identical —
-    same hash gate)."""
+    grid-blocking equi-join + JVM ray cast, no polygon data in any task
+    closure. 120 rects (SQL-expressible as inclusive bboxes)."""
     polys = spark.range(PIP_JOIN_POLYS).select(
         F.col("id").alias("poly_id"),
         F.expr(
@@ -555,7 +560,7 @@ def q_pip_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ys"),
     )
     hit = P.point_in_polygons_join(
-        _points(spark, sf_dir), polys, block_depth=4, salt=4
+        _points(spark, sf_dir), polys, block_depth=4
     )
     return hit.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"), F.min("pid").alias("min_pid")
@@ -572,9 +577,9 @@ PIP_HEX_DY = (0, 2, 2, 0, -2, -2)
 
 def q_pip_polygon_join_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 relational path on NON-axis-aligned geometry (r4): 60 convex
-    hexagons as a DataFrame through the same blocking join + cogrouped
-    ray-cast kernel; the oracle states containment as the six integer
-    half-plane inequalities per polygon — a fully independent formulation
+    hexagons as a DataFrame through the same blocking join + ray cast; the
+    oracle states containment as the six integer half-plane inequalities
+    per polygon — a fully independent formulation
     (the rect variant's bbox oracle coincides with the blocking prefilter;
     this one does not)."""
     cx = "CAST((id * 6151) % 800000 + 100000 AS DOUBLE)"
@@ -594,7 +599,7 @@ def q_pip_polygon_join_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ys"),
     )
     hit = P.point_in_polygons_join(
-        _points(spark, sf_dir), hexes, block_depth=4, salt=2
+        _points(spark, sf_dir), hexes, block_depth=4
     )
     return hit.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"), F.min("pid").alias("min_pid")
@@ -607,7 +612,7 @@ PIP_HOLE_POLYS = 80
 def q_pip_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 relational path on MULTI-RING polygons (VERDICT r4 item 6): 80
     rect-with-centered-rect-hole donuts as array-of-array ring columns
-    through the same blocking join + cogrouped kernel (even-odd rule — the
+    through the same blocking join + ray cast (even-odd rule — the
     hole is punched regardless of ring winding). Every coordinate is an
     integer multiple of 0.25 (exact in float64), so the oracle is exactly
     SQL-expressible: outer inclusive containment AND NOT strict hole
@@ -628,7 +633,7 @@ def q_pip_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ys"),
     )
     hit = P.point_in_polygons_join(
-        _points(spark, sf_dir), donuts, block_depth=4, salt=2, rule="evenodd"
+        _points(spark, sf_dir), donuts, block_depth=4, rule="evenodd"
     )
     return hit.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"), F.min("pid").alias("min_pid")

@@ -1,147 +1,32 @@
 """Point-in-polygon join (J3 — north-rule extension; the reference supports
 only axis-aligned rect containment, cuda/kernels.cu:152-155).
 
-Two shapes, chosen by polygon-set size:
+One operator, ``point_in_polygons_join``, against a polygon RELATION
+``(poly_id, xs, ys)``, run entirely in the JVM:
 
-- ``point_in_polygons`` — polygons are the SMALL side: their vertex arrays
-  ship to every task inside the Arrow-kernel closure (the DataFrame-level
-  equivalent of a broadcast join against an opaque geometry set), and each
-  Arrow batch of points is tested against all polygons in vectorized numpy.
-  Right for O(10²-10³) modest polygons; beyond that the closure bloats and
-  the per-batch Python loop is O(P).
-- ``point_in_polygons_join`` — polygons are a RELATION (VERDICT r3 item 3):
-  a JVM-side grid-blocking equi-join (each polygon explodes to the coarse
-  cells its bbox overlaps, each point hashes to its one cell — the J1
-  blocking idea) prunes candidate pairs, then a cogrouped Arrow kernel
-  scores each (polygon × its candidate points) group; vertices cross the
-  JVM↔Python boundary once per group, never per candidate row, and no
-  polygon data ever rides the driver or a task closure. ``salt`` splits a
-  hot polygon's candidates across tasks (skew mitigation).
+1. a grid-blocking equi-join: each polygon's bbox explodes to the cells of
+   a ``2^block_depth`` grid it overlaps, each point hashes to its one cell,
+   and the join on the cell pairs them (the planner broadcasts the small
+   exploded polygon side; a large polygon relation keeps a shuffle join).
+   An exact bbox prune follows;
+2. a boundary-inclusive ray cast over the polygon's edge array, built once
+   per polygon: ``aggregate`` sums the signed crossings of a +x ray and
+   ``exists`` finds a point on an edge, both Catalyst higher-order
+   functions.
+
+The ray cast runs ``pip_mask_rings``' double operations in the same order,
+so its masks are bit-identical to that numpy reference (pytest-pinned). No
+polygon data rides the driver or a task closure, and no Python worker runs.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+import math
 
-from ..functions.geo import pip_mask, pip_mask_rings
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import ArrayType
 
-
-def pip_inside_jvm_col(
-    verts: np.ndarray, x, y
-):
-    """Boundary-inclusive even-odd ray cast for ONE fixed single-ring
-    polygon as a pure Column expression — the whole-stage-codegen twin of
-    ``pip_mask`` (same float64 edge arithmetic, operation for operation and
-    in the same order: the crossing parity, the ``x1 + (py-y1)·dx/dy``
-    intersection, and the exact on-edge test are IEEE double ops on both
-    sides, so the masks are BIT-identical; pytest-pinned against the numpy
-    kernel). Horizontal edges: ``crosses`` is false, so the conjunction
-    short-circuits the ±Inf/NaN intersection exactly like the numpy
-    kernel's masked divide. The expression is O(edges) terms — right for
-    modest fixed polygons; data-driven polygon sets use the kernel paths."""
-    v = np.asarray(verts, dtype=np.float64)
-    k = v.shape[0]
-    hits = F.lit(0)
-    onedge = F.lit(False)
-    for i in range(k):
-        x1, y1 = float(v[i, 0]), float(v[i, 1])
-        x2, y2 = float(v[(i + 1) % k, 0]), float(v[(i + 1) % k, 1])
-        dx, dy = x2 - x1, y2 - y1
-        cross = F.lit(dx) * (y - F.lit(y1)) - F.lit(dy) * (x - F.lit(x1))
-        within = (
-            (x >= F.lit(min(x1, x2))) & (x <= F.lit(max(x1, x2)))
-            & (y >= F.lit(min(y1, y2))) & (y <= F.lit(max(y1, y2)))
-        )
-        onedge = onedge | ((cross == F.lit(0.0)) & within)
-        crosses = (F.lit(y1) > y) != (F.lit(y2) > y)
-        if dy != 0.0:
-            xint = F.lit(x1) + (y - F.lit(y1)) * F.lit(dx) / F.lit(dy)
-            hits = hits + (crosses & (x < xint)).cast("int")
-        # dy == 0: crosses is identically false — the edge never counts
-    return ((hits % 2) == 1) | onedge
-
-
-def point_in_polygons(
-    points: DataFrame,
-    polygons: list[tuple[int, np.ndarray]],
-    x: str = "x",
-    y: str = "y",
-    out: str = "poly_id",
-    scorer: str = "arrow",
-) -> DataFrame:
-    """Rows of ``points`` × ids of containing polygons (inner semantics: rows
-    hitting no polygon are dropped; a point inside several polygons yields
-    one row per polygon). The polygon list rides every task
-    closure and is scanned per Arrow batch — right for O(10²-10³) modest
-    polygons; for large or heavy polygon sets use ``point_in_polygons_join``
-    (polygons as a DataFrame, blocking join, nothing in the closure).
-
-    ``scorer="jvm"`` evaluates the SAME ray cast as Column arithmetic
-    inside whole-stage codegen (``pip_inside_jvm_col`` — bit-identical
-    masks, pytest-pinned), eliminating the JVM↔Python boundary entirely:
-    on a 6M-point scan the Arrow round trip alone costs ~1.9 s (measured,
-    identity mapInPandas) against ~0.25 s of actual mask compute, so for
-    small fixed polygon sets the JVM path is the right default at scale.
-    The Arrow kernel stays the path for big batches of heavy polygons, where
-    one numpy pass per edge amortizes and the expression tree would bloat.
-
-    The Arrow kernel emits the hit rows DIRECTLY (mapInPandas row
-    multiplication: per polygon, one vectorized bbox+ray-cast mask then a
-    frame slice) — the array-column + explode formulation built a Python
-    list per input row and appended per hit; this shape has no per-row
-    Python at all (guide §4.2)."""
-    if scorer not in ("arrow", "jvm"):
-        raise ValueError(f"scorer={scorer!r} not in ('arrow', 'jvm')")
-    if scorer == "jvm":
-        # one filtered branch per polygon, unioned: every branch stays a
-        # single WholeStageCodegen scan+filter+project. The array+explode
-        # renderings measured far worse (higher-order ArrayFilter is
-        # CodegenFallback at ~3.3 s; a bare explode Generate over the
-        # 4-armed array 21 s vs 0.86 s for the union at 6M points) — and
-        # the re-scans are cheap columnar reads the branch filters prune.
-        xc, yc = F.col(x), F.col(y)
-        un = None
-        for pid, v in polygons:
-            b = points.where(pip_inside_jvm_col(v, xc, yc)).select(
-                "*", F.lit(int(pid)).cast("int").alias(out)
-            )
-            un = b if un is None else un.unionByName(b)
-        return un
-    polys = [(int(pid), np.asarray(v, dtype=np.float64)) for pid, v in polygons]
-    bboxes = np.array(
-        [[v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max()] for _, v in polys]
-    )
-    # nullable=True mirrors the previous explode-of-array<int> output type
-    out_type = StructType(
-        list(points.schema.fields) + [StructField(out, IntegerType(), True)]
-    )
-
-    def emit_hits(batches):
-        for b in batches:
-            if not len(b):
-                continue
-            px = b[x].to_numpy(np.float64)
-            py = b[y].to_numpy(np.float64)
-            frames = []
-            for (pid, verts), bb in zip(polys, bboxes):
-                # bbox prefilter: skips only points pip_mask would reject
-                cand = (px >= bb[0]) & (px <= bb[2]) & (py >= bb[1]) & (py <= bb[3])
-                if not cand.any():
-                    continue
-                m = pip_mask(px[cand], py[cand], verts)
-                idx = np.flatnonzero(cand)[m]
-                if not idx.size:
-                    continue
-                hit = b.iloc[idx].copy()
-                hit[out] = np.int32(pid)
-                frames.append(hit)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return points.mapInPandas(emit_hits, out_type)
+from ..functions.cells import cached_column
 
 
 def choose_block_depth(
@@ -157,8 +42,6 @@ def choose_block_depth(
     small enough that the candidate join isn't flooded by unrelated points.
     One approxQuantile job over the polygon relation (tiny next to the
     join); degenerate inputs (zero-extent polygons) clamp to max_depth."""
-    import math
-
     med = (
         polygons.select(
             F.greatest(
@@ -172,12 +55,72 @@ def choose_block_depth(
     return max(1, min(int(round(math.log2(extent / med))), max_depth))
 
 
+def _edges(xs: str, ys: str, nested: bool) -> Column:
+    """The polygon's edges as one flat array of structs: from (x1, y1) to
+    (x2, y2), with dx = x2 - x1, dy = y2 - y1, ``up`` = +1 for an upward
+    edge and -1 otherwise, and the edge's bbox [lx, hx] × [ly, hy]. A flat
+    ``xs`` is one ring; a nested one is zipped with ``ys`` into rings."""
+
+    def build() -> Column:
+        def ring(rx: Column, ry: Column) -> Column:
+            k = F.size(rx)
+
+            def edge(x1: Column, i: Column) -> Column:
+                y1, x2, y2 = ry[i], rx[(i + 1) % k], ry[(i + 1) % k]
+                return F.named_struct(
+                    F.lit("x1"), x1, F.lit("y1"), y1, F.lit("y2"), y2,
+                    F.lit("dx"), x2 - x1, F.lit("dy"), y2 - y1,
+                    F.lit("up"), F.when(y2 > y1, 1).otherwise(-1),
+                    F.lit("lx"), F.least(x1, x2), F.lit("hx"), F.greatest(x1, x2),
+                    F.lit("ly"), F.least(y1, y2), F.lit("hy"), F.greatest(y1, y2),
+                )
+
+            return F.transform(rx, edge)
+
+        t = "array<array<double>>" if nested else "array<double>"
+        rxs, rys = F.col(xs).cast(t), F.col(ys).cast(t)
+        if not nested:
+            return ring(rxs, rys)
+        return F.flatten(F.transform(rxs, lambda rx, j: ring(rx, rys[j])))
+
+    return cached_column(("pip_edges", xs, ys, nested), build)
+
+
+def _inside(rule: str) -> Column:
+    """Is the point (``_px``, ``_py``) inside or on the polygon whose edges
+    are ``_e``, under ``rule``? The arithmetic is ``pip_mask_rings``': the
+    crossing test, the intersection x1 + (py - y1)·dx/dy and the exact
+    on-edge test, operation for operation."""
+
+    def build() -> Column:
+        px, py = F.col("_px"), F.col("_py")
+
+        def crossing(acc: Column, e: Column) -> Column:
+            # ``crosses`` implies dy != 0, and the AND short-circuits, so the
+            # division never meets a zero divisor (ANSI raises on one)
+            crosses = (e.y1 > py) != (e.y2 > py)
+            left = px < e.x1 + (py - e.y1) * e.dx / e.dy
+            return acc + F.when(crosses & left, e.up).otherwise(0)
+
+        def on_edge(e: Column) -> Column:
+            cross = e.dx * (py - e.y1) - e.dy * (px - e.x1)
+            return (
+                (cross == 0.0)
+                & (px >= e.lx) & (px <= e.hx) & (py >= e.ly) & (py <= e.hy)
+            )
+
+        w = F.aggregate(F.col("_e"), F.lit(0), crossing)
+        inside = (w % 2 != 0) if rule == "evenodd" else (w != 0)
+        return inside | F.exists(F.col("_e"), on_edge)
+
+    return cached_column(("pip_inside", rule), build)
+
+
 def point_in_polygons_join(
     points: DataFrame,
     polygons: DataFrame,
     block_depth: int | None = 4,
     extent: float = 1_000_000.0,
-    salt: int | None = None,
     x: str = "x",
     y: str = "y",
     poly_id: str = "poly_id",
@@ -186,46 +129,29 @@ def point_in_polygons_join(
     rule: str = "evenodd",
 ) -> DataFrame:
     """Inner PIP join against a polygon RELATION ``(poly_id, xs, ys)`` with
-    vertex arrays as columns — for polygon sets too large/heavy for a task
-    closure. Returns every ``points`` row × the id of each containing
-    polygon.
+    vertex arrays as columns. Returns every ``points`` row × the id of each
+    polygon that contains it; a point on an edge is inside.
 
-    MULTI-RING polygons (holes, multipolygons — VERDICT r4 item 6): pass
-    ``xs``/``ys`` as array-of-array columns (one inner array per ring) —
-    detected from the column type, no extra flag. The bbox used for
-    grid-blocking is the bbox over ALL rings (``array_min(flatten(...))``,
-    still pure codegen), and the cogrouped kernel scores each candidate
-    group with ``pip_mask_rings`` under ``rule`` (``evenodd`` | ``nonzero``
-    winding-number; see functions/geo.py for the fill-rule semantics).
-    Single-ring (flat-array) relations behave exactly as before.
+    MULTI-RING polygons (holes, multipolygons): pass ``xs``/``ys`` as
+    array-of-array columns, one inner array per ring — detected from the
+    column type. The blocking bbox is the bbox over all rings. ``rule`` is
+    ``evenodd`` (crossing parity) or ``nonzero`` (winding number); see
+    ``functions.geo.pip_mask_rings`` for the fill-rule semantics.
 
-    Plan shape (all pre-kernel work JVM-side):
-    1. bbox per polygon (``array_min/max`` in codegen) + explode to the
-       ``2^block_depth``-grid cells the bbox overlaps;
-    2. points hash to their single grid cell — equi-join on (cx, cy) is the
-       blocking step (each candidate pair arises at most once: a point has
-       exactly one cell), then the exact bbox containment filter prunes
-       JVM-side before any Python;
-    3. cogrouped Arrow scoring: candidates grouped by (poly_id, salt) meet
-       the polygon's vertex row via ``cogroup.applyInPandas`` — vertices
-       transfer once per group (never per candidate row) and the ray-cast
-       kernel (``pip_mask``) runs vectorized per group.
-
-    ``salt`` (e.g. 8) splits a hot polygon's candidate stream across that
-    many tasks, duplicating only its vertex row; results are identical.
     ``block_depth`` trades join fan-out (big cells → more false candidates)
     against explode width (small cells → more cells per bbox); pass None
     to DERIVE it from the polygon size distribution (``choose_block_depth``
-    targets cell edge ≈ median bbox edge — ~4-9 cells per typical
-    polygon). Results are depth-independent; only cost moves."""
-    # fail fast on column collisions: a points relation already carrying the
-    # output column (e.g. re-joining this function's own output) or one of
-    # the internal working names would otherwise yield silently ambiguous /
-    # duplicated columns (ADVICE r4)
+    targets cell edge ≈ median bbox edge). Results are depth-independent;
+    only cost moves. Coordinates are clamped into the grid in double before
+    the integer cast, so NaN, ±inf and out-of-domain values bin to an edge
+    cell and never overflow it."""
     if rule not in ("evenodd", "nonzero"):
         raise ValueError(f"unknown fill rule {rule!r} (evenodd|nonzero)")
-    reserved = {poly_id, "_cx", "_cy", "_salt", "_salt2", "_pid2",
-                "_xs", "_ys", "_xmin", "_xmax", "_ymin", "_ymax"}
+    # fail fast on column collisions: a points relation already carrying the
+    # output column or an internal working name would otherwise yield
+    # ambiguous or silently overwritten columns
+    reserved = {poly_id, "_cx", "_cy", "_pid2", "_e", "_px", "_py",
+                "_xmin", "_xmax", "_ymin", "_ymax"}
     clash = sorted(reserved & set(points.columns))
     if clash:
         raise ValueError(
@@ -233,8 +159,6 @@ def point_in_polygons_join(
             f"{clash} (reserved for the output/internal working set); rename "
             "or drop them first"
         )
-    from pyspark.sql.types import ArrayType
-
     nested = isinstance(polygons.schema[xs].dataType.elementType, ArrayType)
     flat_xs = F.flatten(F.col(xs)) if nested else F.col(xs)
     flat_ys = F.flatten(F.col(ys)) if nested else F.col(ys)
@@ -247,14 +171,12 @@ def point_in_polygons_join(
     step = float(extent) / n
 
     def _cell(c):
-        return F.least(
-            F.lit(n - 1), F.greatest(F.lit(0), F.floor(c / F.lit(step)).cast("int"))
-        )
+        b = F.least(F.lit(n - 1.0), F.greatest(F.lit(0.0), c / F.lit(step)))
+        return F.floor(b).cast("int")
 
     p = polygons.select(
         F.col(poly_id).alias("_pid2"),
-        F.col(xs).alias("_xs"),
-        F.col(ys).alias("_ys"),
+        _edges(xs, ys, nested).alias("_e"),
         F.array_min(flat_xs).alias("_xmin"),
         F.array_max(flat_xs).alias("_xmax"),
         F.array_min(flat_ys).alias("_ymin"),
@@ -265,50 +187,18 @@ def point_in_polygons_join(
         .withColumn("_cy", F.explode(F.sequence(_cell(F.col("_ymin")), _cell(F.col("_ymax")))))
     )
     pt_cols = list(points.columns)
-    pts = points.withColumn("_cx", _cell(F.col(x))).withColumn("_cy", _cell(F.col(y)))
-    cand = (
+    px, py = F.col(x).cast("double"), F.col(y).cast("double")
+    pts = points.select(
+        "*", px.alias("_px"), py.alias("_py"), _cell(px).alias("_cx"), _cell(py).alias("_cy")
+    )
+    return (
         pts.join(pcells, on=["_cx", "_cy"])
         .where(
-            (F.col(x) >= F.col("_xmin"))
-            & (F.col(x) <= F.col("_xmax"))
-            & (F.col(y) >= F.col("_ymin"))
-            & (F.col(y) <= F.col("_ymax"))
+            (F.col("_px") >= F.col("_xmin"))
+            & (F.col("_px") <= F.col("_xmax"))
+            & (F.col("_py") >= F.col("_ymin"))
+            & (F.col("_py") <= F.col("_ymax"))
         )
-        .withColumn(
-            "_salt2",
-            F.pmod(F.hash(F.col(x), F.col(y)), F.lit(salt)) if salt else F.lit(0),
-        )
-        .select(*pt_cols, F.col("_pid2").alias(poly_id), F.col("_salt2").alias("_salt"))
-    )
-    out_schema = cand.drop("_salt").schema
-    out_cols = [f.name for f in out_schema.fields]
-    # vertex side: ONE row per (polygon, salt slice) — the only duplication
-    # salting costs is this tiny side, never the candidate stream
-    verts_side = p.select(F.col("_pid2").alias(poly_id), "_xs", "_ys").withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))) if salt else F.lit(0),
-    )
-
-    def _score(cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty or poly_pdf.empty:
-            return cand_pdf.iloc[0:0][out_cols]
-        rxs, rys = poly_pdf["_xs"].iloc[0], poly_pdf["_ys"].iloc[0]
-        if not nested:
-            rxs, rys = [rxs], [rys]
-        rings = [
-            np.column_stack(
-                [np.asarray(rx, dtype=np.float64), np.asarray(ry, dtype=np.float64)]
-            )
-            for rx, ry in zip(rxs, rys)
-        ]
-        m = pip_mask_rings(
-            cand_pdf[x].to_numpy(np.float64), cand_pdf[y].to_numpy(np.float64),
-            rings, rule,
-        )
-        return cand_pdf.loc[m, out_cols]
-
-    return (
-        cand.groupBy(poly_id, "_salt")
-        .cogroup(verts_side.groupBy(poly_id, "_salt"))
-        .applyInPandas(_score, out_schema)
+        .where(_inside(rule))
+        .select(*pt_cols, F.col("_pid2").alias(poly_id))
     )

@@ -12,11 +12,18 @@ from geospatial_cuda_spark.datagen import polygons, queries_table
 from geospatial_cuda_spark.operators import knn as K, pip as P, quadtree as QT
 
 
+def _polys_df(spark, polys):
+    return spark.createDataFrame(
+        [(int(pid), v[:, 0].tolist(), v[:, 1].tolist()) for pid, v in polys],
+        "poly_id int, xs array<double>, ys array<double>",
+    )
+
+
 def test_pip_matches_oracle(spark, small_points, small_points_df):
     x, y = small_points
     polys = polygons()
     got = (
-        P.point_in_polygons(small_points_df, polys)
+        P.point_in_polygons_join(small_points_df, _polys_df(spark, polys))
         .select("pid", "poly_id")
         .toPandas()
         .groupby("pid")["poly_id"]
@@ -37,7 +44,8 @@ def test_pip_rects_agree_with_bbox_containment(spark, small_points_df):
     rect = [(0, np.array([[100000.0, 100000.0], [400000.0, 100000.0],
                           [400000.0, 300000.0], [100000.0, 300000.0]]))]
     got = set(
-        P.point_in_polygons(small_points_df, rect).select("pid").toPandas()["pid"]
+        P.point_in_polygons_join(small_points_df, _polys_df(spark, rect))
+        .select("pid").toPandas()["pid"]
     )
     want = set(
         small_points_df.where(
@@ -50,46 +58,152 @@ def test_pip_rects_agree_with_bbox_containment(spark, small_points_df):
     assert got == want
 
 
-def _polys_df(spark, polys):
-    return spark.createDataFrame(
-        [(int(pid), v[:, 0].tolist(), v[:, 1].tolist()) for pid, v in polys],
-        "poly_id int, xs array<double>, ys array<double>",
-    )
+# classic self-intersecting pentagram (pentagon vertices in 0,2,4,1,3 order):
+# the central core is wound TWICE, so nonzero keeps it and even-odd drops it
+PENTAGRAM = np.array(
+    [(0.0, 100.0), (59.0, -81.0), (-95.0, 31.0), (95.0, 31.0), (-59.0, -81.0)]
+)
 
 
-def test_pip_join_matches_closure_path(spark, small_points_df):
-    """The polygon-relation path (blocking join + cogrouped kernel) must hit
-    exactly the same (point, polygon) pairs as the closure path — including
-    non-convex polygons and boundary points — with and without salting."""
-    polys = polygons()
-    want = set(
-        map(
-            tuple,
-            P.point_in_polygons(small_points_df, polys)
-            .select("pid", "poly_id")
-            .toPandas()
-            .itertuples(index=False),
-        )
+def _donuts():
+    """Two rect-with-rect-hole donuts (domain scale): the hole of the first
+    winds against its outer ring, the hole of the second with it, so the
+    fill rules disagree on the second one's hole."""
+    out = []
+    for pid, (ox, oy, w, same) in enumerate([(100_000.0, 100_000.0, 80_000.0, False),
+                                             (400_000.0, 300_000.0, 120_000.0, True)]):
+        hx, hy, hw = ox + w / 4, oy + w / 4, w / 2
+        outer = np.array([(ox, oy), (ox + w, oy), (ox + w, oy + w), (ox, oy + w)])
+        hole = np.array([(hx, hy), (hx, hy + hw), (hx + hw, hy + hw), (hx + hw, hy)])
+        out.append((pid, [outer, hole[::-1] if same else hole]))
+    return out
+
+
+def _pentagram():
+    """The pentagram scaled into the domain (scale 2,000, offset 500,000 —
+    exact in float64)."""
+    return [(0, [PENTAGRAM * 2_000.0 + 500_000.0])]
+
+
+def _probe_points(rings_by_id, n_random: int, lo: float, hi: float):
+    """Random points plus every vertex, every edge midpoint and, for each
+    horizontal edge, points on its y on both sides of it, near and far —
+    the cases where one operation out of order flips a mask."""
+    rng = np.random.default_rng(17)
+    px, py = list(rng.uniform(lo, hi, n_random)), list(rng.uniform(lo, hi, n_random))
+    for _, rings in rings_by_id:
+        for v in rings:
+            for i in range(len(v)):
+                (x1, y1), (x2, y2) = v[i], v[(i + 1) % len(v)]
+                px += [x1, (x1 + x2) / 2.0]
+                py += [y1, (y1 + y2) / 2.0]
+                if y1 == y2:
+                    a, b = min(x1, x2), max(x1, x2)
+                    px += [a - 1e5, a - 1.0, b + 1.0, b + 1e5]
+                    py += [y1] * 4
+    return np.array(px), np.array(py)
+
+
+@pytest.mark.parametrize(
+    "shape,rule",
+    [("polygons", "evenodd"), ("donuts", "evenodd"), ("donuts", "nonzero"),
+     ("pentagram", "evenodd"), ("pentagram", "nonzero")],
+)
+def test_pip_join_matches_numpy_reference(spark, shape, rule):
+    """The one PIP operator, row for row, against ``pip_mask_rings`` — the
+    numpy reference whose double operations it repeats in the same order —
+    on vertices, edge midpoints, the y of every horizontal edge and random
+    points: the ``datagen.polygons()`` set, two-ring donuts and the
+    self-overlapping pentagram, where the two fill rules differ."""
+    from geospatial_cuda_spark.functions.geo import pip_mask_rings
+
+    rings_by_id, n, lo, hi = {
+        "polygons": ([(pid, [v]) for pid, v in polygons()], 3000, 0.0, 1e6),
+        "donuts": (_donuts(), 600, 50_000.0, 600_000.0),
+        "pentagram": (_pentagram(), 600, 300_000.0, 700_000.0),
+    }[shape]
+    px, py = _probe_points(rings_by_id, n, lo, hi)
+    pts = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(px, py))],
+        "pid long, x double, y double",
     )
-    pdf = _polys_df(spark, polys)
-    for salt in (None, 3):
-        got = set(
-            map(
-                tuple,
-                P.point_in_polygons_join(small_points_df, pdf, salt=salt)
-                .select("pid", "poly_id")
-                .toPandas()
-                .itertuples(index=False),
-            )
+    if shape == "polygons":
+        polys = _polys_df(spark, [(pid, rings[0]) for pid, rings in rings_by_id])
+    else:
+        polys = spark.createDataFrame(
+            [(pid, [r[:, 0].tolist() for r in rings], [r[:, 1].tolist() for r in rings])
+             for pid, rings in rings_by_id],
+            "poly_id int, xs array<array<double>>, ys array<array<double>>",
         )
-        assert got == want, f"salt={salt}"
+    got = {
+        (r["pid"], r["poly_id"])
+        for r in P.point_in_polygons_join(pts, polys, rule=rule).collect()
+    }
+    want = {
+        (int(i), pid)
+        for pid, rings in rings_by_id
+        for i in np.flatnonzero(pip_mask_rings(px, py, rings, rule))
+    }
+    assert got == want
+    if shape == "pentagram":
+        eo = pip_mask_rings(px, py, rings_by_id[0][1], "evenodd")
+        assert (eo != pip_mask_rings(px, py, rings_by_id[0][1], "nonzero")).any()
+
+
+def test_pip_join_nonfinite_and_out_of_domain(spark):
+    """Points at NaN, ±inf, null, 1e300, outside the domain and on its max
+    corner, and a polygon reaching beyond the domain: no cast overflows
+    (ANSI would raise), and the rows equal the numpy reference's."""
+    from geospatial_cuda_spark.functions.geo import pip_mask_rings
+
+    inf, nan = float("inf"), float("nan")
+    coords = [
+        (nan, 5.0), (5.0, nan), (inf, 5.0), (-inf, 5.0), (5.0, inf), (5.0, -inf),
+        (None, 5.0), (5.0, None), (1e300, 3.0), (3.0, 1e300), (-1e300, -1e300),
+        (-5.0, 3.0), (2e6, -1.0), (1e6, 1e6), (999_999.0, 999_999.0),
+        (1.2e6, 1.1e6), (-5.0, -5.0), (5.0, 3.0), (500_000.0, 500_000.0),
+    ]
+    pts = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(coords)], "pid long, x double, y double"
+    )
+    polys = [
+        (0, np.array([(-10.0, -10.0), (10.0, -10.0), (10.0, 10.0), (-10.0, 10.0)])),
+        (1, np.array([(900_000.0, 900_000.0), (1.5e6, 900_000.0), (1.5e6, 1.5e6)])),
+        (2, np.array([(0.0, 0.0), (1e6, 0.0), (1e6, 1e6), (0.0, 1e6)])),
+    ]
+    got = {
+        (r["pid"], r["poly_id"])
+        for r in P.point_in_polygons_join(pts, _polys_df(spark, polys)).collect()
+    }
+    px = np.array([np.nan if a is None else a for a, _ in coords])
+    py = np.array([np.nan if b is None else b for _, b in coords])
+    with np.errstate(invalid="ignore"):  # inf - inf in the numpy reference
+        want = {
+            (int(i), pid)
+            for pid, v in polys
+            for i in np.flatnonzero(pip_mask_rings(px, py, [v]))
+        }
+    assert got == want
+    assert (13, 2) in got and (15, 1) in got  # the domain max corner; beyond it
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["poly_id", "_cx", "_cy", "_pid2", "_e", "_px", "_py", "_xmin", "_xmax", "_ymin", "_ymax"],
+)
+def test_pip_join_rejects_reserved_point_columns(spark, small_points_df, name):
+    """A points column named like the output or a working column raises
+    instead of being silently overwritten or made ambiguous."""
+    pts = small_points_df.withColumn(name, F.lit(1))
+    polys = _polys_df(spark, polygons()[:2])
+    with pytest.raises(ValueError, match=name):
+        P.point_in_polygons_join(pts, polys)
 
 
 def test_pip_join_no_driver_polygon_state(spark, small_points_df, monkeypatch):
     """Closure-size regression (VERDICT r3 item 3): with 500 polygons the
     relational path must neither collect the polygon set to the driver nor
-    close over it — the plan is a blocking equi-join feeding a cogrouped
-    Arrow kernel."""
+    close over it — the plan is a blocking equi-join and a JVM ray cast."""
     from pyspark.sql import DataFrame
 
     pdf = spark.range(500).select(
@@ -105,7 +219,8 @@ def test_pip_join_no_driver_polygon_state(spark, small_points_df, monkeypatch):
     )
     joined = P.point_in_polygons_join(small_points_df, pdf, block_depth=5)
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan  # vertices meet candidates via cogroup
+    python_nodes = ("ArrowEvalPython", "BatchEvalPython", "FlatMapCoGroupsInPandas", "MapInPandas")
+    assert not [m for m in python_nodes if m in plan], plan
     assert "Join" in plan  # grid-blocking equi-join, not a cross product
     monkeypatch.setattr(
         DataFrame, "collect", lambda self: (_ for _ in ()).throw(
@@ -445,13 +560,6 @@ def _naive_pip(px: float, py: float, rings, rule: str) -> bool:
     return inside or onedge
 
 
-# classic self-intersecting pentagram (pentagon vertices in 0,2,4,1,3 order):
-# the central core is wound TWICE, so nonzero keeps it and even-odd drops it
-PENTAGRAM = np.array(
-    [(0.0, 100.0), (59.0, -81.0), (-95.0, 31.0), (95.0, 31.0), (-59.0, -81.0)]
-)
-
-
 def test_fill_rules_disagree_on_selfoverlap_pinned_to_naive():
     from geospatial_cuda_spark.functions.geo import pip_mask_rings
 
@@ -488,18 +596,11 @@ def test_hole_semantics_by_rule_and_orientation():
     assert pip_mask_rings(*mid, [outer, hole_ccw], "nonzero")[0]  # same winding: no hole
     # a point ON the hole's edge is boundary-inclusive inside
     assert pip_mask_rings(np.array([25.0]), np.array([50.0]), [outer, hole_cw], "evenodd")[0]
-    # single-ring delegation is bit-identical to the historical kernel surface
-    from geospatial_cuda_spark.functions.geo import pip_mask
-
-    rng = np.random.default_rng(11)
-    poly = rng.uniform(0, 100, size=(7, 2))
-    qx, qy = rng.uniform(-10, 110, 500), rng.uniform(-10, 110, 500)
-    assert (pip_mask(qx, qy, poly) == pip_mask_rings(qx, qy, [poly], "evenodd")).all()
 
 
 def test_pip_join_multiring(spark):
     """The relational path carries array-of-array ring columns through the
-    same blocking join + cogrouped kernel; results match the naive per-point
+    same blocking join + ray cast; results match the naive per-point
     reference under both fill rules."""
     rows = []
     for pid_, (ox, oy, w) in enumerate([(100_000.0, 100_000.0, 80_000.0),
@@ -526,7 +627,7 @@ def test_pip_join_multiring(spark):
         got = {
             (r["pid"], r["poly_id"])
             for r in P.point_in_polygons_join(
-                pts_df, polys, block_depth=3, salt=2, rule=rule
+                pts_df, polys, block_depth=3, rule=rule
             ).collect()
         }
         want = {
@@ -578,38 +679,3 @@ def test_cluster_assign_matches_numpy_and_kmeans_refines(spark):
     km = K.cluster_assign(emb, k, quantizer="kmeans").toPandas()
     assert km["sim"].mean() >= mean_sample
     emb.unpersist()
-
-
-def test_pip_jvm_scorer_bit_identical(spark):
-    """point_in_polygons(scorer='jvm') — the whole-stage-codegen ray cast —
-    must produce EXACTLY the Arrow kernel's hit set (same float64 edge
-    arithmetic in the same order), including points landing exactly ON
-    edges/vertices, so the scorer choice moves cost only, never results."""
-    rng = np.random.default_rng(23)
-    polys = polygons()
-    # random interior points + exact boundary/vertex points of every polygon
-    xs = rng.uniform(0, 1e6, 4000)
-    ys = rng.uniform(0, 1e6, 4000)
-    bx, by = [], []
-    for _, v in polys:
-        for i in range(len(v)):
-            x1, y1 = v[i]
-            x2, y2 = v[(i + 1) % len(v)]
-            bx += [x1, (x1 + x2) / 2.0]
-            by += [y1, (y1 + y2) / 2.0]
-    xs = np.concatenate([xs, np.array(bx)])
-    ys = np.concatenate([ys, np.array(by)])
-    rows = [(i, float(xs[i]), float(ys[i])) for i in range(len(xs))]
-    pts = spark.createDataFrame(rows, "pid long, x double, y double")
-    key = ["pid", "poly_id"]
-    arrow = (
-        P.point_in_polygons(pts, polys)
-        .select(*key).toPandas().sort_values(key, ignore_index=True)
-    )
-    jvm = (
-        P.point_in_polygons(pts, polys, scorer="jvm")
-        .select(*key).toPandas().sort_values(key, ignore_index=True)
-    )
-    assert arrow.equals(jvm)
-    with pytest.raises(ValueError, match="scorer"):
-        P.point_in_polygons(pts, polys, scorer="gpu")

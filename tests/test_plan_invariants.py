@@ -108,17 +108,23 @@ def _operators(plan) -> set:
     return {plan.nodeName()}.union(*(_operators(kids.apply(i)) for i in range(kids.size())))
 
 
+# operators that run a Python worker; a PIP plan has none of them
+PYTHON_NODES = {"ArrowEvalPython", "BatchEvalPython", "FlatMapCoGroupsInPandas", "MapInPandas"}
+
+
 def test_serve_requests_run_few_jobs(spark):
     """Serve-shaped requests (64 queries against a persisted depth-12
-    build), jobs counted by job group: building the kNN plan runs no job,
-    its action runs at most 5 with no Python evaluation node, and the
-    search action runs at most 3."""
+    build, 120 rects over the points), jobs counted by job group: building
+    the kNN plan runs no job, its action runs at most 5 with no Python
+    evaluation node, and the search and PIP actions run at most 3 each,
+    PIP with no Python node in its executed plan."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
 
     from geospatial_cuda_spark import datagen as D
-    from geospatial_cuda_spark.operators import knn as K, quadtree as QT, search as S
+    from geospatial_cuda_spark.operators import knn as K, pip as P, quadtree as QT, search as S
+    from geospatial_cuda_spark.planaudit import plan_nodes
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -135,6 +141,13 @@ def test_serve_requests_run_few_jobs(spark):
         "x": rng.integers(0, 1_000_000, 64).astype(np.float64),
         "y": rng.integers(0, 1_000_000, 64).astype(np.float64),
     }))
+    x0, y0 = rng.integers(0, 900_000, 120), rng.integers(0, 900_000, 120)
+    w, h = rng.integers(20_000, 90_000, 120), rng.integers(15_000, 70_000, 120)
+    rects = spark.createDataFrame(pd.DataFrame({
+        "poly_id": np.arange(120, dtype=np.int64),
+        "xs": [[float(a), float(a + c), float(a + c), float(a)] for a, c in zip(x0, w)],
+        "ys": [[float(b), float(b), float(b + d), float(b + d)] for b, d in zip(y0, h)],
+    }), "poly_id long, xs array<double>, ys array<double>")
 
     def jobs(group, fn):
         sc.setJobGroup(group, group)
@@ -161,6 +174,11 @@ def test_serve_requests_run_few_jobs(spark):
             search = S.quadrant_search_prefix(queries, cells, max_depth=12)
             _, ran = jobs(f"search-run-{i}", lambda: noop(search))
             assert ran <= 3, ran
+            pip = P.point_in_polygons_join(points, rects, block_depth=4).groupBy("poly_id").count()
+            hits, ran = jobs(f"pip-run-{i}", pip.collect)
+            assert ran <= 3 and hits, ran
+            nodes = {node.nodeName() for node in plan_nodes(pip)}
+            assert not PYTHON_NODES & nodes, nodes
     finally:
         for df in (pts, cells, points):
             df.unpersist()

@@ -244,21 +244,21 @@ AUDIT = [
     ),
     (
         "pip_polygon_join",
-        "Polygon-RELATION PIP (r4): per-polygon bbox + grid-cell explode in "
-        "codegen, blocking EQUI-join on the cell key (no nested loop, no "
-        "polygon closure), exact bbox prune JVM-side, then one cogrouped "
-        "Arrow kernel (FlatMapCoGroupsInPandas) where vertices meet their "
-        "candidate points once per group.",
-        ["FlatMapCoGroupsInPandas", "HashAggregate", "ReadSchema"],
+        "Polygon-RELATION PIP: per-polygon bbox, edge array and grid-cell "
+        "explode on the polygon side, a blocking EQUI-join on the cell key "
+        "that the planner broadcasts (BroadcastHashJoin; no nested loop, no "
+        "polygon closure), then the exact bbox prune and the ray cast "
+        "(aggregate/exists over the edge array) as the join condition — no "
+        "Python node.",
+        ["BroadcastHashJoin", "HashAggregate", "ReadSchema"],
     ),
     (
         "pip_polygon_holes",
-        "Multi-ring PIP (r5): same relational blocking-join shape as "
-        "pip_polygon_join; the only additions are array_min(flatten(..)) "
-        "bbox codegen over the ring-nested columns and the fill-rule flag "
-        "in the cogrouped kernel — no extra shuffle, no Python before the "
-        "kernel.",
-        ["FlatMapCoGroupsInPandas", "HashAggregate", "ReadSchema"],
+        "Multi-ring PIP: the same plan as pip_polygon_join; the only "
+        "additions are array_min(flatten(..)) bboxes over the ring-nested "
+        "columns and an edge array flattened over the rings — no extra "
+        "shuffle, no Python node.",
+        ["BroadcastHashJoin", "HashAggregate", "ReadSchema"],
     ),
     (
         "winnow_neardup",
