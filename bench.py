@@ -198,8 +198,7 @@ QUERY_REPS = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "3"))
 def _evict_cells_cache() -> None:
     """Drop the per-dataset quadtree-index cache entries (unpersisting their
     storage) so the next quadtree_cells run pays a COLD build. Only the
-    'cells' entries are evicted — knn_cells' 'points18' index stays warm, so
-    its timings keep their steady-state meaning."""
+    'cells' entries are evicted; any other cached index stays warm."""
     from geospatial_cuda_spark import entrypoints as E
 
     for key in [k for k in E._CELLS_CACHE if k[2] == "cells"]:

@@ -123,25 +123,6 @@ def points_table(spark: SparkSession, n: int, num_partitions: int = 32, seed: in
     return spark.range(0, n, 1, num_partitions).mapInPandas(gen, "pid long, x float, y float")
 
 
-def edge_points(spark: SparkSession) -> DataFrame:
-    """F2 edge-case pack: midline-exact, duplicates, corners, dense floor cluster."""
-    rows = [
-        (10_000_000, 500000.0, 500000.0),  # exact root midpoint (both axes)
-        (10_000_001, 500000.0, 123456.0),  # on vertical midline
-        (10_000_002, 654321.0, 500000.0),  # on horizontal midline
-        (10_000_003, 250000.0, 750000.0),  # depth-2 corner
-        (10_000_004, 0.0, 0.0),
-        (10_000_005, 999999.0, 999999.0),
-        (10_000_006, 42.0, 42.0),
-        (10_000_007, 42.0, 42.0),  # duplicate
-    ]
-    # dense cluster inside one MIN_DISTANCE-floor cell (skew/salting case)
-    rows += [(10_000_100 + k, 777777.0 + (k % 2), 333333.0 + (k // 2) % 2) for k in range(24)]
-    return spark.createDataFrame(
-        [(p, float(x), float(y)) for p, x, y in rows], "pid long, x float, y float"
-    ).select("pid", F.col("x").cast("float"), F.col("y").cast("float"))
-
-
 REFERENCE_QUERIES = [
     # verbatim cuda/inference.cu:109-117
     (0, "s", 637093.0, 90101.0),

@@ -113,20 +113,6 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _indexed_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cell-indexed point table (finest-depth quadkey per point, coords
-    as double for integer-exact squared distances) — the maintained relation
-    the cell-pruned kNN scale path serves from (the X7 clustered layout's
-    in-memory twin; see _cached_index)."""
-    def build():
-        pts = QT.with_cell_id(_points(spark, sf_dir), 18)
-        return pts.withColumn("x", F.col("x").cast("double")).withColumn(
-            "y", F.col("y").cast("double")
-        )
-
-    return _cached_index(spark, sf_dir, "points18", build)
-
-
 # ---------------------------------------------------------------------------
 # Oracle SQL builders (DuckDB dialect)
 # ---------------------------------------------------------------------------
@@ -226,13 +212,6 @@ def _search_cte(max_depth: int = CELL_DEPTH) -> str:
         "results AS (SELECT q.qid, CAST(COALESCE(h.mx, -1) AS BIGINT) AS found_cell_id "
         "FROM queries q LEFT JOIN hits h ON q.qid = h.qid)"
     )
-
-
-def _cell_at_depth_case_sql(x: str, y: str, depth_expr: str, max_depth: int) -> str:
-    whens = " ".join(
-        f"WHEN {d} THEN {C.cell_id_sql(x, y, d)}" for d in range(max_depth + 1)
-    )
-    return f"(CASE {depth_expr} {whens} END)"
 
 
 # ---------------------------------------------------------------------------
@@ -374,9 +353,6 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     as_double = lambda df: df.withColumn("x", F.col("x").cast("double")).withColumn(
         "y", F.col("y").cast("double")
     )
-    # NOT served from _indexed_points: brute force needs no cell ids, and
-    # paying the depth-18 encode to build that cache here is slower than the
-    # plain scan+cast (measured) — the cache belongs to the cell-pruned path.
     res = K.knn_bruteforce(
         as_double(_queries(spark, sf_dir, limit=10)), as_double(_points(spark, sf_dir)), k=5
     )
@@ -393,13 +369,12 @@ def q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     as_double = lambda df: df.withColumn("x", F.col("x").cast("double")).withColumn(
         "y", F.col("y").cast("double")
     )
-    pts = _indexed_points(spark, sf_dir)
+    pts = as_double(_points(spark, sf_dir))
     # depth DERIVED from density (choose_knn_depth): target ~30·k points per
     # cell, so the radius-1 ring (9 cells) carries >> k candidates and bounds
     # the k-th distance tightly while the ring join touches ~0.2% of the
     # table per query. Reproduces the hand-tuned depth 6 at
-    # sf0.1 (150 pts/cell) and self-tunes at other scales — the count is
-    # one aggregate over the cached index relation.
+    # sf0.1 (150 pts/cell) and self-tunes at other scales.
     depth = K.choose_knn_depth(pts.count(), k=5)
     res = K.knn_cells_exact(
         as_double(_queries(spark, sf_dir, limit=10)), pts, k=5, depth=depth, radius=1

@@ -283,11 +283,20 @@ def _axis_bin_col(c, depth: int, lo: float, hi: float):
     The input is quantized to float32 FIRST (cast float → double) so this JVM
     path shares the Arrow kernel's float32 input semantics: a double within
     half a float32 ULP of a level boundary must round ONTO the boundary (and
-    go left) exactly as the kernel's np.float32 cast does."""
+    go left) exactly as the kernel's np.float32 cast does.
+
+    Total on every double, as ``encode_cell_ids`` is: the scaled value is
+    clamped into [0, 2^d] in double before ``ceil`` (whose long result
+    would overflow on ±inf), and NaN maps to 0 — numpy's comparisons with
+    NaN are false, so the kernel sends it left/bottom. So NaN bins to 0 and
+    ±inf or any out-of-domain value to the edge bin. The clamp sits after
+    the scaling, not on the input, to keep the expression small: the deep
+    encode's nested descent branches copy the bins many times."""
     n = 1 << depth
     cq = c.cast("float").cast("double")
     scaled = (cq - F.lit(float(lo))) * F.lit(float(n)) / F.lit(float(hi - lo))
-    return F.least(F.greatest(F.ceil(scaled) - F.lit(1), F.lit(0)), F.lit(n - 1))
+    inside = F.least(F.greatest(F.nanvl(scaled, F.lit(0.0)), F.lit(0.0)), F.lit(float(n)))
+    return F.greatest(F.ceil(inside) - F.lit(1), F.lit(0))
 
 
 def cell_id_col_jvm(xcol, ycol, depth: int, domain=DOMAIN):
@@ -331,8 +340,8 @@ def cell_id_col_jvm_deep(xcol, ycol, depth: int, domain=DOMAIN):
     x2 = ((col + 1).cast("double") * F.lit(step_x) + F.lit(float(domain[0]))).cast("float")
     y1 = (row.cast("double") * F.lit(step_y) + F.lit(float(domain[1]))).cast("float")
     y2 = ((row + 1).cast("double") * F.lit(step_y) + F.lit(float(domain[1]))).cast("float")
-    xf = xcol.cast("float")
-    yf = ycol.cast("float")
+    xf = F.nanvl(xcol.cast("float"), _f32(domain[0]))
+    yf = F.nanvl(ycol.cast("float"), _f32(domain[1]))
     half = _f32(0.5)
     for _ in range(depth - base):
         mx = (x1 + x2) * half

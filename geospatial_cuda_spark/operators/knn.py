@@ -138,7 +138,7 @@ def choose_knn_depth(
 
 def knn_cells_exact(
     queries: DataFrame,
-    points_with_cell: DataFrame,
+    points: DataFrame,
     k: int,
     depth: int,
     radius: int = 1,
@@ -149,14 +149,16 @@ def knn_cells_exact(
     lazy plan: equal to ``knn_bruteforce`` row for row (same float64
     distance, same pid tie-break) without scoring the N×Q product.
 
-    Both passes are ``distance_join``'s grid blocking join
-    (``search._box_join``) at ``d = min(depth, _EXACT_JVM_DEPTH)``.
+    Both passes are the engine's grid blocking join (``search._box_join``)
+    at ``d = min(depth, _EXACT_JVM_DEPTH)``, over the ``x``/``y`` columns
+    of ``points``; no cell id is read.
 
     1. Bound pass: each query's radius-``radius`` ring of bins, clamped to
        the grid, is broadcast-joined to the points. The k-th smallest
        ``dist2`` among the ring's points bounds the query's true k-th
        neighbour distance from above, because any k real points do. With
-       fewer than k ring points the bound is +∞.
+       fewer than k ring points at a non-NaN distance (a NaN coordinate's
+       distance is NaN) the bound is +∞.
     2. Exact pass: each query's box q ± (√bound + pad) is broadcast-joined
        to the points (an unbounded box is the whole grid). The rows with
        ``dist2 ≤ bound`` hold the true top-k and every point tied with the
@@ -173,28 +175,29 @@ def knn_cells_exact(
     def build() -> tuple[Column, ...]:
         d2 = S._dist2("x", "y")
         ring = F.array_sort(F.collect_list("_d2"))
-        bound = F.coalesce(F.try_element_at(ring, F.lit(k)), F.lit(float("inf")))
+        inf = F.lit(float("inf"))
+        bound = F.nanvl(F.coalesce(F.try_element_at(ring, F.lit(k)), inf), inf)
         w = Window.partitionBy(qid).orderBy(d2.asc(), F.col(pid).asc())
         return d2, bound, F.sqrt(bound) + F.lit(S._PAD), F.row_number().over(w)
 
     d2, bound, half, rank = C.cached_column(("knn_cells_exact", k, qid, pid), build)
-    q = queries.select(
+    q = S._with_square(queries.select(
         F.col(qid),
         F.col("x").cast("double").alias("_qx"),
         F.col("y").cast("double").alias("_qy"),
         F.lit(float(ring_half)).alias("_half"),
-    )
+    ))
     # one null-distance row per query keeps a query whose ring holds no
     # point in the aggregate (an outer join could not broadcast the ring)
     bounds = (
-        S._box_join(points_with_cell, q, [qid, "_qx", "_qy"], d, DOMAIN)
+        S._box_join(points, q, [qid, "_qx", "_qy"], d, DOMAIN)
         .select(qid, "_qx", "_qy", d2.alias("_d2"))
         .unionByName(q.select(qid, "_qx", "_qy", F.lit(None).cast("double").alias("_d2")))
         .groupBy(qid, "_qx", "_qy")
         .agg(bound.alias("_bound"), half.alias("_half"))
     )
     return (
-        S._box_join(points_with_cell, bounds, [qid, "_qx", "_qy", "_bound"], d, DOMAIN)
+        S._box_join(points, S._with_square(bounds), [qid, "_qx", "_qy", "_bound"], d, DOMAIN)
         .where(d2 <= F.col("_bound"))
         .select(qid, pid, "x", "y", d2.alias("dist2"), rank.alias("rank"))
         .where(F.col("rank") <= k)

@@ -4,10 +4,10 @@ only axis-aligned rect containment, cuda/kernels.cu:152-155).
 One operator, ``point_in_polygons_join``, against a polygon RELATION
 ``(poly_id, xs, ys)``, run entirely in the JVM:
 
-1. a grid-blocking equi-join: each polygon's bbox explodes to the cells of
-   a ``2^block_depth`` grid it overlaps, each point hashes to its one cell,
-   and the join on the cell pairs them (the planner broadcasts the small
-   exploded polygon side; a large polygon relation keeps a shuffle join).
+1. the engine's grid blocking join (``search._box_join``, shared with
+   ``distance_join`` and kNN): each polygon's bbox explodes to the bins of
+   a ``2^block_depth`` grid it overlaps, each point keys to its one bin,
+   and the broadcast exploded polygon side meets the points on the key.
    An exact bbox prune follows;
 2. a boundary-inclusive ray cast over the polygon's edge array, built once
    per polygon: ``aggregate`` sums the signed crossings of a +x ray and
@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType
 
 from ..functions.cells import cached_column
+from .search import _box_join
 
 
 def choose_block_depth(
@@ -90,16 +91,21 @@ def _inside(rule: str) -> Column:
     """Is the point (``_px``, ``_py``) inside or on the polygon whose edges
     are ``_e``, under ``rule``? The arithmetic is ``pip_mask_rings``': the
     crossing test, the intersection x1 + (py - y1)·dx/dy and the exact
-    on-edge test, operation for operation."""
+    on-edge test, operation for operation. ``px < xint`` is written
+    ``px - xint < 0``, equal to numpy's comparison on every pair of
+    doubles, NaN included."""
 
     def build() -> Column:
         px, py = F.col("_px"), F.col("_py")
 
         def crossing(acc: Column, e: Column) -> Column:
             # ``crosses`` implies dy != 0, and the AND short-circuits, so the
-            # division never meets a zero divisor (ANSI raises on one)
+            # division never meets a zero divisor (ANSI raises on one). An
+            # intersection that overflows to NaN must not count: Spark orders
+            # NaN above every double, so ``px < NaN`` would hold, but
+            # ``px - NaN < 0`` does not, as numpy's ``px < NaN`` does not
             crosses = (e.y1 > py) != (e.y2 > py)
-            left = px < e.x1 + (py - e.y1) * e.dx / e.dy
+            left = px - (e.x1 + (py - e.y1) * e.dx / e.dy) < 0
             return acc + F.when(crosses & left, e.up).otherwise(0)
 
         def on_edge(e: Column) -> Column:
@@ -142,17 +148,16 @@ def point_in_polygons_join(
     against explode width (small cells → more cells per bbox); pass None
     to DERIVE it from the polygon size distribution (``choose_block_depth``
     targets cell edge ≈ median bbox edge). Results are depth-independent;
-    only cost moves. Coordinates are clamped into the grid in double before
-    the integer cast, so NaN, ±inf and out-of-domain values bin to an edge
-    cell and never overflow it."""
+    only cost moves. The grid spans [0, ``extent``]²; NaN, ±inf and
+    out-of-domain coordinates bin to an edge of it (``cells._axis_bin_col``)
+    and never overflow a cast."""
     if rule not in ("evenodd", "nonzero"):
         raise ValueError(f"unknown fill rule {rule!r} (evenodd|nonzero)")
     # fail fast on column collisions: a points relation already carrying the
-    # output column or an internal working name would otherwise yield
-    # ambiguous or silently overwritten columns
-    reserved = {poly_id, "_cx", "_cy", "_pid2", "_e", "_px", "_py",
-                "_xmin", "_xmax", "_ymin", "_ymax"}
-    clash = sorted(reserved & set(points.columns))
+    # output column or a working column of the points side would otherwise
+    # yield ambiguous or silently overwritten columns (``_box_join`` checks
+    # the polygon side's)
+    clash = sorted({poly_id, "_px", "_py"} & set(points.columns))
     if clash:
         raise ValueError(
             f"point_in_polygons_join: points relation already has column(s) "
@@ -167,37 +172,27 @@ def point_in_polygons_join(
             F.col(poly_id), flat_xs.alias(xs), flat_ys.alias(ys)
         ) if nested else polygons
         block_depth = choose_block_depth(flat, extent, xs, ys)
-    n = 1 << block_depth
-    step = float(extent) / n
-
-    def _cell(c):
-        b = F.least(F.lit(n - 1.0), F.greatest(F.lit(0.0), c / F.lit(step)))
-        return F.floor(b).cast("int")
-
-    p = polygons.select(
+    boxes = polygons.select(
         F.col(poly_id).alias("_pid2"),
         _edges(xs, ys, nested).alias("_e"),
-        F.array_min(flat_xs).alias("_xmin"),
-        F.array_max(flat_xs).alias("_xmax"),
-        F.array_min(flat_ys).alias("_ymin"),
-        F.array_max(flat_ys).alias("_ymax"),
-    )
-    pcells = (
-        p.withColumn("_cx", F.explode(F.sequence(_cell(F.col("_xmin")), _cell(F.col("_xmax")))))
-        .withColumn("_cy", F.explode(F.sequence(_cell(F.col("_ymin")), _cell(F.col("_ymax")))))
+        F.array_min(flat_xs).alias("_x1"),
+        F.array_max(flat_xs).alias("_x2"),
+        F.array_min(flat_ys).alias("_y1"),
+        F.array_max(flat_ys).alias("_y2"),
     )
     pt_cols = list(points.columns)
-    px, py = F.col(x).cast("double"), F.col(y).cast("double")
     pts = points.select(
-        "*", px.alias("_px"), py.alias("_py"), _cell(px).alias("_cx"), _cell(py).alias("_cy")
+        "*", F.col(x).cast("double").alias("_px"), F.col(y).cast("double").alias("_py")
     )
+    keep = ["_pid2", "_e", "_x1", "_x2", "_y1", "_y2"]
+    domain = (0.0, 0.0, float(extent), float(extent))
     return (
-        pts.join(pcells, on=["_cx", "_cy"])
+        _box_join(pts, boxes, keep, block_depth, domain, "_px", "_py")
         .where(
-            (F.col("_px") >= F.col("_xmin"))
-            & (F.col("_px") <= F.col("_xmax"))
-            & (F.col("_py") >= F.col("_ymin"))
-            & (F.col("_py") <= F.col("_ymax"))
+            (F.col("_px") >= F.col("_x1"))
+            & (F.col("_px") <= F.col("_x2"))
+            & (F.col("_py") >= F.col("_y1"))
+            & (F.col("_py") <= F.col("_y2"))
         )
         .where(_inside(rule))
         .select(*pt_cols, F.col("_pid2").alias(poly_id))

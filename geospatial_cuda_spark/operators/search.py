@@ -22,6 +22,13 @@ Both paths left-join (a query without a hit survives) and end in one
 ``groupBy(qid)`` that takes the max and carries each query row through: no
 dedup shuffle and no join back. The result keeps the queries' columns and
 row multiplicity; rows sharing a qid share its max.
+
+The module also holds the engine's one grid blocking join, ``_box_join``:
+each point keys to its uniform-grid bin (``cells._axis_bin_col``, total on
+every double), each box of a small relation explodes to the bins it
+overlaps, and the broadcast boxes meet the points on the key. The radius
+join (``distance_join``), exact kNN (``knn.knn_cells_exact``) and
+point-in-polygon (``pip.point_in_polygons_join``) all prune through it.
 """
 
 from __future__ import annotations
@@ -144,45 +151,56 @@ def _box_join(
     domain,
     x: str = "x",
     y: str = "y",
-    broadcast: bool = True,
 ) -> DataFrame:
-    """The grid blocking join of ``distance_join`` and ``knn_cells_exact``:
-    every point beside the ``keep`` columns of each box
-    [_qx ± _half] × [_qy ± _half] (double columns of ``boxes``) that
-    overlaps its grid bin at ``depth``.
+    """The engine's one grid blocking join, shared by ``distance_join``,
+    ``knn.knn_cells_exact`` and ``pip.point_in_polygons_join``: every point
+    beside the ``keep`` columns of each box [_x1, _x2] × [_y1, _y2] (double
+    edge columns of ``boxes``) that overlaps its grid bin at ``depth``.
 
     A point's key is its (col, row) bin packed into a long, col·2^depth +
     row. Not a quadkey: blocking keys never leave the operator, so a 2-ceil
     pack replaces the per-level interleave (pure codegen either way). Each
     box explodes to the keys of the bin rectangle its edges fall in,
-    through the same binning function. Binning is monotone (float32
-    rounding and ceil both are), so every point inside a box meets it, once.
-    Each edge is clamped into the domain before it is binned, which changes
-    no bin and keeps an unbounded ``_half`` away from the float and long
-    casts. With ``broadcast`` the exploded boxes are the broadcast side and
-    the points never shuffle."""
+    through the same binning, ``cells._axis_bin_col``. Binning is monotone
+    (float32 rounding and ceil both are) and total (NaN, ±inf and
+    out-of-domain values bin to an edge), so every point inside a box meets
+    it, once, and an unbounded edge simply reaches the grid's edge. The
+    exploded boxes are the broadcast side and the points never shuffle.
+    A points column named ``_qkey`` or like a ``keep`` column raises
+    ``ValueError``."""
+    clash = sorted(({"_qkey"} | set(keep)) & set(points.columns))
+    if clash:
+        raise ValueError(
+            f"points relation carries reserved column name(s) {clash} "
+            "(the operator's output/internal working set); rename them first"
+        )
 
     def build() -> tuple[Column, Column]:
-        def bins(v: Column, lo: float, hi: float) -> Column:
-            return C._axis_bin_col(v, depth, lo, hi)
-
-        def edge(v: Column, lo: float, hi: float) -> Column:
-            return bins(F.least(F.greatest(v, F.lit(lo)), F.lit(hi)), lo, hi)
+        def bins(v: str, lo: float, hi: float) -> Column:
+            return C._axis_bin_col(F.col(v), depth, lo, hi)
 
         xlo, ylo, xhi, yhi = (float(v) for v in domain)
-        qx, qy, h = F.col("_qx"), F.col("_qy"), F.col("_half")
         n = 1 << depth
-        pkey = bins(F.col(x), xlo, xhi) * n + bins(F.col(y), ylo, yhi)
-        rlo, rhi = edge(qy - h, ylo, yhi), edge(qy + h, ylo, yhi)
-        cols = F.sequence(edge(qx - h, xlo, xhi), edge(qx + h, xlo, xhi))
+        pkey = bins(x, xlo, xhi) * n + bins(y, ylo, yhi)
+        rlo, rhi = bins("_y1", ylo, yhi), bins("_y2", ylo, yhi)
+        cols = F.sequence(bins("_x1", xlo, xhi), bins("_x2", xlo, xhi))
         keys = F.transform(cols, lambda c: F.sequence(c * n + rlo, c * n + rhi))
         return pkey, F.explode(F.flatten(keys))
 
     pkey, qkeys = C.cached_column(("box_join", x, y, depth, tuple(domain)), build)
-    cand = boxes.select(*keep, qkeys.alias("_qkey"))
-    if broadcast:
-        cand = F.broadcast(cand)
+    cand = F.broadcast(boxes.select(*keep, qkeys.alias("_qkey")))
     return points.join(cand, pkey == F.col("_qkey"))
+
+
+def _with_square(boxes: DataFrame) -> DataFrame:
+    """``boxes`` plus ``_box_join``'s edge columns for the square
+    (``_qx``, ``_qy``) ± ``_half``."""
+
+    def build() -> dict[str, Column]:
+        qx, qy, h = F.col("_qx"), F.col("_qy"), F.col("_half")
+        return {"_x1": qx - h, "_x2": qx + h, "_y1": qy - h, "_y2": qy + h}
+
+    return boxes.withColumns(C.cached_column(("square",), build))
 
 
 def _dist2(x: str, y: str) -> Column:
@@ -206,7 +224,6 @@ def distance_join(
     y: str = "y",
     depth: int | None = None,
     domain=DOMAIN,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Radius join (the ST_DWithin analogue): every (query, point) pair with
     Euclidean distance ≤ ``radius`` (inclusive), plus the exact squared
@@ -219,37 +236,35 @@ def distance_join(
     Physical plan, chosen for the 100-TB shape (huge points, bounded queries):
 
     1. the grid blocking join (``_box_join``): one key per point, and each
-       query's radius-r bbox, padded by 1e-6 per side, exploded to the bins
-       it overlaps. The pad absorbs the one residual double rounding of
+       query's radius-r square, padded by 1e-6 per side, exploded to the
+       bins it overlaps. The pad absorbs the one residual double rounding of
        (qx ± r) for non-lattice coordinates; on the integer-lattice data
        model the endpoints are exact and the pad is inert (bins are ≥
-       ext/2^10 ≈ 976 wide). With a bounded query side (the default) the
-       rectangle relation broadcasts, so the points table NEVER shuffles —
-       one map-side join stage at any scale. For huge query sides pass
-       ``broadcast_queries=False`` and both sides shuffle on the key.
+       ext/2^10 ≈ 976 wide). The exploded squares are the broadcast side,
+       so the points table NEVER shuffles — one map-side join stage at any
+       scale.
     2. exact distance filter in codegen: dist2 ≤ r² on double arithmetic —
-       integer-exact for lattice coords (|coord| < 2^26).
+       integer-exact for lattice coords (|coord| < 2^26). A point at NaN or
+       ±inf bins to a grid edge and fails this filter.
 
     Each matching pair appears EXACTLY once: a point has one key and the
     rectangle's keys are distinct — no post-join dedup.
     """
     if depth is None:
         depth = choose_distance_depth(radius, domain)
-    reserved = {qid, "_qx", "_qy", "_qkey", "dist2"}
-    clash = sorted(reserved & set(points.columns))
-    if clash:
+    if "dist2" in points.columns:
         raise ValueError(
-            f"points relation carries reserved column name(s) {clash} "
-            "(the operator's output/internal working set); rename them first"
+            "points relation carries the reserved output column name 'dist2'; "
+            "rename it first"
         )
-    boxes = queries.select(
+    boxes = _with_square(queries.select(
         F.col(qid),
         F.col(x).cast("double").alias("_qx"),
         F.col(y).cast("double").alias("_qy"),
         F.lit(float(radius) + _PAD).alias("_half"),
-    )
+    ))
     return (
-        _box_join(points, boxes, [qid, "_qx", "_qy"], depth, domain, x, y, broadcast_queries)
+        _box_join(points, boxes, [qid, "_qx", "_qy"], depth, domain, x, y)
         .withColumn("dist2", _dist2(x, y))
         .where(F.col("dist2") <= F.lit(float(radius) * float(radius)))
         .drop("_qkey", "_qx", "_qy")

@@ -79,7 +79,7 @@ def slice_tiles(images_with_geotag: DataFrame, zoom: int) -> DataFrame:
     cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "x", "y"]
     src = images_with_geotag.select(*cols)
 
-    # JVM twin of the kernel's footprint test below: float64 in, same floor.
+    # footprint test in float64, the operations the kernel's cuts use
     xd = F.col("x").cast("double")
     yd = F.col("y").cast("double")
     jtx0 = F.floor(xd / F.lit(tile_size))
@@ -125,41 +125,17 @@ def slice_tiles(images_with_geotag: DataFrame, zoom: int) -> DataFrame:
                     f"codec(s) {sorted(bad)} not available in this container "
                     "(see functions.images.decode_image)"
                 )
+            # every row here straddles a tile edge: the JVM ``one_tile``
+            # filter, in the same float64 operations, kept the rest
             x = b["x"].to_numpy(np.float64)
             y = b["y"].to_numpy(np.float64)
             w = b["w"].to_numpy(np.int64)
             h = b["h"].to_numpy(np.int64)
-            tx0 = np.floor(x / tile_size).astype(np.int64)
-            tx1 = np.floor((x + w - 1) / tile_size).astype(np.int64)
-            ty0 = np.floor(y / tile_size).astype(np.int64)
-            ty1 = np.floor((y + h - 1) / tile_size).astype(np.int64)
-            fast = (tx0 == tx1) & (ty0 == ty1)
-            parts: list[pd.DataFrame] = []
-            if fast.any():
-                # Defensive twin of the JVM pass-through (reached only if a
-                # caller feeds this kernel directly, without the JVM filter).
-                fi = np.flatnonzero(fast)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": b["image_id"].to_numpy()[fi],
-                            "tile_x": np.clip(tx0[fi], 0, n - 1).astype(np.int32),
-                            "tile_y": (n - 1 - np.clip(ty0[fi], 0, n - 1)).astype(np.int32),
-                            "zoom": np.full(fi.size, zoom, np.int32),
-                            "px0": np.zeros(fi.size, np.int32),
-                            "py0": np.zeros(fi.size, np.int32),
-                            "tw": w[fi].astype(np.int32),
-                            "th": h[fi].astype(np.int32),
-                            "tile_bytes": b["bytes"].to_numpy()[fi],
-                            "caption": b["caption"].to_numpy()[fi],
-                        }
-                    )
-                )
             rows: dict[str, list] = {k: [] for k in (
                 "image_id", "tile_x", "tile_y", "zoom", "px0", "py0", "tw", "th",
                 "tile_bytes", "caption",
             )}
-            for i in np.flatnonzero(~fast):
+            for i in range(len(b)):
                 img_id = b["image_id"].iat[i]
                 buf, fmt, cap = b["bytes"].iat[i], str(b["fmt"].iat[i]), b["caption"].iat[i]
                 px = decode_image(buf, int(w[i]), int(h[i]), fmt)  # (h, w, 3), row 0 = bottom
@@ -176,9 +152,7 @@ def slice_tiles(images_with_geotag: DataFrame, zoom: int) -> DataFrame:
                         rows["th"].append(ch)
                         rows["tile_bytes"].append(encode_image(sl.ravel(), fmt))
                         rows["caption"].append(cap)
-            if any(rows["image_id"]):
-                parts.append(pd.DataFrame(rows))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(rows)
+            yield pd.DataFrame(rows)
 
     slow_df = src.where(~one_tile).mapInPandas(gen, TILE_SLICE_SCHEMA)
     return fast_df.unionByName(slow_df)

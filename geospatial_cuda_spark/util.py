@@ -25,10 +25,6 @@ def splitmix64(z: np.ndarray) -> np.ndarray:
     return z
 
 
-def splitmix64_scalar(i: int) -> int:
-    return int(splitmix64(np.array([i], dtype=np.uint64))[0])
-
-
 def round_half_away(x: np.ndarray, decimals: int = 6) -> np.ndarray:
     """Round half AWAY from zero on the BINARY double value — DuckDB
     ``round()`` semantics, which is what the oracle gate compares against.

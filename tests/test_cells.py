@@ -34,6 +34,13 @@ def _oracle_leaf_path_ids(x, y, depth):
     return np.array(out, dtype=np.int64)
 
 
+# NaN, ±inf, ±1e300, out-of-domain and domain-edge values: every (x, y)
+# pair of them must bin like the float32 kernel, which sends NaN left/bottom
+_EDGE_VALUES = np.array([np.nan, np.inf, -np.inf, 1e300, -1e300, -5.0, 2e6, 0.0, 1e6, 5.0])
+_EDGE_X = np.repeat(_EDGE_VALUES, _EDGE_VALUES.size)
+_EDGE_Y = np.tile(_EDGE_VALUES, _EDGE_VALUES.size)
+
+
 def test_encode_matches_digit_descent(small_points):
     x, y = small_points
     for depth in (1, 3, 7, 12, 18):
@@ -112,8 +119,8 @@ def test_jvm_expr_matches_float32_kernel(spark, small_points):
     """The pure-Column (codegen) encode — the hot path for depth ≤ 10 —
     agrees with the float32 kernel on adversarial inputs: exact level
     boundaries at every depth, their ±1-ULP float32 neighbors, the edge pack,
-    and random integer AND non-integer coordinates."""
-    import pandas as pd
+    and random integer AND non-integer coordinates, plus every pair of
+    non-finite, huge and out-of-domain values (1e300 is +inf in float32)."""
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(7)
@@ -128,8 +135,12 @@ def test_jvm_expr_matches_float32_kernel(spark, small_points):
     x0, y0 = small_points
     xs = np.clip(np.concatenate(vals + [x0]), 0, np.float32(999999.94))
     ys = np.clip(np.concatenate([v[::-1] for v in vals] + [y0]), 0, np.float32(999999.94))
-    df = spark.createDataFrame(pd.DataFrame({"x": xs, "y": ys}))
-    for depth in (1, 2, 5, 8, 10):
+    with np.errstate(over="ignore"):
+        xs = np.concatenate([xs, _EDGE_X.astype(np.float32)])
+        ys = np.concatenate([ys, _EDGE_Y.astype(np.float32)])
+    # rows, not pandas: Arrow conversion would turn NaN into null
+    df = spark.createDataFrame(list(zip(xs.tolist(), ys.tolist())), "x float, y float")
+    for depth in range(1, 11):
         got = (
             df.select(C.cell_id_col_jvm(F.col("x"), F.col("y"), depth).alias("c"))
             .toPandas()["c"]
@@ -155,8 +166,10 @@ def test_jvm_parity_on_raw_double_boundary_neighborhood(spark, small_points):
     paths quantize to float32 FIRST (functions/cells.py _axis_bin_col
     ``cast('float').cast('double')``); an implementation comparing the raw
     double against the boundary would bin these inputs the other way, so this
-    pins the quantize-first fix with inputs that reach the cast itself."""
-    import pandas as pd
+    pins the quantize-first fix with inputs that reach the cast itself.
+    Every pair of NaN, ±inf, ±1e300, out-of-domain and domain-edge values
+    rides along: the JVM binning clamps in double before the float cast,
+    so none of them overflows ceil's long (ANSI would raise)."""
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(23)
@@ -174,15 +187,18 @@ def test_jvm_parity_on_raw_double_boundary_neighborhood(spark, small_points):
         0.0,
         999999.9,
     )
-    df = spark.createDataFrame(pd.DataFrame({"x": xs, "y": ys}))  # DOUBLE cols
+    xs, ys = np.concatenate([xs, _EDGE_X]), np.concatenate([ys, _EDGE_Y])
+    # rows, not pandas: Arrow conversion would turn NaN into null
+    df = spark.createDataFrame(list(zip(xs.tolist(), ys.tolist())), "x double, y double")
     assert dict(df.dtypes) == {"x": "double", "y": "double"}
-    for depth in (1, 4, 8, 10):
+    for depth in range(1, 11):
         got = (
             df.select(C.cell_id_col_jvm(F.col("x"), F.col("y"), depth).alias("c"))
             .toPandas()["c"]
             .to_numpy()
         )
-        want = C.encode_cell_ids(xs, ys, depth)  # kernel: np.float32 cast
+        with np.errstate(over="ignore"):
+            want = C.encode_cell_ids(xs, ys, depth)  # kernel: np.float32 cast
         assert np.array_equal(got, want), f"depth={depth}"
     for depth in (11, 12, 13):
         got = (
@@ -190,7 +206,8 @@ def test_jvm_parity_on_raw_double_boundary_neighborhood(spark, small_points):
             .toPandas()["c"]
             .to_numpy()
         )
-        want = C.encode_cell_ids(xs, ys, depth)
+        with np.errstate(over="ignore"):
+            want = C.encode_cell_ids(xs, ys, depth)
         assert np.array_equal(got, want), f"hybrid depth={depth}"
 
 

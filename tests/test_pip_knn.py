@@ -152,8 +152,10 @@ def test_pip_join_matches_numpy_reference(spark, shape, rule):
 
 def test_pip_join_nonfinite_and_out_of_domain(spark):
     """Points at NaN, ±inf, null, 1e300, outside the domain and on its max
-    corner, and a polygon reaching beyond the domain: no cast overflows
-    (ANSI would raise), and the rows equal the numpy reference's."""
+    corner, a polygon reaching beyond the domain, and a triangle whose
+    vertices near ±1e308 overflow an edge intersection to NaN: no cast
+    overflows (ANSI would raise), a NaN intersection counts no crossing,
+    and the rows equal the numpy reference's."""
     from geospatial_cuda_spark.functions.geo import pip_mask_rings
 
     inf, nan = float("inf"), float("nan")
@@ -185,11 +187,24 @@ def test_pip_join_nonfinite_and_out_of_domain(spark):
         }
     assert got == want
     assert (13, 2) in got and (15, 1) in got  # the domain max corner; beyond it
+    # the triangle's lower edge has dx = +inf, and its upper-left one
+    # overflows (py - y1)·dx to inf: at (5, 0) the intersection is NaN and
+    # counts no crossing, so (5, 0) is outside and (0, 10) inside
+    tri = np.array([(-1e308, 0.0), (1e308, 10.0), (0.0, 20.0)])
+    tx, ty = np.array([5.0, 0.0]), np.array([0.0, 10.0])
+    with np.errstate(invalid="ignore", over="ignore"):
+        want_tri = pip_mask_rings(tx, ty, [tri])
+    assert want_tri.tolist() == [False, True]
+    tri_pts = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(tx, ty))],
+        "pid long, x double, y double",
+    )
+    got_tri = P.point_in_polygons_join(tri_pts, _polys_df(spark, [(3, tri)])).collect()
+    assert [r["pid"] for r in got_tri] == [1]
 
 
 @pytest.mark.parametrize(
-    "name",
-    ["poly_id", "_cx", "_cy", "_pid2", "_e", "_px", "_py", "_xmin", "_xmax", "_ymin", "_ymax"],
+    "name", ["poly_id", "_pid2", "_e", "_px", "_py", "_x1", "_x2", "_y1", "_y2", "_qkey"]
 )
 def test_pip_join_rejects_reserved_point_columns(spark, small_points_df, name):
     """A points column named like the output or a working column raises
@@ -391,15 +406,30 @@ def test_knn_cells_exact_k_above_n_and_empty_ring(spark):
 def test_knn_cells_exact_domain_edges_and_out_of_domain(spark):
     """Queries on the domain max and outside the domain, at (−5, 3) and
     (2e6, −1): their bins clamp into the grid, and the box still covers
-    every point within the bound."""
+    every point within the bound. Points at −inf, −1e300 and NaN bin to a
+    grid edge without overflowing a cast (ANSI would raise); their
+    distances are +inf or NaN, so they rank last, as in the brute force."""
     rng = np.random.default_rng(17)
     xy = rng.integers(0, 1_000_001, size=(400, 2)).astype(float)
     xy[:4] = [(1e6, 1e6), (0.0, 0.0), (1e6, 0.0), (0.0, 1e6)]
+    inf, nan = float("inf"), float("nan")
+    xy = np.concatenate([xy, [(-inf, 5.0), (-1e300, -1e300), (nan, 3.0), (4.0, nan)]])
     pts = [(i, float(a), float(b)) for i, (a, b) in enumerate(xy)]
     queries = [(0, 1e6, 1e6), (1, -5.0, 3.0), (2, 2e6, -1.0), (3, 1e6, 500_000.0),
                (4, 0.0, 0.0)]
-    for depth in (3, 6, 8):
-        _adversarial_knn(spark, pts, queries, k=5, depth=depth)
+    with np.errstate(over="ignore"):  # (-1e300)² in the numpy reference
+        for depth in (3, 6, 8):
+            _adversarial_knn(spark, pts, queries, k=5, depth=depth)
+
+
+@pytest.mark.parametrize("name", ["qid", "_qx", "_qy", "_bound", "_qkey"])
+def test_knn_cells_exact_rejects_reserved_point_columns(spark, name):
+    """A points column named like a working column of the blocking join
+    raises instead of failing analysis on an ambiguous reference."""
+    pts = spark.createDataFrame([(0, 1.0, 1.0, 1)], f"pid long, x double, y double, {name} int")
+    queries = spark.createDataFrame([(0, 1.0, 1.0)], "qid long, x double, y double")
+    with pytest.raises(ValueError, match=name):
+        K.knn_cells_exact(queries, pts, k=1, depth=4)
 
 
 def test_knn_cells_exact_breaks_distance_ties_by_pid(spark):

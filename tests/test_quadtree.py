@@ -239,6 +239,28 @@ def test_validate_cells_multi_claim_does_not_cancel_unclaimed(spark):
     assert v["n_unclaimed"] == 1, v  # B missing — not masked by A's double claim
 
 
+def test_build_and_validate_cells_on_nonfinite_points(spark):
+    """Points at ±inf, ±1e300 and NaN bin to a grid edge in the depth-12
+    ingest encode, as in the float32 kernel: the encode and the build raise
+    nothing (ANSI would on an overflowing cast), the root counts every
+    point, and validate_cells reports no violation."""
+    from geospatial_cuda_spark.functions import cells as C
+
+    inf, nan = float("inf"), float("nan")
+    rows = [(-inf, 5.0), (nan, 3.0), (123.0, 456.0), (-1e300, -1e300), (5.0, nan),
+            (inf, 2e6), (1e300, 7.0)]
+    pts = spark.createDataFrame(rows, "x double, y double")
+    got = [r["cell_id"] for r in QT.with_cell_id(pts, 12).collect()]
+    with np.errstate(over="ignore"):
+        want = C.encode_cell_ids(*(np.array(c) for c in zip(*rows)), 12)
+    assert got == want.tolist()
+    cells = QT.build_cells(pts, max_depth=12)
+    assert cells.where(F.col("cell_id") == 0).first()["count"] == len(rows)
+    v = QT.validate_cells(pts, cells, max_depth=12).first()
+    assert (v["n_points"], v["leaf_count_sum"]) == (len(rows), len(rows))
+    assert v["n_unclaimed"] == v["n_multi_claimed"] == v["n_count_mismatch"] == 0
+
+
 def test_cell_cardinality_kmv_accuracy(spark):
     """KMV sketch: the 256-minimum-values estimate of occupied-cell
     cardinality must land within the ~1/sqrt(k) band of the exact count

@@ -183,17 +183,25 @@ def _brute_pairs(qx, qy, px, py, r):
     """All (qi, pi) index pairs within inclusive Euclidean distance r."""
     dx = px[None, :].astype(np.float64) - qx[:, None].astype(np.float64)
     dy = py[None, :].astype(np.float64) - qy[:, None].astype(np.float64)
-    return np.argwhere(dx * dx + dy * dy <= float(r) * float(r))
+    with np.errstate(over="ignore", invalid="ignore"):
+        return np.argwhere(dx * dx + dy * dy <= float(r) * float(r))
 
 
 def test_distance_join_matches_numpy_brute_force(spark):
+    """Random lattice points plus points at −inf, −1e300 and NaN: those bin
+    to a grid edge without overflowing a cast (ANSI would raise) and match
+    no query, as in numpy."""
     rng = np.random.RandomState(7)
     px = rng.randint(0, 1_000_000, 400).astype(np.float64)
     py = rng.randint(0, 1_000_000, 400).astype(np.float64)
     qx = rng.randint(0, 1_000_000, 40).astype(np.float64)
     qy = rng.randint(0, 1_000_000, 40).astype(np.float64)
+    px = np.concatenate([px, [-np.inf, -1e300, np.nan, 5.0]])
+    py = np.concatenate([py, [5.0, -1e300, 5.0, np.nan]])
+    # rows, not pandas: Arrow conversion would turn NaN into null
     pts = spark.createDataFrame(
-        pd.DataFrame({"pid": np.arange(400), "x": px, "y": py})
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(px, py))],
+        "pid long, x double, y double",
     )
     qs = spark.createDataFrame(pd.DataFrame({"qid": np.arange(40), "x": qx, "y": qy}))
     for r in (50_000.0, 180_000.0):
@@ -206,6 +214,12 @@ def test_distance_join_matches_numpy_brute_force(spark):
         )
         want = _brute_pairs(qx, qy, px, py, r)
         assert np.array_equal(got, want), f"radius {r}"
+    # a query at the origin reaches the edge bin the non-finite points land in
+    q0 = spark.createDataFrame([(0, 0.0, 0.0)], "qid long, x double, y double")
+    got0 = S.distance_join(q0, pts, radius=10.0).select("pid").collect()
+    assert sorted(r["pid"] for r in got0) == sorted(
+        int(j) for _, j in _brute_pairs(np.zeros(1), np.zeros(1), px, py, 10.0)
+    )
 
 
 def test_distance_join_inclusive_boundary_and_bin_edges(spark):
@@ -235,10 +249,13 @@ def test_distance_join_inclusive_boundary_and_bin_edges(spark):
 
 
 def test_distance_join_reserved_columns_rejected(spark):
+    """A points column named like the output or a working column of the
+    blocking join raises instead of being overwritten or made ambiguous."""
     q = spark.createDataFrame(pd.DataFrame({"qid": [0], "x": [1.0], "y": [1.0]}))
-    p = spark.createDataFrame(pd.DataFrame({"dist2": [0.0], "x": [1.0], "y": [1.0]}))
-    with pytest.raises(ValueError, match="reserved"):
-        S.distance_join(q, p, radius=10.0)
+    for name in ("dist2", "qid", "_qx", "_qy", "_qkey"):
+        p = spark.createDataFrame(pd.DataFrame({name: [0.0], "x": [1.0], "y": [1.0]}))
+        with pytest.raises(ValueError, match=f"reserved.*{name}"):
+            S.distance_join(q, p, radius=10.0)
 
 
 def test_distance_join_plan_broadcasts_queries_not_points(spark):

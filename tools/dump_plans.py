@@ -65,9 +65,9 @@ AUDIT = [
     ),
     (
         "knn_cells",
-        "Exact kNN in two bounded passes of one lazy plan (no persist, no "
-        "checkpoint; the only Python eval is inside the cached depth-18 "
-        "index): every point gets one grid key in codegen; the bound pass broadcast-joins the queries' ring bins to "
+        "Exact kNN in two bounded passes of one lazy plan over the plain "
+        "double points (no persist, no checkpoint, no Python eval): every "
+        "point gets one grid key in codegen; the bound pass broadcast-joins the queries' ring bins to "
         "the points and takes the k-th ring distance per query in one "
         "HashAggregate; the exact pass broadcast-joins the bins of each "
         "query's bound box to the points, keeps dist2 <= bound and ranks "
@@ -244,12 +244,13 @@ AUDIT = [
     ),
     (
         "pip_polygon_join",
-        "Polygon-RELATION PIP: per-polygon bbox, edge array and grid-cell "
-        "explode on the polygon side, a blocking EQUI-join on the cell key "
-        "that the planner broadcasts (BroadcastHashJoin; no nested loop, no "
-        "polygon closure), then the exact bbox prune and the ray cast "
-        "(aggregate/exists over the edge array) as the join condition — no "
-        "Python node.",
+        "Polygon-RELATION PIP: per-polygon bbox, edge array and grid-bin "
+        "explode on the polygon side, the engine's one grid blocking join "
+        "(search._box_join, shared with distance_join and knn_cells) on the "
+        "packed bin key with the exploded polygons broadcast "
+        "(BroadcastHashJoin; no nested loop, no polygon closure), then the "
+        "exact bbox prune and the ray cast (aggregate/exists over the edge "
+        "array) as the join condition — no Python node.",
         ["BroadcastHashJoin", "HashAggregate", "ReadSchema"],
     ),
     (
