@@ -86,9 +86,12 @@ def knn_bruteforce(
             # (dist2, pid) tie order is then resolved on the ≤ kk-plus-ties
             # candidate subset only. Rows tied with the kth distance are all
             # included before the cut, so the kept set always contains the
-            # true top-k under the pid tie-break.
-            part = np.argpartition(d2, kk - 1, axis=0)[:kk, :]
-            thr = d2[part, np.arange(len(q_ids))[None, :]].max(axis=0)
+            # true top-k under the pid tie-break. A NaN distance is never a
+            # neighbour (as in knn_cells_exact): it ranks as +inf so it cannot
+            # make the threshold NaN, and fails the `<=` cut.
+            rank = np.where(np.isnan(d2), np.inf, d2)
+            part = np.argpartition(rank, kk - 1, axis=0)[:kk, :]
+            thr = rank[part, np.arange(len(q_ids))[None, :]].max(axis=0)
             out = {qid: [], pid: [], "x": [], "y": [], "dist2": []}
             for j in range(len(q_ids)):
                 sel = np.flatnonzero(d2[:, j] <= thr[j])

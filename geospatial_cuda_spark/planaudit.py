@@ -1,4 +1,8 @@
-"""Executed-plan introspection: runtime scan metrics for pruning proofs.
+"""Plan policy and executed-plan introspection.
+
+``plan_problems`` is the one plan-marker policy: ``tools/dump_plans.py``
+applies it to the audited plans it writes to PLANS.md, and
+``tests/test_plan_invariants.py`` applies it to every lazy contract query.
 
 The X7 claim ("clustered layout ⇒ reading one subtree touches only that
 subtree's files") is checked with the REAL executed-plan metrics — Spark's
@@ -11,6 +15,34 @@ applying partition pruning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+# plan-text substrings that must never appear, and their meaning
+FORBIDDEN = [
+    ("BatchEvalPython", "row-at-a-time Python UDF"),
+    ("CartesianProduct", "unintentional cartesian product"),
+]
+# queries allowed a BroadcastNestedLoopJoin: the intentional broadcast
+# range/θ-joins and the brute-force ANN scoring product, plus plans whose
+# nested loop is over trivially bounded sides by construction —
+# ngram_jaccard_topk's bounded (<80 docs) all-pairs slice, and single-row
+# aggregates cross-combined into one result row (validate_cells,
+# cell_cardinality_kmv)
+BNLJ_ALLOWED = {
+    "quadrant_search_broadcast",
+    "cells_bbox_join",
+    "ann_topk",
+    "ngram_jaccard_topk",
+    "validate_cells",
+    "cell_cardinality_kmv",
+}
+
+
+def plan_problems(name: str, plan: str) -> list[str]:
+    """Policy violations in the ``explain`` text ``plan`` of query ``name``."""
+    problems = [f"{name}: {why} ({marker})" for marker, why in FORBIDDEN if marker in plan]
+    if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_ALLOWED:
+        problems.append(f"{name}: unexpected BroadcastNestedLoopJoin")
+    return problems
 
 
 def plan_nodes(df: DataFrame) -> list:

@@ -89,6 +89,10 @@ def replay(spark, points, script, max_depth, domain, log=print):
                 new_counts, cells = M.refresh_cells(
                     counts, delta, max_depth=max_depth, domain=domain
                 )
+                # the next mutation merges into these counts: cache them
+                # before their parent is released
+                new_counts = new_counts.persist()
+                new_counts.count()
                 points.unpersist()
                 counts.unpersist()
                 points, counts = new_points, new_counts
@@ -104,6 +108,10 @@ def replay(spark, points, script, max_depth, domain, log=print):
                 new_counts, cells = M.refresh_cells(
                     counts, delta, max_depth=max_depth, domain=domain
                 )
+                # the next mutation merges into these counts: cache them
+                # before their parent is released
+                new_counts = new_counts.persist()
+                new_counts.count()
                 points.unpersist()
                 counts.unpersist()
                 points, counts = new_points, new_counts

@@ -78,11 +78,10 @@ def test_insert_triggers_split_and_delete_recoarsens(spark):
 
 def test_mutation_query_releases_caches(spark):
     """VERDICT r5 item 3: the mutation_cells contract query must not leak
-    refresh_cells' internal counts persist for the session lifetime — the
-    same no-persisted-RDD discipline test_dedup_text pins for the dedup
-    pipelines. The query materializes via an eager localCheckpoint and
-    unpersists the graft before returning; checkpoint blocks are
-    ContextCleaner-reclaimed once the frame drops."""
+    persisted relations for the session lifetime — the same
+    no-persisted-RDD discipline test_dedup_text pins for the dedup
+    pipelines. The query is lazy and neither it nor refresh_cells persists
+    or checkpoints anything."""
     import gc
     import time
 
@@ -114,5 +113,5 @@ def test_mutation_query_releases_caches(spark):
         del out
         counts.append(settled_count(counts[0] + 1 if counts else None))
     # the r5 leak grew by exactly one persisted relation PER RUN; steady
-    # state must not accumulate (one in-flight checkpoint's worth of slack)
+    # state must not accumulate (one relation's worth of slack)
     assert counts[-1] <= counts[0] + 1, counts

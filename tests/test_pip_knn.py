@@ -290,11 +290,13 @@ def _ring_kinds(qx, qy, px, py, k, depth=6, radius=1):
 
 
 def _brute_rows(qid, qx, qy, pid, px, py, k):
-    """(qid, rank, pid, dist2) rows of the exact top-k, ties broken by pid."""
+    """(qid, rank, pid, dist2) rows of the exact top-k, ties broken by pid.
+    A NaN distance is never a neighbour; ±inf distances rank."""
     rows = []
     for q, x, y in zip(qid, qx, qy):
         d2 = (px - x) ** 2 + (py - y) ** 2
-        for r, j in enumerate(np.lexsort((pid, d2))[:k]):
+        near = np.flatnonzero(~np.isnan(d2))
+        for r, j in enumerate(near[np.lexsort((pid[near], d2[near]))][:k]):
             rows.append((int(q), r + 1, int(pid[j]), float(d2[j])))
     return rows
 
@@ -381,8 +383,10 @@ def test_knn_cells_exact_10k_queries_no_driver_state(spark, small_points, small_
     pts.unpersist()
 
 
-def _adversarial_knn(spark, pts_rows, q_rows, k, depth):
+def _adversarial_knn(spark, pts_rows, q_rows, k, depth, partitions=None):
     pts = spark.createDataFrame(pts_rows, "pid long, x double, y double")
+    if partitions:
+        pts = pts.coalesce(partitions)
     queries = spark.createDataFrame(q_rows, "qid long, x double, y double")
     pid, px, py = (np.array(c, dtype=t) for c, t in zip(zip(*pts_rows), (np.int64, float, float)))
     qid, qx, qy = (np.array(c, dtype=t) for c, t in zip(zip(*q_rows), (np.int64, float, float)))
@@ -407,8 +411,9 @@ def test_knn_cells_exact_domain_edges_and_out_of_domain(spark):
     """Queries on the domain max and outside the domain, at (−5, 3) and
     (2e6, −1): their bins clamp into the grid, and the box still covers
     every point within the bound. Points at −inf, −1e300 and NaN bin to a
-    grid edge without overflowing a cast (ANSI would raise); their
-    distances are +inf or NaN, so they rank last, as in the brute force."""
+    grid edge without overflowing a cast (ANSI would raise); a +inf
+    distance ranks last and a NaN distance is never a neighbour, as in the
+    brute force."""
     rng = np.random.default_rng(17)
     xy = rng.integers(0, 1_000_001, size=(400, 2)).astype(float)
     xy[:4] = [(1e6, 1e6), (0.0, 0.0), (1e6, 0.0), (0.0, 1e6)]
@@ -420,6 +425,16 @@ def test_knn_cells_exact_domain_edges_and_out_of_domain(spark):
     with np.errstate(over="ignore"):  # (-1e300)² in the numpy reference
         for depth in (3, 6, 8):
             _adversarial_knn(spark, pts, queries, k=5, depth=depth)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), None])
+def test_knn_nan_distance_is_never_a_neighbour(spark, bad):
+    """A point with a NaN or null coordinate has a NaN distance and is never
+    a neighbour. In one partition it shares the brute force's batch with
+    fewer than k finite points, where it used to make the batch's top-k
+    threshold NaN and drop the whole batch."""
+    pts = [(0, 1.0, 1.0), (1, 2.0, 2.0), (2, bad, 3.0)]
+    _adversarial_knn(spark, pts, [(0, 0.0, 0.0)], k=5, depth=4, partitions=1)
 
 
 @pytest.mark.parametrize("name", ["qid", "_qx", "_qy", "_bound", "_qkey"])

@@ -1,13 +1,15 @@
-"""CI gate for the physical-plan invariants PLANS.md documents.
+"""CI gate for the physical-plan invariants.
 
-tools/dump_plans.py audits and records the full plans at sf0.1 manually;
-this test greps the same forbidden markers on every LAZY contract query at
-sf0.001 on each pytest run, so a regression that sneaks a row-at-a-time
-Python UDF, an accidental cartesian product, or an unintended
-BroadcastNestedLoopJoin into a plan fails CI — not just the next manual
-audit. Queries that execute driver-side work at construction time
-(IVF centroid sampling, brute-force query collect) are exercised by the
-oracle gate instead and skipped here.
+The plan-marker policy lives in ``geospatial_cuda_spark.planaudit``
+(``plan_problems``). tools/dump_plans.py applies it to the audited plans
+at sf0.1 when it regenerates PLANS.md (written on demand, not tracked);
+this test applies it to every LAZY contract query at sf0.001 on each
+pytest run, so a regression that sneaks a row-at-a-time Python UDF, an
+accidental cartesian product, or an unintended BroadcastNestedLoopJoin
+into a plan fails CI — not just the next manual audit. Queries that
+execute driver-side work at construction time (IVF centroid sampling,
+brute-force query collect) are exercised by the oracle gate instead and
+skipped here.
 """
 
 from __future__ import annotations
@@ -39,23 +41,6 @@ EAGER = {
     "neardup_components",
     "corpus_select_neardup",
 }
-# the intentional broadcast range/θ-joins (see tools/dump_plans.py), plus:
-# ngram_jaccard_topk builds the bounded (<80 docs) all-pairs slice its exact-
-# Jaccard demo is defined over, and validate_cells cross-combines three
-# SINGLE-ROW aggregates into its one result row — both nested loops are over
-# trivially bounded sides by construction.
-BNLJ_ALLOWED = {
-    "quadrant_search_broadcast",
-    "cells_bbox_join",
-    "ann_topk",
-    "ngram_jaccard_topk",
-    "validate_cells",
-    "cell_cardinality_kmv",  # two single-row aggregates cross-combined
-}
-FORBIDDEN = [
-    ("BatchEvalPython", "row-at-a-time Python UDF"),
-    ("CartesianProduct", "unintentional cartesian product"),
-]
 
 
 def _plan(df) -> str:
@@ -68,16 +53,13 @@ def _plan(df) -> str:
 def test_no_forbidden_plan_nodes_in_any_lazy_query(spark):
     import __spark_entry__ as E
 
+    from geospatial_cuda_spark.planaudit import plan_problems
+
     problems = []
     for name, fn in E.queries().items():
         if name in EAGER:
             continue
-        plan = _plan(fn(spark, SF))
-        for marker, why in FORBIDDEN:
-            if marker in plan:
-                problems.append(f"{name}: {why} ({marker})")
-        if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_ALLOWED:
-            problems.append(f"{name}: unexpected BroadcastNestedLoopJoin")
+        problems += plan_problems(name, _plan(fn(spark, SF)))
     assert not problems, problems
 
 

@@ -153,3 +153,39 @@ def test_run_corpus_cli_commits_and_resumes(tmp_path):
     names = os.listdir(out2 / "_manifest")
     assert any(n.endswith(".token") for n in names)
     assert not any(n.startswith("v") and n.endswith(".json") for n in names)
+
+
+def test_run_pipeline_cli_commits_and_resumes(tmp_path):
+    """The flagship spark-submit job, run as shipped: the package zip built
+    by tools/build_pyfiles.py on --py-files, a synthetic input, one commit;
+    an identical re-run into the same --out is a resume no-op."""
+    import importlib.util
+    import json
+    import os
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "build_pyfiles", os.path.join(repo, "tools", "build_pyfiles.py")
+    )
+    build_pyfiles = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(build_pyfiles)
+    zip_path = build_pyfiles.build(str(tmp_path / "geospatial_cuda_spark.zip"))
+
+    cmd = [
+        "spark-submit", "--master", "local[2]", "--py-files", zip_path,
+        "--conf", "spark.ui.enabled=false",
+        os.path.join(repo, "jobs", "run_pipeline.py"),
+        "--synth", "500", "--out", str(tmp_path / "tiles"),
+    ]
+
+    def run() -> dict:
+        proc = subprocess.run(cmd, cwd=tmp_path, capture_output=True, text=True,
+                              check=True, timeout=600)
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    r1 = run()
+    assert r1["n_images"] == 500 and r1["n_located"] > 0
+    assert r1["snapshot"]["rows_written"] >= 500 and not r1["resumed_noop"]
+    r2 = run()
+    assert r2["resumed_noop"] and r2["n_images"] == 500

@@ -5,7 +5,8 @@
 
 The zip contains only the package sources (no tests, no caches), rooted so
 that `import geospatial_cuda_spark` works on executors when the zip is on
-the PYTHONPATH — the shape spark-submit --py-files expects.
+the PYTHONPATH — the shape spark-submit --py-files expects. The zip is a
+build output (``dist/`` is not tracked): build it before submitting.
 """
 
 from __future__ import annotations

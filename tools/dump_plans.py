@@ -4,7 +4,10 @@ The scale claims in SURVEY.md §4 are checkable: this script materializes
 `.explain(formatted)` for each headline query at sf0.1 and prefixes each plan
 with the properties it must exhibit (pushed filters, pruned read schemas,
 broadcast vs shuffle join choice, whole-stage-codegen spans, AQE nodes).
-Re-run after any operator change: `python tools/dump_plans.py`.
+Re-run after any operator change: `python tools/dump_plans.py`. PLANS.md
+is written on demand and not tracked; the plan-marker policy it applies is
+`geospatial_cuda_spark.planaudit.plan_problems`, which
+tests/test_plan_invariants.py gates on every run.
 """
 
 from __future__ import annotations
@@ -229,10 +232,8 @@ AUDIT = [
         "are anti-joins (no full rescan of the surviving points); the count "
         "delta of the touched finest cells rolls up the prefix chain and "
         "full-outer-merges into the old counts — cells-only work, partial "
-        "aggregation before every exchange. (The contract entry materializes "
-        "through an eager localCheckpoint to release its internal persist — "
-        "VERDICT r5 item 3 — so the audit uses the pre-checkpoint "
-        "composition via _custom_plan_sources.)",
+        "aggregation before every exchange. The entry is lazy and persists "
+        "nothing, so the audited plan is the whole composition.",
         ["HashAggregate", "Join"],
     ),
     (
@@ -323,20 +324,6 @@ AUDIT = [
     ),
 ]
 
-# plan-text substrings that must never appear, and their meaning
-FORBIDDEN = [
-    ("BatchEvalPython", "row-at-a-time Python UDF in the plan"),
-    ("CartesianProduct", "unintentional cartesian product"),
-]
-# queries allowed to contain BroadcastNestedLoopJoin: the two intentional
-# range joins + the brute-force ANN scoring product (broadcast by design)
-BNLJ_ALLOWED = {
-    "quadrant_search_broadcast",
-    "cells_bbox_join",
-    "ann_topk",
-    "cell_cardinality_kmv",  # two single-row aggregates cross-combined
-}
-
 HEADER = """# PLANS — physical-plan audit of the headline operators
 
 Generated by `python tools/dump_plans.py` at {sf}. Each section states the
@@ -349,8 +336,8 @@ scale-relevant properties the plan must exhibit, then the actual
   non-relational (float32 descent beyond depth 10, pixel kernels, partial
   top-k);
 - join strategy: broadcast for small dims, shuffled hash/sort-merge for
-  big-big, BroadcastNestedLoopJoin only in the two range joins that are
-  broadcast by construction;
+  big-big, BroadcastNestedLoopJoin only where `planaudit.BNLJ_ALLOWED`
+  allows it (the broadcast range joins and bounded single-row products);
 - `WholeStageCodegen` spans cover the arithmetic-heavy projections;
 - `AdaptiveSparkPlan` wraps every query (AQE re-plan + skew handling on).
 """
@@ -358,6 +345,7 @@ scale-relevant properties the plan must exhibit, then the actual
 
 def main() -> None:
     import __spark_entry__ as E
+    from geospatial_cuda_spark.planaudit import plan_problems
     from geospatial_cuda_spark.session import get_spark
 
     spark = get_spark(
@@ -370,18 +358,13 @@ def main() -> None:
     qs = E.queries()
     sections = [HEADER.format(sf=SF_DIR)]
     problems = []
-    custom = _custom_plan_sources(spark)
     for name, props, expects in AUDIT:
-        df = custom[name] if name in custom else qs[name](spark, SF_DIR)
+        df = qs[name](spark, SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        for marker, why in FORBIDDEN:
-            if marker in plan:
-                problems.append(f"{name}: {why} ({marker})")
-        if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_ALLOWED:
-            problems.append(f"{name}: unexpected BroadcastNestedLoopJoin")
+        problems += plan_problems(name, plan)
         for marker in expects:
             if marker not in plan:
                 problems.append(f"{name}: expected plan marker missing: {marker}")
@@ -398,16 +381,6 @@ def main() -> None:
     if problems:
         sys.exit(1)
     spark.stop()
-
-
-def _custom_plan_sources(spark) -> dict:
-    """Queries whose contract entry hides the interesting plan (eager
-    checkpoint), re-expressed via their building blocks for the audit."""
-    from geospatial_cuda_spark.entrypoints import _mutation_cells_lazy
-
-    # the contract entry materializes through an eager localCheckpoint (to
-    # release its internal persist); audit the pre-checkpoint composition
-    return {"mutation_cells": _mutation_cells_lazy(spark, SF_DIR)}
 
 
 def _x7_pruning_section(spark) -> str:
