@@ -139,7 +139,7 @@ def _evict_cells_cache() -> None:
     """Drop the per-dataset quadtree-index cache entries (unpersisting their
     storage) so the next quadtree_cells run pays a COLD build. Only the
     'cells' entries are evicted; any other cached index stays warm."""
-    from geospatial_cuda_spark import entrypoints as E
+    from geospatial_cuda_spark.contract import fixtures as E
 
     for key in [k for k in E._CELLS_CACHE if k[2] == "cells"]:
         E.release_index(E._CELLS_CACHE.pop(key))
@@ -152,7 +152,7 @@ def _q_ann_ivf_kmeans(spark, sf_dir):
     higher-recall probe path is measured, not just recall-gated. Not a
     contract query: the trained centroids are not SQL-replayable; the
     recall sweep in test_pip_knn.py is its correctness gate."""
-    from geospatial_cuda_spark.entrypoints import _t
+    from geospatial_cuda_spark.contract.fixtures import _t
     from geospatial_cuda_spark.operators import knn as K
     from pyspark.sql import functions as F
 

@@ -19,8 +19,15 @@ Layout
                    clustering, quadrant-search join, point-in-polygon, kNN/ANN,
                    dedup family, tile slicing, insert/delete mutations.
 - ``sources/``   — table loaders + Iceberg-style snapshot commit/resume.
-- ``plans/``     — plan introspection helpers (pushdown/codegen assertions).
 - ``streaming/`` — Structured Streaming micro-batch upsert/delete surface.
+- ``pipeline``   — the flagship images pipeline (geotag → quadtree → search →
+                   tile slicing → snapshot commit), defined once.
+- ``planaudit``  — plan-marker policy and executed-plan introspection.
+- ``contract/``  — the driver contract's oracle-gate harness: the contract
+                   queries, their TPC-H-derived fixtures and their DuckDB
+                   oracles. The engine never imports it.
+- ``entrypoints`` — the driver registry: ordered ``QUERIES``, ``ORACLES``
+                   and the flagship ``entry()``.
 """
 
 __version__ = "0.1.0"

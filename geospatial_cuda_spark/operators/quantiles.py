@@ -8,7 +8,7 @@ merge order is not engine-portable (no DuckDB-replayable oracle).
 
 `exact_quantiles` is exact and sort-free — the same two-phase
 histogram-cut discipline as the corpus budget selection
-(`entrypoints.corpus_sample`):
+(`contract.queries._budget_cut`):
 
 1. one grouped COUNT over a FIXED, bounded bin grid (bins is a constant,
    never data-dependent), partial-aggregated map-side; the ≤`bins`-row

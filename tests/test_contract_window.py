@@ -76,3 +76,19 @@ def test_driver_window_covers_critical_queries():
     # every declared query still carries an oracle — reordering must never
     # drop one
     assert set(ORACLES) == set(QUERIES)
+
+
+def test_driver_wrapper_lists_queries_in_registry_order():
+    """The driver's window reads ``__spark_entry__``, not the module dicts:
+    ``queries()`` and ``oracle_sql()`` must both list their names in
+    ``QUERIES`` order, and the oracle module must state exactly one oracle
+    per registered query."""
+    import __spark_entry__ as E
+
+    from geospatial_cuda_spark.contract.oracles import _oracle_sqls
+    from geospatial_cuda_spark.entrypoints import QUERIES
+
+    names = list(QUERIES)
+    assert list(E.queries()) == names
+    assert list(E.oracle_sql()) == names
+    assert set(_oracle_sqls()) == set(names)

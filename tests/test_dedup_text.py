@@ -335,11 +335,8 @@ def test_corpus_mix_budget_and_prefix_semantics(spark):
     selected docs form a prefix of the (quality-bin desc, doc_id) greedy
     order restricted to whole bins + a doc_id-prefix of the boundary bin
     (the histogram-cut contract shared with corpus_sample)."""
-    from geospatial_cuda_spark.entrypoints import (
-        MIX_BUDGET_PER_CLUSTER,
-        q_corpus_mix,
-        q_corpus_select,
-    )
+    from geospatial_cuda_spark.contract.fixtures import MIX_BUDGET_PER_CLUSTER
+    from geospatial_cuda_spark.contract.queries import q_corpus_mix, q_corpus_select
 
     sf = "/root/testdata/sf0.001"
     got = q_corpus_mix(spark, sf).toPandas()

@@ -32,7 +32,11 @@ ORACLE_INPUTS = {
     "empty": (np.zeros(0, np.float32), np.zeros(0, np.float32)),
     "dense": _dense_cell_points(),
     "domain_max": _domain_max_points(),
+    # few points spread over EMPTY_PARTITIONS_SLICES slices, so most
+    # partitions (and Arrow batches) hold no row
+    "empty_partitions": (np.float32([10, 500_000, 999_999]), np.float32([20, 500_000, 7])),
 }
+EMPTY_PARTITIONS_SLICES = 16
 
 
 @pytest.mark.parametrize("max_depth", [8, 12, 13, 14, 18])
@@ -43,7 +47,8 @@ def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
     (14, and 18 where the extent stop is evaluated). The JVM route's
     executed plan is the one-aggregation shape: two shuffle exchanges (the
     finest-cell histogram and the parent aggregation), no join and no
-    cached-relation scan; the empty input also gets its root row."""
+    cached-relation scan; the empty input also gets its root row, and
+    empty partitions change neither the rows nor the plan shape."""
     import pandas as pd
 
     from geospatial_cuda_spark.planaudit import plan_nodes
@@ -51,7 +56,14 @@ def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
     x, y = ORACLE_INPUTS[case] or small_points
     root = oracle.build_quadtree(x, y, max_depth=max_depth)
     want = {r["cell_id"]: r for r in oracle.cells_relation(root)}
-    pts = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}), "x float, y float")
+    if case == "empty_partitions":
+        rows = [(float(a), float(b)) for a, b in zip(x, y)]
+        pts = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, EMPTY_PARTITIONS_SLICES), "x float, y float"
+        )
+        assert pts.rdd.getNumPartitions() == EMPTY_PARTITIONS_SLICES
+    else:
+        pts = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}), "x float, y float")
     cells = QT.build_cells(pts, max_depth=max_depth)
     got = {r.cell_id: r for r in cells.collect()}
     assert set(got) == set(want)
@@ -279,7 +291,7 @@ def test_cell_cardinality_kmv_accuracy(spark):
         (F.col("id") * 1000).cast("float").alias("y"),
         F.col("id").alias("pid"),
     )
-    import geospatial_cuda_spark.entrypoints as _ep
+    import geospatial_cuda_spark.contract.fixtures as _ep
     hs = few.select(
         F.md5(
             __import__("geospatial_cuda_spark.functions.cells", fromlist=["cells"])

@@ -153,7 +153,7 @@ def test_cells_cache_lru_evicts_and_unpersists(spark, monkeypatch):
     """ADVICE r2: the per-dataset index cache must not grow (and hold
     executor storage) without bound across datasets — the LRU bound evicts
     AND unpersists the oldest entry."""
-    from geospatial_cuda_spark import entrypoints as E
+    from geospatial_cuda_spark.contract import fixtures as E
 
     E._CELLS_CACHE.clear()
     monkeypatch.setattr(E, "_CELLS_CACHE_MAX", 1)

@@ -393,7 +393,7 @@ def _x7_pruning_section(spark) -> str:
 
     from pyspark.sql import functions as F
 
-    from geospatial_cuda_spark.entrypoints import LX, LY, LPID
+    from geospatial_cuda_spark.contract.fixtures import LX, LY, LPID
     from geospatial_cuda_spark.operators import cluster as CL
     from geospatial_cuda_spark.operators.quadtree import with_cell_id
 
