@@ -1094,12 +1094,19 @@ def q_corpus_select_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sel.where(F.col("quality") >= CORPUS_QUALITY_MIN)
 
+
+_SCRATCH_ROOTS: set[str] = set()
+
+
 def _scratch_table(spark: SparkSession, sf_dir: str, name: str, **options):
     """An empty ``SnapshotTable`` (``options`` pass to its constructor)
     under ``<tmp>/<name>/``. The root is keyed by the Spark application id,
     not just the sf name: two driver processes running the suite
     concurrently on one host (bench + correctness harness) must not rmtree
-    each other's in-flight table mid-commit (ADVICE r4)."""
+    each other's in-flight table mid-commit (ADVICE r4). Each root is
+    removed when the interpreter exits, so the lazy frames a query returns
+    stay readable until then and no run leaves its tables behind."""
+    import atexit
     import os
     import shutil
     import tempfile
@@ -1112,6 +1119,9 @@ def _scratch_table(spark: SparkSession, sf_dir: str, name: str, **options):
         f"{os.path.basename(sf_dir.rstrip('/'))}-{spark.sparkContext.applicationId}",
     )
     shutil.rmtree(root, ignore_errors=True)
+    if root not in _SCRATCH_ROOTS:
+        _SCRATCH_ROOTS.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
     return SnapshotTable(root, **options)
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import DOMAIN, MAX_DEPTH, MIN_DISTANCE, MIN_POINTS
-from .quadtree import ancestor_chain_col, cells_from_counts, with_cell_id
+from .quadtree import cells_from_counts, counts_from_points
 
 
 def insert_points(points: DataFrame, new_rows: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
@@ -49,20 +49,10 @@ def counts_delta(
     max_depth: int = MAX_DEPTH,
     domain=DOMAIN,
 ) -> DataFrame:
-    """±1 rollup of a (small) mutation batch over all prefix depths."""
-    finest = (
-        with_cell_id(delta_points.select(x, y), max_depth, x, y, "cell_id", domain)
-        .groupBy("cell_id")
-        .agg((F.count(F.lit(1)) * sign).alias("count"))
-    )
-    return (
-        finest.select(
-            F.posexplode(ancestor_chain_col("cell_id", max_depth + 1)).alias("k", "cell_id"),
-            "count",
-        )
-        .select("cell_id", (F.lit(max_depth) - F.col("k")).cast("int").alias("depth"), "count")
-        .groupBy("cell_id", "depth")
-        .agg(F.sum("count").alias("count"))
+    """±1 rollup of a (small) mutation batch over all prefix depths: the
+    batch's ``counts_from_points`` with every count times ``sign``."""
+    return counts_from_points(delta_points, x, y, domain, max_depth).select(
+        "cell_id", "depth", (F.col("count") * sign).alias("count")
     )
 
 

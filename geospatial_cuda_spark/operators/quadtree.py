@@ -424,10 +424,8 @@ def validate_cells(
     the ≤ occupied-finest-cells rows semi-joins the broadcast leaf set,
     plus one cells-sized self-join — no full re-sort, no driver loops."""
     leaves = cells.where(F.col("is_leaf")).select("cell_id", "count")
-    finest = (
-        with_cell_id(points.select(x, y), max_depth, x, y, "_fid", domain)
-        .groupBy("_fid")
-        .agg(F.count(F.lit(1)).alias("_npts"))
+    finest = _finest_counts(points, x, y, max_depth, domain).withColumnRenamed(
+        "count", "_npts"
     )
     claims = (
         finest.select(

@@ -33,14 +33,20 @@ Guarantees:
   that derived the same parent race on the same version and exactly one
   wins — the loser either merges (its buckets are untouched by the winner)
   or raises ``SnapshotConflictError``; a concurrent snapshot can never be
-  silently dropped. The default ``PosixManifestStore`` renders the CAS as
-  an O_EXCL hard link; on S3/GCS/a catalog — where 100-TB tables live —
-  swap in a store backed by conditional PUT / catalog pointer CAS (the
-  exact contract is documented on ``ManifestStore``; table logic is
+  silently dropped. There is one file store, ``CasFileManifestStore``: a
+  private fsync'd ``payload-*.json`` per version plus an O_EXCL
+  ``v{N}.token`` naming it — no link or rename, so the same log runs on a
+  mount of an object store. On S3/GCS/a catalog — where 100-TB tables
+  live — a store backed by conditional PUT / catalog pointer CAS renders
+  the same contract (documented on ``ManifestStore``; table logic is
   backend-independent and race-tested against the interface);
-- a publisher crash between manifest create and CURRENT repoint is healed
-  by roll-forward: every ``v{N}.json`` on disk was completely written
-  before its atomic link, so readers adopt the newest contiguous version;
+- a publisher crash between token create and CURRENT repoint is healed
+  by roll-forward: every token names a payload that was completely
+  written before the token existed, so readers adopt the newest
+  contiguous version;
+- a damaged log — a ``_manifest/`` in the retired hard-link ``v{N}.json``
+  format included — raises ``SnapshotCorruptError``; it never reads as
+  absent, so a commit never rewrites a table it cannot read;
 - rows with a NULL bucket value FAIL the write (they would otherwise be
   silently dropped by the pending-bucket filter or land unreferenced in the
   Hive default partition);
@@ -100,14 +106,19 @@ class SnapshotConflictError(RuntimeError):
 
 class SnapshotCorruptError(RuntimeError):
     """The commit log is damaged: a published manifest lacks the ``files``
-    or ``schema`` every write records, or a CAS token names a complete
-    payload that does not exist. Neither arises from a crash at any commit
-    phase, so the table refuses to guess and an operator must repair it."""
+    or ``schema`` every write records, a CAS token names a complete
+    payload that does not exist or does not parse, or the version is
+    stored in the retired hard-link format (``v{N}.json``). None arises
+    from a crash at any commit phase, so the table refuses to guess (and
+    never reads such a log as empty) and an operator must repair it."""
 
 
 class ManifestStore:
     """Manifest I/O seam — the ONLY component that changes to host a snapshot
-    table's commit log somewhere other than a POSIX directory. SnapshotTable
+    table's commit log somewhere other than a directory. ``SnapshotTable``
+    keeps its log in the one file store, ``CasFileManifestStore``; the
+    seam exists for catalog/object-store renderings and for the in-memory
+    conditional-PUT model the race tests run against. SnapshotTable
     contains every table-logic invariant (merge vs conflict, roll-forward,
     lineage); a backend only has to provide these four primitives:
 
@@ -120,7 +131,7 @@ class ManifestStore:
       ``If-None-Match: *``; catalog rendering: Iceberg-style CAS of the
       table pointer conditioned on the parent snapshot id. Partial writes
       must never be visible (PUT is already atomic on object stores; the
-      posix impl writes a temp file and hard-links it).
+      file store fsyncs a private payload before its token exists).
     - ``read_version(version) -> dict | None``: the published manifest, or
       None if that version does not exist (GET / catalog lookup).
     - ``latest_hint() -> int``: ADVISORY newest-version pointer, 0 if
@@ -145,59 +156,12 @@ class ManifestStore:
         raise NotImplementedError
 
 
-class PosixManifestStore(ManifestStore):
-    """Default backend: ``v{N}.json`` files under ``_manifest/``. The CAS
-    token is ``os.link`` (hard-link O_EXCL semantics — fails EEXIST iff the
-    version exists, atomic on POSIX filesystems); the hint is a ``CURRENT``
-    file naming the newest version, replaced via atomic rename."""
-
-    def __init__(self, manifest_dir: str):
-        self.manifest_dir = manifest_dir
-        os.makedirs(manifest_dir, exist_ok=True)
-
-    def _version_path(self, version: int) -> str:
-        return os.path.join(self.manifest_dir, f"v{version}.json")
-
-    def try_publish(self, version: int, manifest: dict) -> bool:
-        tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        try:
-            os.link(tmp, self._version_path(version))
-        except FileExistsError:
-            return False
-        finally:
-            os.remove(tmp)
-        return True
-
-    def read_version(self, version: int) -> dict | None:
-        try:
-            with open(self._version_path(version)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def latest_hint(self) -> int:
-        # the hint is ADVISORY (see ManifestStore): a truncated or
-        # unexpected-format CURRENT (e.g. a crashed writer, a manual edit)
-        # must cost extra roll-forward probes, never a hard read failure
-        try:
-            with open(os.path.join(self.manifest_dir, "CURRENT")) as f:
-                return int(f.read().strip()[1:-5])  # "v{k}.json"
-        except (FileNotFoundError, ValueError, IndexError):
-            return 0
-
-    def set_latest_hint(self, version: int) -> None:
-        tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(f"v{version}.json")
-        os.rename(tmp, os.path.join(self.manifest_dir, "CURRENT"))
-
-
 class CasFileManifestStore(ManifestStore):
-    """Durable backend restricted to OBJECT-STORE-LEGAL primitives (VERDICT
-    r4 item 7): no ``os.link``, no atomic-rename assumptions — the protocol
-    is write-temp + a generation-token CAS modeled on S3 conditional PUT
+    """The one file store: ``SnapshotTable(path)`` keeps its commit log here,
+    under ``path/_manifest/``. Restricted to OBJECT-STORE-LEGAL primitives
+    — no hard links, no atomic-rename assumptions — so the same log runs on
+    a local disk and on a mounted object store; the protocol is write-temp
+    + a generation-token CAS modeled on S3 conditional PUT
     (``If-None-Match: *``) / GCS ``x-goog-if-generation-match: 0``.
 
     Publish protocol per version N:
@@ -226,6 +190,12 @@ class CasFileManifestStore(ManifestStore):
     there burns the version number — the next committer's CAS on it fails
     and surfaces ``SnapshotConflictError`` for manual repair, which is the
     honest rendering of this emulation's gap, never a partial manifest.
+
+    A token naming a payload that does not parse is corruption too (the
+    payload was fsync'd before the token existed). A missing token beside
+    a ``v{N}.json`` is the retired hard-link format, which wrote the
+    manifest itself there: ``read_version`` raises ``SnapshotCorruptError``
+    naming it rather than reading the table as empty.
 
     The ``CURRENT`` hint is advisory (see ManifestStore): it is written IN
     PLACE (plain truncate+write, no rename) precisely because torn reads
@@ -267,11 +237,23 @@ class CasFileManifestStore(ManifestStore):
                 with open(tpath) as f:
                     name = f.read().strip()
             except FileNotFoundError:
+                if os.path.exists(os.path.join(self.manifest_dir, f"v{version}.json")):
+                    raise SnapshotCorruptError(
+                        f"v{version} is stored as v{version}.json, the retired "
+                        "hard-link manifest format; this table must be "
+                        "migrated to v{N}.token + payload before it is read "
+                        "or written"
+                    ) from None
                 return None
             if name:
                 try:
                     with open(os.path.join(self.manifest_dir, name)) as f:
                         return json.load(f)
+                except ValueError as e:
+                    raise SnapshotCorruptError(
+                        f"v{version}.token names payload {name}, which does "
+                        f"not parse: {e}"
+                    ) from None
                 except FileNotFoundError:
                     # a COMPLETE name always points at a payload fsync'd
                     # before the token existed: its absence is corruption
@@ -370,12 +352,16 @@ class SnapshotTable:
         ``maxRecordsPerFile`` writer option). With ``sort_cols`` set this is
         also the PRUNING GRANULARITY knob: a write task's sorted run splits
         into sequential chunks, so each file covers a contiguous, narrow
-        slice of the sort key no matter how few write tasks there are."""
+        slice of the sort key no matter how few write tasks there are.
+
+        The commit log lives in ``CasFileManifestStore`` under
+        ``path/_manifest/``; ``store`` is a test seam for the in-memory
+        conditional-PUT model only."""
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.delta_dir = os.path.join(path, "deltas")
         self.manifest_dir = os.path.join(path, "_manifest")
-        self.store = store if store is not None else PosixManifestStore(self.manifest_dir)
+        self.store = store if store is not None else CasFileManifestStore(self.manifest_dir)
         self.stat_cols = list(stat_cols) if stat_cols else []
         self.sort_cols = list(sort_cols) if sort_cols else []
         self.max_records_per_file = max_records_per_file

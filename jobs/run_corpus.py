@@ -20,6 +20,12 @@ shipping job):
 4. snapshot commit bucketed by a hash of doc_id, with per-bucket lineage
    + row-count/throughput metrics.
 
+The commit log is SnapshotTable's one file store under ``<out>/_manifest/``
+(no hard links or renames, so ``--out`` may be a mounted object store);
+every reader that opens the table by path sees it. An ``--out`` in the
+retired hard-link format (``v{N}.json``) raises ``SnapshotCorruptError``
+rather than being rewritten as a new table.
+
 Resumable: re-running with the same --out continues from the last
 committed snapshot (only uncommitted buckets are written; a completed run
 is a no-op — SnapshotTable's idempotent commit). Prints ONE JSON line.
@@ -49,12 +55,6 @@ def main() -> int:
                     "4-band pigeonhole blocking is only COMPLETE below the "
                     "band count — beyond it pairs would be silently lost)")
     ap.add_argument("--buckets", type=int, default=32)
-    ap.add_argument("--store", choices=("posix", "casfile"), default="posix",
-                    help="manifest-store backend: 'posix' (hard-link CAS, "
-                    "default) or 'casfile' (object-store-legal write-temp + "
-                    "O_EXCL generation-token CAS — the conditional-PUT "
-                    "model; use it when the table root is a mounted object "
-                    "store without reliable link/rename)")
     args = ap.parse_args()
     if not 0 <= args.max_hamming < 4:
         ap.error("--max-hamming must be in [0, 3]: near_dup_simhash's "
@@ -95,14 +95,7 @@ def main() -> int:
         "bucket", F.pmod(F.col("doc_id"), F.lit(args.buckets)).cast("string")
     )
 
-    if args.store == "casfile":
-        from geospatial_cuda_spark.sources.snapshots import CasFileManifestStore
-
-        store = CasFileManifestStore(os.path.join(args.out, "_manifest"))
-    else:
-        store = None  # SnapshotTable defaults to PosixManifestStore
-    snap = SnapshotTable(args.out, store=store)
-    result = snap.commit(scored, "bucket")
+    result = SnapshotTable(args.out).commit(scored, "bucket")
     wall = time.time() - t0
     m = result["snapshot"]["metrics"] if result["snapshot"] else {}
     print(

@@ -43,8 +43,12 @@ def _imports(path: str) -> set[str]:
     return out
 
 
-def _sources() -> list[str]:
-    skip = {os.path.join(REPO, PKG, "contract"), os.path.join(REPO, PKG, "entrypoints.py")}
+HARNESS_PATHS = {os.path.join(REPO, PKG, "contract"), os.path.join(REPO, PKG, "entrypoints.py")}
+
+
+def _sources(skip: set[str] = frozenset()) -> list[str]:
+    """Every ``.py`` file of the package and of ``jobs/``, except the
+    files and directories in ``skip``."""
     out = []
     for top in (PKG, "jobs"):
         for root, dirs, files in os.walk(os.path.join(REPO, top)):
@@ -62,7 +66,7 @@ def _is_harness(name: str) -> bool:
 
 
 def test_engine_and_jobs_do_not_import_the_contract():
-    sources = _sources()
+    sources = _sources(HARNESS_PATHS)
     assert any(p.endswith(os.path.join("operators", "quadtree.py")) for p in sources)
     assert any(p.endswith(os.path.join("jobs", "run_pipeline.py")) for p in sources)
     offenders = {
@@ -82,3 +86,27 @@ def test_import_scan_resolves_relative_imports():
     got = _imports(os.path.join(REPO, PKG, "contract", "queries.py"))
     assert f"{PKG}.contract.fixtures" in got
     assert f"{PKG}.operators.dedup" in got
+
+
+def _manifest_store_names(path: str) -> set[str]:
+    """Every ``*ManifestStore`` name ``path`` imports."""
+    return {
+        n.rpartition(".")[2] for n in _imports(path) if n.endswith("ManifestStore")
+    }
+
+
+def test_only_snapshots_names_a_manifest_store():
+    """``SnapshotTable(path)`` builds the one file store itself, so no module
+    of the package other than ``sources/snapshots.py``, and no spark-submit
+    job, imports a ``*ManifestStore``: a second on-disk commit-log format
+    cannot be picked by a caller."""
+    owner = os.path.join(REPO, PKG, "sources", "snapshots.py")
+    sources = _sources()
+    assert owner in sources
+    assert any(p.endswith(os.path.join("jobs", "run_corpus.py")) for p in sources)
+    offenders = {
+        os.path.relpath(p, REPO): sorted(_manifest_store_names(p))
+        for p in sources
+        if p != owner
+    }
+    assert not {p: n for p, n in offenders.items() if n}

@@ -139,20 +139,21 @@ def test_run_corpus_cli_commits_and_resumes(tmp_path):
     )
     assert r2["resumed_noop"] and r2["docs_kept"] == r1["docs_kept"]
 
-    # --store casfile routes the commit through the object-store-legal
-    # conditional-PUT backend (r5): same pipeline, token-based manifests
-    out2 = tmp_path / "corpus_cas"
-    cmd2 = cmd[:5] + [str(out2), "--buckets", "8", "--store", "casfile"]
-    r3 = json.loads(
-        subprocess.run(cmd2, capture_output=True, text=True, check=True)
-        .stdout.strip().splitlines()[-1]
-    )
-    assert r3["docs_kept"] == r1["docs_kept"]
+    # the job commits through the one file store: token-based manifests,
+    # which every reader that opens the table by path sees
     import os
 
-    names = os.listdir(out2 / "_manifest")
-    assert any(n.endswith(".token") for n in names)
+    from geospatial_cuda_spark.sources.snapshots import SnapshotTable
+    from geospatial_cuda_spark.streaming.source import _SnapshotChangesStreamReader
+
+    names = os.listdir(out / "_manifest")
+    assert "v1.token" in names
     assert not any(n.startswith("v") and n.endswith(".json") for n in names)
+    m = SnapshotTable(str(out)).current()
+    assert m["version"] == 1
+    assert sum(m["buckets"].values()) == r1["docs_kept"]
+    reader = _SnapshotChangesStreamReader(None, {"path": str(out)})
+    assert reader.latestOffset() == {"version": 1}
 
 
 def test_run_pipeline_cli_commits_and_resumes(tmp_path):

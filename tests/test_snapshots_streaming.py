@@ -7,7 +7,6 @@ checkpointed mutation stream, with kill/resume idempotence (SURVEY §7 M7).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -115,16 +114,26 @@ def test_snapshot_upsert_isolation_and_vacuum(spark, bucketed_df, tmp_path):
 
 
 def test_snapshot_manifest_files_are_json_and_atomic(spark, bucketed_df, tmp_path):
+    """The one file store's layout: each version is an O_EXCL ``v{N}.token``
+    naming one complete JSON ``payload-*.json``, plus the ``CURRENT`` hint.
+    No hard-link-era ``v{N}.json`` and no temp residue is ever written."""
     snap = SnapshotTable(str(tmp_path / "t"))
     assert snap.commit(bucketed_df.where(F.col("bucket") < "4"), "bucket")["written_buckets"] == 4
     assert snap.commit(bucketed_df, "bucket")["written_buckets"] == 3
-    names = sorted(os.path.basename(p) for p in glob.glob(f"{snap.manifest_dir}/v*.json"))
-    assert names == ["v1.json", "v2.json"]
-    for p in glob.glob(f"{snap.manifest_dir}/v*.json"):
-        with open(p) as f:
+    names = sorted(os.listdir(snap.manifest_dir))
+    tokens = [n for n in names if n.endswith(".token")]
+    payloads = [n for n in names if n.startswith("payload-")]
+    assert tokens == ["v1.token", "v2.token"]
+    assert len(payloads) == 2 and sorted(tokens + payloads + ["CURRENT"]) == names
+    for v, t in ((1, "v1.token"), (2, "v2.token")):
+        with open(os.path.join(snap.manifest_dir, t)) as f:
+            payload = f.read()
+        assert payload in payloads
+        with open(os.path.join(snap.manifest_dir, payload)) as f:
             m = json.load(f)
+        assert m["version"] == v
         assert {"version", "snapshot_id", "parent_id", "buckets", "files", "schema", "metrics"} <= set(m)
-    assert not glob.glob(f"{snap.manifest_dir}/.tmp-*")  # temp files all renamed
+    assert snap.store.latest_hint() == 2
 
 
 def test_snapshot_concurrent_commit_merged_not_dropped(spark, bucketed_df, tmp_path):
@@ -222,28 +231,37 @@ def test_snapshot_manifest_without_files_or_schema_is_corrupt(spark, bucketed_df
     """Every manifest the table writes carries ``files`` and ``schema``. One
     without either is corrupt: without the file lists the reference set is
     unknowable (vacuum would delete live data, a commit would hide it),
-    without the schema the read is. Every entry point refuses it."""
+    without the schema the read is. So is a payload cut short by a torn
+    write: its token names it, so it was complete once. Every entry point
+    refuses each case with a named error, never a bare JSON error."""
     from geospatial_cuda_spark.sources.snapshots import SnapshotCorruptError
     from geospatial_cuda_spark.streaming.source import SnapshotChangesDataSource
 
     snap = SnapshotTable(str(tmp_path / "t"))
     snap.commit(bucketed_df.where(F.col("bucket") < "4"), "bucket")
     good = snap.current()
-    path = os.path.join(snap.manifest_dir, "v1.json")
-    for key in ("files", "schema"):
+    with open(os.path.join(snap.manifest_dir, "v1.token")) as f:
+        path = os.path.join(snap.manifest_dir, f.read())
+    cases = {
+        "v1.token names payload .* does not parse": json.dumps(good)[:40],
+        "files": json.dumps({k: v for k, v in good.items() if k != "files"}),
+        "schema": json.dumps({k: v for k, v in good.items() if k != "schema"}),
+    }
+    for match, body in cases.items():
         with open(path, "w") as f:
-            json.dump({k: v for k, v in good.items() if k != key}, f)
-        with pytest.raises(SnapshotCorruptError, match=key):
+            f.write(body)
+        with pytest.raises(SnapshotCorruptError, match=match):
             snap.read(spark)
-        with pytest.raises(SnapshotCorruptError, match=key):
+        with pytest.raises(SnapshotCorruptError, match=match):
             snap.commit(bucketed_df, "bucket")
-        with pytest.raises(SnapshotCorruptError, match=key):
+        with pytest.raises(SnapshotCorruptError, match=match):
             snap.rollback(1)
-        with pytest.raises(SnapshotCorruptError, match=key):
+        with pytest.raises(SnapshotCorruptError, match=match):
             snap.vacuum()
-        with pytest.raises(SnapshotCorruptError, match=key):
+        with pytest.raises(SnapshotCorruptError, match=match):
             SnapshotChangesDataSource({"path": snap.path}).schema()
-        assert snap.current()["version"] == 1  # nothing published
+        # nothing published
+        assert not os.path.exists(os.path.join(snap.manifest_dir, "v2.token"))
 
 
 def test_snapshot_null_bucket_fails_fast(spark, tmp_path):
@@ -293,27 +311,61 @@ def test_snapshot_time_travel_read(spark, bucketed_df, tmp_path):
 
 
 def test_snapshot_current_rolls_forward_past_crashed_publisher(spark, bucketed_df, tmp_path):
-    """A publisher that crashed between linking v{N}.json and repointing
-    CURRENT leaves a complete manifest on disk. Readers must adopt the chain
-    tip (v{N}), and the next publisher must build v{N+1} on top of it rather
-    than racing the orphaned version number forever."""
-    import json as _json
-
-    from geospatial_cuda_spark.sources.snapshots import SnapshotTable
-
+    """A publisher that crashed between creating v{N}.token and repointing
+    CURRENT leaves a complete manifest in the log. Readers must adopt the
+    chain tip (v{N}), and the next publisher must build v{N+1} on top of it
+    rather than racing the orphaned version number forever."""
     snap = SnapshotTable(str(tmp_path / "t"))
     low = bucketed_df.where(F.col("bucket") < "4")
     snap.commit(low, "bucket")
-    # simulate the crash: v2 exists, CURRENT still names v1
+    # simulate the crash: v2 published, CURRENT still names v1
     m = snap.current()
     m2 = dict(m, version=2, snapshot_id="deadbeef", parent_id=m["snapshot_id"])
-    with open(os.path.join(snap.manifest_dir, "v2.json"), "w") as f:
-        _json.dump(m2, f)
-    assert snap.current()["version"] == 2  # roll-forward
+    assert snap.store.try_publish(2, m2)
+    assert snap.store.latest_hint() == 1
+    assert SnapshotTable(snap.path).current()["version"] == 2  # roll-forward
     res = snap.commit(bucketed_df, "bucket")
     assert res["snapshot"]["version"] == 3
     assert res["snapshot"]["parent_id"] == "deadbeef"
     assert snap.store.latest_hint() == 3  # winner repointed the hint
+
+
+def test_snapshot_retired_hardlink_log_is_corrupt(spark, bucketed_df, tmp_path):
+    """A table whose log is in the retired hard-link format (``v{N}.json``
+    holding the manifest, ``CURRENT`` naming it) must fail loudly at every
+    entry point. Read as "no committed snapshot" it would look empty, and
+    a commit would see no parent and write every bucket again."""
+    from geospatial_cuda_spark.sources.snapshots import SnapshotCorruptError
+    from geospatial_cuda_spark.streaming.source import SnapshotChangesDataSource
+
+    snap = SnapshotTable(str(tmp_path / "t"))
+    snap.commit(bucketed_df.where(F.col("bucket") < "4"), "bucket")
+    manifest = snap.current()
+    # rewrite the log as the hard-link store laid it out
+    for n in os.listdir(snap.manifest_dir):
+        os.remove(os.path.join(snap.manifest_dir, n))
+    with open(os.path.join(snap.manifest_dir, "v1.json"), "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+    with open(os.path.join(snap.manifest_dir, "CURRENT"), "w") as f:
+        f.write("v1.json")
+
+    def tree():
+        return sorted(
+            os.path.relpath(os.path.join(d, n), snap.path)
+            for d, _, ns in os.walk(snap.path) for n in ns
+        )
+
+    before = tree()
+    fresh = SnapshotTable(snap.path)
+    with pytest.raises(SnapshotCorruptError, match="v1.json"):
+        fresh.current()
+    with pytest.raises(SnapshotCorruptError, match="v1.json"):
+        fresh.read(spark)
+    with pytest.raises(SnapshotCorruptError, match="v1.json"):
+        fresh.commit(bucketed_df, "bucket")
+    with pytest.raises(SnapshotCorruptError, match="v1.json"):
+        SnapshotChangesDataSource({"path": snap.path}).schema()
+    assert tree() == before  # no data file, stage dir or token written
 
 
 def test_append_deltas_fold_order_delete_then_reinsert(spark, tmp_path):
@@ -614,7 +666,7 @@ def test_manifest_store_interface_race_merge_and_conflict(spark, bucketed_df, tm
 
 def test_manifest_store_rollforward_after_hint_crash(spark, bucketed_df, tmp_path):
     """A publisher crash BETWEEN the conditional PUT and the pointer repoint
-    (the object-store analogue of the posix CURRENT race) leaves a published
+    (the object-store analogue of the file store's CURRENT race) leaves a published
     manifest and a stale hint; readers roll forward to the chain tip and the
     next commit builds on it."""
     from geospatial_cuda_spark.sources.snapshots import (
@@ -662,22 +714,30 @@ def _crash_case(spark, bucketed_df, snap, op):
             _rows(bucketed_df.select(*cols)), _rows(low.select(*cols)))
 
 
-@pytest.mark.parametrize("point", ["after_move", "after_publish"])
+_CRASH_CASES = [
+    (op, point)
+    for op in ("commit", "overwrite_buckets", "append_deltas", "rollback")
+    for point in ("after_move", "after_publish")
+    if (op, point) != ("rollback", "after_move")  # rollback writes no data files
+]
+
+
 @pytest.mark.parametrize(
-    "op", ["commit", "overwrite_buckets", "append_deltas", "rollback"]
+    "store,op,point",
+    [pytest.param("memory", op, pt, id=f"{op}-{pt}") for op, pt in _CRASH_CASES]
+    + [pytest.param("file", op, pt, id=f"{op}-{pt}-file") for op, pt in _CRASH_CASES],
 )
-def test_crash_point_matrix(spark, bucketed_df, tmp_path, op, point):
-    """Every write operation survives a crash at each commit phase. After
+def test_crash_point_matrix(spark, bucketed_df, tmp_path, store, op, point):
+    """Every write operation survives a crash at each commit phase, on the
+    in-memory conditional-PUT model and on the default file store. After
     the staged files are moved but before publish, a fresh table still reads
     the old version and ``vacuum`` collects the moved files. After publish
     but before the hint repoint, a fresh table rolls forward to the child."""
     from geospatial_cuda_spark.sources.snapshots import InMemoryManifestStore
 
-    if op == "rollback" and point == "after_move":
-        pytest.skip("rollback writes no data files")
-    store = InMemoryManifestStore()
     path = str(tmp_path / "t")
-    snap = SnapshotTable(path, store=store)
+    mem = InMemoryManifestStore() if store == "memory" else None
+    snap = SnapshotTable(path, store=mem)
     run, before, after = _crash_case(spark, bucketed_df, snap, op)
     old = snap.current()["version"]
     if point == "after_move":
@@ -690,18 +750,23 @@ def test_crash_point_matrix(spark, bucketed_df, tmp_path, op, point):
         snap._write_append_tracked = crash
         with pytest.raises(RuntimeError, match="simulated crash"):
             run()
-        fresh = SnapshotTable(path, store=store)
+        fresh = SnapshotTable(path, store=mem)
         assert fresh.current()["version"] == old
         assert _rows(fresh.read(spark).select("pid", "bucket", "val")) == before
         assert fresh.vacuum() >= 1
         assert fresh.vacuum() == 0
     else:
-        store.fail_hint_after_publish = True
+        orig = snap.store.set_latest_hint
+
+        def crash(version):
+            snap.store.set_latest_hint = orig  # crash once
+            raise RuntimeError("simulated crash after publish, before the hint")
+
+        snap.store.set_latest_hint = crash
         with pytest.raises(RuntimeError, match="simulated crash"):
             run()
-        store.fail_hint_after_publish = False
-        fresh = SnapshotTable(path, store=store)
-        assert store.latest_hint() == old
+        fresh = SnapshotTable(path, store=mem)
+        assert fresh.store.latest_hint() == old
         assert fresh.current()["version"] == old + 1
         assert _rows(fresh.read(spark).select("pid", "bucket", "val")) == after
 
@@ -827,17 +892,16 @@ def test_casfile_store_cas_rollforward_and_torn_token(spark, bucketed_df, tmp_pa
 
 def test_casfile_store_end_to_end_commit_delta_read(spark, bucketed_df, tmp_path):
     """Full SnapshotTable protocol (commit → MOR delta → merged read) over
-    the object-store-legal backend — the same flow q_snapshot_lineage gates
-    over the posix default."""
+    the object-store-legal backend, which ``SnapshotTable(path)`` builds by
+    default — the same flow q_snapshot_lineage gates."""
     from geospatial_cuda_spark.sources.snapshots import (
         CasFileManifestStore,
         SnapshotTable,
     )
 
     path = str(tmp_path / "t")
-    snap = SnapshotTable(
-        path, store=CasFileManifestStore(str(tmp_path / "t/_manifest"))
-    )
+    snap = SnapshotTable(path)
+    assert isinstance(snap.store, CasFileManifestStore)
     snap.commit(bucketed_df, "bucket")
     delta = (
         bucketed_df.where(F.col("pid") % 3 == 0)
