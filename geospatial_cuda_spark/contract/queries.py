@@ -526,8 +526,8 @@ def q_cell_cardinality_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count next to it is the expensive branch (emitted here so the
     gate also pins the estimator's ~1/√k accuracy on the fixture)."""
     pts = _points(spark, sf_dir)
-    hs = pts.select(
-        F.md5(C.cell_id_col("x", "y", KMV_DEPTH).cast("string")).alias("h")
+    hs = QT.with_cell_id(pts, KMV_DEPTH, out="_cid").select(
+        F.md5(F.col("_cid").cast("string")).alias("h")
     ).distinct()
     top = hs.orderBy("h").limit(KMV_K)
     frac = F.conv(F.substring(F.col("h"), 1, 15), 16, 10).cast("long") / F.lit(

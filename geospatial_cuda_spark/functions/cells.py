@@ -10,12 +10,15 @@ base-4 quadkey: the id at depth d is a pure function of (x, y) because the
 bbox subdivision is data-independent — only the *stop* decision is
 data-driven. This module provides:
 
-- numpy kernels (float32-faithful) used by Arrow-vectorized pandas UDFs:
-  ``encode_cell_ids``, ``cell_bbox``, ``candidate_cell_ids``;
-- pure-Column twins of the encode and bbox kernels (``cell_id_col_jvm*``,
-  ``with_cell_bbox_jvm``), chosen by depth — whole-stage codegen through
-  depth 13, the Arrow kernel deeper — and bit-identical to the kernels;
-  search candidates (``candidate_cells_col``) have the kernel form only;
+- numpy kernels (float32-faithful): ``encode_cell_ids``, ``cell_bbox``,
+  ``candidate_cell_ids`` — the reference semantics the JVM renderings are
+  tested against, the encode of ``counts_from_points``'s rollup past depth
+  13, and the search candidates' Arrow kernel (``candidate_cells_col``);
+- one JVM rendering each of the encode (``with_cell_id``) and the bbox
+  (``with_cell_bbox``): an exact integer prefix, then a staged float32
+  midpoint descent, one projection per level, at every depth and on
+  every domain — whole-stage codegen, no Python stage, bit-identical to
+  the kernels;
 - SQL expression generators (exact integer arithmetic, valid for depth ≤ 10
   where the float32 midpoints are exactly representable) that run
   identically on Spark and DuckDB for the oracle cross-checks.
@@ -262,13 +265,14 @@ def candidate_cell_ids(
 
 
 # ---------------------------------------------------------------------------
-# pandas UDF wrappers (Arrow-vectorized; the engine's "kernel launch")
+# JVM renderings (pure Column, whole-stage codegen, no Python stage)
 # ---------------------------------------------------------------------------
 
 
-# Depth bound for the pure-JVM encode: level boundaries k·1e6/2^d need
-# 14+d mantissa bits (1e6 = 2^6·5^6), so they are exact in float32 — and the
-# iterative float32 midpoint descent therefore lossless — iff d ≤ 10.
+# Depth of the exact integer prefix: level boundaries k·1e6/2^d need 14+d
+# mantissa bits (1e6 = 2^6·5^6), so on the reference domain they are exact
+# in float32 — and the float32 midpoint descent through them lossless —
+# iff d ≤ 10.
 _EXACT_JVM_DEPTH = 10
 
 
@@ -281,7 +285,7 @@ def _axis_bin_col(c, depth: int, lo: float, hi: float):
     ULP away, far beyond double rounding error.
 
     The input is quantized to float32 FIRST (cast float → double) so this JVM
-    path shares the Arrow kernel's float32 input semantics: a double within
+    path shares the numpy kernel's float32 input semantics: a double within
     half a float32 ULP of a level boundary must round ONTO the boundary (and
     go left) exactly as the kernel's np.float32 cast does.
 
@@ -290,114 +294,13 @@ def _axis_bin_col(c, depth: int, lo: float, hi: float):
     would overflow on ±inf), and NaN maps to 0 — numpy's comparisons with
     NaN are false, so the kernel sends it left/bottom. So NaN bins to 0 and
     ±inf or any out-of-domain value to the edge bin. The clamp sits after
-    the scaling, not on the input, to keep the expression small: the deep
-    encode's nested descent branches copy the bins many times."""
+    the scaling, not on the input, to keep the expression small: the
+    encode's interleave copies each bin once per level."""
     n = 1 << depth
     cq = c.cast("float").cast("double")
     scaled = (cq - F.lit(float(lo))) * F.lit(float(n)) / F.lit(float(hi - lo))
     inside = F.least(F.greatest(F.nanvl(scaled, F.lit(0.0)), F.lit(0.0)), F.lit(float(n)))
     return F.greatest(F.ceil(inside) - F.lit(1), F.lit(0))
-
-
-def cell_id_col_jvm(xcol, ycol, depth: int, domain=DOMAIN):
-    """Pure-Column cell id (whole-stage-codegen, no Python workers): compute
-    the final (col, row) bins once, then bit-interleave into the reference's
-    base-4 id (id_d = id_{d-1}·4 + row_bit·2 + col_bit + 1). Per-level bins
-    are prefixes of the final bin (boundaries nest), so one ceil per axis
-    suffices — expression size is linear in depth."""
-    if depth == 0:
-        return F.lit(0).cast("long")
-    col = _axis_bin_col(xcol, depth, domain[0], domain[2])
-    row = _axis_bin_col(ycol, depth, domain[1], domain[3])
-    return _interleave_colrow(col, row, depth)
-
-
-# Hybrid ceiling: each float32 descent level past depth 10 roughly triples
-# the Column expression tree (box columns nest through when()); 3 extra
-# levels stay well under codegen limits, deeper goes to the Arrow kernel.
-_HYBRID_JVM_MAX_DEPTH = 13
-
-
-def _f32(v: float):
-    return F.lit(float(np.float32(v))).cast("float")
-
-
-def cell_id_col_jvm_deep(xcol, ycol, depth: int, domain=DOMAIN):
-    """Pure-Column encode for depth 11..13: exact integer bins give the
-    depth-10 id AND its bbox (both float32-exact), then the remaining levels
-    replay the reference's float32 midpoint descent with genuine FloatType
-    Column arithmetic — Spark's float add/multiply/compare are JVM float ops,
-    bit-identical to the C kernel's. Valid because every midpoint the kernel
-    computes at depths ≤ 10 is exact, so starting the descent from the exact
-    depth-10 box reproduces its state."""
-    base = _EXACT_JVM_DEPTH
-    col = _axis_bin_col(xcol, base, domain[0], domain[2])
-    row = _axis_bin_col(ycol, base, domain[1], domain[3])
-    cid = _interleave_colrow(col, row, base)
-    step_x = (domain[2] - domain[0]) / (1 << base)
-    step_y = (domain[3] - domain[1]) / (1 << base)
-    x1 = (col.cast("double") * F.lit(step_x) + F.lit(float(domain[0]))).cast("float")
-    x2 = ((col + 1).cast("double") * F.lit(step_x) + F.lit(float(domain[0]))).cast("float")
-    y1 = (row.cast("double") * F.lit(step_y) + F.lit(float(domain[1]))).cast("float")
-    y2 = ((row + 1).cast("double") * F.lit(step_y) + F.lit(float(domain[1]))).cast("float")
-    xf = F.nanvl(xcol.cast("float"), _f32(domain[0]))
-    yf = F.nanvl(ycol.cast("float"), _f32(domain[1]))
-    half = _f32(0.5)
-    for _ in range(depth - base):
-        mx = (x1 + x2) * half
-        my = (y1 + y2) * half
-        right = xf > mx
-        top = yf > my
-        cid = (
-            cid * 4
-            + top.cast("long") * 2
-            + right.cast("long")
-            + F.lit(1)
-        )
-        x1 = F.when(right, mx).otherwise(x1)
-        x2 = F.when(right, x2).otherwise(mx)
-        y1 = F.when(top, my).otherwise(y1)
-        y2 = F.when(top, y2).otherwise(my)
-    return cid
-
-
-def cell_id_col(x: str | Column, y: str | Column, depth: int, domain=DOMAIN) -> Column:
-    """Column: reference cell id at ``depth`` (float32-faithful) of the
-    point columns ``x``/``y`` — names, or Columns.
-
-    Dispatch: depth ≤ 10 → exact integer arithmetic in the JVM (codegen'd,
-    proven equal to the float32 kernel — see test_cells parity tests);
-    depth ≤ 13 → integer bins to depth 10 + JVM float32 descent for the rest;
-    deeper → Arrow-vectorized numpy replay of the float32 midpoint descent
-    (the only faithful route once the expression tree would outgrow codegen).
-    The JVM trees of named columns are cached (``cached_column``)."""
-    if tuple(domain) == tuple(DOMAIN) and depth <= _HYBRID_JVM_MAX_DEPTH:
-        enc = cell_id_col_jvm if depth <= _EXACT_JVM_DEPTH else cell_id_col_jvm_deep
-
-        def build() -> Column:
-            return enc(*(F.col(c) if isinstance(c, str) else c for c in (x, y)), depth, domain)
-
-        if isinstance(x, str) and isinstance(y, str):
-            return cached_column(("cell_id", x, y, depth, tuple(domain)), build)
-        return build()
-
-    @F.pandas_udf(LongType())
-    def _enc(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        return pd.Series(encode_cell_ids(xs.to_numpy(), ys.to_numpy(), depth, domain))
-
-    return _enc(x, y)
-
-
-def neighbor_ring_col(idcol, depth: int, radius: int = 1):
-    """Column: array<long> of same-depth ring neighbors (incl. self; -1 where
-    outside the grid) — the kNN candidate generator's expansion step."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _ring(ids: pd.Series) -> pd.Series:
-        arr = neighbor_ring(ids.to_numpy(np.int64), depth, radius)
-        return pd.Series(list(arr))
-
-    return _ring(idcol)
 
 
 def _interleave_colrow(col, row, depth: int):
@@ -414,65 +317,207 @@ def _interleave_colrow(col, row, depth: int):
     return cid
 
 
-def with_cell_bbox_jvm(df, max_depth: int, domain=DOMAIN, min_distance: float = 5.0,
-                       id_col: str = "cell_id", depth_col: str = "depth",
-                       out: str = "g"):
-    """Attach a pure-Column float32 bbox + extent-flag struct ``out`` for
-    MIXED-depth cell rows (depth ≤ ``max_depth`` ≤ 13 on the reference
-    domain) — the JVM twin of ``bbox_struct_col``'s numpy kernel,
-    bit-identical by the same two-part argument as ``cell_id_col_jvm_deep``:
+def _f32(v: float):
+    return F.lit(float(np.float32(v))).cast("float")
 
-    - depth ≤ 10: every box edge the float32 descent produces is the exact
-      boundary ``k·(hi-lo)/2^d`` (float32-representable iff d ≤ 10 — the
-      ``_axis_bin_col`` lemma), and the double product ``k·step`` is exact
-      (≤ 24 significand bits), so computing the edge directly from the
-      cell's (col, row) bins and casting to float reproduces the descent.
-    - depth 11..13: start from the exact depth-10 prefix box and replay the
-      remaining ≤ 3 levels as genuine FloatType arithmetic — JVM float
-      add/multiply are IEEE single, the same ops the numpy kernel runs —
-      with the branch at each level taken from the cell's own digit bits.
+
+def _exact_depth(depth: int, domain) -> int:
+    """Depth of the exact integer prefix both staged descents start from:
+    ``min(depth, _EXACT_JVM_DEPTH)`` on the reference domain, and 0 on any
+    other, whose level boundaries need not be exact in float32 — there the
+    descent starts from the domain's own float32 box, as the kernels do."""
+    return min(depth, _EXACT_JVM_DEPTH) if tuple(domain) == tuple(DOMAIN) else 0
+
+
+def _root_box(domain) -> tuple[Column, Column, Column, Column]:
+    """(x1, x2, y1, y2): the domain's own float32 edges, where the kernels'
+    descent starts."""
+    return tuple(_f32(domain[i]) for i in (0, 2, 1, 3))
+
+
+def _prefix_box(col, row, p, domain) -> tuple[Column, Column, Column, Column]:
+    """(x1, x2, y1, y2): the float32 box of the depth-``p`` cell (``col``,
+    ``row``), p ≤ _EXACT_JVM_DEPTH on the reference domain (an int or a
+    per-row Column). Every edge the float32 descent produces there is the
+    exact boundary ``k·(hi-lo)/2^p``, and the double product ``k·step`` is
+    exact (≤ 24 significand bits), so the float cast reproduces it."""
+    inv = F.pow(F.lit(2.0), -F.lit(p).cast("double"))  # exact 2^-p
+    box = []
+    for c, lo, hi in ((col, domain[0], domain[2]), (row, domain[1], domain[3])):
+        step = F.lit(float(hi - lo)) * inv
+        box += [
+            (c.cast("double") * step + F.lit(float(lo))).cast("float"),
+            ((c + 1).cast("double") * step + F.lit(float(lo))).cast("float"),
+        ]
+    return tuple(box)
+
+
+def _jvm_stages(stages: list[dict[str, Column]], col: Column) -> tuple:
+    """(staged names, stages, ``col``) with each stage converted once into
+    the JVM (names, Columns) Seq pair a projection takes: ``withColumns``
+    converts both lists again on every call, about 2n+5 py4j round trips
+    for n columns — hundreds per plan at depth 18. Cached with its Column
+    trees (``cached_column``)."""
+    to_seq = SparkContext._active_spark_context._jvm.PythonUtils.toSeq
+    names = list(dict.fromkeys(name for stage in stages for name in stage))
+    return names, [(to_seq(list(s)), to_seq([c._jc for c in s.values()])) for s in stages], col
+
+
+def _with_stages(df, staged: tuple, out: str, owner: str):
+    """``df`` with the ``_jvm_stages`` projected in order, then ``out`` = their
+    Column; the staged names are dropped again, so ``out`` is the only
+    added column. An input column named like a staged one raises
+    ``ValueError`` rather than being overwritten and dropped.
+
+    ``out`` is fenced off from the stages when there are any: Spark pushes
+    a filter through a deterministic projection by substituting its
+    aliases, and each level refers to the previous level's columns several
+    times, so a filter on ``out`` grows exponentially with the levels it
+    crosses (an ``is_leaf`` filter over a depth-18 bbox exhausted an 8 GB
+    driver in constant folding). The guard ``spark_partition_id() >= 0`` is
+    always true but not deterministic, so every filter stays above it."""
+    names, stages, col = staged
+    clash = [name for name in names if name in df.columns]
+    if clash:
+        raise ValueError(
+            f"input columns {clash!r} collide with {owner}'s staged columns; rename them"
+        )
+    if not stages:
+        return df.withColumn(out, col)
+    for jnames, jcols in stages:
+        df = type(df)(df._jdf.withColumns(jnames, jcols), df.sparkSession)
+    return df.withColumn(out, F.when(F.spark_partition_id() >= 0, col)).drop(*names)
+
+
+_CI_BOX = ("_ci_x1", "_ci_x2", "_ci_y1", "_ci_y2")
+
+
+def with_cell_id(
+    df,
+    depth: int = MAX_DEPTH,
+    x: str = "x",
+    y: str = "y",
+    out: str = "cell_id",
+    domain=DOMAIN,
+):
+    """Attach ``out``: the reference cell id at ``depth`` of the point
+    columns ``x``/``y`` — the engine's one encode, bit-identical to
+    ``encode_cell_ids`` on every double, at every depth and on every
+    domain, with no Python stage.
+
+    It starts from the exact integer prefix at depth ``e`` (``_exact_depth``):
+    one ceil per axis gives the depth-e bins (boundaries nest, so each
+    level's bin is a prefix of the final one), bit-interleaved into the
+    base-4 id ``id_d = id_{d-1}·4 + row_bit·2 + col_bit + 1``. Through depth
+    e that is the whole id, inline. Each deeper level replays the
+    reference's float32 midpoint descent from the prefix box with FloatType
+    Column arithmetic — Spark's float add/multiply/compare are JVM float
+    ops, bit-identical to the kernel's — and NaN is sent low with ``nanvl``,
+    as numpy's false comparisons send it left/bottom.
+
+    DataFrame-level deliberately: each deeper level is one staged
+    projection (id and box), so a level reads the previous one's attributes
+    instead of cloning its subtree (three levels inlined per stage measured
+    2-3× slower at depths 16-18). The stage Columns are rendered once per
+    SparkContext (``cached_column``); the staged ``_ci_*`` names are
+    dropped before returning, and an input column named like one raises
+    ``ValueError``."""
+    staged = cached_column(
+        ("cell_id", x, y, depth, tuple(domain)),
+        lambda: _jvm_stages(*_cell_id_stages(x, y, depth, domain)),
+    )
+    return _with_stages(df, staged, out, "with_cell_id")
+
+
+def _cell_id_stages(x: str, y: str, depth: int, domain) -> tuple[list[dict[str, Column]], Column]:
+    """with_cell_id's staged projections, in order, and the id over the
+    last of them (alias-free, so cacheable)."""
+    e = _exact_depth(depth, domain)
+    cid, box = F.lit(0).cast("long"), _root_box(domain)
+    if e:
+        col = _axis_bin_col(F.col(x), e, domain[0], domain[2])
+        row = _axis_bin_col(F.col(y), e, domain[1], domain[3])
+        cid, box = _interleave_colrow(col, row, e), _prefix_box(col, row, e, domain)
+    xf = F.nanvl(F.col(x).cast("float"), _f32(domain[0]))
+    yf = F.nanvl(F.col(y).cast("float"), _f32(domain[1]))
+    half = _f32(0.5)
+    stages = []
+    for _ in range(e, depth):
+        stages.append({"_ci_id": cid, **dict(zip(_CI_BOX, box))})
+        x1, x2, y1, y2 = (F.col(name) for name in _CI_BOX)
+        mx = (x1 + x2) * half
+        my = (y1 + y2) * half
+        right = xf > mx
+        top = yf > my
+        cid = F.col("_ci_id") * 4 + top.cast("long") * 2 + right.cast("long") + F.lit(1)
+        box = (
+            F.when(right, mx).otherwise(x1),
+            F.when(right, x2).otherwise(mx),
+            F.when(top, my).otherwise(y1),
+            F.when(top, y2).otherwise(my),
+        )
+    return stages, cid
+
+
+def neighbor_ring_col(idcol, depth: int, radius: int = 1):
+    """Column: array<long> of same-depth ring neighbors (incl. self; -1 where
+    outside the grid), from the ``neighbor_ring`` kernel — the generator of
+    the ``neighbor_ring`` contract query."""
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def _ring(ids: pd.Series) -> pd.Series:
+        arr = neighbor_ring(ids.to_numpy(np.int64), depth, radius)
+        return pd.Series(list(arr))
+
+    return _ring(idcol)
+
+
+_BB_BOX = ("_bb_x1", "_bb_x2", "_bb_y1", "_bb_y2")
+
+
+def with_cell_bbox(df, max_depth: int, domain=DOMAIN, min_distance: float = 5.0,
+                   id_col: str = "cell_id", depth_col: str = "depth",
+                   out: str = "g"):
+    """Attach ``out``: the float32 bbox and extent flag struct (min_x, min_y,
+    max_x, max_y, extent_ok) of MIXED-depth cell rows (depth ≤
+    ``max_depth``) — the engine's one bbox, bit-identical to ``cell_bbox``
+    at every depth and on every domain, with no Python stage. extent_ok is
+    the negation of the reference's extent stop (create_grid.cu:31-35):
+    |x1-x2| >= min_distance OR |y1-y2| >= min_distance, in float32.
 
     The digit value ``v = id - (4^d-1)/3`` has base-4 digits ``k_i - 1 =
     top_bit·2 + right_bit`` (root-first), so one de-interleave of v's
-    even/odd bits yields (col, row) at the row's own depth, uniformly for
+    even/odd bits yields (col, row) at the row's own depth d, uniformly for
     every depth in the batch — no per-depth CASE chain. All intermediate
-    integer arithmetic is exact in doubles (4^13 < 2^26 ≪ 2^53).
+    integer arithmetic is exact in doubles (4^d < 2^53). As in
+    ``with_cell_id``, the box starts from the exact prefix at depth
+    min(d, e), ``e = _exact_depth(max_depth, domain)``, and each deeper
+    level replays the float32 descent as FloatType arithmetic, its branch
+    taken from the cell's own digit bits.
 
-    DataFrame-level (not a bare Column) deliberately: the de-interleave and
-    each descent level are STAGED as real projection columns. Field
-    extraction on an inline struct is rewritten to the struct child
-    (SimplifyExtractValueOps), which would clone the whole integer subtree
-    into every one of the six consumers — measured 3.5× slower than the
-    Arrow kernel it was meant to beat; with the stages materialized as
-    attributes (CollapseProject keeps projections with multiply-referenced
-    non-trivial aliases apart), each consumer is a few ops on shared
-    locals and the stage stays a single WholeStageCodegen span. Parity with
-    the numpy kernel is pytest-pinned (tests/test_cells.py::test_bbox_jvm_*).
-    Staged column names are dropped before returning; ``out`` is the only
-    added column, and an input column named like a staged one raises
-    ``ValueError`` rather than being overwritten and dropped. The stage
-    Columns are cached per SparkContext (``cached_column``)."""
-    stages, bbox = cached_column(
+    DataFrame-level deliberately: the de-interleave and each descent level
+    are STAGED as real projection columns. Field extraction on an inline
+    struct is rewritten to the struct child (SimplifyExtractValueOps),
+    which would clone the whole integer subtree into every one of the six
+    consumers — measured 3.5× slower than the Arrow kernel it replaced; with the stages
+    materialized as attributes (CollapseProject keeps projections with
+    multiply-referenced non-trivial aliases apart), each consumer is a few
+    ops on shared locals and the stage stays a single WholeStageCodegen
+    span. The stage Columns are cached per SparkContext
+    (``cached_column``); the staged ``_bb_*`` names are dropped before
+    returning, and an input column named like one raises ``ValueError``."""
+    staged = cached_column(
         ("cell_bbox", id_col, depth_col, max_depth, tuple(domain), float(min_distance)),
-        lambda: _cell_bbox_stages(id_col, depth_col, max_depth, domain, min_distance),
+        lambda: _jvm_stages(*_cell_bbox_stages(id_col, depth_col, max_depth, domain, min_distance)),
     )
-    staged = list(dict.fromkeys(name for stage in stages for name in stage))
-    clash = [name for name in staged if name in df.columns]
-    if clash:
-        raise ValueError(
-            f"input columns {clash!r} collide with with_cell_bbox_jvm's staged "
-            "columns; rename them"
-        )
-    for stage in stages:
-        df = df.withColumns(stage)
-    return df.withColumn(out, bbox).drop(*staged)
+    return _with_stages(df, staged, out, "with_cell_bbox")
 
 
 def _cell_bbox_stages(id_col: str, depth_col: str, max_depth: int, domain,
                       min_distance: float) -> tuple[list[dict[str, Column]], Column]:
-    """with_cell_bbox_jvm's staged projections, in order, and the final
-    bbox struct over them (alias-free, so cacheable)."""
-    lo_x, lo_y, hi_x, hi_y = (float(domain[i]) for i in range(4))
+    """with_cell_bbox's staged projections, in order, and the final bbox
+    struct over them (alias-free, so cacheable)."""
+    e = _exact_depth(max_depth, domain)
     d = F.col(depth_col).cast("int")
     base = (F.pow(F.lit(4.0), d.cast("double")) - F.lit(1.0)) / F.lit(3.0)
     v = F.col(id_col).cast("long") - base.cast("long")
@@ -484,62 +529,33 @@ def _cell_bbox_stages(id_col: str, depth_col: str, max_depth: int, domain,
     stages = [{"_bb_col": col, "_bb_row": row}]
     col, row = F.col("_bb_col"), F.col("_bb_row")
 
-    # shallow (depth ≤ 10): exact edges straight from the bins
-    inv = F.pow(F.lit(2.0), -d.cast("double"))  # exact 2^-d
-    sx = F.lit(hi_x - lo_x) * inv
-    sy = F.lit(hi_y - lo_y) * inv
-    shallow = {
-        "_bb_sx1": (col.cast("double") * sx + F.lit(lo_x)).cast("float"),
-        "_bb_sx2": ((col + 1).cast("double") * sx + F.lit(lo_x)).cast("float"),
-        "_bb_sy1": (row.cast("double") * sy + F.lit(lo_y)).cast("float"),
-        "_bb_sy2": ((row + 1).cast("double") * sy + F.lit(lo_y)).cast("float"),
-    }
+    def up(c: Column, levels: Column) -> Column:
+        """``c`` without its ``levels`` low bits (levels ≥ 0)."""
+        return F.floor(c.cast("double") / F.pow(F.lit(2.0), levels.cast("double"))).cast("long")
 
-    if max_depth > _EXACT_JVM_DEPTH:
-        # deep (11..13): exact depth-10 prefix box + float32 descent by digits
-        b = _EXACT_JVM_DEPTH
-        pshift = F.pow(F.lit(2.0), (d - F.lit(b)).cast("double"))
-        col10 = F.floor(col.cast("double") / pshift).cast("long")
-        row10 = F.floor(row.cast("double") / pshift).cast("long")
-        s10x, s10y = (hi_x - lo_x) / (1 << b), (hi_y - lo_y) / (1 << b)
-        stages.append({
-            **shallow,
-            "_bb_x1": (col10.cast("double") * F.lit(s10x) + F.lit(lo_x)).cast("float"),
-            "_bb_x2": ((col10 + 1).cast("double") * F.lit(s10x) + F.lit(lo_x)).cast("float"),
-            "_bb_y1": (row10.cast("double") * F.lit(s10y) + F.lit(lo_y)).cast("float"),
-            "_bb_y2": ((row10 + 1).cast("double") * F.lit(s10y) + F.lit(lo_y)).cast("float"),
-        })
-        half = _f32(0.5)
-        for j in range(1, max_depth - b + 1):
-            active = d >= F.lit(b + j)
-            lshift = F.pow(F.lit(2.0), (d - F.lit(b + j)).cast("double"))
-            right = F.floor(col.cast("double") / lshift).cast("long").bitwiseAND(F.lit(1)) == 1
-            top = F.floor(row.cast("double") / lshift).cast("long").bitwiseAND(F.lit(1)) == 1
-            x1, x2 = F.col("_bb_x1"), F.col("_bb_x2")
-            y1, y2 = F.col("_bb_y1"), F.col("_bb_y2")
-            mx = (x1 + x2) * half
-            my = (y1 + y2) * half
-            stages.append({
-                "_bb_x1": F.when(active & right, mx).otherwise(x1),
-                "_bb_x2": F.when(active & ~right, mx).otherwise(x2),
-                "_bb_y1": F.when(active & top, my).otherwise(y1),
-                "_bb_y2": F.when(active & ~top, my).otherwise(y2),
-            })
-        deep = d > F.lit(b)
-        x1 = F.when(deep, F.col("_bb_x1")).otherwise(F.col("_bb_sx1"))
-        x2 = F.when(deep, F.col("_bb_x2")).otherwise(F.col("_bb_sx2"))
-        y1 = F.when(deep, F.col("_bb_y1")).otherwise(F.col("_bb_sy1"))
-        y2 = F.when(deep, F.col("_bb_y2")).otherwise(F.col("_bb_sy2"))
-    else:
-        stages.append(shallow)
-        x1, x2 = F.col("_bb_sx1"), F.col("_bb_sx2")
-        y1, y2 = F.col("_bb_sy1"), F.col("_bb_sy2")
-
-    # final coordinates staged once more so the six struct-field consumers
-    # (4 floats + extent_ok + is_leaf downstream) share them as attributes
-    stages.append({"_bb_fx1": x1, "_bb_fy1": y1, "_bb_fx2": x2, "_bb_fy2": y2})
-    fx1, fy1 = F.col("_bb_fx1"), F.col("_bb_fy1")
-    fx2, fy2 = F.col("_bb_fx2"), F.col("_bb_fy2")
+    box = _root_box(domain)
+    if e:
+        p = F.least(d, F.lit(e))
+        box = _prefix_box(up(col, d - p), up(row, d - p), p, domain)
+    half = _f32(0.5)
+    for level in range(e + 1, max_depth + 1):
+        stages.append(dict(zip(_BB_BOX, box)))
+        x1, x2, y1, y2 = (F.col(name) for name in _BB_BOX)
+        active = d >= F.lit(level)
+        right = up(col, d - F.lit(level)).bitwiseAND(F.lit(1)) == 1
+        top = up(row, d - F.lit(level)).bitwiseAND(F.lit(1)) == 1
+        mx = (x1 + x2) * half
+        my = (y1 + y2) * half
+        box = (
+            F.when(active & right, mx).otherwise(x1),
+            F.when(active & ~right, mx).otherwise(x2),
+            F.when(active & top, my).otherwise(y1),
+            F.when(active & ~top, my).otherwise(y2),
+        )
+    # the final box staged once more so the six struct-field consumers
+    # (4 floats + extent_ok + is_leaf downstream) share it as attributes
+    stages.append(dict(zip(_BB_BOX, box)))
+    fx1, fx2, fy1, fy2 = (F.col(name) for name in _BB_BOX)
     mdf = _f32(min_distance)
     extent_ok = (F.abs(fx1 - fx2) >= mdf) | (F.abs(fy1 - fy2) >= mdf)
     bbox = F.named_struct(

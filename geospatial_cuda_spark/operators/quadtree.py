@@ -20,13 +20,15 @@ The engine exploits two structural facts instead:
    zero-count leaves, exactly like the reference's unconditional 4-way
    recursion); the depth-0 group also emits the root row.
 
-Result: for depth ≤ 13 on the reference domain the build is two exchanges —
+Result: at every depth and on every domain the build is two exchanges —
 the finest-cell histogram and the parent aggregation — with no join, no
-persisted intermediate and no Python stage (JVM encode, JVM bbox). Deeper
-trees count through the Arrow rollup kernel (``counts_from_points``) and
-derive the same edges from its (cell_id, depth, count) relation
-(``cells_from_counts``). The heavy Column trees (encode, ancestor chains,
-bbox stages) are rendered once per SparkContext (``C.cached_column``).
+persisted intermediate and no Python stage: the encode (``with_cell_id``)
+and the bbox (``with_cell_bbox``) each have one rendering, a staged JVM
+float32 descent. The one Python stage left is ``counts_from_points``'s
+in-kernel rollup, kept for the counts relation past depth 13
+(``_JVM_COUNTS_MAX_DEPTH``). The heavy Column trees (encode and bbox
+stages, ancestor chains) are rendered once per SparkContext
+(``C.cached_column``).
 """
 
 from __future__ import annotations
@@ -34,15 +36,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    FloatType,
-    StructField,
-    StructType,
-)
 
 from .. import DOMAIN, MAX_DEPTH, MIN_DISTANCE, MIN_POINTS
 from ..functions import cells as C
+from ..functions.cells import with_cell_id
 
 
 def parent_col(cell_id: Column) -> Column:
@@ -85,72 +82,10 @@ def ancestor_dyn_col(cell_id: Column, levels_up: Column, max_levels: int = MAX_D
     return F.element_at(chain, (levels_up + 1).cast("int"))
 
 
-_BBOX_SCHEMA = StructType(
-    [
-        StructField("min_x", FloatType()),
-        StructField("min_y", FloatType()),
-        StructField("max_x", FloatType()),
-        StructField("max_y", FloatType()),
-        StructField("extent_ok", BooleanType()),
-    ]
-)
-
-
-def bbox_struct_col(cell_id: Column, depth: Column, domain=DOMAIN, min_distance=MIN_DISTANCE) -> Column:
-    """float32 bbox + interior-extent flag per cell (mixed depths per batch).
-
-    extent_ok mirrors the negation of the reference's extent stop
-    (create_grid.cu:31-35): interior requires |x1-x2| >= 5 OR |y1-y2| >= 5,
-    evaluated in float32.
-    """
-
-    @F.pandas_udf(_BBOX_SCHEMA)
-    def _bbox(ids: pd.Series, depths: pd.Series) -> pd.DataFrame:
-        n = len(ids)
-        out = {
-            "min_x": np.zeros(n, np.float32),
-            "min_y": np.zeros(n, np.float32),
-            "max_x": np.zeros(n, np.float32),
-            "max_y": np.zeros(n, np.float32),
-            "extent_ok": np.zeros(n, bool),
-        }
-        ids_np = ids.to_numpy(np.int64)
-        depths_np = depths.to_numpy(np.int64)
-        for d in np.unique(depths_np):
-            m = depths_np == d
-            x1, y1, x2, y2 = C.cell_bbox(ids_np[m], int(d), domain)
-            out["min_x"][m], out["min_y"][m] = x1, y1
-            out["max_x"][m], out["max_y"][m] = x2, y2
-            out["extent_ok"][m] = (np.abs(x1 - x2) >= np.float32(min_distance)) | (
-                np.abs(y1 - y2) >= np.float32(min_distance)
-            )
-        return pd.DataFrame(out)
-
-    return _bbox(cell_id, depth)
-
-
-def with_cell_id(
-    df: DataFrame,
-    depth: int = MAX_DEPTH,
-    x: str = "x",
-    y: str = "y",
-    out: str = "cell_id",
-    domain=DOMAIN,
-) -> DataFrame:
-    """Attach the reference cell id at ``depth`` (float32-faithful kernel)."""
-    return df.withColumn(out, C.cell_id_col(x, y, depth, domain))
-
-
-def _jvm_encodable(max_depth: int, domain) -> bool:
-    """The cell_id_col exact/hybrid codegen ceiling: such trees encode, count
-    and bbox without a Python stage."""
-    return tuple(domain) == tuple(DOMAIN) and max_depth <= C._HYBRID_JVM_MAX_DEPTH
-
-
 def _finest_counts(points: DataFrame, x: str, y: str, max_depth: int, domain) -> DataFrame:
     """(_fid, count): the finest-cell histogram, JVM-encoded."""
     return (
-        points.select(C.cell_id_col(x, y, max_depth, domain).alias("_fid"))
+        with_cell_id(points, max_depth, x, y, "_fid", domain)
         .groupBy("_fid")
         .agg(F.count(F.lit(1)).alias("count"))
     )
@@ -164,6 +99,16 @@ def _prefix_rows(finest: DataFrame, max_depth: int, levels: int) -> DataFrame:
     ).select("cell_id", (F.lit(max_depth) - F.col("k")).cast("int").alias("depth"), "count")
 
 
+# Past this depth counts_from_points rolls the counts up inside an Arrow
+# kernel. That is a different algorithm, not a second rendering of the
+# encode: the kernel pre-reduces each partition's points to per-level counts
+# before the one exchange, where the relational route explodes every
+# occupied finest cell into its ancestors. At depth 18 on a 4-core host the
+# two measured 6.0 s each at 1M points, but the explode took 33.9 s against
+# the rollup's 24.0 s at 4M points.
+_JVM_COUNTS_MAX_DEPTH = 13
+
+
 def counts_from_points(
     points: DataFrame,
     x: str = "x",
@@ -175,27 +120,28 @@ def counts_from_points(
     the counts relation the incremental paths keep (``mutations``,
     ``jobs/run_inference.py``) and the input of ``cells_from_counts``.
 
-    Trees the JVM can encode (max_depth <= 13 on the reference domain) take
-    an all-JVM route: the codegen encode + one grouped count to finest
-    cells, then the ancestor explode over the min(N, 4^max_depth)
-    FINEST-CELL rows and a grouped sum. This skips the JVM<->Python Arrow
-    boundary entirely, whose round trip alone measured ~1.9 s on a 6M-point
-    scan against ~0.3 s of kernel compute; the explode is over pre-reduced
-    finest cells, never points, and partial aggregation bounds the shuffle
-    (measured at parity with the kernel at 5M points / depth 12).
+    Through max_depth 13 (``_JVM_COUNTS_MAX_DEPTH``) the route is all-JVM:
+    ``with_cell_id`` + one grouped count to finest cells, then the ancestor
+    explode over the min(N, 4^max_depth) FINEST-CELL rows and a grouped
+    sum. This skips the JVM<->Python Arrow boundary entirely, whose round
+    trip alone measured ~1.9 s on a 6M-point scan against ~0.3 s of kernel
+    compute; the explode is over pre-reduced finest cells, never points, and
+    partial aggregation bounds the shuffle (measured at parity with the
+    kernel at 5M points / depth 12).
 
     Deeper trees keep ONE exchange of PRE-REDUCED rows: each input
     partition runs an Arrow kernel that encodes its points to finest cells
-    (the float32-faithful reference descent) and rolls the counts up all
-    ``max_depth + 1`` levels with numpy unique/bincount, yielding one
-    partial (cell_id, depth, count) frame per partition; a single groupBy
-    merges the partials. There the occupied-finest count approaches N, and
-    the relational explode of every finest cell into its ancestors measured
-    3-4× slower than the in-kernel rollup at 5M points."""
+    (``encode_cell_ids``) and rolls the counts up all ``max_depth + 1``
+    levels with numpy unique/bincount, yielding one partial (cell_id,
+    depth, count) frame per partition; a single groupBy merges the
+    partials. There the occupied-finest count approaches N, and the
+    relational explode of every finest cell into its ancestors is the
+    slower route (see ``_JVM_COUNTS_MAX_DEPTH``). This rollup is the only
+    Python stage of the module."""
 
     out_schema = "cell_id long, depth int, count long"
 
-    if _jvm_encodable(max_depth, domain):
+    if max_depth <= _JVM_COUNTS_MAX_DEPTH:
         return (
             _prefix_rows(_finest_counts(points, x, y, max_depth, domain), max_depth, max_depth + 1)
             .groupBy("cell_id", "depth")
@@ -273,8 +219,8 @@ def _cells_from_prefix_rows(
     # The extent stop (|x1-x2| >= min_distance OR |y1-y2| >= min_distance,
     # float32) cannot bite while the widest axis of a depth-(max_depth-1)
     # cell is still ≥ 2·min_distance: the float32 descent halves each axis
-    # within 1 ulp per level, so every parent's extent test is TRUE and the
-    # Arrow bbox stage is skipped. (The reference defaults — 1e6 domain,
+    # within 1 ulp per level, so every parent's extent test is TRUE and no
+    # parent bbox is computed. (The reference defaults — 1e6 domain,
     # min_distance 5 — keep the test provably constant through depth 16;
     # deeper trees evaluate it on the candidate parents.)
     max_axis = max(abs(domain[2] - domain[0]), abs(domain[3] - domain[1]))
@@ -294,20 +240,12 @@ def _cells_from_prefix_rows(
         .where(e["candidate"])
     )
     if test_extent:
-        groups = groups.withColumn(
-            "_pg", bbox_struct_col(F.col("parent"), F.col("pdepth"), domain, min_distance)
+        groups = C.with_cell_bbox(
+            groups, max_depth - 1, domain, min_distance,
+            id_col="parent", depth_col="pdepth", out="_pg",
         )
     cells = groups.select(e["emit"]).where(e["emitted"]).drop("_emit")
-    # Output bboxes: pure-JVM twin whenever the depth/domain admits it (the
-    # same gate as the all-JVM count) — no Python stage in the build;
-    # bit-identity with the numpy kernel is pytest-pinned at
-    # with_cell_bbox_jvm. Deeper trees keep the Arrow kernel.
-    if _jvm_encodable(max_depth, domain):
-        cells = C.with_cell_bbox_jvm(cells, max_depth, domain, min_distance)
-    else:
-        cells = cells.withColumn(
-            "g", bbox_struct_col(F.col("cell_id"), F.col("depth"), domain, min_distance)
-        )
+    cells = C.with_cell_bbox(cells, max_depth, domain, min_distance)
     return cells.select(*_aliased(e["out"]))
 
 
@@ -384,17 +322,11 @@ def build_cells(
     count long, is_leaf boolean)`` — semantically identical to the relation
     prepare_boundaries emits (cuda/kernels.cu:517-537), including zero-count
     leaf children of interior nodes. Lazy, and persists nothing of its own:
-    for JVM-encodable trees the finest-cell histogram feeds the parent
-    aggregation directly (two exchanges); deeper trees go through
-    ``counts_from_points`` → ``cells_from_counts``.
+    at every depth and on every domain the finest-cell histogram feeds the
+    parent aggregation directly (two exchanges, no Python stage).
     """
-    if _jvm_encodable(max_depth, domain):
-        rows = _prefix_rows(_finest_counts(points, x, y, max_depth, domain), max_depth, max_depth)
-        return _cells_from_prefix_rows(rows, min_points, min_distance, max_depth, domain)
-    return cells_from_counts(
-        counts_from_points(points, x, y, domain, max_depth),
-        min_points, min_distance, max_depth, domain,
-    )
+    rows = _prefix_rows(_finest_counts(points, x, y, max_depth, domain), max_depth, max_depth)
+    return _cells_from_prefix_rows(rows, min_points, min_distance, max_depth, domain)
 
 
 def validate_cells(

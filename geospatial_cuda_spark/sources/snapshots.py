@@ -205,12 +205,15 @@ class CasFileManifestStore(ManifestStore):
     def __init__(self, manifest_dir: str, torn_token_wait_sec: float = 2.0):
         self.manifest_dir = manifest_dir
         self.torn_token_wait_sec = torn_token_wait_sec
-        os.makedirs(manifest_dir, exist_ok=True)
 
     def _token_path(self, version: int) -> str:
         return os.path.join(self.manifest_dir, f"v{version}.token")
 
     def try_publish(self, version: int, manifest: dict) -> bool:
+        # created by the first publish, not on open: reading a missing table
+        # leaves nothing on disk (read_version and latest_hint treat a
+        # missing file as absent)
+        os.makedirs(self.manifest_dir, exist_ok=True)
         payload = f"payload-{uuid.uuid4().hex}.json"
         ppath = os.path.join(self.manifest_dir, payload)
         with open(ppath, "w") as f:

@@ -33,7 +33,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.cells import cell_id_col
 from ..operators import quadtree as QT
 from ..sources.snapshots import SnapshotTable
 
@@ -64,9 +63,7 @@ class PointTableStream:
         self.compact_threshold = compact_threshold
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            BUCKET_COL, cell_id_col("x", "y", self.bucket_depth)
-        )
+        return QT.with_cell_id(df, self.bucket_depth, out=BUCKET_COL)
 
     def read_points(self) -> DataFrame:
         """Committed point set (manifest-pruned)."""

@@ -115,100 +115,84 @@ def test_sql_expr_matches_float32_kernel(spark, small_points):
         assert np.array_equal(got, want), f"depth={depth}"
 
 
-def test_jvm_expr_matches_float32_kernel(spark, small_points):
-    """The pure-Column (codegen) encode — the hot path for depth ≤ 10 —
-    agrees with the float32 kernel on adversarial inputs: exact level
-    boundaries at every depth, their ±1-ULP float32 neighbors, the edge pack,
-    and random integer AND non-integer coordinates, plus every pair of
-    non-finite, huge and out-of-domain values (1e300 is +inf in float32)."""
-    from pyspark.sql import functions as F
+# the domains every JVM-vs-kernel parity test runs on: the reference
+# domain, where the exact integer prefix reaches depth 10, and two others
+# (a non-square one and a lon/lat box), whose descent starts at the root
+OTHER_DOMAINS = ((0, 0, 1_000_003, 777_777), (-180, -90, 180, 90))
+PARITY_DOMAINS = (DOMAIN,) + OTHER_DOMAINS
 
-    rng = np.random.default_rng(7)
-    vals = []
-    for d in range(1, 14):
-        step = 1e6 / (1 << d)
-        ks = rng.integers(0, 1 << d, size=16)
-        b = (ks * step).astype(np.float32)
-        vals += [b, np.nextafter(b, np.float32(np.inf)), np.nextafter(b, np.float32(-np.inf))]
-    vals.append(rng.integers(0, 1_000_000, size=500).astype(np.float32))
-    vals.append((rng.random(500) * 1e6).astype(np.float32))
+
+def _assert_encode_parity(spark, xs, ys, dtype, domain):
+    """with_cell_id equals encode_cell_ids on the rows (xs, ys) at every
+    depth 0..18 (rows, not pandas: Arrow conversion would turn NaN into
+    null)."""
+    df = spark.createDataFrame(list(zip(xs.tolist(), ys.tolist())), f"x {dtype}, y {dtype}")
+    assert dict(df.dtypes) == {"x": dtype, "y": dtype}
+    for depth in range(0, 19):
+        got = C.with_cell_id(df, depth, domain=domain).toPandas()["cell_id"].to_numpy()
+        with np.errstate(over="ignore"):
+            want = C.encode_cell_ids(xs, ys, depth, domain)  # kernel: np.float32 cast
+        assert np.array_equal(got, want), f"domain={domain} depth={depth}"
+
+
+def test_jvm_expr_matches_float32_kernel(spark, small_points):
+    """The encode (with_cell_id: exact integer prefix, then the staged JVM
+    float32 descent) agrees with the float32 kernel at depths 0..18 on
+    three domains, on adversarial inputs: exact level boundaries at every
+    depth, their ±1-ULP float32 neighbors, the edge pack (scaled into the
+    domain), and random integer AND non-integer coordinates, plus every
+    pair of non-finite, huge and out-of-domain values (1e300 is +inf in
+    float32)."""
     x0, y0 = small_points
-    xs = np.clip(np.concatenate(vals + [x0]), 0, np.float32(999999.94))
-    ys = np.clip(np.concatenate([v[::-1] for v in vals] + [y0]), 0, np.float32(999999.94))
-    with np.errstate(over="ignore"):
-        xs = np.concatenate([xs, _EDGE_X.astype(np.float32)])
-        ys = np.concatenate([ys, _EDGE_Y.astype(np.float32)])
-    # rows, not pandas: Arrow conversion would turn NaN into null
-    df = spark.createDataFrame(list(zip(xs.tolist(), ys.tolist())), "x float, y float")
-    for depth in range(1, 11):
-        got = (
-            df.select(C.cell_id_col_jvm(F.col("x"), F.col("y"), depth).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
-        want = C.encode_cell_ids(xs, ys, depth)
-        assert np.array_equal(got, want), f"depth={depth}"
-    # hybrid path: integer bins to depth 10 + JVM float32 descent beyond —
-    # depths whose boundaries are NOT float32-representable (rounding live)
-    for depth in (11, 12, 13):
-        got = (
-            df.select(C.cell_id_col_jvm_deep(F.col("x"), F.col("y"), depth).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
-        want = C.encode_cell_ids(xs, ys, depth)
-        assert np.array_equal(got, want), f"hybrid depth={depth}"
+    for domain in PARITY_DOMAINS:
+        rng = np.random.default_rng(7)
+        axes = []
+        for lo, hi in ((domain[0], domain[2]), (domain[1], domain[3])):
+            vals = []
+            for d in range(1, 19):
+                step = (hi - lo) / (1 << d)
+                b = (lo + rng.integers(0, 1 << d, size=16) * step).astype(np.float32)
+                vals += [b, np.nextafter(b, np.float32(np.inf)), np.nextafter(b, np.float32(-np.inf))]
+            vals.append((lo + rng.integers(0, int(hi - lo), size=500)).astype(np.float32))
+            vals.append((lo + rng.random(500) * (hi - lo)).astype(np.float32))
+            vals.append((lo + x0.astype(np.float64) * ((hi - lo) / 1e6)).astype(np.float32))
+            top = np.nextafter(np.float32(hi), np.float32(-np.inf))
+            axes.append(np.clip(np.concatenate(vals), np.float32(lo), top))
+        xs, ys = axes[0], axes[1][::-1]
+        with np.errstate(over="ignore"):
+            xs = np.concatenate([xs, _EDGE_X.astype(np.float32)])
+            ys = np.concatenate([ys, _EDGE_Y.astype(np.float32)])
+        _assert_encode_parity(spark, xs, ys, "float", domain)
 
 
 def test_jvm_parity_on_raw_double_boundary_neighborhood(spark, small_points):
     """Adversarial RAW-DOUBLE inputs — NOT pre-cast to float32 — within ±half
-    a float32 ULP of level boundaries at every depth (ADVICE r2). The JVM
-    paths quantize to float32 FIRST (functions/cells.py _axis_bin_col
-    ``cast('float').cast('double')``); an implementation comparing the raw
-    double against the boundary would bin these inputs the other way, so this
-    pins the quantize-first fix with inputs that reach the cast itself.
-    Every pair of NaN, ±inf, ±1e300, out-of-domain and domain-edge values
-    rides along: the JVM binning clamps in double before the float cast,
-    so none of them overflows ceil's long (ANSI would raise)."""
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(23)
-    vals = []
-    for d in range(1, 14):
-        step = 1e6 / (1 << d)  # exact in float64 for d <= 13 (1e6 = 2^6·5^6)
-        b = rng.integers(1, 1 << d, size=12).astype(np.float64) * step
-        ulp = np.spacing(b.astype(np.float32)).astype(np.float64)
-        for f in (-0.5, -0.49, -0.25, 0.0, 0.25, 0.49, 0.5):
-            vals.append(b + f * ulp)
+    a float32 ULP of level boundaries at depths 1..18, on three domains
+    (ADVICE r2). The encode quantizes to float32 FIRST (``_axis_bin_col``'s
+    ``cast('float').cast('double')`` in the exact prefix, ``cast('float')``
+    in the descent); an implementation comparing the raw double against the
+    boundary would bin these inputs the other way, so this pins the
+    quantize-first rule with inputs that reach the cast itself. Every pair
+    of NaN, ±inf, ±1e300, out-of-domain and domain-edge values rides along:
+    the JVM binning clamps in double before the float cast, so none of them
+    overflows ceil's long (ANSI would raise)."""
     x0, y0 = small_points
-    xs = np.clip(np.concatenate(vals + [x0.astype(np.float64)]), 0.0, 999999.9)
-    ys = np.clip(
-        np.concatenate([v[::-1] for v in vals] + [y0.astype(np.float64)]),
-        0.0,
-        999999.9,
-    )
-    xs, ys = np.concatenate([xs, _EDGE_X]), np.concatenate([ys, _EDGE_Y])
-    # rows, not pandas: Arrow conversion would turn NaN into null
-    df = spark.createDataFrame(list(zip(xs.tolist(), ys.tolist())), "x double, y double")
-    assert dict(df.dtypes) == {"x": "double", "y": "double"}
-    for depth in range(1, 11):
-        got = (
-            df.select(C.cell_id_col_jvm(F.col("x"), F.col("y"), depth).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
-        with np.errstate(over="ignore"):
-            want = C.encode_cell_ids(xs, ys, depth)  # kernel: np.float32 cast
-        assert np.array_equal(got, want), f"depth={depth}"
-    for depth in (11, 12, 13):
-        got = (
-            df.select(C.cell_id_col_jvm_deep(F.col("x"), F.col("y"), depth).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
-        with np.errstate(over="ignore"):
-            want = C.encode_cell_ids(xs, ys, depth)
-        assert np.array_equal(got, want), f"hybrid depth={depth}"
+    for domain in PARITY_DOMAINS:
+        rng = np.random.default_rng(23)
+        axes = []
+        for (lo, hi), c0 in (((domain[0], domain[2]), x0), ((domain[1], domain[3]), y0)):
+            vals = []
+            for d in range(1, 19):
+                step = (hi - lo) / (1 << d)  # exact in float64: a power-of-two scaling
+                b = lo + rng.integers(1, 1 << d, size=12).astype(np.float64) * step
+                ulp = np.spacing(b.astype(np.float32)).astype(np.float64)
+                for f in (-0.5, -0.49, -0.25, 0.0, 0.25, 0.49, 0.5):
+                    vals.append(b + f * ulp)
+            vals.append(lo + c0.astype(np.float64) * ((hi - lo) / 1e6))
+            axes.append(np.clip(np.concatenate(vals), lo, hi - (hi - lo) * 1e-7))
+        xs, ys = axes[0], axes[1][::-1]
+        xs, ys = np.concatenate([xs, _EDGE_X]), np.concatenate([ys, _EDGE_Y])
+        _assert_encode_parity(spark, xs, ys, "double", domain)
 
 
 def test_oracle_tree_invariants(small_points):
@@ -225,14 +209,14 @@ def test_oracle_tree_invariants(small_points):
 
 
 def test_bbox_jvm_matches_float32_kernel(spark):
-    """The pure-Column mixed-depth bbox (with_cell_bbox_jvm — the build's
-    output stage for depth ≤ 13) is BIT-identical to the numpy float32
-    descent kernel: exhaustive over every cell to depth 5, random samples
-    including the id-range edges at 6..13, at the shallow-only (8), the
-    pipeline (12) and the ceiling (13) dispatch depths. extent_ok parity is
-    asserted under the same float32 comparison the kernel runs."""
+    """The mixed-depth bbox (with_cell_bbox — the build's only bbox) is
+    BIT-identical to the numpy float32 descent kernel: exhaustive over every
+    cell to depth 5, random samples including the id-range edges at
+    6..18, at max depths 8 (exact prefix only), 12, 13 and 18 on the
+    reference domain and 8 and 18 on a non-square one (descent from the
+    root). extent_ok parity is asserted under the same float32 comparison
+    the kernel runs."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     rng = np.random.default_rng(7)
     ids_l, ds_l = [], []
@@ -240,7 +224,7 @@ def test_bbox_jvm_matches_float32_kernel(spark):
         lo, hi = (4**d - 1) // 3, (4 ** (d + 1) - 4) // 3
         ids_l.append(np.arange(lo, hi + 1, dtype=np.int64))
         ds_l.append(np.full(ids_l[-1].size, d, np.int32))
-    for d in range(6, 14):
+    for d in range(6, 19):
         lo, hi = (4**d - 1) // 3, (4 ** (d + 1) - 4) // 3
         ids_l.append(
             np.unique(np.concatenate([rng.integers(lo, hi + 1, 1500), [lo, hi]]))
@@ -249,38 +233,46 @@ def test_bbox_jvm_matches_float32_kernel(spark):
     ids = np.concatenate(ids_l)
     ds = np.concatenate(ds_l)
 
-    exp = {k: np.empty(ids.size, np.float32) for k in ("x1", "y1", "x2", "y2")}
-    for d in np.unique(ds):
-        m = ds == d
-        exp["x1"][m], exp["y1"][m], exp["x2"][m], exp["y2"][m] = C.cell_bbox(
-            ids[m], int(d), DOMAIN
+    for domain, max_depths in ((DOMAIN, (8, 12, 13, 18)), (OTHER_DOMAINS[0], (8, 18))):
+        exp = {k: np.empty(ids.size, np.float32) for k in ("x1", "y1", "x2", "y2")}
+        for d in np.unique(ds):
+            m = ds == d
+            exp["x1"][m], exp["y1"][m], exp["x2"][m], exp["y2"][m] = C.cell_bbox(
+                ids[m], int(d), domain
+            )
+        exp_ok = (np.abs(exp["x1"] - exp["x2"]) >= np.float32(5.0)) | (
+            np.abs(exp["y1"] - exp["y2"]) >= np.float32(5.0)
         )
-    exp_ok = (np.abs(exp["x1"] - exp["x2"]) >= np.float32(5.0)) | (
-        np.abs(exp["y1"] - exp["y2"]) >= np.float32(5.0)
-    )
-
-    for max_depth in (8, 12, 13):
-        sel = ds <= max_depth
-        df = spark.createDataFrame(
-            pd.DataFrame({"cell_id": ids[sel], "depth": ds[sel]})
-        )
-        got = (
-            C.with_cell_bbox_jvm(df, max_depth, DOMAIN, 5.0)
-            .select("cell_id", "g.min_x", "g.min_y", "g.max_x", "g.max_y", "g.extent_ok")
-            .orderBy("cell_id")
-            .toPandas()
-        )
-        order = np.argsort(ids[sel], kind="stable")
-        assert np.array_equal(got["min_x"].to_numpy(np.float32), exp["x1"][sel][order])
-        assert np.array_equal(got["min_y"].to_numpy(np.float32), exp["y1"][sel][order])
-        assert np.array_equal(got["max_x"].to_numpy(np.float32), exp["x2"][sel][order])
-        assert np.array_equal(got["max_y"].to_numpy(np.float32), exp["y2"][sel][order])
-        assert np.array_equal(got["extent_ok"].to_numpy(bool), exp_ok[sel][order])
+        for max_depth in max_depths:
+            sel = ds <= max_depth
+            df = spark.createDataFrame(
+                pd.DataFrame({"cell_id": ids[sel], "depth": ds[sel]})
+            )
+            got = (
+                C.with_cell_bbox(df, max_depth, domain, 5.0)
+                .select("cell_id", "g.min_x", "g.min_y", "g.max_x", "g.max_y", "g.extent_ok")
+                .orderBy("cell_id")
+                .toPandas()
+            )
+            order = np.argsort(ids[sel], kind="stable")
+            where = f"domain={domain} max_depth={max_depth}"
+            for col, key in (("min_x", "x1"), ("min_y", "y1"), ("max_x", "x2"), ("max_y", "y2")):
+                assert np.array_equal(
+                    got[col].to_numpy(np.float32), exp[key][sel][order]
+                ), (where, col)
+            assert np.array_equal(got["extent_ok"].to_numpy(bool), exp_ok[sel][order]), where
 
 
 def test_bbox_jvm_rejects_staged_name_collision(spark):
-    """A caller column named like one of with_cell_bbox_jvm's staged _bb_*
-    columns raises instead of being silently overwritten and dropped."""
+    """A caller column named like one of with_cell_bbox's staged _bb_*
+    columns, or one of with_cell_id's staged _ci_* columns, raises instead
+    of being silently overwritten and dropped."""
     df = spark.createDataFrame([(5, 1, 2.5)], "cell_id long, depth int, _bb_row double")
     with pytest.raises(ValueError, match="_bb_row"):
-        C.with_cell_bbox_jvm(df, 8)
+        C.with_cell_bbox(df, 8)
+    pts = spark.createDataFrame([(1.0, 2.0, 3.0)], "x double, y double, _ci_x2 double")
+    for domain, depth in ((DOMAIN, 12), (OTHER_DOMAINS[0], 3)):
+        with pytest.raises(ValueError, match="_ci_x2"):
+            C.with_cell_id(pts, depth, domain=domain)
+    # through the exact prefix no column is staged, so none can collide
+    assert C.with_cell_id(pts, 10).columns == ["x", "y", "_ci_x2", "cell_id"]

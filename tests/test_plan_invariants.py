@@ -164,3 +164,23 @@ def test_serve_requests_run_few_jobs(spark):
     finally:
         for df in (pts, cells, points):
             df.unpersist()
+
+
+def test_no_python_in_encode_or_bbox(spark, small_points_df):
+    """The encode and the bbox have one rendering each, in the JVM: the
+    executed plans of a depth-18 build and a depth-18 encode hold no Python
+    evaluation node. The counts relation past depth 13 keeps exactly one,
+    its in-kernel rollup."""
+    from geospatial_cuda_spark.operators import quadtree as QT
+    from geospatial_cuda_spark.planaudit import plan_nodes
+
+    def python_nodes(df) -> list[str]:
+        df.collect()
+        return [n.nodeName() for n in plan_nodes(df) if n.nodeName() in PYTHON_NODES]
+
+    # a plan of its own: other tests persist these relations over the
+    # shared fixture, and a cached scan would hide the plan under test
+    pts = small_points_df.where("pid >= 0")
+    assert python_nodes(QT.build_cells(pts, max_depth=18)) == []
+    assert python_nodes(QT.with_cell_id(pts, 18)) == []
+    assert python_nodes(QT.counts_from_points(pts, max_depth=18)) == ["MapInPandas"]

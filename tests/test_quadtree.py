@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_cuda_spark import oracle
+from geospatial_cuda_spark import DOMAIN, oracle
 from geospatial_cuda_spark.operators import quadtree as QT
 
 
@@ -39,13 +39,28 @@ ORACLE_INPUTS = {
 EMPTY_PARTITIONS_SLICES = 16
 
 
-@pytest.mark.parametrize("max_depth", [8, 12, 13, 14, 18])
-@pytest.mark.parametrize("case", list(ORACLE_INPUTS))
-def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
+# run_inference's square (0, 0, max_size, max_size) at max_size 1000, and a
+# non-square domain; the inputs are scaled into each
+OTHER_DOMAINS = {"square1000": (0, 0, 1000, 1000), "nonsquare": (0, 0, 1_000_003, 777_777)}
+ORACLE_CASES = [
+    pytest.param(case, max_depth, None, id=f"{case}-{max_depth}")
+    for max_depth in (8, 12, 13, 14, 18)
+    for case in ORACLE_INPUTS
+] + [
+    pytest.param(case, max_depth, name, id=f"{case}-{max_depth}-{name}")
+    for name in OTHER_DOMAINS
+    for max_depth in (8, 12, 18)
+    for case in ORACLE_INPUTS
+]
+
+
+@pytest.mark.parametrize("case, max_depth, domain_name", ORACLE_CASES)
+def test_cells_relation_equals_oracle(spark, small_points, case, max_depth, domain_name):
     """build_cells equals the recursive oracle row for row on every input,
-    through the JVM route (depth ≤ 13) and the Arrow-kernel counts route
-    (14, and 18 where the extent stop is evaluated). The JVM route's
-    executed plan is the one-aggregation shape: two shuffle exchanges (the
+    at depths 8 to 18 (the extent stop is evaluated at 18 on the reference
+    domain and at every depth on the 1000-wide one) and on two domains
+    besides the reference one. Its executed plan is the one-aggregation
+    shape at every depth and on every domain: two shuffle exchanges (the
     finest-cell histogram and the parent aggregation), no join and no
     cached-relation scan; the empty input also gets its root row, and
     empty partitions change neither the rows nor the plan shape."""
@@ -54,7 +69,11 @@ def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
     from geospatial_cuda_spark.planaudit import plan_nodes
 
     x, y = ORACLE_INPUTS[case] or small_points
-    root = oracle.build_quadtree(x, y, max_depth=max_depth)
+    domain = OTHER_DOMAINS.get(domain_name, DOMAIN)
+    if domain_name:
+        x = (domain[0] + x.astype(np.float64) * ((domain[2] - domain[0]) / 1e6)).astype(np.float32)
+        y = (domain[1] + y.astype(np.float64) * ((domain[3] - domain[1]) / 1e6)).astype(np.float32)
+    root = oracle.build_quadtree(x, y, domain, max_depth=max_depth)
     want = {r["cell_id"]: r for r in oracle.cells_relation(root)}
     if case == "empty_partitions":
         rows = [(float(a), float(b)) for a, b in zip(x, y)]
@@ -64,7 +83,7 @@ def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
         assert pts.rdd.getNumPartitions() == EMPTY_PARTITIONS_SLICES
     else:
         pts = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}), "x float, y float")
-    cells = QT.build_cells(pts, max_depth=max_depth)
+    cells = QT.build_cells(pts, domain=domain, max_depth=max_depth)
     got = {r.cell_id: r for r in cells.collect()}
     assert set(got) == set(want)
     for cid, w in want.items():
@@ -78,12 +97,11 @@ def test_cells_relation_equals_oracle(spark, small_points, case, max_depth):
             np.float32(w["max_x"]),
             np.float32(w["max_y"]),
         ), cid
-    if max_depth <= 13:
-        names = [node.nodeName() for node in plan_nodes(cells)]
-        # AQE drops the histogram's exchange once it sees an empty input
-        assert names.count("Exchange") == (2 if x.size else 1), names
-        assert not any("Join" in name for name in names), names
-        assert "InMemoryTableScan" not in names, names
+    names = [node.nodeName() for node in plan_nodes(cells)]
+    # AQE drops the histogram's exchange once it sees an empty input
+    assert names.count("Exchange") == (2 if x.size else 1), names
+    assert not any("Join" in name for name in names), names
+    assert "InMemoryTableScan" not in names, names
 
 
 def test_cells_from_deeper_counts_equals_build(spark, small_points_df):
@@ -97,25 +115,41 @@ def test_cells_from_deeper_counts_equals_build(spark, small_points_df):
 
 def test_warm_build_reuses_cached_column_trees(spark, small_points_df, monkeypatch):
     """The build's heavy Column trees are rendered once per SparkContext:
-    constructing a second build_cells plan makes at most 1,000 py4j round
-    trips (about 8,000 when every call rebuilt them), and a repeated
-    cell_id_col key returns the cached JVM object."""
+    constructing a second build_cells plan, at depth 12 or 18, makes at most
+    1,000 py4j round trips (about 8,000 at depth 12 when every call rebuilt
+    them), and a repeated with_cell_id key reuses its cached stage Columns
+    instead of building them again."""
+    import gc
+
     from geospatial_cuda_spark.functions import cells as C
 
-    QT.build_cells(small_points_df, max_depth=12)
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
-    sent = []
+    for max_depth in (12, 18):
+        QT.build_cells(small_points_df, max_depth=max_depth)
+        # free earlier garbage first: py4j sends one round trip per
+        # collected JVM proxy, whenever the collector runs
+        gc.collect()
+        sent = []
 
-    def counting(*args, **kwargs):
-        sent.append(1)
-        return send(*args, **kwargs)
+        def counting(*args, **kwargs):
+            sent.append(1)
+            return send(*args, **kwargs)
 
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            QT.build_cells(small_points_df, max_depth=max_depth)
+        assert 0 < len(sent) <= 1000, (max_depth, len(sent))
+
+    built = []
+    stages = C._cell_id_stages
     with monkeypatch.context() as m:
-        m.setattr(client, "send_command", counting)
-        QT.build_cells(small_points_df, max_depth=12)
-    assert 0 < len(sent) <= 1000, len(sent)
-    assert C.cell_id_col("x", "y", 12)._jc is C.cell_id_col("x", "y", 12)._jc
+        m.setattr(C, "_cell_id_stages", lambda *a: built.append(a) or stages(*a))
+        for _ in range(2):
+            # a key no other test builds (names swapped), then the build's own
+            C.with_cell_id(small_points_df, 13, x="y", y="x")
+            C.with_cell_id(small_points_df, 18)
+    assert built == [("y", "x", 13, DOMAIN)], built
 
 
 def test_no_point_outside_leaf(spark, small_points_df):
@@ -292,11 +326,7 @@ def test_cell_cardinality_kmv_accuracy(spark):
         F.col("id").alias("pid"),
     )
     import geospatial_cuda_spark.contract.fixtures as _ep
-    hs = few.select(
-        F.md5(
-            __import__("geospatial_cuda_spark.functions.cells", fromlist=["cells"])
-            .cell_id_col(F.col("x"), F.col("y"), _ep.KMV_DEPTH)
-            .cast("string")
-        ).alias("h")
+    hs = QT.with_cell_id(few, _ep.KMV_DEPTH).select(
+        F.md5(F.col("cell_id").cast("string")).alias("h")
     ).distinct()
     assert hs.count() == 40  # sanity: small branch would return k itself

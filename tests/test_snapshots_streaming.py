@@ -915,6 +915,20 @@ def test_casfile_store_end_to_end_commit_delta_read(spark, bucketed_df, tmp_path
     assert got == want
 
 
+def test_opening_missing_table_creates_nothing(spark, bucketed_df, tmp_path):
+    """Opening, reading and vacuuming a path that holds no table leave no
+    directory behind; the first commit creates the commit log and
+    publishes v1."""
+    path = str(tmp_path / "missing" / "t")
+    snap = SnapshotTable(path)
+    assert snap.current() is None
+    assert snap.vacuum() == 0
+    assert not os.path.exists(tmp_path / "missing")
+    snap.commit(bucketed_df, "bucket")
+    assert snap.current()["version"] == 1
+    assert SnapshotTable(path).current()["version"] == 1
+
+
 def _batch(spark, lo, hi):
     """Rows with pid in [lo, hi) whose bucket values are unique to the range
     (commit appends whole NEW buckets; reusing a bucket would conflict)."""

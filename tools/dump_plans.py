@@ -333,8 +333,9 @@ scale-relevant properties the plan must exhibit, then the actual
 - `PushedFilters` / `ReadSchema`: scans are pruned to the referenced columns;
 - `BatchEvalPython` must never appear (row-at-a-time Python);
   `ArrowEvalPython` / `MapInPandas` only where the operator is genuinely
-  non-relational (float32 descent beyond depth 10, pixel kernels, partial
-  top-k);
+  non-relational (search candidates, the counts rollup past depth 13,
+  pixel kernels, partial top-k) — never in the cell encode or bbox, which
+  run in the JVM at every depth;
 - join strategy: broadcast for small dims, shuffled hash/sort-merge for
   big-big, BroadcastNestedLoopJoin only where `planaudit.BNLJ_ALLOWED`
   allows it (the broadcast range joins and bounded single-row products);
