@@ -421,7 +421,12 @@ def with_cell_id(
     2-3× slower at depths 16-18). The stage Columns are rendered once per
     SparkContext (``cached_column``); the staged ``_ci_*`` names are
     dropped before returning, and an input column named like one raises
-    ``ValueError``."""
+    ``ValueError``.
+
+    No filter is pushed below an encode that goes past the exact prefix
+    (depth 10 on ``DOMAIN``, depth 0 on any other domain), not even one on
+    a pass-through column such as ``pid`` or ``x``: the staged result is
+    fenced (see ``_with_stages``). Filter the input before encoding it."""
     staged = cached_column(
         ("cell_id", x, y, depth, tuple(domain)),
         lambda: _jvm_stages(*_cell_id_stages(x, y, depth, domain)),
@@ -505,7 +510,11 @@ def with_cell_bbox(df, max_depth: int, domain=DOMAIN, min_distance: float = 5.0,
     ops on shared locals and the stage stays a single WholeStageCodegen
     span. The stage Columns are cached per SparkContext
     (``cached_column``); the staged ``_bb_*`` names are dropped before
-    returning, and an input column named like one raises ``ValueError``."""
+    returning, and an input column named like one raises ``ValueError``.
+
+    No filter is pushed below this projection, not even one on a
+    pass-through column: the staged result is fenced (see
+    ``_with_stages``). Filter the cell rows before attaching the bbox."""
     staged = cached_column(
         ("cell_bbox", id_col, depth_col, max_depth, tuple(domain), float(min_distance)),
         lambda: _jvm_stages(*_cell_bbox_stages(id_col, depth_col, max_depth, domain, min_distance)),

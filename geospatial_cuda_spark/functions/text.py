@@ -11,8 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-EN_MARKERS = ("the", "and", "of")
-
 
 def token_count_col(text: Column) -> Column:
     """Whitespace tokens; empty string counts 0."""

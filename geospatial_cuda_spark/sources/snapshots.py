@@ -9,12 +9,16 @@ set per bucket (file-level manifests — the Iceberg read model), pending
 merge-on-read delta batches per bucket, and wall-clock/row throughput
 metrics.
 
-Every write — ``commit``, ``overwrite_buckets``, ``append_deltas`` (with
-its compaction) and ``rollback`` — is one edit of a copy of the parent
-manifest, published by the one commit core ``SnapshotTable._publish``; the
-data-writing ones share one write step (``SnapshotTable._write``: staged
-append, NULL-bucket check, footer rows and stats). Every manifest carries
-``files`` and ``schema``; one without them is ``SnapshotCorruptError``.
+Every write — ``commit``, ``append_deltas`` (with its compaction) and
+``rollback`` — is one edit of a copy of the parent manifest, published by
+the one commit core ``SnapshotTable._publish``; the data-writing ones share
+one write step (``SnapshotTable._write``: staged append, NULL-bucket check,
+footer rows and stats). Every manifest carries ``files`` and ``schema``;
+one without them is ``SnapshotCorruptError``. The on-disk layout
+(``data/{bucket_col}={bucket}/{file}`` for base files, the same under
+``deltas/`` for delta batches) is known to this module alone: every reader,
+``rollback``'s vacuumed-file check and ``vacuum`` list a manifest's files
+through ``SnapshotTable._files``.
 
 Guarantees:
 - ``commit`` writes ONLY buckets not yet committed (idempotent resume: a
@@ -23,11 +27,12 @@ Guarantees:
   never see uncommitted files because ``read`` loads exactly the manifest's
   file set);
 - writes are append-only: no overwrite mode, no driver-side staging-rename
-  loop; upserts either repoint the touched buckets' file lists
-  (``overwrite_buckets``, copy-on-write) or append per-bucket delta batches
-  applied at read time (``append_deltas``, merge-on-read — per-batch bytes
-  written ∝ batch size, never bucket size) and leave prior snapshots' files
-  on disk (snapshot isolation; ``vacuum`` collects);
+  loop. An upsert appends one per-bucket delta batch applied at read time
+  (``append_deltas``, merge-on-read — per-batch bytes written ∝ batch size,
+  never bucket size). Its compaction is the only write that replaces a
+  bucket's base files: the merged state is appended as fresh files and the
+  bucket repointed at them; ``rollback`` only repoints. Prior snapshots'
+  files stay on disk (snapshot isolation; ``vacuum`` collects);
 - manifest publication is an atomic COMPARE-AND-SWAP through the
   ``ManifestStore`` seam (create version N iff absent), so two committers
   that derived the same parent race on the same version and exactly one
@@ -72,8 +77,8 @@ _PAYLOAD_NAME = re.compile(r"payload-[0-9a-f]{32}\.json")
 
 
 class SnapshotIncrementalError(RuntimeError):
-    """``read_changes`` found a non-append snapshot (overwrite, merge-on-read
-    delta batch, or compaction) inside the requested version range. File
+    """``read_changes`` found a non-append snapshot (merge-on-read delta
+    batch, compaction, or rollback) inside the requested version range. File
     replacement cannot be expressed as "rows added", so the incremental
     contract would silently double-count or miss rows — the Iceberg
     incremental-append-scan rule: refuse and let the caller fall back to a
@@ -298,21 +303,16 @@ class CasFileManifestStore(ManifestStore):
 class InMemoryManifestStore(ManifestStore):
     """Reference in-memory backend modeling a conditional-PUT object store /
     catalog (used by the race tests to prove SnapshotTable's protocol is
-    backend-independent). ``fail_hint_after_publish`` simulates a publisher
-    crash between the conditional PUT and the pointer repoint — the window
-    the roll-forward read heals."""
+    backend-independent)."""
 
-    def __init__(self, fail_hint_after_publish: bool = False):
+    def __init__(self):
         self.versions: dict[int, str] = {}
         self.hint = 0
-        self.fail_hint_after_publish = fail_hint_after_publish
 
     def try_publish(self, version: int, manifest: dict) -> bool:
         if version in self.versions:  # conditional PUT: If-None-Match: *
             return False
         self.versions[version] = json.dumps(manifest, sort_keys=True)
-        if self.fail_hint_after_publish:
-            raise RuntimeError("simulated crash after publish, before hint")
         return True
 
     def read_version(self, version: int) -> dict | None:
@@ -422,6 +422,24 @@ class SnapshotTable:
         dl = (m.get("deltas") or {}) if m else {}
         return {b: (bk.get(b), fl.get(b), dl.get(b)) for b in buckets}
 
+    def _files(self, m: dict, keep=None):
+        """(seq, bucket, full path) of every file manifest ``m`` references:
+        its base files at seq 0, then each delta batch's files at the
+        batch's sequence number (the order ``_merged_state`` folds them
+        in). ``keep(bucket, file)``, if given, selects the files yielded.
+        This is where a manifest entry becomes a path on disk."""
+        col = m["bucket_col"]
+        refs = [(0, b, fs) for b, fs in m["files"].items()] + [
+            (seq, b, fs)
+            for b, batches in (m.get("deltas") or {}).items()
+            for seq, fs in batches
+        ]
+        for seq, b, fs in refs:
+            bdir = os.path.join(self.delta_dir if seq else self.data_dir, f"{col}={b}")
+            for f in fs:
+                if keep is None or keep(b, f):
+                    yield seq, b, os.path.join(bdir, f)
+
     def _publish(
         self, parent: dict | None, edit, metrics: dict, touched=(), max_retries: int = 5
     ) -> dict:
@@ -512,20 +530,22 @@ class SnapshotTable:
 
     # -- write path ----------------------------------------------------------
 
-    def _bucket_files(self, bucket_col: str, root: str | None = None) -> dict[str, set[str]]:
-        """{bucket value: parquet file names} currently on disk (metadata-only
-        directory listing, no data read)."""
-        out: dict[str, set[str]] = {}
-        prefix = f"{bucket_col}="
-        root = root or self.data_dir
-        if not os.path.isdir(root):
-            return out
-        for d in os.listdir(root):
-            if d.startswith(prefix):
-                bdir = os.path.join(root, d)
-                out[d[len(prefix):]] = {
-                    f for f in os.listdir(bdir) if f.endswith(".parquet")
-                }
+    def _disk_files(self, bucket_col: str) -> list[str]:
+        """Full paths of the parquet files currently in the base and delta
+        bucket directories (metadata-only directory listing, no data
+        read)."""
+        out: list[str] = []
+        for root in (self.data_dir, self.delta_dir):
+            if not os.path.isdir(root):
+                continue
+            for d in os.listdir(root):
+                if d.startswith(f"{bucket_col}="):
+                    bdir = os.path.join(root, d)
+                    out += [
+                        os.path.join(bdir, f)
+                        for f in os.listdir(bdir)
+                        if f.endswith(".parquet")
+                    ]
         return out
 
     # parquet physical types whose footer min/max are exact and totally
@@ -674,44 +694,6 @@ class SnapshotTable:
         m = self._publish(parent, edit, self._write_metrics(t0, rows))
         return {"written_buckets": len(rows), "snapshot": m}
 
-    def overwrite_buckets(
-        self, df: DataFrame, bucket_col: str, buckets: list[str]
-    ) -> dict:
-        """Copy-on-write upsert: logically replace EXACTLY the given buckets
-        and publish one new snapshot. ``df`` must hold all surviving rows of
-        those buckets (rows of other buckets are filtered out defensively).
-        Physically this APPENDS the survivors as new files and repoints the
-        manifest's file set for the touched buckets — the previous snapshot's
-        files stay on disk untouched (snapshot isolation / time travel; see
-        ``vacuum``). A listed bucket that ends up with zero surviving rows is
-        dropped from the manifest; any pending merge-on-read deltas of the
-        touched buckets are superseded (cleared). A concurrent snapshot that
-        changed the touched buckets raises SnapshotConflictError (the
-        survivors were computed from a stale read).
-
-        I/O is O(touched buckets), never O(table) — but a batch touching one
-        hot bucket still rewrites that whole bucket; for per-batch bytes
-        ∝ batch size use ``append_deltas`` (merge-on-read)."""
-        t0 = time.time()
-        parent = self._checked(self.current())
-        bset = sorted({str(b) for b in buckets})
-        bstr = F.col(bucket_col).cast("string")
-        files, rows, stats = self._write(
-            df.where(bstr.isin(bset) | bstr.isNull()), bucket_col
-        )
-
-        def edit(child: dict) -> None:
-            self._evolve_schema(child, df, bucket_col, "overwrite_buckets")
-            for key in ("buckets", "files", "stats", "deltas"):
-                for b in bset:
-                    child.get(key, {}).pop(b, None)
-            child["buckets"].update(rows)
-            child["files"].update(files)
-            child.setdefault("stats", {}).update(stats)
-
-        m = self._publish(parent, edit, self._write_metrics(t0, rows), touched=bset)
-        return {"written_buckets": len(rows), "snapshot": m}
-
     # -- merge-on-read deltas -------------------------------------------------
 
     def append_deltas(
@@ -796,7 +778,6 @@ class SnapshotTable:
         ``snapshot_changes`` stream) see a non-append step and refuse the
         range, as they must."""
         target = self._manifest(to_version)
-        bucket_col = target["bucket_col"]
 
         def edit(child: dict) -> None:
             # re-checked on every attempt so a vacuum racing a CAS retry
@@ -804,23 +785,12 @@ class SnapshotTable:
             # between the last check and the publish is the same one Iceberg
             # accepts (concurrent expire_snapshots + rollback is operator
             # error either way)
-            missing = [
-                os.path.join(f"{bucket_col}={b}", f)
-                for b, fs in target["files"].items()
-                for f in fs
-                if not os.path.exists(os.path.join(self.data_dir, f"{bucket_col}={b}", f))
-            ] + [
-                os.path.join("deltas", f"{bucket_col}={b}", f)
-                for b, batches in (target.get("deltas") or {}).items()
-                for _, fs in batches
-                for f in fs
-                if not os.path.exists(os.path.join(self.delta_dir, f"{bucket_col}={b}", f))
-            ]
+            missing = [p for _, _, p in self._files(target) if not os.path.exists(p)]
             if missing:
                 raise SnapshotVacuumedError(
                     f"rollback to v{to_version} impossible: {len(missing)} "
                     f"of its data/delta files were vacuumed "
-                    f"(first: {missing[0]})"
+                    f"(first: {os.path.relpath(missing[0], self.path)})"
                 )
             for k in [k for k in child if k not in self._LINEAGE]:
                 del child[k]
@@ -884,38 +854,26 @@ class SnapshotTable:
         bucket_col = m["bucket_col"]
         keys = m["delta_key"]
         op = m["delta_op"]
-        deltas = {
-            b: v for b, v in (m.get("deltas") or {}).items()
+        pending = {
+            b for b, v in (m.get("deltas") or {}).items()
             if v and (restrict is None or b in restrict)
         }
-        base_paths = [
-            os.path.join(self.data_dir, f"{bucket_col}={b}", f)
-            for b in deltas
-            for f in m["files"].get(b, [])
-        ]
-        # group same-seq files across buckets into one read
+        # the pending buckets' base files (seq 0) and delta batches; same-seq
+        # files across buckets load as one read
         by_seq: dict[int, list[str]] = {}
-        for b, v in deltas.items():
-            for seq, files in v:
-                by_seq.setdefault(seq, []).extend(
-                    os.path.join(self.delta_dir, f"{bucket_col}={b}", f) for f in files
-                )
+        for seq, _, p in self._files(m, keep=lambda b, f: b in pending):
+            by_seq.setdefault(seq, []).append(p)
         state_cols = [f["name"] for f in m["schema"]]
-        # delta batches read under the table schema plus the op transport
-        # column: batches written before a column evolution null-fill it
-        parts = [
-            self._scan(spark, m, self.delta_dir, by_seq[seq], op=op).select(
-                *state_cols, F.col(op).alias("_ev"), F.lit(seq).alias("_seq")
-            )
-            for seq in sorted(by_seq)
-        ]
-        if base_paths:
-            parts.insert(
-                0,
-                self._scan(spark, m, self.data_dir, base_paths).select(
-                    *state_cols, F.lit("b").alias("_ev"), F.lit(0).alias("_seq")
-                ),
-            )
+        parts = []
+        for seq in sorted(by_seq):
+            if seq:
+                # delta batches read under the table schema plus the op
+                # transport column: batches written before a column
+                # evolution null-fill it
+                df, kind = self._scan(spark, m, by_seq[seq], op=op), F.col(op)
+            else:
+                df, kind = self._scan(spark, m, by_seq[seq]), F.lit("b")
+            parts.append(df.select(*state_cols, kind.alias("_ev"), F.lit(seq).alias("_seq")))
         ev = parts[0]
         for p in parts[1:]:
             ev = ev.unionByName(p)
@@ -948,25 +906,12 @@ class SnapshotTable:
         m = self._checked(self.current())
         if m is None:
             return 0
-        bucket_col = m["bucket_col"]
-        live = {(b, f) for b, fs in m["files"].items() for f in fs}
-        live_delta = {
-            (b, f)
-            for b, v in (m.get("deltas") or {}).items()
-            for _, fs in v
-            for f in fs
-        }
+        live = {p for _, _, p in self._files(m)}
         removed = 0
-        for b, files in self._bucket_files(bucket_col).items():
-            for f in files:
-                if (b, f) not in live:
-                    os.remove(os.path.join(self.data_dir, f"{bucket_col}={b}", f))
-                    removed += 1
-        for b, files in self._bucket_files(bucket_col, self.delta_dir).items():
-            for f in files:
-                if (b, f) not in live_delta:
-                    os.remove(os.path.join(self.delta_dir, f"{bucket_col}={b}", f))
-                    removed += 1
+        for p in self._disk_files(m["bucket_col"]):
+            if p not in live:
+                os.remove(p)
+                removed += 1
         # staging residue from writers that crashed mid-move — only stages
         # whose NEWEST file/dir mtime is older than the grace window. The
         # top-level dir mtime alone is set at job start, so a live writer
@@ -998,9 +943,9 @@ class SnapshotTable:
         after-minus-before listing diff can swallow a CONCURRENT writer's
         not-yet-published files landing between the two listings; claimed by
         this manifest, they would resurrect the loser's aborted rows —
-        which is why EVERY write path (commit, overwrite, deltas,
-        compaction) routes through here since r4. The move is O(this job's
-        files) driver renames — same-filesystem metadata ops, measured
+        which is why EVERY write path (commit, deltas, compaction) routes
+        through here since r4. The move is O(this job's files) driver
+        renames — same-filesystem metadata ops, measured
         ≤ 0.2 s of added serial at 5M rows in the scaling bench. Writer
         file names embed a job-unique UUID, so moves never collide; a crash
         mid-move leaves unreferenced files (invisible; vacuum collects) and
@@ -1098,13 +1043,7 @@ class SnapshotTable:
 
     # -- read path -----------------------------------------------------------
 
-    def read(
-        self,
-        spark: SparkSession,
-        version: int | None = None,
-        _keep_file=None,
-        _manifest: dict | None = None,
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Committed data only: load EXACTLY the manifest's file set (crash
         residue and expired snapshots' files in the data dir are never
         visible — file-level manifests, the Iceberg read model), with pending
@@ -1115,34 +1054,36 @@ class SnapshotTable:
         never touch prior versions' files — until ``vacuum`` expires the
         files CURRENT no longer references (Iceberg's expire_snapshots
         contract: vacuumed history is gone by design)."""
-        m = _manifest if _manifest is not None else self._manifest(version)
-        bucket_col = m["bucket_col"]
+        return self._read(spark, self._manifest(version))
+
+    def _read(self, spark: SparkSession, m: dict, keep=None) -> DataFrame:
+        """``read`` of the resolved manifest ``m``. ``keep(bucket, file)``
+        selects the base files of buckets without pending deltas (the
+        delta'd buckets load whole through the merged path)."""
         deltas = {b for b, v in (m.get("deltas") or {}).items() if v}
-        paths = [
-            os.path.join(self.data_dir, f"{bucket_col}={b}", f)
-            for b, fs in m["files"].items()
-            for f in fs
-            if b not in deltas and (_keep_file is None or _keep_file(b, f))
-        ]
+        paths = [p for seq, b, p in self._files(m, keep) if not seq and b not in deltas]
         if not deltas:
-            return self._scan(spark, m, self.data_dir, paths)
+            return self._scan(spark, m, paths)
         merged = self._merged_state(spark, m)
         if not paths:
             return merged
-        return self._scan(spark, m, self.data_dir, paths).unionByName(merged)
+        return self._scan(spark, m, paths).unionByName(merged)
 
     def _scan(
-        self, spark: SparkSession, m: dict, root: str, paths: list[str], op: str | None = None
+        self, spark: SparkSession, m: dict, paths: list[str], op: str | None = None
     ) -> DataFrame:
         """Parquet read of ``paths`` under ``m``'s EXPLICIT table schema
-        (plus the ``op`` transport column of delta batches): files written
-        before a column was added read back null for it, and the partition
-        column gets its committed type from the schema. Spark surfaces the
-        partition column LAST, so the result is re-projected to the
-        manifest's column order. No paths → an empty frame of that schema."""
+        (plus the ``op`` transport column of delta batches, which live under
+        the delta dir): files written before a column was added read back
+        null for it, and the partition column gets its committed type from
+        the schema. Spark surfaces the partition column LAST, so the result
+        is re-projected to the manifest's column order. No paths → an empty
+        frame of that schema."""
         st = self._manifest_schema(m)
+        root = self.data_dir
         if op is not None:
             st = StructType(list(st.fields) + [StructField(op, StringType(), True)])
+            root = self.delta_dir
         if not paths:  # zero partitions: no task, no Python worker
             return spark.createDataFrame(spark.sparkContext.emptyRDD(), st)
         df = spark.read.option("basePath", root).schema(st).parquet(*paths)
@@ -1184,11 +1125,11 @@ class SnapshotTable:
                     return False
             return True
 
-        # thread the already-resolved manifest into read(): prune decisions
-        # and the scanned file set come from the SAME version (a concurrent
-        # commit between two current() calls could otherwise split them),
-        # and each read_where pays ONE manifest resolution, not two
-        df = self.read(spark, version, _keep_file=keep, _manifest=m)
+        # prune decisions and the scanned file set come from the SAME
+        # manifest (a concurrent commit between two current() calls could
+        # otherwise split them), and each read_where pays ONE manifest
+        # resolution, not two
+        df = self._read(spark, m, keep)
         for c, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.where(F.col(c) >= lo)
@@ -1213,8 +1154,8 @@ class SnapshotTable:
         new buckets) — the added rows are then exactly the added files, and
         ``read_changes(a, b)`` unioned with ``read(a)`` equals ``read(b)``
         row-for-row. A step that replaced or removed files, or touched
-        merge-on-read delta state (``overwrite_buckets``, ``append_deltas``,
-        compaction), raises ``SnapshotIncrementalError``: file replacement
+        merge-on-read delta state (``append_deltas``, its compaction,
+        ``rollback``), raises ``SnapshotIncrementalError``: file replacement
         has no sound "rows added" reading (the Iceberg incremental-scan
         contract — refuse, never approximate). Vacuumed history raises
         ``FileNotFoundError``. I/O is ∝ the increment, not the table: only
@@ -1222,20 +1163,17 @@ class SnapshotTable:
         if from_version < 1:
             raise ValueError(f"from_version={from_version} outside [1, ...]")
         m_to, added = self.added_files(from_version, to_version)
-        bucket_col = m_to["bucket_col"]
         # the increment reads under the TO-version's table schema: files
         # appended before a later column evolution null-fill it
-        return self._scan(spark, m_to, self.data_dir, [
-            os.path.join(self.data_dir, f"{bucket_col}={b}", f) for b, f in added
-        ])
+        return self._scan(spark, m_to, [p for _, p in added])
 
     def added_files(
         self, from_version: int, to_version: int | None = None
     ) -> tuple[dict, list[tuple[str, str]]]:
         """Manifest-only chain walk shared by ``read_changes`` and the
-        ``snapshot_changes`` streaming source: (to-manifest, [(bucket, file)]
-        added after ``from_version`` up to and including ``to_version``),
-        sorted for determinism. ``from_version=0`` is the INITIAL-LOAD case —
+        ``snapshot_changes`` streaming source: (to-manifest, [(bucket, full
+        path)] of the base files added after ``from_version`` up to and
+        including ``to_version``), sorted for determinism. ``from_version=0`` is the INITIAL-LOAD case —
         every file of the target version, no walk — and refuses a table with
         pending merge-on-read deltas (their fold is a join, not a file list;
         compact first). Every walked step must be a pure base-file append,
@@ -1253,9 +1191,7 @@ class SnapshotTable:
                     "initial load cannot be expressed as a file list; "
                     "compact the table first"
                 )
-            return m_to, sorted(
-                (b, f) for b, fs in m_to["files"].items() for f in fs
-            )
+            return m_to, sorted((b, p) for seq, b, p in self._files(m_to) if not seq)
         # walk child → parent, validating linkage and append-only-ness
         child = m_to
         while child["version"] > from_version:
@@ -1278,7 +1214,7 @@ class SnapshotTable:
                 if not set(fs) <= set(child["files"].get(b, [])):
                     raise SnapshotIncrementalError(
                         f"v{v}→v{v + 1} replaced files of bucket {b} "
-                        "(overwrite/compaction): not an append-only step"
+                        "(compaction/rollback): not an append-only step"
                     )
             child = parent
         m_from = child
@@ -1286,8 +1222,7 @@ class SnapshotTable:
             raise SnapshotIncrementalError("version chain did not close")
         old = {(b, f) for b, fs in m_from["files"].items() for f in fs}
         return m_to, sorted(
-            (b, f)
-            for b, fs in m_to["files"].items()
-            for f in fs
-            if (b, f) not in old
+            (b, p)
+            for seq, b, p in self._files(m_to, keep=lambda b, f: (b, f) not in old)
+            if not seq
         )

@@ -20,8 +20,8 @@ Execution model — scale-correct by construction:
   commits; an integer starts after that committed version. A table with
   pending merge-on-read deltas refuses the initial load (the delta fold is
   a join, not a file list — compact first), exactly like a mid-range
-  overwrite raises: refuse, never approximate (Iceberg incremental-scan
-  contract).
+  delta batch, compaction or rollback raises: refuse, never approximate
+  (Iceberg incremental-scan contract).
 - Schema is pinned at stream start from the manifest (evolution-aware:
   files written before a later column addition null-fill it; the bucket
   partition column is injected from the directory name). Columns added to
@@ -36,7 +36,6 @@ consumption half of the snapshot sink contract SURVEY §2.9 promises.
 from __future__ import annotations
 
 import json
-import os
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -120,14 +119,8 @@ class _SnapshotChangesStreamReader(DataSourceStreamReader):
         from_v, to_v = int(start["version"]), int(end["version"])
         if to_v <= from_v:
             return []
-        m_to, added = self._table.added_files(from_v, to_v)
-        bucket_col = m_to["bucket_col"]
-        return [
-            _FilePartition(
-                os.path.join(self._table.data_dir, f"{bucket_col}={b}", f), b
-            )
-            for b, f in added
-        ]
+        _, added = self._table.added_files(from_v, to_v)
+        return [_FilePartition(p, b) for b, p in added]
 
     def read(self, partition: _FilePartition) -> Iterator:
         import pyarrow.parquet as pq

@@ -3,9 +3,9 @@
 The reference consumes a batched ``Query`` stream sequentially against a
 maintained index (cuda/inference.cu:109-170). The Spark rendering: a file /
 rate source of mutation rows ``(qtype 'i'|'d', x, y, payload...)`` consumed
-with ``foreachBatch``; each micro-batch applies the set-based insert/delete
-operators and rewrites ONLY the spatial buckets its mutation keys touch —
-I/O per batch is O(touched buckets), never O(table).
+with ``foreachBatch``; each micro-batch appends its insert/delete rows as
+one delta batch for ONLY the spatial buckets its mutation keys touch —
+I/O per batch is O(batch), never O(table).
 
 Layout: the maintained point set lives in a ``SnapshotTable`` partitioned by
 the depth-``bucket_depth`` quadkey cell of each point. A mutation's bucket is
@@ -78,8 +78,9 @@ class PointTableStream:
         ∝ batch size). The insert-if-missing / delete-by-value semantics of
         operators/mutations.{insert,delete}_points are applied at read time
         by SnapshotTable's sequence-ordered fold (and baked in at
-        compaction), so the visible state matches the eager copy-on-write
-        path row-for-row. The touched-bucket set is derived task-side from
+        compaction), so the visible state matches the eager fold
+        ``delete_points(insert_points(points, inserts), deletes)`` per batch
+        row-for-row. The touched-bucket set is derived task-side from
         the staged write's own per-bucket output (``buckets=None``) — no
         ``distinct().collect()`` driver round-trip per micro-batch, and the
         batch plan is computed exactly once (no persist needed)."""

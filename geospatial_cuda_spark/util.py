@@ -62,10 +62,6 @@ def geotag_from_phash(phash: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return x, y
 
 
-GEOTAG_X_SQL = "CAST((CAST(phash AS {ubig}) >> 20) % 1000000 AS DOUBLE)"
-GEOTAG_Y_SQL = "CAST(CAST(phash AS {ubig}) % 1000000 AS DOUBLE)"
-
-
 # ---------------------------------------------------------------------------
 # DuckDB SQL twins of splitmix64/hash2 (oracle side). Wrapping 64-bit
 # multiply is emulated in HUGEINT via 32-bit limbs; everything else is

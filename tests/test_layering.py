@@ -110,3 +110,41 @@ def test_only_snapshots_names_a_manifest_store():
         if p != owner
     }
     assert not {p: n for p, n in offenders.items() if n}
+
+
+LAYOUT_DIRS = ("data_dir", "delta_dir")
+
+
+def _layout_uses(path: str) -> list[str]:
+    """Lines of ``path`` that read a ``.data_dir``/``.delta_dir`` attribute
+    or format a ``{col}=`` path segment (an f-string whose formatted value
+    is followed by text starting with ``=``)."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr in LAYOUT_DIRS:
+            out.append(f"{node.lineno}: .{node.attr}")
+        elif isinstance(node, ast.JoinedStr):
+            for a, b in zip(node.values, node.values[1:]):
+                if (
+                    isinstance(a, ast.FormattedValue)
+                    and isinstance(b, ast.Constant)
+                    and str(b.value).startswith("=")
+                ):
+                    out.append(f"{node.lineno}: {{...}}=")
+    return out
+
+
+def test_only_snapshots_knows_the_table_layout():
+    """A snapshot table's files live at ``{root}/{bucket_col}={bucket}/{file}``
+    and ``SnapshotTable`` alone turns a manifest into those paths. No other
+    module of the package, and no spark-submit job, reads the table's data
+    or delta directory or formats a ``{bucket_col}=`` path segment."""
+    owner = os.path.join(REPO, PKG, "sources", "snapshots.py")
+    sources = _sources()
+    assert owner in sources and _layout_uses(owner)  # the scan sees the owner's uses
+    offenders = {
+        os.path.relpath(p, REPO): _layout_uses(p) for p in sources if p != owner
+    }
+    assert not {p: u for p, u in offenders.items() if u}

@@ -193,9 +193,17 @@ def test_overwrite_refreshes_stats(spark, tmp_path):
     df, _ = _points_df(spark, 800)
     snap = SnapshotTable(str(tmp_path / "ow"), stat_cols=["x"], sort_cols=["x"])
     snap.commit(df, "bucket")
-    # shift bucket "2" entirely above the domain, then overwrite
-    moved = df.where(F.col("bucket") == "2").withColumn("x", F.col("x") + 5 * W)
-    snap.overwrite_buckets(moved, "bucket", ["2"])
+    # shift bucket "2" entirely above the domain: delete its rows, then
+    # insert them moved (two batches: a batch applies inserts before
+    # deletes), each compacted at once
+    b2 = df.where(F.col("bucket") == "2")
+    moved = b2.withColumn("x", F.col("x") + 5 * W)
+    for batch, op in ((b2, "d"), (moved, "i")):
+        snap.append_deltas(
+            batch.withColumn("_op", F.lit(op)), "bucket", ["2"],
+            key_cols=["pid"], compact_threshold=1,
+        )
+    assert not snap.current()["deltas"]
     m = snap.current()
     for f, st in m["stats"]["2"].items():
         assert st["x"][0] >= 5 * W

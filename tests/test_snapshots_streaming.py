@@ -96,17 +96,30 @@ def test_snapshot_crash_residue_invisible_then_healed(spark, bucketed_df, tmp_pa
     assert _rows(got) == _rows(bucketed_df)  # the half-written row is back
 
 
+def _compact_away_odd_pids_of_bucket_3(snap, bucketed_df):
+    """One delta batch deleting bucket 3's odd pids, compacted in the same
+    publish: bucket 3's base files are replaced. Returns the survivors."""
+    gone = (F.col("bucket") == "3") & (F.col("pid") % 2 == 1)
+    res = snap.append_deltas(
+        bucketed_df.where(gone).withColumn("_op", F.lit("d")),
+        "bucket", ["3"], key_cols=["pid"], compact_threshold=1,
+    )
+    assert res["compacted_buckets"] == ["3"]
+    return bucketed_df.where(~gone)
+
+
 def test_snapshot_upsert_isolation_and_vacuum(spark, bucketed_df, tmp_path):
-    """Upserts append + repoint the manifest: prior files stay on disk
-    (snapshot isolation) but are invisible to readers; vacuum removes exactly
-    the unreferenced ones and the table reads identically afterwards."""
+    """An upsert's compaction appends + repoints the manifest: prior files
+    stay on disk (snapshot isolation) but are invisible to readers; vacuum
+    removes exactly the unreferenced ones and the table reads identically
+    afterwards."""
     snap = SnapshotTable(str(tmp_path / "t"))
     snap.commit(bucketed_df, "bucket")
-    survivors = bucketed_df.where((F.col("bucket") != "3") | (F.col("pid") % 2 == 0))
-    snap.overwrite_buckets(survivors.where(F.col("bucket") == "3"), "bucket", ["3"])
+    survivors = _compact_away_odd_pids_of_bucket_3(snap, bucketed_df)
     expected = _rows(survivors.select("pid", "bucket", "val"))
     assert _rows(snap.read(spark).select("pid", "bucket", "val")) == expected
-    # old bucket-3 files still on disk (isolation), hence vacuum finds them
+    # old bucket-3 files and the delta batch still on disk (isolation),
+    # hence vacuum finds them
     removed = snap.vacuum()
     assert removed >= 1
     assert _rows(snap.read(spark).select("pid", "bucket", "val")) == expected
@@ -198,8 +211,9 @@ def test_snapshot_concurrent_same_bucket_conflicts(spark, bucketed_df, tmp_path)
 
 
 def test_snapshot_concurrent_upsert_same_bucket_conflicts(spark, bucketed_df, tmp_path):
-    """overwrite_buckets computed from a stale read of a bucket that a
-    concurrent snapshot then changed must abort, not publish."""
+    """An upsert (delta batch + compaction) whose bucket a concurrent
+    snapshot changed between its write and its publish must abort, not
+    publish."""
     from geospatial_cuda_spark.sources.snapshots import (
         SnapshotConflictError,
         SnapshotTable,
@@ -208,8 +222,12 @@ def test_snapshot_concurrent_upsert_same_bucket_conflicts(spark, bucketed_df, tm
     path = str(tmp_path / "t")
     snap1, snap2 = SnapshotTable(path), SnapshotTable(path)
     snap1.commit(bucketed_df, "bucket")
-    survivors = bucketed_df.where((F.col("bucket") == "3") & (F.col("pid") % 2 == 0))
-    other = bucketed_df.where((F.col("bucket") == "3") & (F.col("pid") % 3 == 0))
+    b3 = bucketed_df.where(F.col("bucket") == "3")
+    mine = F.col("pid") % 2 == 1
+    theirs = F.col("pid") % 3 != 0
+
+    def deletes(cond):
+        return b3.where(cond).withColumn("_op", F.lit("d"))
 
     orig_write = snap1._write_append
     fired = []
@@ -218,13 +236,17 @@ def test_snapshot_concurrent_upsert_same_bucket_conflicts(spark, bucketed_df, tm
         orig_write(batch, bucket_col, target)
         if not fired:
             fired.append(1)
-            snap2.overwrite_buckets(other, "bucket", ["3"])
+            snap2.append_deltas(
+                deletes(theirs), "bucket", ["3"], key_cols=["pid"], compact_threshold=1
+            )
 
     snap1._write_append = hooked
     with pytest.raises(SnapshotConflictError):
-        snap1.overwrite_buckets(survivors, "bucket", ["3"])
+        snap1.append_deltas(
+            deletes(mine), "bucket", ["3"], key_cols=["pid"], compact_threshold=1
+        )
     got = snap1.read(spark).where(F.col("bucket") == "3").select("pid", "bucket", "val")
-    assert _rows(got) == _rows(other)  # winner's upsert intact
+    assert _rows(got) == _rows(b3.where(~theirs))  # winner's upsert intact
 
 
 def test_snapshot_manifest_without_files_or_schema_is_corrupt(spark, bucketed_df, tmp_path):
@@ -296,8 +318,7 @@ def test_snapshot_time_travel_read(spark, bucketed_df, tmp_path):
     snap = SnapshotTable(str(tmp_path / "t"))
     snap.commit(bucketed_df, "bucket")
     v1_rows = _rows(snap.read(spark).select("pid", "bucket", "val"))
-    survivors = bucketed_df.where((F.col("bucket") != "3") | (F.col("pid") % 2 == 0))
-    snap.overwrite_buckets(survivors.where(F.col("bucket") == "3"), "bucket", ["3"])
+    survivors = _compact_away_odd_pids_of_bucket_3(snap, bucketed_df)
     # CURRENT shows the upsert; v1 still reads the original state exactly
     assert _rows(snap.read(spark).select("pid", "bucket", "val")) != v1_rows
     assert _rows(snap.read(spark, version=1).select("pid", "bucket", "val")) == v1_rows
@@ -674,14 +695,20 @@ def test_manifest_store_rollforward_after_hint_crash(spark, bucketed_df, tmp_pat
         SnapshotTable,
     )
 
-    store = InMemoryManifestStore(fail_hint_after_publish=True)
+    store = InMemoryManifestStore()
+    orig = store.set_latest_hint
+
+    def crash(version):
+        store.set_latest_hint = orig  # crash once
+        raise RuntimeError("simulated crash after publish, before the hint")
+
+    store.set_latest_hint = crash
     path = str(tmp_path / "t")
     snap = SnapshotTable(path, store=store)
     low = bucketed_df.where(F.col("bucket") < "4")
     with pytest.raises(RuntimeError, match="simulated crash"):
         snap.commit(low, "bucket")
     assert store.hint == 0 and 1 in store.versions  # published, hint stale
-    store.fail_hint_after_publish = False
     reader = SnapshotTable(path, store=store)
     assert reader.current()["version"] == 1  # roll-forward past stale hint
     res = reader.commit(bucketed_df, "bucket")
@@ -698,11 +725,6 @@ def _crash_case(spark, bucketed_df, snap, op):
     if op == "commit":
         return (lambda: snap.commit(bucketed_df, "bucket"),
                 _rows(low.select(*cols)), _rows(bucketed_df.select(*cols)))
-    if op == "overwrite_buckets":
-        keep = ~((F.col("bucket") == "3") & (F.col("pid") % 2 == 1))
-        return (lambda: snap.overwrite_buckets(
-                    low.where(keep & (F.col("bucket") == "3")), "bucket", ["3"]),
-                _rows(low.select(*cols)), _rows(low.where(keep).select(*cols)))
     if op == "append_deltas":
         gone = (F.col("bucket") == "1") & (F.col("pid") % 5 == 0)
         batch = low.where(gone).withColumn("_op", F.lit("d"))
@@ -716,7 +738,7 @@ def _crash_case(spark, bucketed_df, snap, op):
 
 _CRASH_CASES = [
     (op, point)
-    for op in ("commit", "overwrite_buckets", "append_deltas", "rollback")
+    for op in ("commit", "append_deltas", "rollback")
     for point in ("after_move", "after_publish")
     if (op, point) != ("rollback", "after_move")  # rollback writes no data files
 ]
@@ -817,6 +839,42 @@ def test_vacuum_stage_grace_spares_live_writer(spark, bucketed_df, tmp_path):
     os.utime(os.path.join(live, "part-0.parquet"), (1, 1))  # whole subtree stale
     snap.vacuum()
     assert not os.path.exists(live)
+
+
+@pytest.mark.parametrize("store", ["memory", "file"])
+def test_vacuum_crash_midway_recovers(spark, bucketed_df, tmp_path, monkeypatch, store):
+    """vacuum deletes only files CURRENT does not reference, so a crash
+    after its first deletion loses nothing: a fresh table reads the same
+    rows at the same version, the next vacuum removes the rest, and the one
+    after that finds nothing."""
+    from geospatial_cuda_spark.sources.snapshots import InMemoryManifestStore
+
+    path = str(tmp_path / "t")
+    mem = InMemoryManifestStore() if store == "memory" else None
+    snap = SnapshotTable(path, store=mem)
+    snap.commit(bucketed_df, "bucket")
+    cols = ("pid", "bucket", "val")
+    expected = _rows(_compact_away_odd_pids_of_bucket_3(snap, bucketed_df).select(*cols))
+    version = snap.current()["version"]
+    orig, removed = os.remove, []
+
+    def crash(p):
+        if removed:
+            raise RuntimeError("simulated crash inside vacuum")
+        orig(p)
+        removed.append(p)
+
+    monkeypatch.setattr(os, "remove", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        snap.vacuum()
+    monkeypatch.undo()
+    assert len(removed) == 1
+    fresh = SnapshotTable(path, store=mem)
+    assert fresh.current()["version"] == version
+    assert _rows(fresh.read(spark).select(*cols)) == expected
+    assert fresh.vacuum() >= 1
+    assert fresh.vacuum() == 0
+    assert _rows(fresh.read(spark).select(*cols)) == expected
 
 
 def test_casfile_store_cas_rollforward_and_torn_token(spark, bucketed_df, tmp_path):
@@ -1012,9 +1070,10 @@ def test_read_changes_refuses_non_append_steps(spark, tmp_path):
     snap = SnapshotTable(str(tmp_path / "t"))
     b1 = _batch(spark, 0, 200)
     snap.commit(b1, "bucket")  # v1
-    snap.overwrite_buckets(
-        b1.where(F.col("bucket") == "b3"), "bucket", ["b3"]
-    )  # v2: file replacement
+    snap.append_deltas(
+        b1.where(F.col("pid") == 3).withColumn("_op", F.lit("d")),
+        "bucket", ["b3"], key_cols=["pid"], compact_threshold=1,
+    )  # v2: file replacement (compaction)
     snap.commit(
         _batch(spark, 10_000, 10_050).withColumn(
             "bucket", F.concat(F.lit("c"), F.col("pid") % 10)
@@ -1022,7 +1081,7 @@ def test_read_changes_refuses_non_append_steps(spark, tmp_path):
         "bucket",
     )  # v3: clean append on top
     with pytest.raises(SnapshotIncrementalError, match="b3"):
-        snap.read_changes(spark, 1)  # overwrite inside the range
+        snap.read_changes(spark, 1)  # compaction inside the range
     # the appended-only suffix is still readable incrementally
     assert snap.read_changes(spark, 2, 3).count() == 50
 
@@ -1037,3 +1096,45 @@ def test_read_changes_refuses_non_append_steps(spark, tmp_path):
         snap.read_changes(spark, 0)
     with pytest.raises(ValueError, match="from_version"):
         snap.read_changes(spark, 9, 4)
+
+
+def _tree_digest(root: str) -> dict[str, str]:
+    import hashlib
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = hashlib.sha256(f.read()).hexdigest()
+    return out
+
+
+def test_bench_streaming_tool_smoke():
+    """``tools/bench_streaming.py`` runs end to end at a small size: exit 0,
+    ONE JSON line, at least one compaction, the merge-on-read end state
+    equal to the eager insert/delete fold, and the recorded ``BENCH/``
+    results untouched. It stops its own Spark session, so it runs in a
+    subprocess."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench = os.path.join(repo, "BENCH")
+    before = _tree_digest(bench)
+    proc = subprocess.run(
+        [sys.executable, os.path.join("tools", "bench_streaming.py"),
+         "--rows", "2000", "--batches", "3", "--batch-size", "20",
+         "--compact-threshold", "2"],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
+    assert len(lines) == 1, proc.stdout
+    out = json.loads(lines[0])
+    assert out["mor"]["compactions"] >= 1
+    assert out["end_state_equal"] is True
+    assert out["mor"]["rows_final"] == out["eager_fold"]["rows_final"]
+    assert out["mor"]["state_hash"] == out["eager_fold"]["state_hash"]
+    assert _tree_digest(bench) == before

@@ -128,8 +128,9 @@ def test_overwrite_mid_stream_refuses(spark, tmp_path):
     q = _start(spark, root, name)
     try:
         q.processAllAvailable()
-        snap.overwrite_buckets(
-            _gen(spark, 0, 10).where(F.col("bucket") == "1"), "bucket", ["1"]
+        snap.append_deltas(  # a compaction replaces bucket 1's files
+            _gen(spark, 0, 10).where(F.col("bucket") == "1").withColumn("_op", F.lit("d")),
+            "bucket", ["1"], key_cols=["pid"], compact_threshold=1,
         )
         with pytest.raises(Exception, match="not an append-only step"):
             q.processAllAvailable()
@@ -251,8 +252,7 @@ def test_vanished_file_raises_actionable_error(spark, tmp_path):
         snap.commit(_gen(spark, 40, 80, bucket_base=4), "bucket")
         # simulate the race: one of the v2 increment's files vanishes
         _, added = snap.added_files(1, 2)
-        b, f = added[0]
-        os.remove(os.path.join(root, "data", f"bucket={b}", f))
+        os.remove(added[0][1])
         with pytest.raises(Exception, match="vacuumed past this stream's offset"):
             q.processAllAvailable()
     finally:
